@@ -1,0 +1,43 @@
+package graftbench
+
+import java.util.Locale
+
+/** Minimal JSON encoder for the harness's result files (maps, sequences,
+  * strings, numbers, booleans, null). */
+object Json {
+  /** A value already encoded as JSON. */
+  final case class Raw(json: String)
+
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Raw(json) => json
+    case Some(x) => apply(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else String.format(Locale.ROOT, "%.9g", Double.box(d)).trim
+    case f: Float => apply(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
+    case xs: Array[_] => xs.map(apply).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b += '"'
+    b.toString
+  }
+}
