@@ -254,7 +254,7 @@ class CommitCatalog extends TableCatalog with FunctionCatalog {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val p = pathFor(ident)
     val m = CommitSink.parseManifest(p).getOrElse(throw new NoSuchTableException(ident))
-    val cur = StructType.fromDDL(m.ddl)
+    val cur = m.schema
     val ok: org.apache.spark.sql.types.DataType => Boolean =
       if (m.payload == "parquet") ParquetPayload.supported
       else CommitSink.supportedTypes.contains

@@ -150,7 +150,7 @@ class CommitRowLevelOperation(path: String, cmd: RowLevelOperation.Command)
     * subquery cannot pay for itself on this layout. */
   override def requiredMetadataAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (StructType.fromDDL(planning.ddl).fieldNames.contains(CommitSink.FILE_COL) ||
+    if (planning.schema.fieldNames.contains(CommitSink.FILE_COL) ||
         !groupFilterUseful)
       Array.empty
     else

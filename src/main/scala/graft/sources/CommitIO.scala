@@ -56,6 +56,18 @@ private[graft] trait CommitIO extends Serializable {
   def lastModifiedMs(p: Path): Long
 }
 
+private[graft] object CommitIO {
+  import org.apache.hadoop.conf.Configuration
+  /** Hadoop's default XML, parsed once per JVM (by the first copy) —
+    * parquet-java otherwise builds and parses a fresh Configuration per
+    * reader and writer. */
+  private val parsedDefaults = new Configuration()
+  /** A private copy per handle, cloning the parsed properties; callers
+    * set keys on theirs. Like a fresh Configuration, it carries no
+    * session or `spark.hadoop.*` settings. */
+  def hadoopConf(): Configuration = new Configuration(parsedDefaults)
+}
+
 /** The local-filesystem binding — plain `java.nio` + parquet-java's
   * Local{Input,Output}File. */
 private[graft] object NioCommitIO extends CommitIO {
@@ -157,7 +169,7 @@ private[graft] class HadoopCommitIO extends CommitIO {
   import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
   @transient private lazy val conf: Configuration = {
-    val c = new Configuration()
+    val c = CommitIO.hadoopConf()
     // raw local: no .crc sidecars (they'd show up in list() and confuse
     // the GC's name-prefix liveness rules); private instance so the
     // impl override can't leak into Spark's own cached local FS

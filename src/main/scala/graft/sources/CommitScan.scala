@@ -52,11 +52,12 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
                         /** Streaming-read admission knob (o20): how many
                           * COMMITS one micro-batch may consume. */
                         maxCommitsPerTrigger: Int = Int.MaxValue,
-                        /** Pin the scan to THIS manifest (the delta
-                          * row-level operation's planning snapshot —
-                          * like dmlOp's pin, but with no scanned-files
-                          * reporting: a delta commit replaces no
-                          * files). */
+                        /** Pin the scan to THIS manifest: a version-
+                          * pinned table's root (already read for its
+                          * schema), or the delta row-level operation's
+                          * planning snapshot — like dmlOp's pin, but
+                          * with no scanned-files reporting: a delta
+                          * commit replaces no files. */
                         pinned: Option[CommitSink.Manifest] = None,
                         /** Opt-in changelog SELF-SERVICE RECOVERY: when a
                           * rewrite or generation change fires the
@@ -81,17 +82,12 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
 
   /** ROOT view (r16): header + group refs, no per-file entries loaded —
     * what every pre-build decision (schema, pushdown eligibility) needs.
-    * On a single-level table this IS the full manifest; DML/pinned scans
+    * On a single-level table this IS the full manifest; DML scans
     * arrive already resolved. The read happens once, here: the builder's
     * decisions and the scan must bind to ONE snapshot. */
   private val root =
     dmlOp.map(_.planning).orElse(pinned).orElse(version match {
-      case Some(v) =>
-        val mf = Paths.get(path).resolve(CommitSink.versionFile(v))
-        require(CommitSink.io.exists(mf),
-          s"graft-commit: no version $v at $path (have: " +
-            CommitSink.listVersions(Paths.get(path)).mkString(", ") + ")")
-        Some(CommitSink.parseManifestText(CommitSink.io.readString(mf), mf.toString))
+      case Some(v) => Some(CommitSink.parseManifestVersionRoot(Paths.get(path), v))
       case None => CommitSink.parseManifestRoot(Paths.get(path))
     })
   /** The fully-resolved manifest — forced only by paths that genuinely
@@ -99,8 +95,7 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
     * the change feed). */
   private lazy val manifest =
     root.map(CommitSink.resolveGroups(Paths.get(path), _))
-  private def fullSchema: StructType =
-    root.map(m => StructType.fromDDL(m.ddl)).getOrElse(new StructType())
+  private def fullSchema: StructType = root.fold(new StructType())(_.schema)
 
   private var skip: Array[Filter] = Array.empty
   private var required: Option[StructType] = None
@@ -255,14 +250,14 @@ class CommitChangesScan(path: String, manifest: CommitSink.Manifest,
   require(manifest.payload == "parquet" || manifest.files.isEmpty,
     s"graft-commit: the change feed requires the parquet payload " +
       s"($path is '${manifest.payload}')")
-  require(!StructType.fromDDL(manifest.ddl).fieldNames
+  require(!manifest.schema.fieldNames
       .exists(n => n == CommitSink.CHANGE_TYPE_COL ||
         n == CommitSink.COMMIT_VERSION_COL),
     s"graft-commit: $path has a data column named " +
       s"${CommitSink.CHANGE_TYPE_COL}/${CommitSink.COMMIT_VERSION_COL} — " +
       "the change feed cannot disambiguate it from its own columns")
   override def readSchema(): StructType =
-    CommitSink.cdfSchema(StructType.fromDDL(manifest.ddl))
+    CommitSink.cdfSchema(manifest.schema)
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
     CommitSink.changePartitions(dir, path,
@@ -272,7 +267,7 @@ class CommitChangesScan(path: String, manifest: CommitSink.Manifest,
       // carries renames newer than a bounded range's endingVersion
       bindingCommit = manifest.commit, bindingLog = manifest.schemaLog)
   override def createReaderFactory(): PartitionReaderFactory =
-    new CommitChangesReaderFactory(readSchema().toDDL)
+    new CommitChangesReaderFactory(readSchema())
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new CommitTableMicroBatchStream(path, manifest.ddl, maxCommitsPerTrigger,
@@ -298,11 +293,9 @@ class CommitMetaAggScan(path: String, manifest: CommitSink.Manifest,
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
 
-  private val schemaFull = StructType.fromDDL(manifest.ddl)
   private def colOf(e: org.apache.spark.sql.connector.expressions.Expression): String =
     e.asInstanceOf[NamedReference].fieldNames()(0)
-  private def colType(name: String): DataType =
-    schemaFull.fields.find(_.name == name).get.dataType
+  private def colType(name: String): DataType = manifest.schema(name).dataType
 
   override def readSchema(): StructType = StructType(aggs.map {
     case _: CountStar => StructField("count(*)", LongType, nullable = false)
@@ -392,7 +385,7 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
   // for, so it can never shadow a live one. Identity (no ledger) is the
   // common case and decodes exactly as before.
   private val currentCols: Seq[String] =
-    StructType.fromDDL(manifest.ddl).fieldNames.toSeq
+    manifest.schema.fieldNames.toSeq
   private val fwCache = scala.collection.mutable.HashMap.empty[String, Map[String, String]]
   private def fwOf(f: String): Map[String, String] =
     if (manifest.schemaLog.isEmpty) Map.empty
@@ -546,7 +539,7 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
       case f if (f.dataType == LongType || f.dataType == IntegerType ||
         f.dataType == DoubleType) && f.name.matches("[A-Za-z0-9_]+") &&
         !(f.name == CommitSink.POS_COL &&
-          !StructType.fromDDL(manifest.ddl).fieldNames.contains(CommitSink.POS_COL)) =>
+          !manifest.schema.fieldNames.contains(CommitSink.POS_COL)) =>
         Expressions.column(f.name)
     }
 
@@ -623,7 +616,7 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
     * Long, identity follows the column type. */
   private def typedKey(spec: CommitSink.PartSpec, k: Long): Any = spec match {
     case CommitSink.IdentitySpec(c) =>
-      if (StructType.fromDDL(manifest.ddl).apply(c).dataType == IntegerType)
+      if (manifest.schema(c).dataType == IntegerType)
         k.toInt else k
     case _: CommitSink.BucketSpec => k.toInt
     case _: CommitSink.TruncateSpec => k
@@ -643,33 +636,22 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
   private def dvOf(f: String): String =
     manifest.deletes.get(f).map(e => abs(e.dv)).getOrElse("")
 
-  /** Per-file APPLICABLE equality deletes (o32): only entries strictly
-    * newer than the file's add-sequence, with the key columns' types
-    * resolved from the table DDL (independent of the scan projection —
-    * the reader widens its decode to cover them). */
-  // one parse for the whole plan — eqOf runs per (file × entry), and a
-  // per-call StructType.fromDDL is O(files × entries) SQL-parser work on
-  // the driver for a constant value
-  private lazy val fullSchema = StructType.fromDDL(manifest.ddl)
-  private def eqOf(f: String): Seq[EqRef] = manifest.eqFor(f).map { e =>
-    EqRef(abs(e.file),
-      StructType(e.colNames.map(c =>
-        fullSchema(fullSchema.fieldIndex(c)))).toDDL)
-  }
+  /** Per-file APPLICABLE equality deletes (o32). */
+  private def eqOf(f: String): Seq[EqRef] = manifest.eqRefsFor(f, path)
 
   /** Pruned projection when Spark asked for one: the reader materializes
     * exactly these fields (its per-line decoder skips keys it was not
     * asked for, so unrequested columns cost a scan over their chars,
     * never a parse or an allocation). */
   override def readSchema(): StructType =
-    required.getOrElse(StructType.fromDDL(manifest.ddl))
+    required.getOrElse(manifest.schema)
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
     val parts = partGroups match {
       case Some(groups) =>
         val spec = partSpecOpt.get
-        val dt = StructType.fromDDL(manifest.ddl).apply(spec.sourceCol).dataType
+        val dt = manifest.schema(spec.sourceCol).dataType
         groups.map { case (k, fs) =>
           // the HasPartitionKey value must be typed as the REPORTED
           // partitioning expression: the column's own type for identity,
@@ -772,7 +754,6 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
         if (known && surviving.nonEmpty) {
           val decoded = sts.flatten
-          val schema = StructType.fromDDL(manifest.ddl)
           // a zone value in the column's CATALYST representation —
           // estimation code casts by the attribute's type, so an Int
           // column must not receive a boxed Long
@@ -800,7 +781,7 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
             val range: Option[(Any, Any)] =
               if (decoded.forall(_.cols.contains(c))) {
                 val rs = decoded.map(_.cols(c))
-                val dt = schema.fields.find(_.name == c).map(_.dataType)
+                val dt = manifest.schema.fields.find(_.name == c).map(_.dataType)
                   .getOrElse(NullType)
                 rs.map(_.kind).distinct match {
                   case Seq('l') =>
@@ -822,7 +803,7 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
             // PHYSICAL rows (deleted rows included, like sketches) —
             // an over-approximation the cost model tolerates.
             val width: Option[(Long, Long, Long)] = // (nulls, avgLen, maxLen)
-              if (schema.fields.find(_.name == c).exists(_.dataType == StringType)
+              if (manifest.schema.fields.find(_.name == c).exists(_.dataType == StringType)
                   && decoded.forall(_.wid.contains(c))) {
                 val ws = decoded.map(_.wid(c))
                 val nulls = ws.map(_.nulls).sum
@@ -860,14 +841,14 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CommitReaderFactory(readSchema().toDDL,
+    new CommitReaderFactory(readSchema(),
       // stamp `_file`/`_pos` per row only when they are the METADATA
       // columns (a data column of either name decodes from the payload)
       stampFile = readSchema().fieldNames.contains(CommitSink.FILE_COL) &&
-        !StructType.fromDDL(manifest.ddl).fieldNames.contains(CommitSink.FILE_COL),
+        !manifest.schema.fieldNames.contains(CommitSink.FILE_COL),
       payload = manifest.payload,
       stampPos = readSchema().fieldNames.contains(CommitSink.POS_COL) &&
-        !StructType.fromDDL(manifest.ddl).fieldNames.contains(CommitSink.POS_COL))
+        !manifest.schema.fieldNames.contains(CommitSink.POS_COL))
 
   /** The table AS A STREAM (o20) — each commit is a micro-batch. */
   override def toMicroBatchStream(checkpointLocation: String)
@@ -885,7 +866,7 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
     s"graft-commit scan of $path" +
       version.map(v => s" @v$v").getOrElse("") +
       s" [files: ${surviving.size}/${manifest.files.size}, " +
-      s"columns: ${readSchema().size}/${StructType.fromDDL(manifest.ddl).size}]"
+      s"columns: ${readSchema().size}/${manifest.schema.size}]"
 }
 
 /** The CHANGELOG micro-batch stream over a committed table (o20) — the
@@ -953,6 +934,7 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
   private val dir = Paths.get(path)
+  private lazy val schema = StructType.fromDDL(ddl) // once, for every batch
 
   /** This stream's table GENERATION. An offset restored from a
     * checkpoint that names a different generation means the table was
@@ -1118,22 +1100,18 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
         // the snapshot's live rows = files minus vectors minus equality
         // deletes — ship the applicable key files per partition so the
         // re-bootstrap never re-inserts a replaced row
-        lazy val full = StructType.fromDDL(m.ddl)
         // r19 (ADVICE): the reader decodes with the STREAM-BOUND ddl —
         // a table with an un-retired RENAME needs each pre-rename file's
         // current→physical map here too, exactly like the incremental
         // changePartitions and the non-CDF part() helper; without it the
         // re-bootstrap reads the renamed column as silent NULL
-        lazy val boundNames = StructType.fromDDL(ddl).fieldNames.toSeq
+        lazy val boundNames = schema.fieldNames.toSeq
         m.files.map { f =>
           CommitChangesPartition(Paths.get(path, f).toString,
             m.deletes.get(f).map(e => Paths.get(path, e.dv).toString)
               .getOrElse(""),
             "", insert = true, commitVersion = m.commit,
-            eqs = m.eqFor(f).map(e =>
-              EqRef(Paths.get(path, e.file).toString,
-                StructType(e.colNames.map(c => full(full.fieldIndex(c))))
-                  .toDDL)),
+            eqs = m.eqRefsFor(f, path),
             renames = if (m.schemaLog.isEmpty) Nil
                       else m.physNames(f, boundNames).toSeq): InputPartition
         }.toArray
@@ -1156,19 +1134,14 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
     // equality delete covers (their sequence is newer); the re-bootstrap
     // emits the whole snapshot, where older files may be covered.
     def part(m: CommitSink.Manifest, fs: Seq[String]) = {
-      lazy val full = StructType.fromDDL(m.ddl)
-      def eqOf(f: String): Seq[EqRef] = m.eqFor(f).map { e =>
-        EqRef(Paths.get(path, e.file).toString,
-          StructType(e.colNames.map(c => full(full.fieldIndex(c)))).toDDL)
-      }
       fs.map(f => CommitFilesPartition(Seq(Paths.get(path, f).toString),
           Seq(m.deletes.get(f).map(e => Paths.get(path, e.dv).toString)
             .getOrElse("")),
-          Seq(eqOf(f)),
+          Seq(m.eqRefsFor(f, path)),
           // o48: a stream reading pre-rename files under the current
           // schema maps each file's own names, like the batch scan
           if (m.schemaLog.isEmpty) Seq.empty
-          else Seq(m.physNames(f, full.fieldNames.toSeq).toSeq)): InputPartition)
+          else Seq(m.physNames(f, m.schema.fieldNames.toSeq).toSeq)): InputPartition)
         .toArray
     }
     // end-offset resolution: a checkpointed end of a DROPPED generation
@@ -1235,19 +1208,17 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    if (changeFeed)
-      new CommitChangesReaderFactory(
-        CommitSink.cdfSchema(StructType.fromDDL(ddl)).toDDL)
-    else new CommitReaderFactory(ddl, payload = payload)
+    if (changeFeed) new CommitChangesReaderFactory(CommitSink.cdfSchema(schema))
+    else new CommitReaderFactory(schema, payload = payload)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 /** One applicable equality-delete file for a data file (o32): absolute
-  * key-file path plus the key columns' DDL (names AND types — the reader
+  * key-file path plus the key columns (names AND types — the reader
   * decodes the key file and the data rows' key values with no other
   * context). */
-case class EqRef(path: String, colsDdl: String)
+case class EqRef(path: String, cols: StructType)
 
 /** Executor-side equality-delete evaluation (o32), shared by the row
   * reader and the change-feed reader: load each applicable key file's
@@ -1262,8 +1233,7 @@ private[sources] object EqMatch {
   type Matcher = (Array[Int], scala.collection.Set[Seq[Any]])
 
   def load(refs: Seq[EqRef], wanted: StructType): Seq[Matcher] =
-    refs.groupBy(_.colsDdl).toSeq.map { case (ddl, grp) =>
-      val ks = StructType.fromDDL(ddl)
+    refs.groupBy(_.cols).toSeq.map { case (ks, grp) =>
       val idxs = ks.fields.map(kf => wanted.fieldIndex(kf.name))
       val set = scala.collection.mutable.HashSet.empty[Seq[Any]]
       grp.foreach(loadKeys(_, ks, set))
@@ -1340,11 +1310,11 @@ case class CommitChangesPartition(file: String, dv: String, prevDv: String,
                                   renames: Seq[(String, String)] = Nil)
     extends InputPartition
 
-class CommitChangesReaderFactory(ddl: String) extends PartitionReaderFactory {
+class CommitChangesReaderFactory(schema: StructType) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case c: CommitChangesPartition =>
-        new CommitChangesReader(c, StructType.fromDDL(ddl))
+        new CommitChangesReader(c, schema)
       case other => sys.error(s"graft-commit: unexpected CDF partition $other")
     }
 }
@@ -1458,14 +1428,13 @@ case class CommitKeyedFilesPartition(files: Seq[String], key: Any,
     new GenericInternalRow((key +: moreKeys).toArray[Any])
 }
 
-class CommitReaderFactory(ddl: String, stampFile: Boolean = false,
+/** Ships the read schema itself (a fully-pruned projection — COUNT(*)
+  * above a declined aggregate push — is an empty StructType), so no
+  * reader re-parses it. */
+class CommitReaderFactory(schema: StructType, stampFile: Boolean = false,
                           payload: String = "json",
                           stampPos: Boolean = false)
     extends PartitionReaderFactory {
-  // a fully-pruned projection (COUNT(*) above a declined aggregate push)
-  // ships an EMPTY schema, which fromDDL refuses to parse
-  private def schema: StructType =
-    if (ddl.trim.isEmpty) new StructType() else StructType.fromDDL(ddl)
   private def reader(fs: Seq[String], dvs: Seq[String],
                      eqs: Seq[Seq[EqRef]],
                      renames: Seq[Seq[(String, String)]]): PartitionReader[InternalRow] =
@@ -1562,7 +1531,7 @@ class ParquetFilesReader(files: Seq[String], schema: StructType,
       // are unchanged. A key column absent from the FILE (added by a
       // later ALTER) decodes null → never matches.
       val refs = eqs.lift(idx).getOrElse(Seq.empty)
-      val extra = refs.flatMap(r => StructType.fromDDL(r.colsDdl).fields)
+      val extra = refs.flatMap(_.cols.fields)
         .filterNot(kf => dataSchema.fieldNames.contains(kf.name))
         .groupBy(_.name).map(_._2.head).toSeq
       // o48: ask THIS file for its own (pre-rename) names — a pure

@@ -826,7 +826,7 @@ object CommitSink {
     if (from > to)
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        cdfSchema(StructType.fromDDL(curM.ddl)))
+        cdfSchema(curM.schema))
     val have = listVersions(d).toSet
     require(have.nonEmpty && to <= have.max,
       s"graft-commit: change feed endingVersion $to of $dir does not exist " +
@@ -854,7 +854,7 @@ object CommitSink {
       * post-image = 'delete' rows, the reverse = 'insert' rows. */
     def diffOf(v: Long): org.apache.spark.sql.DataFrame = {
       val (prev, cur) = (at(v - 1), at(v))
-      require(sameColumns(prev.ddl, cur.ddl) && prev.payload == cur.payload,
+      require(sameColumns(prev.schema, cur.schema) && prev.payload == cur.payload,
         s"graft-commit: commit $v of $dir rewrote the table under a new " +
           "schema or payload — no diff is expressible; restart past it")
       val removed = prev.files.toSet -- cur.files.toSet
@@ -997,7 +997,7 @@ object CommitSink {
     * the metadata-DELETE rewrite. */
   private[graft] def readManifestFiles(spark: SparkSession, dir: String,
                                        m: Manifest): DataFrame = {
-    val schema = StructType.fromDDL(m.ddl)
+    val schema = m.schema
     if (m.files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else {
@@ -1191,7 +1191,7 @@ object CommitSink {
         // sort keeps every composite key contiguous for the rolling
         // writer, so the compacted table holds one file per LIVE
         // composite key
-        val ks = multi.map(keyColOf(_, StructType.fromDDL(m.ddl)))
+        val ks = multi.map(keyColOf(_, m.schema))
         df.repartition(numFiles, ks: _*).sortWithinPartitions(ks: _*)
     }
     val spec = if (specs.size == 1) specs.headOption else None
@@ -1251,7 +1251,7 @@ object CommitSink {
           val b = BucketFunction.bucketCol(n, org.apache.spark.sql.functions.col(c))
           (live.repartition(math.max(1, picked.size), b).sortWithinPartitions(b), true)
         case multi if multi.size > 1 =>
-          val ks = multi.map(keyColOf(_, StructType.fromDDL(m.ddl)))
+          val ks = multi.map(keyColOf(_, m.schema))
           (live.repartition(math.max(1, picked.size), ks: _*)
             .sortWithinPartitions(ks: _*), true)
         case _ => (live, false)
@@ -1361,7 +1361,7 @@ object CommitSink {
         // Each composite key stays contiguous (one key per file — the
         // SPJ grouping survives) and each file covers a tight,
         // per-key-disjoint slice of the sort columns.
-        val ks = clusterSpecs.map(keyColOf(_, StructType.fromDDL(m.ddl)))
+        val ks = clusterSpecs.map(keyColOf(_, m.schema))
         val all = ks ++ cols.map(col)
         df.repartitionByRange(numFiles, all: _*).sortWithinPartitions(all: _*)
       } else if (m.partCol.isDefined) {
@@ -1525,7 +1525,7 @@ object CommitSink {
         "must change the layout")
     newCol.toSeq.flatMap(PartSpec.parseSpecs).foreach { spec =>
       val c = spec.sourceCol
-      val schema = StructType.fromDDL(m.ddl)
+      val schema = m.schema
       val f = schema.fields.find(_.name == c).getOrElse(
         sys.error(s"graft-commit: partition column '$c' is not in the " +
           s"table schema [${schema.fieldNames.mkString(",")}]"))
@@ -1584,7 +1584,7 @@ object CommitSink {
     // pass — the point-lookup shape doesn't care about the line format)
     require(m.payload == "parquet" || m.payload == "json",
       s"graft-commit: the bloom index cannot scan the '${m.payload}' payload")
-    val schema = StructType.fromDDL(m.ddl)
+    val schema = m.schema
     cols.foreach { c =>
       val f = schema.fields.find(_.name == c).getOrElse(
         sys.error(s"graft-commit: bloom column '$c' is not in the table " +
@@ -1726,7 +1726,7 @@ object CommitSink {
     // the grouped `_metadata.file_name` pass is format-agnostic
     require(m.payload == "parquet" || m.payload == "json",
       s"graft-commit: analyzeNdv cannot scan the '${m.payload}' payload")
-    val schema = StructType.fromDDL(m.ddl)
+    val schema = m.schema
     cols.foreach { c =>
       val f = schema.fields.find(_.name == c).getOrElse(
         sys.error(s"graft-commit: analyzeNdv column '$c' is not in the " +
@@ -1977,7 +1977,7 @@ object CommitSink {
     val m = parseManifest(Paths.get(dir)).getOrElse(
       sys.error(s"graft-commit: no committed manifest at $dir"))
     if (m.eqDeletes.isEmpty) return Seq.empty
-    val schema = StructType.fromDDL(m.ddl)
+    val schema = m.schema
     val affected = m.files.filter(f => m.eqDeletes.exists(_.seq > m.seqOf(f)))
     val seqDf = broadcast(affected.map(f => (f, m.seqOf(f)))
       .toDF("_graft_src_file", "_graft_src_seq"))
@@ -2516,10 +2516,16 @@ object CommitSink {
                                          * and oracle entries can inject
                                          * deterministic times. */
                                        commitTs: Long = -1L) {
+    /** `ddl` parsed once per manifest, not once per planning lookup. */
+    lazy val schema: StructType = StructType.fromDDL(ddl)
     /** The recorded add-sequence of a listed file (0 = legacy/unknown). */
     def seqOf(f: String): Long = fileSeq.getOrElse(f, 0L)
     /** Equality deletes covering file `f`: strictly newer than its add. */
     def eqFor(f: String): Seq[EqDelete] = eqDeletes.filter(_.seq > seqOf(f))
+    /** [[eqFor]] as reader refs under table `dir`, key columns typed from
+      * this schema (readers widen any projection to cover them). */
+    def eqRefsFor(f: String, dir: String): Seq[EqRef] = eqFor(f).map(e =>
+      EqRef(Paths.get(dir, e.file).toString, StructType(e.colNames.map(schema(_)))))
     /** True for a two-level root whose per-file entries are not loaded. */
     def unresolvedRoot: Boolean = groups.nonEmpty && files.isEmpty
     /** Current-name → physical-name map of file `f` (empty = identity). */
@@ -2665,16 +2671,19 @@ object CommitSink {
   private[graft] def parseManifest(dir: Path): Option[Manifest] =
     parseManifestRoot(dir).map(resolveGroups(dir, _))
 
-  /** The immutable manifest of a PAST version (time travel, o17). Fails
+  /** [[parseManifestRoot]] of a PAST version's immutable manifest. Fails
     * loudly on a version that never committed. */
-  private[graft] def parseManifestVersion(dir: Path, version: Long): Manifest = {
+  private[graft] def parseManifestVersionRoot(dir: Path, version: Long): Manifest = {
     val mf = dir.resolve(versionFile(version))
     require(CommitSink.io.exists(mf),
       s"graft-commit: no version $version at $dir (have: " +
         listVersions(dir).mkString(", ") + ")")
-    resolveGroups(dir,
-      parseManifestText(CommitSink.io.readString(mf), mf.toString))
+    parseManifestText(CommitSink.io.readString(mf), mf.toString)
   }
+
+  /** The immutable manifest of a PAST version (time travel, o17). */
+  private[graft] def parseManifestVersion(dir: Path, version: Long): Manifest =
+    resolveGroups(dir, parseManifestVersionRoot(dir, version))
 
   /** TIMESTAMP AS OF resolution (o49): the newest MAIN-lineage
     * committed version whose recorded commit wall time (`committs`,
@@ -2798,23 +2807,16 @@ object CommitSink {
     * fine onto files written as non-null `id BIGINT NOT NULL` (the JSON
     * payload is identical), so comparing raw DDL strings would refuse
     * valid appends. */
-  private[sources] def sameColumns(a: String, b: String): Boolean = {
-    def cols(d: String) =
-      StructType.fromDDL(d).fields.map(f => (f.name, f.dataType)).toSeq
+  private[sources] def sameColumns(a: StructType, b: StructType): Boolean = {
+    def cols(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
     cols(a) == cols(b)
   }
 
   /** (schema DDL, relative file names) of a manifest. Hand-rolled parse
     * of our own hand-rolled format — both sides live in this file. */
   private[graft] def readManifest(mf: Path): (String, Seq[String]) = {
-    val txt = CommitSink.io.readString(mf)
-    val ddl = "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-      .getOrElse(sys.error(s"graft-commit: manifest missing schema: $mf"))
-    val files = "\"files\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("")
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    (ddl, files)
+    val m = parseManifestText(io.readString(mf), mf.toString)
+    (m.ddl, m.files)
   }
 
   /** Write-and-swap the manifest under the per-path commit lock: the

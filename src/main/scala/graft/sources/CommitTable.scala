@@ -84,19 +84,12 @@ class CommitSinkProvider extends TableProvider
       case Some(kind) => CommitMeta.schemaOf(kind)
       case None => inferDataSchema(options)
     }
-  private def inferDataSchema(options: CaseInsensitiveStringMap): StructType = {
-    val base = Option(options.get("path"))
-      .flatMap { p =>
-        versionOf(options)
-          .orElse(branchOf(options).map(b =>
-            CommitSink.branchHead(Paths.get(p), b)))
-          .map(v => Some(CommitSink.parseManifestVersion(Paths.get(p), v)))
-          .getOrElse(CommitSink.parseManifest(Paths.get(p)))
-      }
-      .map(m => StructType.fromDDL(m.ddl))
-      .getOrElse(new StructType())
-    if (cdfOf(options)) CommitSink.cdfSchema(base) else base
-  }
+  // the table resolves which manifest describes the read; a path-less
+  // read binds no columns here and fails in getTable()
+  private def inferDataSchema(options: CaseInsensitiveStringMap): StructType =
+    Option(options.get("path")).fold(new StructType())(p =>
+      new CommitSinkTable(p, version = versionOf(options),
+        changeFeed = cdfOf(options), branch = branchOf(options)).schema())
   override def supportsExternalMetadata(): Boolean = true
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
@@ -197,33 +190,41 @@ class CommitSinkTable(path: String,
     file ++ pos
   }
 
-  /** The committed version's schema when one exists (the catalog /
-    * row-level-operation path needs real columns to resolve against);
-    * empty for a never-written target (the write-only provider path —
-    * ACCEPT_ANY_SCHEMA makes the incoming query's schema bind). */
   /** The branch head resolved NOW — a branch read binds to the head as
     * of plan/scan time, never a stale pin. */
   private def branchVersion: Option[Long] =
     branch.map(b => CommitSink.branchHead(Paths.get(path), b))
 
+  /** A version pin's `_MANIFEST-v<n>.json` is immutable: read once per
+    * table instance for schema(), metadataColumns() and the scan. */
+  private lazy val pinnedRoot: Option[CommitSink.Manifest] =
+    version.map(CommitSink.parseManifestVersionRoot(Paths.get(path), _))
+
+  /** The ROOT manifest (schema and partition spec live there; group
+    * files are never read for them) this table describes: the version
+    * pin, else the branch head, else the live one; None if never written. */
+  private def describedRoot: Option[CommitSink.Manifest] =
+    pinnedRoot.orElse(branchVersion.map(
+      CommitSink.parseManifestVersionRoot(Paths.get(path), _)))
+      .orElse(CommitSink.parseManifestRoot(Paths.get(path)))
+
+  /** The committed version's schema when one exists (the catalog /
+    * row-level-operation path needs real columns to resolve against);
+    * empty for a never-written target (the write-only provider path —
+    * ACCEPT_ANY_SCHEMA makes the incoming query's schema bind). */
   override def schema(): StructType = {
-    val base = version.orElse(branchVersion) match {
-      case Some(v) =>
-        StructType.fromDDL(CommitSink.parseManifestVersion(Paths.get(path), v).ddl)
-      case None =>
-        CommitSink.parseManifest(Paths.get(path))
-          .map(m => StructType.fromDDL(m.ddl)).getOrElse(new StructType())
-    }
+    val base = describedRoot.fold(new StructType())(_.schema)
     if (changeFeed) CommitSink.cdfSchema(base) else base
   }
 
   /** The recorded partition spec as V2 transforms (identity or bucket —
     * [[CommitSink.PartSpec]]), so catalog consumers (DESCRIBE, SHOW
-    * CREATE) see the layout. The SPJ contract itself rides on the
-    * SCAN's reported KeyGroupedPartitioning, not on this. */
+    * CREATE) see the layout — of the pinned version or branch head when
+    * the table is pinned, like [[schema]]. The SPJ contract itself rides
+    * on the SCAN's reported KeyGroupedPartitioning, not on this. */
   override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] =
     if (changeFeed) Array.empty
-    else CommitSink.parseManifest(Paths.get(path)).flatMap(_.partCol).toSeq
+    else describedRoot.flatMap(_.partCol).toSeq
       .flatMap(CommitSink.PartSpec.parseSpecs).map(spec =>
       spec match {
         case CommitSink.IdentitySpec(c) =>
@@ -297,6 +298,7 @@ class CommitSinkTable(path: String,
         }
       }
     new CommitScanBuilder(path, version.orElse(branchVersion),
+      pinned = pinnedRoot,
       maxCommitsPerTrigger =
         Option(options.get("maxCommitsPerTrigger")).map { v =>
           val n = try v.trim.toInt catch {
@@ -369,9 +371,9 @@ class CommitSinkTable(path: String,
         "graft-commit: spark.graft.commit.rowLevelMode must be " +
           s"'copy-on-write' or 'merge-on-read', got '$mode'")
       val eligible = mode == "merge-on-read" &&
-        CommitSink.parseManifest(Paths.get(path)).exists { m =>
+        CommitSink.parseManifestRoot(Paths.get(path)).exists { m =>
           m.payload == "parquet" && {
-            val names = StructType.fromDDL(m.ddl).fieldNames
+            val names = m.schema.fieldNames
             !names.contains(CommitSink.FILE_COL) &&
               !names.contains(CommitSink.POS_COL)
           } &&
@@ -446,7 +448,7 @@ class CommitSinkTable(path: String,
       s"graft-commit: spark.graft.commit.deleteMode must be 'copy-on-write' " +
         s"or 'merge-on-read', got '$deleteMode'")
     val morEligible = m.payload == "parquet" && {
-      val names = StructType.fromDDL(m.ddl).fieldNames
+      val names = m.schema.fieldNames
       !names.contains(CommitSink.FILE_COL) && !names.contains(CommitSink.POS_COL)
     }
     if (deleteMode == "merge-on-read" && morEligible) {
@@ -480,7 +482,7 @@ class CommitSinkTable(path: String,
       val specs = m.partCol.toSeq.flatMap(CommitSink.PartSpec.parseSpecs)
       val (shaped, pre) =
         if (specs.size > 1) {
-          val ks = specs.map(CommitSink.keyColOf(_, StructType.fromDDL(m.ddl)))
+          val ks = specs.map(CommitSink.keyColOf(_, m.schema))
           (survivors.repartition(ks: _*).sortWithinPartitions(ks: _*), true)
         } else (survivors, false)
       val w0 = shaped.write.format(CommitSink.NAME).option("path", path)

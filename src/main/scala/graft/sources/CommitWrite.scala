@@ -433,7 +433,7 @@ class CommitStreamingWrite(path: String, schema: StructType,
       // Appending under a DIFFERENT column set would carry forward files
       // that re-read as silent nulls under the new DDL — refuse instead
       // (names + types; nullability does not change the JSON payload).
-      require(carried.isEmpty || CommitSink.sameColumns(carriedDdl, schema.toDDL),
+      require(carried.isEmpty || manifest.forall(m => CommitSink.sameColumns(m.schema, schema)),
         s"graft-commit: streaming append schema mismatch at $path — manifest " +
           s"has [$carriedDdl] but this query writes [${schema.toDDL}]; " +
           "truncate via a batch overwrite first or match the schema")
@@ -632,7 +632,7 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
     val planning = rw.planning
     val scanned = rw.scanned()
     val carried = planning.files.filterNot(scanned)
-    require(carried.isEmpty || CommitSink.sameColumns(planning.ddl, schema.toDDL),
+    require(carried.isEmpty || CommitSink.sameColumns(planning.schema, schema),
       s"graft-commit: rewrite schema mismatch at $path — carried files have " +
         s"[${planning.ddl}] but this rewrite writes [${schema.toDDL}]")
     // carried files keep their recorded stats verbatim; a group rewrite
@@ -715,7 +715,7 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
       // Appending under a DIFFERENT column set would re-read carried files
       // as silent nulls under the new DDL — refuse BEFORE swapping
       // anything (names + types; nullability does not change the payload).
-      require(carried.isEmpty || CommitSink.sameColumns(carriedDdl, schema.toDDL),
+      require(carried.isEmpty || manifest.forall(m => CommitSink.sameColumns(m.schema, schema)),
         s"graft-commit: append schema mismatch at $path — manifest has " +
           s"[$carriedDdl] but this write has [${schema.toDDL}]; use " +
           "overwrite (truncate) to replace the table under a new schema")

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Path => NioPath}
 
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.ColumnIOFactory
@@ -175,13 +177,15 @@ private[graft] object ParquetPayload {
         : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] = support
   }
 
-  /** InternalRow writer over `file` — same codec/layout decisions as
-    * [[writer]]; returns the support so the caller can set the resolved
-    * marker offset. */
+  /** Snappy InternalRow writer over `file`; returns the support so the
+    * caller can set the resolved marker offset. Like [[FileRows]], each
+    * writer gets its own copy of the parsed Hadoop defaults: one built
+    * without a configuration re-parses Hadoop's XML per staged file. */
   def rowWriter(file: NioPath, msg: MessageType, schema: StructType)
       : (ParquetWriter[InternalRow], InternalRowWriteSupport) = {
     val support = new InternalRowWriteSupport(msg, schema)
     val w = new RowWriterBuilder(CommitSink.io.outputFile(file), support)
+      .withConf(CommitIO.hadoopConf())
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
     (w, support)
@@ -210,10 +214,18 @@ private[graft] object ParquetPayload {
     * replaced built a SimpleGroup (an ArrayList per field, every
     * primitive boxed) per row and then traversed it a second time
     * through a per-value DataType dispatch. Each requested field's
-    * converter knows its Spark type once, at construction. */
+    * converter knows its Spark type once, at construction.
+    *
+    * Each open gets read options over its own copy of the JVM's parsed
+    * Hadoop defaults ([[CommitIO.hadoopConf]]), under either binding:
+    * without options parquet re-parses Hadoop's default XML per open, a
+    * fixed cost per file that dominated small snapshot reads. Options
+    * are never shared: `ParquetFileReader.close()` releases their codec
+    * factory under every other reader holding them. */
   final class FileRows(file: NioPath, wanted: StructType) {
     import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-    private val reader = ParquetFileReader.open(CommitSink.io.inputFile(file))
+    private val reader = ParquetFileReader.open(CommitSink.io.inputFile(file),
+      ParquetReadOptions.builder(new HadoopParquetConfiguration(CommitIO.hadoopConf())).build())
     private val fileSchema = reader.getFooter.getFileMetaData.getSchema
     private val present = wanted.fields.filter(f => fileSchema.containsField(f.name))
     /** requested-schema index per wanted field (-1 = absent → null). */

@@ -1,11 +1,14 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import sources.{CommitIO, CommitSink, HadoopCommitIO, NioCommitIO}
+import sources.{CommitIO, CommitSink, HadoopCommitIO, NioCommitIO, ParquetPayload}
 
 /** The [[CommitIO]] contract, property-tested against BOTH bindings —
   * the r15 proof that the storage seam has one behavior regardless of
@@ -21,7 +24,10 @@ import sources.{CommitIO, CommitSink, HadoopCommitIO, NioCommitIO}
   *    writers through [[CommitSink.writeManifest]]'s check-and-swap all
   *    land, every commit id appears exactly once, and a concurrent
   *    reader never observes a TORN manifest (old or new, possibly
-  *    absent during the hadoop fallback window — never a prefix).
+  *    absent during the hadoop fallback window — never a prefix);
+  *  - the parquet payload's handles share one parsed Hadoop
+  *    configuration per JVM: threads opening `FileRows` and writing
+  *    through `rowWriter` at once decode exactly what one thread does.
   */
 class CommitIOContractSpec extends AnyFunSuite {
 
@@ -33,6 +39,33 @@ class CommitIOContractSpec extends AnyFunSuite {
     Tables.deleteRecursively(d)
     Files.createDirectories(Paths.get(d))
     Paths.get(d)
+  }
+
+  private val payloadSchema = StructType(Seq(
+    StructField("id", LongType), StructField("s", StringType),
+    StructField("x", DoubleType)))
+
+  private def payloadRows(seed: Int): Seq[InternalRow] = (0 until 400).map { i =>
+    InternalRow(seed * 1000L + i,
+      if (i % 7 == 0) null else UTF8String.fromString(s"v$seed-$i"), i * 0.5)
+  }
+
+  private def writePayload(p: Path, rows: Seq[InternalRow]): Unit = {
+    val (w, _) = ParquetPayload.rowWriter(p,
+      ParquetPayload.message(payloadSchema), payloadSchema)
+    try rows.foreach(w.write) finally w.close()
+  }
+
+  private def readPayload(p: Path): Seq[Seq[Any]] = {
+    val fr = new ParquetPayload.FileRows(p, payloadSchema)
+    try {
+      val out = Vector.newBuilder[Seq[Any]]
+      while (fr.next()) out += payloadSchema.indices.map { i =>
+        val fi = fr.fieldIndex(i)
+        if (fi >= 0) fr.values(fi) else null
+      }
+      out.result()
+    } finally fr.close()
   }
 
   for ((name, io) <- bindings) {
@@ -151,6 +184,41 @@ class CommitIOContractSpec extends AnyFunSuite {
         // version trail is gapless (each winner observed its predecessor)
         assert(CommitSink.parseManifest(d).get.commit == threads.toLong * perThread)
         assert(CommitSink.listVersions(d) == (0L to threads.toLong * perThread))
+      }
+    }
+
+    test(s"[$name] concurrent FileRows opens and rowWriter writes decode like one thread") {
+      val d = freshDir(s"payload_$name")
+      CommitSink.withIo(io) {
+        val shared = d.resolve("shared.parquet")
+        writePayload(shared, payloadRows(0))
+        val expected = readPayload(shared)
+        assert(expected == payloadRows(0).map(_.toSeq(payloadSchema)))
+        val threads = 4
+        val pool = Executors.newFixedThreadPool(threads)
+        val start = new CountDownLatch(1)
+        try {
+          // each thread writes its own file while the others read the
+          // shared one, then reads its own file back
+          val futures = (1 to threads).map { t =>
+            pool.submit(new Callable[(Seq[Seq[Seq[Any]]], Path, Seq[Seq[Any]])] {
+              def call(): (Seq[Seq[Seq[Any]]], Path, Seq[Seq[Any]]) = {
+                start.await()
+                val own = d.resolve(s"t$t.parquet")
+                val sharedReads = (0 until 3).map(_ => readPayload(shared))
+                writePayload(own, payloadRows(t))
+                (sharedReads, own, readPayload(own))
+              }
+            })
+          }
+          start.countDown()
+          futures.zipWithIndex.foreach { case (f, i) =>
+            val (sharedReads, own, ownRead) = f.get(120, TimeUnit.SECONDS)
+            sharedReads.foreach(r => assert(r == expected))
+            assert(ownRead == readPayload(own), s"thread ${i + 1}'s own file")
+            assert(ownRead == payloadRows(i + 1).map(_.toSeq(payloadSchema)))
+          }
+        } finally pool.shutdown()
       }
     }
   }
