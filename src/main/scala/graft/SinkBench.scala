@@ -36,7 +36,7 @@ object SinkBench {
     timed("write") {
       Tables.deleteRecursively(dir)
       df.write.format("graft-commit").option("path", dir)
-        .option("payload", "parquet").mode("overwrite").save()
+        .mode("overwrite").save()
     }
     timed("read") {
       spark.read.format("graft-commit").option("path", dir).load()

@@ -196,18 +196,12 @@ class CommitCatalog extends TableCatalog with FunctionCatalog {
           s"${spec.sourceRule}, got ${f.dataType.simpleString}")
     }
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    // payload format per table (TBLPROPERTIES ('payload'='json')); the
-    // default is the at-scale parquet encoder — validate the declared
-    // schema against it NOW so CREATE fails fast, not the first INSERT
-    val payload = Option(properties.get("payload")).map(_.trim.toLowerCase)
-      .getOrElse("parquet")
-    require(payload == "json" || payload == "parquet",
-      s"graft-commit: table property payload must be 'json' or 'parquet', got '$payload'")
-    val ok: org.apache.spark.sql.types.DataType => Boolean =
-      if (payload == "parquet") ParquetPayload.supported
-      else CommitSink.supportedTypes.contains
-    val bad = schema.fields.filterNot(f => ok(f.dataType))
-    require(bad.isEmpty, s"graft-commit ($payload payload): unsupported column " +
+    // TBLPROPERTIES ('payload'=v) may only name the one staged-file
+    // format; validate the declared schema against it NOW so CREATE
+    // fails fast, not the first INSERT
+    ParquetPayload.requireChoice(Option(properties.get("payload")))
+    val bad = schema.fields.filterNot(f => ParquetPayload.supported(f.dataType))
+    require(bad.isEmpty, "graft-commit: unsupported column " +
       s"types: ${bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}")
     val p = pathFor(ident)
     Files.createDirectories(p)
@@ -215,7 +209,7 @@ class CommitCatalog extends TableCatalog with FunctionCatalog {
     // writer's commit is never clobbered; a fresh generation id is minted
     try CommitSink.writeManifest(p, schema.toDDL, Seq.empty, 0L, expectedPrev = -1L,
       partCol = partCol,
-      tableId = java.util.UUID.randomUUID().toString, payload = payload)
+      tableId = java.util.UUID.randomUUID().toString)
     catch { case _: IllegalArgumentException =>
       throw new TableAlreadyExistsException(ident)
     }
@@ -235,7 +229,7 @@ class CommitCatalog extends TableCatalog with FunctionCatalog {
   /** Lakehouse SCHEMA EVOLUTION (o31) — `ALTER TABLE t ADD COLUMNS (c T)`:
     * a METADATA-ONLY commit that widens the manifest DDL and carries
     * every file, stat, vector and epoch verbatim. Old files simply lack
-    * the column and read as NULL — the parquet-payload reader's
+    * the column and read as NULL — the payload reader's
     * absent-field rule and Spark's native schema-on-read both already do
     * this, and the zone-map rule "no recorded range = never prune / MIN
     * and MAX see only NULLs there" keeps file skipping and metadata-only
@@ -255,9 +249,6 @@ class CommitCatalog extends TableCatalog with FunctionCatalog {
     val p = pathFor(ident)
     val m = CommitSink.parseManifest(p).getOrElse(throw new NoSuchTableException(ident))
     val cur = m.schema
-    val ok: org.apache.spark.sql.types.DataType => Boolean =
-      if (m.payload == "parquet") ParquetPayload.supported
-      else CommitSink.supportedTypes.contains
     // the commit this ALTER will land as — what seq-stamps its ledger
     // entries (files with fileSeq < evoSeq predate the evolution)
     val evoSeq = m.commit + 1
@@ -295,8 +286,8 @@ class CommitCatalog extends TableCatalog with FunctionCatalog {
         require(add.position() == null,
           "graft-commit: ALTER ADD COLUMN FIRST/AFTER is unsupported — " +
             "new columns append at the end")
-        require(ok(add.dataType()),
-          s"graft-commit (${m.payload} payload): unsupported ALTER column " +
+        require(ParquetPayload.supported(add.dataType()),
+          "graft-commit: unsupported ALTER column " +
             s"type ${add.dataType().simpleString} for '$name'")
         (sch.add(org.apache.spark.sql.types.StructField(name, add.dataType())),
           log, pc)
@@ -304,10 +295,10 @@ class CommitCatalog extends TableCatalog with FunctionCatalog {
         // DROP COLUMN (r17): metadata-only, like ADD — the DDL narrows
         // and every reader projects BY NAME against the current schema,
         // so committed files simply stop being asked for the field
-        // (parquet chunk projection skips it; the JSON decoder never
-        // parses it). Files, stats, vectors, epochs carry verbatim;
-        // leftover zone/bloom entries for the dropped name are
-        // unreachable (no post-ALTER filter can name the column) and
+        // (parquet chunk projection skips it). Files, stats, vectors,
+        // epochs carry verbatim; leftover zone/bloom entries for the
+        // dropped name are unreachable (no post-ALTER filter can name
+        // the column) and
         // die with their files on rewrite. Time travel keeps each
         // version's own shape — `VERSION AS OF` a pre-DROP commit still
         // reads the column. Refused when the column is load-bearing:
@@ -387,7 +378,7 @@ class CommitCatalog extends TableCatalog with FunctionCatalog {
     CommitSink.writeManifest(p, widened.toDDL, m.files, m.commit + 1,
       m.epochs, expectedPrev = m.commit, partCol = newPartCol,
       stats = m.stats, tableId = CommitSink.carriedOrFreshTableId(Some(m)),
-      payload = m.payload, deletes = m.deletes,
+      deletes = m.deletes,
       fileSeq = m.fileSeq, eqDeletes = m.eqDeletes, blooms = m.blooms,
       schemaLog = newLog)
     new CommitSinkTable(p.toString, acceptAnySchema = false)

@@ -187,9 +187,9 @@ class CommitRowLevelOperation(path: String, cmd: RowLevelOperation.Command)
   * commit hard-fails the statement (the rewrite position).
   *
   * Selected per table by `spark.graft.commit.rowLevelMode=
-  * merge-on-read` when eligible (parquet payload, no `_file`/`_pos`
-  * data columns; partitioned tables included since the r14 lift — the
-  * vector machinery is per-file and layout-blind, and the delta write
+  * merge-on-read` when eligible (no `_file`/`_pos` data columns;
+  * partitioned tables included since the r14 lift — the vector
+  * machinery is per-file and layout-blind, and the delta write
   * clusters inserted rows on the partition column to preserve the
   * one-key-per-file layout) — copy-on-write stays the default and
   * the fallback, matching Iceberg's write.update.mode/write.merge.mode
@@ -327,7 +327,6 @@ class CommitDeltaBatchWrite(path: String, planning: CommitSink.Manifest)
         partCol = planning.partCol, // DML preserves the table layout
         stats = planning.stats.view.filterKeys(files.toSet).toMap ++ newStats,
         tableId = CommitSink.carriedOrFreshTableId(Some(planning)),
-        payload = planning.payload,
         deletes = dvMap.view.filterKeys(files.toSet).toMap,
         fileSeq = planning.fileSeq ++ newFiles.map(_ -> commitId),
         eqDeletes = planning.eqDeletes,
@@ -356,7 +355,7 @@ class CommitDeltaWriterFactory(path: String, ddl: String, nonce: String,
 }
 
 /** Executor-side delta writer: inserted rows stream through an ordinary
-  * staged-file writer (parquet payload, stats collected); deleted
+  * staged-file writer (stats collected); deleted
   * positions buffer per file and flush as one merged staged vector at
   * task commit. Buffering (not streaming against the requested sort)
   * keeps correctness independent of whether the distribution/ordering
@@ -373,7 +372,7 @@ class CommitDeltaWriter(path: String, ddl: String, partitionId: Int,
   // key (with its pk recorded), preserving the storage-partitioned-join
   // layout across MOR DML
   private val inserts = new CommitDataWriter(path, ddl, partitionId, taskId,
-    partCol = partCol, stagingSub = nonce, payload = "parquet")
+    partCol = partCol, stagingSub = nonce)
   private val dels = scala.collection.mutable.LinkedHashMap
     .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
 

@@ -31,11 +31,9 @@ private[graft] trait CommitIO extends Serializable {
   // parquet-java file handles (payload encode/decode)
   def inputFile(p: Path): org.apache.parquet.io.InputFile
   def outputFile(p: Path): org.apache.parquet.io.OutputFile
-  // byte/char streams (vectors, json payload)
+  // byte streams (deletion vectors, bloom sidecars)
   def newInputStream(p: Path): java.io.InputStream
   def newOutputStream(p: Path): java.io.OutputStream
-  def newBufferedReader(p: Path): java.io.BufferedReader
-  def newBufferedWriter(p: Path): java.io.BufferedWriter
   // whole-object text (manifests)
   def readString(p: Path): String
   def writeString(p: Path, s: String): Unit
@@ -79,10 +77,6 @@ private[graft] object NioCommitIO extends CommitIO {
     Files.newInputStream(p)
   override def newOutputStream(p: Path): java.io.OutputStream =
     Files.newOutputStream(p)
-  override def newBufferedReader(p: Path): java.io.BufferedReader =
-    Files.newBufferedReader(p)
-  override def newBufferedWriter(p: Path): java.io.BufferedWriter =
-    Files.newBufferedWriter(p)
   override def readString(p: Path): String = Files.readString(p)
   override def writeString(p: Path, s: String): Unit = {
     Files.writeString(p, s); ()
@@ -190,12 +184,6 @@ private[graft] class HadoopCommitIO extends CommitIO {
   override def newInputStream(p: Path): java.io.InputStream = fs.open(hp(p))
   override def newOutputStream(p: Path): java.io.OutputStream =
     fs.create(hp(p), true)
-  override def newBufferedReader(p: Path): java.io.BufferedReader =
-    new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(hp(p)), java.nio.charset.StandardCharsets.UTF_8))
-  override def newBufferedWriter(p: Path): java.io.BufferedWriter =
-    new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      fs.create(hp(p), true), java.nio.charset.StandardCharsets.UTF_8))
   override def readString(p: Path): String = {
     val in = fs.open(hp(p))
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)

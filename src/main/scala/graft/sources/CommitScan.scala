@@ -30,8 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * optimization and never a correctness dependency.
   *
   * Column pruning (SupportsPushDownRequiredColumns) reaches the reader:
-  * the JSON-line decoder materializes ONLY requested fields, so a 2-column
-  * projection of a 50-column table parses 2 values per row. Aggregate
+  * the parquet decoder reads ONLY requested columns' chunks, so a 2-column
+  * projection of a 50-column table decodes 2 values per row. Aggregate
   * pushdown (SupportsPushDownAggregates) goes further — an unfiltered,
   * ungrouped COUNT(*)/MIN/MAX is answered ENTIRELY from the manifest's
   * per-file statistics (one row, zero data files opened): the Iceberg
@@ -247,9 +247,6 @@ class CommitChangesScan(path: String, manifest: CommitSink.Manifest,
                         snapshotOnRewrite: Boolean)
     extends Scan with Batch {
   private val dir = Paths.get(path)
-  require(manifest.payload == "parquet" || manifest.files.isEmpty,
-    s"graft-commit: the change feed requires the parquet payload " +
-      s"($path is '${manifest.payload}')")
   require(!manifest.schema.fieldNames
       .exists(n => n == CommitSink.CHANGE_TYPE_COL ||
         n == CommitSink.COMMIT_VERSION_COL),
@@ -271,8 +268,7 @@ class CommitChangesScan(path: String, manifest: CommitSink.Manifest,
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new CommitTableMicroBatchStream(path, manifest.ddl, maxCommitsPerTrigger,
-      payload = manifest.payload, snapshotOnRewrite = snapshotOnRewrite,
-      changeFeed = true,
+      snapshotOnRewrite = snapshotOnRewrite, changeFeed = true,
       // startingVersion is INCLUSIVE: the first batch begins there
       startAfter = startingVersion.map(_ - 1).getOrElse(-1L))
   override def description(): String =
@@ -846,7 +842,6 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
       // columns (a data column of either name decodes from the payload)
       stampFile = readSchema().fieldNames.contains(CommitSink.FILE_COL) &&
         !manifest.schema.fieldNames.contains(CommitSink.FILE_COL),
-      payload = manifest.payload,
       stampPos = readSchema().fieldNames.contains(CommitSink.POS_COL) &&
         !manifest.schema.fieldNames.contains(CommitSink.POS_COL))
 
@@ -859,7 +854,7 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
     // manifest DDL: if a future Spark prunes columns on streaming scans,
     // the readers must emit rows of the PLAN's schema, not full width
     new CommitTableMicroBatchStream(path, readSchema().toDDL, maxCommitsPerTrigger,
-      payload = manifest.payload, snapshotOnRewrite = snapshotOnRewrite)
+      snapshotOnRewrite = snapshotOnRewrite)
   }
 
   override def description(): String =
@@ -890,7 +885,6 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
   * Delta documents for its checkpoint retention. */
 class CommitTableMicroBatchStream(path: String, ddl: String,
                                   maxCommitsPerTrigger: Int,
-                                  payload: String = "json",
                                   /** Opt-in SELF-SERVICE RECOVERY
                                     * (`option("snapshotOnRewrite", true)`) —
                                     * the Iceberg
@@ -1090,13 +1084,6 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
           try manifestAt(endCommit)
           catch { case _: IllegalArgumentException =>
             CommitSink.parseManifest(dir).getOrElse(manifestAt(-1L)) }
-        // a truncate may have switched the payload under the stream —
-        // the CDF reader decodes parquet only, so refuse instead of
-        // parsing the wrong format as data
-        require(m.payload == "parquet" || m.files.isEmpty,
-          s"graft-commit: the change feed's snapshot re-bootstrap found a " +
-            s"'${m.payload}'-payload table at $path — restart the stream " +
-            "from a fresh checkpoint")
         // the snapshot's live rows = files minus vectors minus equality
         // deletes — ship the applicable key files per partition so the
         // re-bootstrap never re-inserts a replaced row
@@ -1157,18 +1144,8 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
         catch { case _: IllegalArgumentException =>
           CommitSink.parseManifest(dir).getOrElse(manifestAt(-1L)) }
       else manifestAt(end.asInstanceOf[CommitPos].commit)
-    // a re-bootstrap (or any emitted batch) must decode with THIS
-    // stream's reader: a truncate that switched the payload under the
-    // stream is refused loudly instead of parsed as the wrong format
-    def checkPayload(m: CommitSink.Manifest): CommitSink.Manifest = {
-      require(m.payload == payload || m.files.isEmpty,
-        s"graft-commit: the table at $path switched payload " +
-          s"('$payload' -> '${m.payload}') under this stream — restart " +
-          "from a fresh checkpoint")
-      m
-    }
     if (snapshotOnRewrite && !genMatches(sp))
-      return part(checkPayload(endM), endM.files) // generation change: re-bootstrap
+      return part(endM, endM.files) // generation change: re-bootstrap
     checkGeneration(sp)
     val from = sp.commit
     val to = end.asInstanceOf[CommitPos].commit
@@ -1180,7 +1157,7 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
         try Some(manifestAt(from))
         catch { case _: IllegalArgumentException => None }
       else Some(manifestAt(from))
-    if (beforeOpt.isEmpty) return part(checkPayload(endM), endM.files)
+    if (beforeOpt.isEmpty) return part(endM, endM.files)
     val beforeM = beforeOpt.get
     val before = beforeM.files.toSet
     val removed = before -- endM.files.toSet
@@ -1195,7 +1172,7 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
       // a rewrite landed inside the range: refuse (default) or, under
       // snapshotOnRewrite, re-bootstrap — emit the END snapshot whole;
       // later ranges resume incremental tailing from `to`
-      if (snapshotOnRewrite) return part(checkPayload(endM), endM.files)
+      if (snapshotOnRewrite) return part(endM, endM.files)
       sys.error(s"graft-commit: commits ${from + 1}..$to of $path removed " +
         s"${removed.size} file(s) / changed ${dvChanged.size} deletion " +
         s"vector(s)${if (eqChanged) " / changed equality deletes" else ""} " +
@@ -1209,7 +1186,7 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     if (changeFeed) new CommitChangesReaderFactory(CommitSink.cdfSchema(schema))
-    else new CommitReaderFactory(schema, payload = payload)
+    else new CommitReaderFactory(schema)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -1319,10 +1296,9 @@ class CommitChangesReaderFactory(schema: StructType) extends PartitionReaderFact
     }
 }
 
-/** Change-feed reader: the data columns of one parquet-payload file,
+/** Change-feed reader: the data columns of one committed file,
   * position-filtered per the partition's mode, with the two CDF
-  * columns stamped. Parquet payload only — [[CommitSink.changePartitions]]
-  * enforces it. */
+  * columns stamped. */
 class CommitChangesReader(p: CommitChangesPartition, schema: StructType)
     extends PartitionReader[InternalRow] {
   // schema = data fields ++ _change_type ++ _commit_version
@@ -1432,21 +1408,12 @@ case class CommitKeyedFilesPartition(files: Seq[String], key: Any,
   * above a declined aggregate push — is an empty StructType), so no
   * reader re-parses it. */
 class CommitReaderFactory(schema: StructType, stampFile: Boolean = false,
-                          payload: String = "json",
                           stampPos: Boolean = false)
     extends PartitionReaderFactory {
   private def reader(fs: Seq[String], dvs: Seq[String],
                      eqs: Seq[Seq[EqRef]],
                      renames: Seq[Seq[(String, String)]]): PartitionReader[InternalRow] =
-    if (payload == "parquet")
-      new ParquetFilesReader(fs, schema, stampFile, stampPos, dvs, eqs, renames)
-    else {
-      // equality deletes require the parquet payload (the upsert write
-      // refuses json tables) — a json partition carrying refs is a bug
-      require(eqs.forall(_.isEmpty),
-        "graft-commit: equality deletes on a json-payload partition")
-      new CommitFilesReader(fs, schema, stampFile, stampPos, dvs, renames)
-    }
+    new ParquetFilesReader(fs, schema, stampFile, stampPos, dvs, eqs, renames)
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case CommitFilesPartition(fs, dvs, eqs, rn)         => reader(fs, dvs, eqs, rn)
@@ -1455,13 +1422,13 @@ class CommitReaderFactory(schema: StructType, stampFile: Boolean = false,
     }
 }
 
-/** Executor-side reader of the PARQUET payload — the decode mirror of
+/** Executor-side reader of the staged-file payload — the decode mirror of
   * [[CommitDataWriter]]'s InternalRow encoder, one file group per input
   * partition. Column projection reaches the chunk level: only
   * requested columns' pages are read ([[ParquetPayload.FileRows]]),
   * and a fully-pruned projection (COUNT-shaped plans) reads NO pages at
-  * all — row counts come straight from the footer. `_file` stamping
-  * works exactly like the JSON reader's. */
+  * all — row counts come straight from the footer. `_file`/`_pos`
+  * metadata columns are stamped per row. */
 class ParquetFilesReader(files: Seq[String], schema: StructType,
                          stampFile: Boolean = false,
                          stampPos: Boolean = false,
@@ -1607,153 +1574,4 @@ class ParquetFilesReader(files: Seq[String], schema: StructType,
   override def next(): Boolean = advance()
   override def get(): InternalRow = row
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-}
-
-/** Single-file form of [[CommitFilesReader]] — kept as the unit-test
-  * surface for the encoder/decoder round-trip properties. */
-class CommitFileReader(file: String, schema: StructType)
-    extends CommitFilesReader(Seq(file), schema)
-
-/** Executor-side reader: the exact mirror of [[CommitDataWriter]]'s
-  * line encoder — keys are unescaped field names, values are the
-  * portable scalar set with JSON string escapes (plus bare
-  * NaN/Infinity/-Infinity for doubles, which `Double.parseDouble`
-  * reads back bit-exactly). A field the writer omitted (null) stays
-  * null. Schema-driven, no generic JSON machinery needed. Reads a file
-  * GROUP sequentially — one partition per key group under identity
-  * partitioning, one per file otherwise. */
-class CommitFilesReader(files: Seq[String], schema: StructType,
-                        /** Fill the `_file` METADATA column (o21) with
-                          * the manifest-relative name of the file each
-                          * row came from. False when `_file` is a DATA
-                          * column (decoded from the payload). */
-                        stampFile: Boolean = false,
-                        /** Fill the `_pos` METADATA column (o27) with
-                          * the row's line index within its file. */
-                        stampPos: Boolean = false,
-                        /** Per-file deletion-vector paths (parallel to
-                          * `files`, "" = none). Always empty in practice
-                          * — merge-on-read requires the parquet payload
-                          * — but the skip is generic. */
-                        dvs: Seq[String] = Seq.empty,
-                        /** Per-file current→physical name pairs (o48):
-                          * old files' JSON keys carry the pre-rename
-                          * name — the key→field map rebinds per file. */
-                        renames: Seq[Seq[(String, String)]] = Seq.empty)
-    extends PartitionReader[InternalRow] {
-  private val queue = files.zipWithIndex.iterator
-  private var lines: java.io.BufferedReader = _
-  private val baseFieldIndex = schema.fieldNames.zipWithIndex.toMap
-  private var fieldIndex: Map[String, Int] = baseFieldIndex
-  private val fileIdx: Int =
-    if (stampFile) schema.fieldNames.indexOf(CommitSink.FILE_COL) else -1
-  private val posIdx: Int =
-    if (stampPos) schema.fieldNames.indexOf(CommitSink.POS_COL) else -1
-  private var curFile: UTF8String = _
-  /** Physical position (line index) of the NEXT row in the current file. */
-  private var pos = 0L
-  private var dv: Array[Long] = Array.emptyLongArray
-  private var dvPtr = 0
-  // Emit UnsafeRow, not GenericInternalRow: consumers that buffer or
-  // shuffle scan output directly (the row-level ReplaceData write does)
-  // assume the binary row format — a generic row on that path is read
-  // as garbage memory. Same device every built-in row reader uses.
-  private val toUnsafe =
-    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
-  private var row: InternalRow = _
-
-  private def deleted(p: Long): Boolean = {
-    while (dvPtr < dv.length && dv(dvPtr) < p) dvPtr += 1
-    dvPtr < dv.length && dv(dvPtr) == p
-  }
-
-  @scala.annotation.tailrec
-  private def nextLine(): String = {
-    if (lines == null) {
-      if (!queue.hasNext) return null
-      val (name, idx) = queue.next()
-      val f = Paths.get(name)
-      curFile = UTF8String.fromString(f.getFileName.toString)
-      lines = CommitSink.io.newBufferedReader(f)
-      pos = 0L
-      dvPtr = 0
-      dv = dvs.lift(idx).filter(_.nonEmpty)
-        .map(p => CommitSink.readDv(Paths.get(p)))
-        .getOrElse(Array.emptyLongArray)
-      // o48: old files' JSON keys carry the pre-rename name — look the
-      // file's own key names up into the current schema's positions
-      val fw = renames.lift(idx).getOrElse(Nil).toMap
-      fieldIndex =
-        if (fw.isEmpty) baseFieldIndex
-        else baseFieldIndex.map { case (n, j) => fw.getOrElse(n, n) -> j }
-    }
-    val l = lines.readLine()
-    if (l != null) l
-    else { lines.close(); lines = null; nextLine() }
-  }
-
-  @scala.annotation.tailrec
-  final override def next(): Boolean = {
-    val l = nextLine()
-    // copy(): the projection reuses ONE buffer; defensive against any
-    // consumer that buffers row references across advances (fixture-
-    // scale files — the per-row allocation is not a hot path)
-    if (l == null) false
-    else {
-      val p = pos; pos += 1
-      if (deleted(p)) next()
-      else { row = toUnsafe(parse(l, p)).copy(); true }
-    }
-  }
-  override def get(): InternalRow = row
-  override def close(): Unit = if (lines != null) lines.close()
-
-  private def parse(line: String, p: Long): InternalRow = {
-    val vals = new Array[Any](schema.length)
-    var i = 1 // past '{'
-    while (i < line.length && line.charAt(i) != '}') {
-      i += 1 // opening key quote (keys are raw field names, never escaped)
-      val ks = i
-      while (line.charAt(i) != '"') i += 1
-      val key = line.substring(ks, i)
-      i += 2 // closing quote + ':'
-      if (line.charAt(i) == '"') {
-        i += 1
-        val sb = new java.lang.StringBuilder
-        while (line.charAt(i) != '"') {
-          if (line.charAt(i) == '\\') {
-            line.charAt(i + 1) match {
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case 'u' =>
-                sb.append(Integer.parseInt(line.substring(i + 2, i + 6), 16).toChar)
-                i += 6
-              case c => sb.append(c); i += 2 // \" and \\
-            }
-          } else { sb.append(line.charAt(i)); i += 1 }
-        }
-        i += 1
-        fieldIndex.get(key).foreach(j =>
-          vals(j) = UTF8String.fromString(sb.toString))
-      } else {
-        val vs = i
-        while (i < line.length && line.charAt(i) != ',' && line.charAt(i) != '}') i += 1
-        val raw = line.substring(vs, i)
-        fieldIndex.get(key).foreach { j =>
-          vals(j) = schema(j).dataType match {
-            case LongType    => raw.toLong
-            case IntegerType => raw.toInt
-            case DoubleType  => java.lang.Double.parseDouble(raw)
-            case BooleanType => raw.toBoolean
-            case t => sys.error(s"unreachable: $t validated at write build()")
-          }
-        }
-      }
-      if (i < line.length && line.charAt(i) == ',') i += 1
-    }
-    if (fileIdx >= 0) vals(fileIdx) = curFile
-    if (posIdx >= 0) vals(posIdx) = p
-    new GenericInternalRow(vals)
-  }
 }

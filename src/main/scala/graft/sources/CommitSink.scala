@@ -53,27 +53,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *     leaves no state change at all (Round10Spec plants a failing
   *     partition and proves it).
   *
-  * Staged files carry one of two PAYLOAD formats, recorded per manifest
-  * and homogeneous per content lineage:
-  *
-  *   - '''parquet''' (default — [[ParquetPayload]]): columnar chunks,
-  *     snappy, chunk-level projection, and the full declared-type
-  *     surface (timestamp / timestamp_ntz / date / decimal / float /
-  *     smallint / tinyint on top of the scalar set) — the at-scale
-  *     encoder, and the one that can hold the CDC path's TYPE_MAPPING
-  *     schemas (the reference's ClickHouse DDL stores real
-  *     Date/DateTime/Decimal columns, consumer_to_file.py:145-150).
-  *     Driver-side re-reads go through Spark's native vectorized
-  *     parquet scan.
-  *   - '''json''' (`option("payload", "json")`): the original
-  *     engine-portable JSON-lines format, kept so the o09 registry
-  *     query can prove write → commit → read-back losslessness against
-  *     a DuckDB oracle byte-for-byte. Doubles round-trip bit-exactly
-  *     (shortest-round-trip `Double.toString`); field types are the
-  *     portable scalar set (long/int/double/string/boolean).
-  *
-  * Both are declared-schema payloads, validated at write resolution
-  * with a clear error, like TypeMapping's declared ingest path.
+  * Staged files carry ONE payload format, parquet ([[ParquetPayload]]):
+  * columnar chunks, snappy, chunk-level projection, and the full
+  * declared-type surface (long / int / smallint / tinyint / double /
+  * float / string / boolean / date / timestamp / timestamp_ntz /
+  * decimal) — the encoder that can hold the CDC path's TYPE_MAPPING
+  * schemas (the reference's ClickHouse DDL stores real
+  * Date/DateTime/Decimal columns, consumer_to_file.py:145-150). Doubles
+  * round-trip bit-exactly (±Inf, −0.0, denormals; NaN stays NaN). Driver-side
+  * re-reads go through Spark's native vectorized parquet scan. The
+  * schema is validated at write resolution with a clear error, like
+  * TypeMapping's declared ingest path. The original JSON-lines payload
+  * is retired: a manifest that lists files under it is refused at parse
+  * ([[parseManifestText]]), and a `payload` option or table property
+  * naming anything but parquet is refused ([[ParquetPayload.requireChoice]]).
   */
 object CommitSink {
   val NAME = "graft-commit"
@@ -269,9 +262,7 @@ object CommitSink {
                                          * on wide-text corpora — the
                                          * `documents` shape). Collected
                                          * unconditionally: one O(1) note
-                                         * per string cell, parquet-
-                                         * footer information the JSON
-                                         * payload lacks. */
+                                         * per string cell. */
                                        wid: Map[String, ColWidth] = Map.empty) {
     /** Every recorded key, leading first ([[pks]].size == spec arity). */
     def pks: Seq[Long] = pk.toSeq ++ pkRest
@@ -561,16 +552,13 @@ object CommitSink {
     }
   }
 
-  private[sources] val supportedTypes: Set[DataType] =
-    Set(LongType, IntegerType, DoubleType, StringType, BooleanType)
-
   /** Name of the `_file` metadata column (o21). */
   private[graft] val FILE_COL = "_file"
 
   /** Name of the `_pos` metadata column (o27): a row's PHYSICAL position
-    * within its committed data file (0-based, in the file's storage
-    * order — parquet row order / JSON line order), stable across reads
-    * because both payload readers emit rows sequentially. The position
+    * within its committed data file (0-based, in the file's parquet row
+    * order), stable across reads because the payload reader emits rows
+    * sequentially. The position
     * is what merge-on-read DELETE records: (file, pos) identifies a row
     * without touching its data (Iceberg's position-delete / Delta's
     * deletion-vector row id). Stamped BEFORE deletion vectors are
@@ -759,9 +747,6 @@ object CommitSink {
       else physNamesFor(ledger.toSeq, m.seqOf(f), dataCols).toSeq
     ((fromExclusive + 1) max 0L to to).foreach { v =>
       val cur = at(v)
-      require(cur.payload == "parquet" || cur.files.isEmpty,
-        s"graft-commit: the change feed requires the parquet payload " +
-          s"($path is '${cur.payload}')")
       val removed = prev.files.toSet -- cur.files.toSet
       // a removed file WITH a tombstone vector entry is a fully-covering
       // MOR delete (o33) — expressible: the data file still exists (the
@@ -854,9 +839,9 @@ object CommitSink {
       * post-image = 'delete' rows, the reverse = 'insert' rows. */
     def diffOf(v: Long): org.apache.spark.sql.DataFrame = {
       val (prev, cur) = (at(v - 1), at(v))
-      require(sameColumns(prev.schema, cur.schema) && prev.payload == cur.payload,
+      require(sameColumns(prev.schema, cur.schema),
         s"graft-commit: commit $v of $dir rewrote the table under a new " +
-          "schema or payload — no diff is expressible; restart past it")
+          "schema — no diff is expressible; restart past it")
       val removed = prev.files.toSet -- cur.files.toSet
       val added = cur.files.filterNot(prev.files.toSet)
       val dvChanged = prev.files.filter(f =>
@@ -990,9 +975,8 @@ object CommitSink {
     readManifestFiles(spark, dir, parseManifest(Paths.get(dir)).getOrElse(
       sys.error(s"graft-commit: no committed manifest at $dir")))
 
-  /** Spark-native read of a manifest's committed files — json or
-    * parquet per the manifest's recorded payload (the parquet branch
-    * gets Spark's vectorized columnar scan). Shared by every
+  /** Spark-native read of a manifest's committed files through Spark's
+    * vectorized parquet scan. Shared by every
     * driver-side re-read: readCommitted, time travel, compaction, and
     * the metadata-DELETE rewrite. */
   private[graft] def readManifestFiles(spark: SparkSession, dir: String,
@@ -1030,8 +1014,7 @@ object CommitSink {
         val paths = fs.map(f => Paths.get(dir, f).toString)
         val phys = StructType(schema.fields.map(f =>
           fw.get(f.name).map(n => f.copy(name = n)).getOrElse(f)))
-        val r = spark.read.schema(phys)
-        val b = if (m.payload == "parquet") r.parquet(paths: _*) else r.json(paths: _*)
+        val b = spark.read.schema(phys).parquet(paths: _*)
         val stamped =
           if (!needsMeta) b
           else b.withColumn(srcFile, col("_metadata.file_name"))
@@ -1541,7 +1524,7 @@ object CommitSink {
       m.epochs, expectedPrev = m.commit,
       partCol = newCol.map(PartSpec.encodeSpecs),
       stats = stats, tableId = carriedOrFreshTableId(Some(m)),
-      payload = m.payload, deletes = m.deletes,
+      deletes = m.deletes,
       fileSeq = m.fileSeq, eqDeletes = m.eqDeletes, blooms = m.blooms,
       schemaLog = m.schemaLog)
   }
@@ -1566,8 +1549,7 @@ object CommitSink {
     * entries merge per (file, column)); a rewritten file's blooms die
     * with it (writeManifest filters to listed files); sidecars are
     * GC-protected exactly like deletion vectors (manifestRefs). The
-    * one scan is Spark's native read — vectorized parquet, or the json
-    * source under the declared schema for json-payload tables (r19).
+    * one scan is Spark's native vectorized parquet read.
     * `expectedItemsPerFile` sizes the sidecars (~ -n·ln(fpp)/ln²2 bits);
     * the fpp degrades gracefully past it, it never breaks. Returns the
     * indexed file names. */
@@ -1580,10 +1562,6 @@ object CommitSink {
     require(expectedItemsPerFile >= 1, "expectedItemsPerFile must be >= 1")
     val m = parseManifest(Paths.get(dir)).getOrElse(
       sys.error(s"graft-commit: no committed manifest at $dir"))
-    // r19: json payload indexes too (native json source, same grouped
-    // pass — the point-lookup shape doesn't care about the line format)
-    require(m.payload == "parquet" || m.payload == "json",
-      s"graft-commit: the bloom index cannot scan the '${m.payload}' payload")
     val schema = m.schema
     cols.foreach { c =>
       val f = schema.fields.find(_.name == c).getOrElse(
@@ -1626,8 +1604,7 @@ object CommitSink {
         fw.get(c).map(n => f.copy(name = n)).getOrElse(f)
       })
       val paths = fs.map(f => Paths.get(dir, f).toString)
-      val rd = spark.read.schema(read)
-      (if (m.payload == "parquet") rd.parquet(paths: _*) else rd.json(paths: _*))
+      spark.read.schema(read).parquet(paths: _*)
         .select(org.apache.spark.sql.functions.col("_metadata.file_name") +:
           cols.map(c => org.apache.spark.sql.functions.col(fw.getOrElse(c, c))): _*)
         .toDF(("_graft_f" +: cols): _*)
@@ -1686,7 +1663,7 @@ object CommitSink {
       writeManifest(Paths.get(dir), m.ddl, m.files, commitId,
         m.epochs, expectedPrev = m.commit, partCol = m.partCol,
         stats = m.stats, tableId = carriedOrFreshTableId(Some(m)),
-        payload = m.payload, deletes = m.deletes,
+        deletes = m.deletes,
         fileSeq = m.fileSeq, eqDeletes = m.eqDeletes, blooms = merged,
         schemaLog = m.schemaLog)
     } catch { case e: Throwable =>
@@ -1720,12 +1697,6 @@ object CommitSink {
     require(lgK >= 4 && lgK <= 21, s"lgK must be in [4, 21], got $lgK")
     val m = parseManifest(Paths.get(dir)).getOrElse(
       sys.error(s"graft-commit: no committed manifest at $dir"))
-    // r19: the json payload analyzes too — its line format is plain
-    // JSON, so Spark's native json source reads it under the declared
-    // schema (the portable type set json tables are restricted to);
-    // the grouped `_metadata.file_name` pass is format-agnostic
-    require(m.payload == "parquet" || m.payload == "json",
-      s"graft-commit: analyzeNdv cannot scan the '${m.payload}' payload")
     val schema = m.schema
     cols.foreach { c =>
       val f = schema.fields.find(_.name == c).getOrElse(
@@ -1772,8 +1743,7 @@ object CommitSink {
       val phys = StructType(schema.fields.map(f =>
         fw.get(f.name).map(n => f.copy(name = n)).getOrElse(f)))
       val paths = fs.map(f => Paths.get(dir, f).toString)
-      val rd = spark.read.schema(phys)
-      (if (m.payload == "parquet") rd.parquet(paths: _*) else rd.json(paths: _*))
+      spark.read.schema(phys).parquet(paths: _*)
         .groupBy(col("_metadata.file_name").as("_graft_f"))
         .agg(hll_sketch_agg(sketchInput(cols.head, fw.getOrElse(cols.head, cols.head)), lgK)
             .as(cols.head),
@@ -1818,7 +1788,7 @@ object CommitSink {
     writeManifest(Paths.get(dir), m.ddl, m.files, m.commit + 1,
       m.epochs, expectedPrev = m.commit, partCol = m.partCol,
       stats = merged, tableId = carriedOrFreshTableId(Some(m)),
-      payload = m.payload, deletes = m.deletes,
+      deletes = m.deletes,
       fileSeq = m.fileSeq, eqDeletes = m.eqDeletes, blooms = m.blooms,
       schemaLog = m.schemaLog)
     targets.sorted
@@ -1849,18 +1819,12 @@ object CommitSink {
     * row of its file drops the file from the manifest outright.
     * Vectors compose: a second delete unions with the first file's
     * vector (disjoint by construction — the scan applied the old one).
-    *
-    * Parquet payload only: MOR needs stable physical row positions,
-    * which the columnar payload defines; selecting the mode on a json
-    * table falls back to copy-on-write (same result, different cost).
     */
   private[graft] def deleteToVectors(spark: SparkSession, path: String,
                                        planning: Manifest,
                                        cond: org.apache.spark.sql.Column): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, collect_list, lit, sort_array}
     import spark.implicits._
-    require(planning.payload == "parquet",
-      s"graft-commit: merge-on-read DELETE requires the parquet payload, $path is '${planning.payload}'")
     val dir = Paths.get(path)
     val nonce = writeNonce()
     val staging = stagingDir(dir, nonce)
@@ -1945,7 +1909,6 @@ object CommitSink {
         partCol = planning.partCol,
         stats = planning.stats.view.filterKeys(files.toSet).toMap,
         tableId = carriedOrFreshTableId(Some(planning)),
-        payload = planning.payload,
         deletes = dvMap.view.filterKeys(files.toSet).toMap,
         fileSeq = planning.fileSeq,
         eqDeletes = if (dropEq) Seq.empty else planning.eqDeletes,
@@ -2256,7 +2219,7 @@ object CommitSink {
           val bm = parseManifestVersion(d, head)
           writeManifest(d, bm.ddl, bm.files, cur + 1, bm.epochs,
             expectedPrev = cur, partCol = bm.partCol, stats = bm.stats,
-            tableId = bm.tableId, payload = bm.payload, deletes = bm.deletes,
+            tableId = bm.tableId, deletes = bm.deletes,
             fileSeq = bm.fileSeq.map { case (f, s) =>
               f -> (if (s >= BRANCH_BASE) cur + 1 else s) },
             eqDeletes = bm.eqDeletes, blooms = bm.blooms,
@@ -2428,17 +2391,6 @@ object CommitSink {
                                          * skipping the new generation's rows
                                          * (Delta's reservoir id). */
                                        tableId: String = "",
-                                       /** Staged-file payload format of every
-                                         * file this manifest lists: "parquet"
-                                         * (the at-scale default —
-                                         * [[ParquetPayload]]) or "json" (the
-                                         * original fixture-portable lines
-                                         * format). Homogeneous per content
-                                         * lineage: appends and rewrites carry
-                                         * it, only a truncate may switch.
-                                         * Absent in pre-payload manifests ⇒
-                                         * json (what they were written as). */
-                                       payload: String = "json",
                                        /** Merge-on-read DELETEs (o27): data
                                          * file → its deletion vector. A
                                          * listed file's rows at positions in
@@ -2446,10 +2398,7 @@ object CommitSink {
                                          * read path applies the vector, every
                                          * rewrite of the file drops it (the
                                          * rewrite's scan already applied it).
-                                         * Absent ⇒ no deletes, and always
-                                         * absent for json-payload tables
-                                         * (MOR requires the parquet payload's
-                                         * stable row positions). */
+                                         * Absent ⇒ no deletes. */
                                        deletes: Map[String, DvEntry] = Map.empty,
                                        /** Per-file ADD sequence (o32):
                                          * the commit id at which each
@@ -2555,8 +2504,6 @@ object CommitSink {
     val partCol = "\"partcol\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
     val tableId = "\"tableid\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
       .map(_.group(1)).getOrElse("")
-    val payload = "\"payload\":\"([a-z]+)\"".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("json")
     val stats = "\"filestats\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
       .map(_.group(1)).getOrElse("")
       .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
@@ -2607,7 +2554,15 @@ object CommitSink {
       .map(SchemaEvt.decode).toSeq
     val commitTs = "\"committs\":(-?[0-9]+)".r.findFirstMatchIn(txt)
       .map(_.group(1).toLong).getOrElse(-1L)
-    Manifest(commit, ddl, files, epochs, partCol, stats, tableId, payload,
+    // the retired JSON-lines payload: manifests written before the
+    // payload field were JSON-lines too. Refuse one that lists files
+    // rather than decode its lines as parquet.
+    val payload = "\"payload\":\"([a-z]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
+    require(payload.contains("parquet") || (files.isEmpty && groups.isEmpty),
+      s"graft-commit: $where lists files in the retired JSON-lines payload " +
+        s"(payload: ${payload.getOrElse("absent")}) — this build reads " +
+        "parquet tables only")
+    Manifest(commit, ddl, files, epochs, partCol, stats, tableId,
       deletes, fileSeq, eqDeletes, blooms, groups, schemaLog, commitTs)
   }
 
@@ -2804,8 +2759,8 @@ object CommitSink {
 
   /** Column-wise schema equivalence for the append guard: names + types,
     * ignoring nullability and metadata — a nullable `id BIGINT` appends
-    * fine onto files written as non-null `id BIGINT NOT NULL` (the JSON
-    * payload is identical), so comparing raw DDL strings would refuse
+    * fine onto files written as non-null `id BIGINT NOT NULL` (every
+    * field is stored optional), so comparing raw DDL strings would refuse
     * valid appends. */
   private[sources] def sameColumns(a: StructType, b: StructType): Boolean = {
     def cols(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
@@ -2841,7 +2796,6 @@ object CommitSink {
                                      partCol: Option[String] = None,
                                      stats: Map[String, String] = Map.empty,
                                      tableId: String = "",
-                                     payload: String = "json",
                                      deletes: Map[String, DvEntry] = Map.empty,
                                      fileSeq: Map[String, Long] = Map.empty,
                                      eqDeletes: Seq[EqDelete] = Seq.empty,
@@ -2977,7 +2931,8 @@ object CommitSink {
       def header: String =
         s"""{"commit":$commitId,"epochs":[${epochs.sorted.mkString(",")}],""" +
           s""""committs":${clock()},""" +
-          s""""payload":"$payload",""" +
+          // constant, for older builds: they read an absent field as JSON-lines
+          """"payload":"parquet",""" +
           (if (logBody.nonEmpty) s""""schemalog":[${logBody.mkString(",")}],""" else "") +
           (if (tableId.nonEmpty) s""""tableid":"${esc(tableId)}",""" else "") +
           partCol.map(c => s""""partcol":"${esc(c)}",""").getOrElse("")

@@ -284,7 +284,7 @@ class CommitSinkTable(path: String,
 
   /** The READ half: one input partition per committed file — or per
     * partition-key file GROUP when the table was written `partitionBy`
-    * (o16) — rows decoded by [[CommitFilesReader]], the mirror of
+    * (o16) — rows decoded by [[ParquetFilesReader]], the mirror of
     * [[CommitDataWriter]]'s staging encoder. Required by SQL row-level
     * DELETE too: Spark 4 plans `DELETE FROM t WHERE c` by first building
     * the table's scan relation (the condition is normalized against it)
@@ -353,11 +353,11 @@ class CommitSinkTable(path: String,
     () => {
       // o28: `spark.graft.commit.rowLevelMode=merge-on-read` selects the
       // DELTA-based operation (deletion vectors + appended files) for
-      // eligible tables — parquet payload (stable positions), no
-      // `_file`/`_pos` data columns (the rowId needs the metadata
-      // columns). Partitioned tables are eligible too (since r14): the
-      // vector machinery is per-file and layout-blind, and the delta
-      // write preserves the one-key-per-file layout by clustering
+      // eligible tables — no `_file`/`_pos` data columns (the rowId
+      // needs the metadata columns). Partitioned tables are eligible
+      // too (since r14): the vector machinery is per-file and
+      // layout-blind, and the delta write preserves the one-key-per-file
+      // layout by clustering
       // inserted rows on the partition column (the insert writer rolls
       // per key exactly like a partitioned append). Ineligible tables
       // fall back to group copy-on-write: the MODE is a cost knob, the
@@ -372,11 +372,9 @@ class CommitSinkTable(path: String,
           s"'copy-on-write' or 'merge-on-read', got '$mode'")
       val eligible = mode == "merge-on-read" &&
         CommitSink.parseManifestRoot(Paths.get(path)).exists { m =>
-          m.payload == "parquet" && {
-            val names = m.schema.fieldNames
-            !names.contains(CommitSink.FILE_COL) &&
-              !names.contains(CommitSink.POS_COL)
-          } &&
+          val names = m.schema.fieldNames
+          !names.contains(CommitSink.FILE_COL) &&
+            !names.contains(CommitSink.POS_COL) &&
             // bucket layouts fall back to group copy-on-write: the delta
             // write clusters INSERTED rows via identity(partCol), which a
             // transform spec cannot express on this path — the mode is a
@@ -437,17 +435,17 @@ class CommitSinkTable(path: String,
       sys.error(s"graft-commit: no committed manifest at $path"))
     // DELETE MODE (o27): `spark.graft.commit.deleteMode=merge-on-read`
     // records deletion vectors instead of rewriting files — Iceberg's
-    // write.delete.mode knob. Requires the parquet payload's stable row
-    // positions and the _file/_pos metadata columns (withdrawn when data
-    // columns claim the names); ineligible tables fall back to
-    // copy-on-write — the MODE is a cost knob, the RESULT is identical.
+    // write.delete.mode knob. Requires the _file/_pos metadata columns
+    // (withdrawn when data columns claim the names); ineligible tables
+    // fall back to copy-on-write — the MODE is a cost knob, the RESULT
+    // is identical.
     val deleteMode =
       try spark.conf.get("spark.graft.commit.deleteMode", "copy-on-write")
       catch { case _: Throwable => "copy-on-write" }
     require(deleteMode == "copy-on-write" || deleteMode == "merge-on-read",
       s"graft-commit: spark.graft.commit.deleteMode must be 'copy-on-write' " +
         s"or 'merge-on-read', got '$deleteMode'")
-    val morEligible = m.payload == "parquet" && {
+    val morEligible = {
       val names = m.schema.fieldNames
       !names.contains(CommitSink.FILE_COL) && !names.contains(CommitSink.POS_COL)
     }

@@ -14,7 +14,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 // Split from CommitSink.scala (r17, moves only): the write path —
 // CommitWriteBuilder (options/shapes/distribution), the batch and
@@ -86,40 +85,6 @@ class CommitWriteBuilder(path: String, info: LogicalWriteInfo,
       // "bucket(8,k)" must not read as different layouts
       .map(CommitSink.PartSpec.encodeSpecs)
 
-  /** This write's staged-file payload format. Resolution order mirrors
-    * the partition-layout rules: a REWRITE must keep its planning
-    * manifest's payload (carried files and new files share one
-    * decoder); an APPEND joins the table's existing payload (an
-    * explicit conflicting option is refused, like a schema mismatch —
-    * and the commit-time CAS retry re-checks, see commitAppend); a
-    * TRUNCATE keeps the table's recorded payload unless
-    * `option("payload", ...)` explicitly switches it — a table pinned
-    * to json via TBLPROPERTIES must not silently flip to parquet on an
-    * un-optioned INSERT OVERWRITE (the catalog table object carries no
-    * options, so the manifest is the only place the choice survives);
-    * a FIRST write takes the option, defaulting to parquet — the
-    * at-scale encoder ([[ParquetPayload]]); "json" keeps the original
-    * fixture-portable lines format. */
-  private lazy val payload: String = {
-    val opt = Option(info.options.get("payload")).map(_.trim.toLowerCase)
-    opt.foreach(p => require(p == "json" || p == "parquet",
-      s"graft-commit: option payload must be 'json' or 'parquet', got '$p'"))
-    effectiveRewrite.map(_.planning.payload).getOrElse {
-      planningManifest match {
-        case Some(m) =>
-          if (doTruncateFlag) opt.getOrElse(m.payload) // truncate MAY switch
-          else {
-            opt.foreach(p => require(p == m.payload,
-              s"graft-commit: append payload mismatch at $path — the table is " +
-                s"'${m.payload}' but this write asked for '$p'; use overwrite " +
-                "(truncate) to switch the payload format"))
-            m.payload
-          }
-        case None => opt.getOrElse("parquet")
-      }
-    }
-  }
-
   /** UPSERT-BY-KEY append mode (o32): `option("upsertKeys", "k1,k2")`
     * makes this append also record the batch's distinct key tuples as an
     * EQUALITY DELETE over strictly-older files — replace-these-keys with
@@ -175,16 +140,12 @@ class CommitWriteBuilder(path: String, info: LogicalWriteInfo,
 
   override def build(): Write = {
     val schema = info.schema()
-    val ok: DataType => Boolean =
-      if (payload == "parquet") ParquetPayload.supported
-      else CommitSink.supportedTypes.contains
-    val bad = schema.fields.filterNot(f => ok(f.dataType))
-    require(bad.isEmpty, s"graft-commit ($payload payload) supports " +
-      (if (payload == "parquet")
-        "long/int/smallint/tinyint/double/float/string/boolean/date/" +
-          "timestamp/timestamp_ntz/decimal(<=38) "
-       else "long/int/double/string/boolean ") +
-      s"columns; unsupported: ${bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}")
+    ParquetPayload.requireChoice(Option(info.options.get("payload")))
+    val bad = schema.fields.filterNot(f => ParquetPayload.supported(f.dataType))
+    require(bad.isEmpty, "graft-commit (parquet payload) supports " +
+      "long/int/smallint/tinyint/double/float/string/boolean/date/" +
+      "timestamp/timestamp_ntz/decimal(<=38) columns; unsupported: " +
+      bad.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
     partCol.toSeq.flatMap(CommitSink.PartSpec.parseSpecs).foreach { spec =>
       val c = spec.sourceCol
       val f = schema.fields.find(_.name == c).getOrElse(
@@ -197,10 +158,6 @@ class CommitWriteBuilder(path: String, info: LogicalWriteInfo,
       require(!doTruncateFlag && effectiveRewrite.isEmpty,
         "graft-commit: upsertKeys is an APPEND-mode option — a truncate " +
           "or rewrite replaces content outright and records no deletes")
-      require(payload == "parquet",
-        "graft-commit: upsertKeys requires the parquet payload (the key " +
-          "files are parquet, and equality deletes are applied by the " +
-          "columnar readers)")
       upsertKeys.foreach { k =>
         val f = schema.fields.find(_.name == k).getOrElse(
           sys.error(s"graft-commit: upsertKeys column '$k' is not in the written schema"))
@@ -221,7 +178,6 @@ class CommitWriteBuilder(path: String, info: LogicalWriteInfo,
     // replace-scanned/carry-rest semantics win
     val doTruncate = doTruncateFlag && effectiveRewrite.isEmpty
     val rw = effectiveRewrite
-    val pay = payload
     val upsert = upsertKeys
     require(!preShaped || (effectiveRewrite.isDefined && partCol.isDefined),
       "graft-commit: preShaped is the internal device of partitioned " +
@@ -344,7 +300,7 @@ class CommitWriteBuilder(path: String, info: LogicalWriteInfo,
           .map(c => multiOrdering(CommitSink.PartSpec.parseSpecs(c)))
           .getOrElse(Array.empty[CSortOrder])
       override def toBatch: BatchWrite =
-        new CommitBatchWrite(path, schema, doTruncate, partCol, rw, pay, upsert,
+        new CommitBatchWrite(path, schema, doTruncate, partCol, rw, upsert,
           stage = staged, branch = branchTarget, ndvCols = ndvColumns)
       override def toStreaming: streaming.StreamingWrite = {
         require(partCol.isEmpty,
@@ -353,7 +309,7 @@ class CommitWriteBuilder(path: String, info: LogicalWriteInfo,
         require(branchTarget.isEmpty,
           "graft-commit: the streaming sink writes main — branch a batch " +
             "workflow, or publish and point the stream at main")
-        new CommitStreamingWrite(path, schema, pay, upsert, ndvColumns)
+        new CommitStreamingWrite(path, schema, upsert, ndvColumns)
       }
     }
   }
@@ -372,7 +328,6 @@ class CommitWriteBuilder(path: String, info: LogicalWriteInfo,
   * by hand (w08) and the reference's consumer lacks entirely
   * (consumer_to_file.py:185-186 re-inserts everything on restart). */
 class CommitStreamingWrite(path: String, schema: StructType,
-                           payload: String = "json",
                            /** o32: per-trigger upsert-by-key — each
                              * epoch's commit also records the batch's
                              * key file as an equality delete over
@@ -402,11 +357,10 @@ class CommitStreamingWrite(path: String, schema: StructType,
     // files — the CAS failure is caught and the existing manifest wins.
     if (!CommitSink.io.exists(dir.resolve("_MANIFEST.json")))
       try CommitSink.writeManifest(dir, schema.toDDL, Seq.empty, 0L,
-        expectedPrev = -1L, tableId = CommitSink.carriedOrFreshTableId(None),
-        payload = payload)
+        expectedPrev = -1L, tableId = CommitSink.carriedOrFreshTableId(None))
       catch { case _: IllegalArgumentException => () }
-    new CommitStreamingWriterFactory(path, schema.toDDL, nonce, payload,
-      upsertKeys, ndvCols)
+    new CommitStreamingWriterFactory(path, schema.toDDL, nonce, upsertKeys,
+      ndvCols)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -432,7 +386,7 @@ class CommitStreamingWrite(path: String, schema: StructType,
       val carried = manifest.map(_.files).getOrElse(Seq.empty)
       // Appending under a DIFFERENT column set would carry forward files
       // that re-read as silent nulls under the new DDL — refuse instead
-      // (names + types; nullability does not change the JSON payload).
+      // (names + types; nullability does not change the payload).
       require(carried.isEmpty || manifest.forall(m => CommitSink.sameColumns(m.schema, schema)),
         s"graft-commit: streaming append schema mismatch at $path — manifest " +
           s"has [$carriedDdl] but this query writes [${schema.toDDL}]; " +
@@ -448,18 +402,11 @@ class CommitStreamingWrite(path: String, schema: StructType,
       // Promotion runs INSIDE the cleanup scope — a partial promotion
       // (ATOMIC_MOVE failure mid-loop) deletes the promoted-so-far
       // names, same contract as a refused manifest swap.
-      // epochs append to the table's recorded payload (the factory's
-      // writers staged under it; a fresh target staged this write's own)
-      val epochPayload = manifest.map(_.payload).getOrElse(payload)
-      require(carried.isEmpty || epochPayload == payload,
-        s"graft-commit: payload mismatch at $path — the table is " +
-          s"'$epochPayload' but this stream stages '$payload' files; " +
-          "truncate via a batch overwrite first")
       val promoted = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       val promotedEq = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
       try {
         staged.zipWithIndex.foreach { case (s, i) =>
-          val fin = f"part-e$epochId%05d-$nonce-$i%05d.$payload%s"
+          val fin = f"part-e$epochId%05d-$nonce-$i%05d.parquet"
           CommitSink.io.promote(CommitSink.stagingDir(dir, nonce).resolve(s.name), dir.resolve(fin))
           promoted += (fin -> s.stats)
         }
@@ -475,7 +422,6 @@ class CommitStreamingWrite(path: String, schema: StructType,
           prev + 1, manifest.map(_.epochs).getOrElse(Seq.empty) :+ epochId,
           expectedPrev = prev, stats = stats,
           tableId = CommitSink.carriedOrFreshTableId(manifest),
-          payload = payload,
           // an epoch append never touches existing rows: vectors carry
           deletes = manifest.map(_.deletes).getOrElse(Map.empty),
           // this epoch's files join at the new sequence; its key file
@@ -504,7 +450,6 @@ class CommitStreamingWrite(path: String, schema: StructType,
 }
 
 class CommitStreamingWriterFactory(path: String, ddl: String, nonce: String,
-                                   payload: String = "json",
                                    upsertKeys: Seq[String] = Seq.empty,
                                    ndvCols: Seq[String] = Seq.empty)
     extends streaming.StreamingDataWriterFactory {
@@ -512,7 +457,7 @@ class CommitStreamingWriterFactory(path: String, ddl: String, nonce: String,
       epochId: Long): DataWriter[InternalRow] =
     if (upsertKeys.isEmpty)
       new CommitDataWriter(path, ddl, partitionId, taskId, epochId,
-        stagingSub = nonce, payload = payload, ndvCols = ndvCols)
+        stagingSub = nonce, ndvCols = ndvCols)
     else new UpsertDataWriter(path, ddl, upsertKeys, partitionId, taskId,
       epochId, nonce, None, ndvCols)
 }
@@ -520,7 +465,6 @@ class CommitStreamingWriterFactory(path: String, ddl: String, nonce: String,
 class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
                        partCol: Option[String] = None,
                        rewrite: Option[CommitSink.DmlRewrite] = None,
-                       payload: String = "json",
                        upsertKeys: Seq[String] = Seq.empty,
                        /** WAP staging (o41): land the version manifest,
                          * skip the swap — see CommitSink.publishStaged. */
@@ -549,7 +493,7 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
     CommitSink.io.createDirectories(CommitSink.stagingDir(dir, nonce))
     // ship the schema as DDL text — StructType itself is serializable,
     // but the DDL is also exactly what the manifest records
-    new CommitWriterFactory(path, schema.toDDL, partCol, nonce, payload,
+    new CommitWriterFactory(path, schema.toDDL, partCol, nonce,
       upsertKeys, ndvCols)
   }
 
@@ -592,7 +536,7 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
     val promotedEq = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
       staged.zipWithIndex.foreach { case (s, i) =>
-        val fin = f"part-c$plannedId%05d-$nonce-$i%05d.$payload%s"
+        val fin = f"part-c$plannedId%05d-$nonce-$i%05d.parquet"
         CommitSink.io.promote(CommitSink.stagingDir(dir, nonce).resolve(s.name), dir.resolve(fin))
         promoted += (fin -> s.stats)
       }
@@ -643,7 +587,6 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
       planning.commit + 1, planning.epochs, expectedPrev = planning.commit,
       partCol = partCol, stats = stats,
       tableId = CommitSink.carriedOrFreshTableId(Some(planning)),
-      payload = planning.payload,
       // carried files keep their deletion vectors; a REPLACED file's
       // vector dies with it — the rewrite's scan already applied it,
       // so the new files hold only surviving rows (compaction's
@@ -688,7 +631,7 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
     // equality deletes die with the content they scoped (o32 default)
     CommitSink.writeManifest(dir, schema.toDDL, newFiles, next,
       Seq.empty, expectedPrev = prev, partCol = partCol, stats = newStats,
-      tableId = CommitSink.carriedOrFreshTableId(manifest), payload = payload,
+      tableId = CommitSink.carriedOrFreshTableId(manifest),
       fileSeq = newFiles.map(_ -> next).toMap, stageOnly = stage,
       branch = branch)
   }
@@ -728,19 +671,12 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
         s"graft-commit: partition-layout mismatch at $path — manifest has " +
           s"partitionBy=$carriedPartCol but this write has partitionBy=$partCol; " +
           "use overwrite (truncate) to change the table layout")
-      // carried files must share this write's decoder — re-checked per
-      // retry in case a truncate switched the payload mid-race
-      require(carried.isEmpty || manifest.forall(_.payload == payload),
-        s"graft-commit: payload mismatch at $path — the table is " +
-          s"'${manifest.map(_.payload).getOrElse("?")}' but this append " +
-          s"staged '$payload' files; use overwrite (truncate) to switch")
       val stats = manifest.map(_.stats).getOrElse(Map.empty) ++ newStats
       try {
         CommitSink.writeManifest(dir, schema.toDDL, carried ++ newFiles,
           next, manifest.map(_.epochs).getOrElse(Seq.empty),
           expectedPrev = prev, partCol = partCol, stats = stats,
           tableId = CommitSink.carriedOrFreshTableId(manifest),
-          payload = payload,
           // an append never touches existing rows: vectors carry verbatim
           deletes = manifest.map(_.deletes).getOrElse(Map.empty),
           // new files join at THIS commit's sequence — what scopes any
@@ -771,13 +707,12 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
 class CommitWriterFactory(path: String, ddl: String,
                           partCol: Option[String] = None,
                           nonce: String = "",
-                          payload: String = "json",
                           upsertKeys: Seq[String] = Seq.empty,
                           ndvCols: Seq[String] = Seq.empty) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     if (upsertKeys.isEmpty)
       new CommitDataWriter(path, ddl, partitionId, taskId, partCol = partCol,
-        stagingSub = nonce, payload = payload, ndvCols = ndvCols)
+        stagingSub = nonce, ndvCols = ndvCols)
     else new UpsertDataWriter(path, ddl, upsertKeys, partitionId, taskId,
       -1L, nonce, partCol, ndvCols)
 }
@@ -801,7 +736,7 @@ class UpsertDataWriter(path: String, ddl: String, keys: Seq[String],
                        ndvCols: Seq[String] = Seq.empty)
     extends DataWriter[InternalRow] {
   private val delegate = new CommitDataWriter(path, ddl, partitionId, taskId,
-    epochId, partCol, nonce, "parquet", ndvCols)
+    epochId, partCol, nonce, ndvCols)
   private val schema = StructType.fromDDL(ddl)
   private val keyIdx = keys.map(schema.fieldIndex).toArray
   private val keySchema = StructType(keys.map(k => schema(schema.fieldIndex(k))))
@@ -850,8 +785,9 @@ class UpsertDataWriter(path: String, ddl: String, keys: Seq[String],
   override def close(): Unit = ()
 }
 
-/** Executor-side writer: streams rows to a task-private staging file as
-  * JSON lines. The (epoch, partitionId, taskId) triple makes the name
+/** Executor-side writer: streams rows to a task-private parquet staging
+  * file ([[ParquetPayload.InternalRowWriteSupport]]). The (epoch,
+  * partitionId, taskId) triple makes the name
   * unique per ATTEMPT, so a speculative retry (or a replayed epoch) can
   * never clobber another attempt's staging output.
   *
@@ -865,7 +801,7 @@ class UpsertDataWriter(path: String, ddl: String, keys: Seq[String],
   * holds one key, recorded as `pk` in its stats. */
 class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long,
                        epochId: Long = -1L, partCol: Option[String] = None,
-                       stagingSub: String = "", payload: String = "json",
+                       stagingSub: String = "",
                        /** Columns to record per-file NDV sketches for
                          * (o50, the `ndvColumns` write option) — empty
                          * (default) adds zero per-row work. */
@@ -873,8 +809,7 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
     extends DataWriter[InternalRow] {
   private val schema = StructType.fromDDL(ddl)
   private val staging = CommitSink.stagingDir(Paths.get(path), stagingSub)
-  private val parquet = payload == "parquet"
-  private val msgType = if (parquet) ParquetPayload.message(schema) else null
+  private val msgType = ParquetPayload.message(schema)
 
   // --- statistics collection (reset per staged segment) -------------------
   // stats are recorded only for clean [A-Za-z0-9_] column names — the
@@ -882,7 +817,7 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
   // The 'l' family covers every integral-representation type (ints of
   // all widths, DATE days, TIMESTAMP/NTZ micros), 'd' the fractional
   // ones (double, float widened exactly) — so zone maps prune
-  // date/timestamp range scans on parquet-payload tables too.
+  // date/timestamp range scans too.
   private val statKind: Array[Char] = schema.fields.map { f =>
     if (!f.name.matches("[A-Za-z0-9_]+")) ' '
     else f.dataType match {
@@ -992,8 +927,7 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
     widSum(i) += utf8bytes
     if (utf8bytes > widMax(i)) widMax(i) = utf8bytes
   }
-  /** Range notes for the parquet branch (the JSON encoder notes inline
-    * while formatting) — one pass over the row's stat-eligible fields. */
+  /** Range notes — one pass over the row's stat-eligible fields. */
   private def noteRow(row: InternalRow): Unit = {
     var i = 0
     while (i < schema.length) {
@@ -1049,7 +983,6 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
   private var segOrdinal = 0
   private var name: String = _
   private var file: Path = _
-  private var out: java.io.BufferedWriter = _
   // r20: rows stream straight into parquet's page writers (see
   // ParquetPayload.InternalRowWriteSupport) — no per-row Group boxing
   private var pw: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
@@ -1059,26 +992,24 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
   private def curKey: Long = curKeys(0)
   private var done = List.empty[StagedFile]
 
-  private def segActive: Boolean = if (parquet) pw != null else out != null
+  private def segActive: Boolean = pw != null
 
   private def openSegment(): Unit = {
-    name = if (partIdx < 0) s"attempt-e$epochId-p$partitionId-t$taskId.$payload"
-           else f"attempt-e$epochId-p$partitionId-t$taskId-s$segOrdinal%04d.$payload%s"
+    name = if (partIdx < 0) s"attempt-e$epochId-p$partitionId-t$taskId.parquet"
+           else f"attempt-e$epochId-p$partitionId-t$taskId-s$segOrdinal%04d.parquet"
     segOrdinal += 1
     file = staging.resolve(name)
-    if (parquet) {
-      val (w, sup) = ParquetPayload.rowWriter(file, msgType, schema)
-      pw = w; pwSupport = sup
-      // eager opens precede offset resolution (fieldOffset -1 → 0);
-      // write() re-sets the support once the first row resolves it
-      pwSupport.fieldOffset = math.max(fieldOffset, 0)
-    } else out = CommitSink.io.newBufferedWriter(file)
+    val (w, sup) = ParquetPayload.rowWriter(file, msgType, schema)
+    pw = w; pwSupport = sup
+    // eager opens precede offset resolution (fieldOffset -1 → 0);
+    // write() re-sets the support once the first row resolves it
+    pwSupport.fieldOffset = math.max(fieldOffset, 0)
     rows = 0L
     resetStats()
   }
 
   private def closeSegment(): Unit = {
-    if (parquet) { pw.close(); pw = null } else { out.close(); out = null }
+    pw.close(); pw = null
     done ::= StagedFile(name, rows,
       encodeStats(CommitSink.io.size(file),
         if (partIdx < 0) None else Some(curKey),
@@ -1088,20 +1019,6 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
   // unpartitioned tasks stage ONE file, opened eagerly so an empty task
   // still commits a (zero-row) file — the pre-partitioning behavior
   if (partIdx < 0) openSegment()
-
-  private def esc(s: String): String = {
-    val b = new StringBuilder
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
 
   /** Leading fields to skip, resolved from the first row. Normal writes
     * have rows matching the declared schema (offset 0). The GROUP-BASED
@@ -1129,7 +1046,7 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
           s"graft-commit: leading field $op is not a row-operation marker; " +
             "refusing to skip it (unknown row layout)")
       }
-      if (parquet && pwSupport != null) pwSupport.fieldOffset = fieldOffset
+      if (pwSupport != null) pwSupport.fieldOffset = fieldOffset
     }
     if (partIdx >= 0) {
       // identity records the key itself; transforms record the
@@ -1161,40 +1078,8 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
       }
     }
     if (ndvIdx.nonEmpty) noteNdv(row)
-    if (parquet) {
-      pw.write(row)
-      noteRow(row)
-      rows += 1
-      return
-    }
-    val b = new StringBuilder("{")
-    var first = true
-    schema.fields.zipWithIndex.foreach { case (f, i0) =>
-      val i = i0 + fieldOffset
-      if (!row.isNullAt(i)) {
-        if (!first) b.append(',')
-        first = false
-        b.append('"').append(f.name).append("\":")
-        f.dataType match {
-          case LongType    => val v = row.getLong(i); noteL(i0, v); b.append(v)
-          case IntegerType => val v = row.getInt(i); noteL(i0, v.toLong); b.append(v)
-          // Double.toString is shortest-round-trip: the reader gets the
-          // identical bits back (NaN/Infinity rely on Spark's default
-          // allowNonNumericNumbers JSON option)
-          case DoubleType  => val v = row.getDouble(i); noteD(i0, v); b.append(v)
-          case BooleanType => b.append(row.getBoolean(i))
-          case StringType  =>
-            val u = row.getUTF8String(i)
-            // width facts note the LOGICAL UTF-8 length, not the escaped
-            // JSON rendering — parity with the parquet branch
-            if (statKind(i0) == 's') noteS(i0, u.numBytes)
-            b.append('"').append(esc(u.toString)).append('"')
-          case t => sys.error(s"unreachable: $t validated at build()")
-        }
-      } else if (statKind(i0) == 's') widNulls(i0) += 1
-    }
-    out.write(b.append('}').toString)
-    out.newLine()
+    pw.write(row)
+    noteRow(row)
     rows += 1
   }
 
@@ -1210,7 +1095,7 @@ class CommitDataWriter(path: String, ddl: String, partitionId: Int, taskId: Long
     * segment AND every segment it already closed. */
   override def abort(): Unit = {
     if (segActive) {
-      if (parquet) pw.close() else out.close()
+      pw.close()
       CommitSink.io.deleteIfExists(file)
     }
     done.foreach(s => CommitSink.io.deleteIfExists(staging.resolve(s.name)))

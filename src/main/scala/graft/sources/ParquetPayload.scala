@@ -15,17 +15,13 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The PARQUET staged-file payload of the commit sink — the at-scale
-  * encoder the JSON-lines fixture format (CommitSink's original payload,
-  * kept behind `option("payload", "json")`) documented as its own
-  * replacement: columnar chunks with dictionary/RLE encodings and
-  * snappy compression, column projection that skips whole chunks
-  * instead of scanning text, and the full declared-type surface the CDC
-  * path produces — TIMESTAMP / TIMESTAMP_NTZ (INT64 micros, the
-  * adjustedToUTC flag distinguishing them), DATE (INT32 days), DECIMAL
-  * (INT64 unscaled for p ≤ 18, 16-byte fixed for wider), FLOAT,
-  * SMALLINT/TINYINT (INT32 with bit-width annotation) — none of which
-  * a portable JSON text line can carry without private conventions.
+/** The one staged-file payload of the commit sink: columnar chunks
+  * with dictionary/RLE encodings and snappy compression, column
+  * projection that skips whole chunks, and the full declared-type
+  * surface the CDC path produces — TIMESTAMP / TIMESTAMP_NTZ (INT64
+  * micros, the adjustedToUTC flag distinguishing them), DATE (INT32
+  * days), DECIMAL (INT64 unscaled for p ≤ 18, 16-byte fixed for
+  * wider), FLOAT, SMALLINT/TINYINT (INT32 with bit-width annotation).
   * The reference's sink models a ClickHouse DDL with real
   * Date/DateTime/Decimal columns (consumer_to_file.py:145-150); this is
   * the payload that lets the graft-commit table hold them.
@@ -44,8 +40,17 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[graft] object ParquetPayload {
 
-  /** Spark types the parquet payload accepts — the JSON payload's
-    * portable scalar set plus the declared-schema (TYPE_MAPPING) types. */
+  /** Validate a caller's `payload` choice (write option or table
+    * property). Parquet is the only format; any other value is refused
+    * with this one message, so a caller who asked for the retired
+    * JSON-lines payload never silently gets parquet. */
+  def requireChoice(choice: Option[String]): Unit =
+    choice.map(_.trim.toLowerCase).foreach(p => require(p == "parquet",
+      s"graft-commit: payload '$p' is not supported — parquet is the only " +
+        "staged-file format (the JSON-lines payload is retired)"))
+
+  /** Spark types the payload accepts — the scalar set plus the
+    * declared-schema (TYPE_MAPPING) types. */
   def supported(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | StringType | BooleanType => true
     case FloatType | ShortType | ByteType | DateType => true
@@ -54,8 +59,7 @@ private[graft] object ParquetPayload {
     case _ => false
   }
 
-  /** All fields optional: SQL-nullable, like the JSON payload's
-    * omitted-key convention. */
+  /** All fields optional: SQL-nullable. */
   private def toParquetField(f: StructField): Type = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA}
     val b = f.dataType match {
@@ -205,8 +209,7 @@ private[graft] object ParquetPayload {
 
   /** Streaming decoder over one parquet file with COLUMN PROJECTION:
     * only `wanted`'s fields are materialized — unrequested column
-    * chunks are never read off disk (the columnar contract the JSON
-    * payload could only approximate by skipping chars). Fields in
+    * chunks are never read off disk. Fields in
     * `wanted` absent from the file decode as null.
     *
     * r20: values assemble DIRECTLY into a reused per-row array in their

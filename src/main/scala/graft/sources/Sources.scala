@@ -333,7 +333,8 @@ object Sources {
     * manifest's committed file list; the aggregate over the read-back
     * must equal the oracle's aggregate over the ORIGINAL table, proving
     * the write → commit → read chain lossless (doubles round-trip
-    * bit-exactly through the shortest-representation JSON staging).
+    * bit-exactly through the parquet staged files, which store each
+    * value's IEEE-754 bits).
     * Round10Spec additionally proves the abort path publishes nothing
     * and the staging dir is swept either way. */
   def o09Dsv2CommitWrite(spark: SparkSession, dir: String): DataFrame = {
@@ -343,12 +344,8 @@ object Sources {
     graft.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .repartition(4, col("user_id"))
-      // the one registry entry PINNED to the original JSON-lines payload
-      // (every other graft-commit entry rides the parquet default): the
-      // text payload keeps the write→read losslessness story
-      // DuckDB-inspectable byte-for-byte
       .write.format("graft-commit").option("path", out)
-      .option("payload", "json").mode("overwrite").save()
+      .mode("overwrite").save()
     CommitSink.readCommitted(spark, out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1943,7 +1940,7 @@ object Sources {
     }
     CommitSink.writeManifest(java.nio.file.Paths.get(out), m.ddl, m.files,
       m.commit + 1, m.epochs, expectedPrev = m.commit, partCol = m.partCol,
-      stats = stripped, tableId = m.tableId, payload = m.payload,
+      stats = stripped, tableId = m.tableId,
       fileSeq = m.fileSeq)
     val keyOnlyPlanned = probe(out) == marchFiles
     // years table: a point predicate projects to one year's files
@@ -2076,7 +2073,7 @@ object Sources {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("props"))
     ev.write.format(CommitSink.NAME).option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     val m0 = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     spark.sql(s"ALTER TABLE $cat.`default`.ev DROP COLUMN props")
     val m1 = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
@@ -2124,7 +2121,7 @@ object Sources {
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     ev.repartitionByRange(8, col("event_id"))
       .write.format(CommitSink.NAME).option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     val m0 = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     spark.sql(s"ALTER TABLE $cat.`default`.ev RENAME COLUMN event_id TO ev_id")
     val m1 = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
@@ -2180,7 +2177,7 @@ object Sources {
     def slice(r: Int) = ev.filter(col("event_id") % 3 === r)
     CommitSink.withClock(() => 1000L) {
       slice(0).write.format(CommitSink.NAME).option("path", path)
-        .option("payload", "parquet").mode("overwrite").save()
+        .mode("overwrite").save()
     }
     CommitSink.withClock(() => 2000L) {
       slice(1).write.format(CommitSink.NAME).option("path", path).mode("append").save()
@@ -2242,7 +2239,6 @@ object Sources {
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     ev.repartition(4)
       .write.format(CommitSink.NAME).option("path", out)
-      .option("payload", "parquet")
       .option("ndvColumns", "user_id,event_type")
       .mode("overwrite").save()
     val m = CommitSink.parseManifest(java.nio.file.Paths.get(out)).get
@@ -2273,7 +2269,7 @@ object Sources {
     val out2 = s"/tmp/graft_o50b/${new java.io.File(dir).getName}"
     graft.Tables.deleteRecursively(out2)
     ev.repartition(4).write.format(CommitSink.NAME).option("path", out2)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     CommitSink.analyzeNdv(spark, out2, Seq("user_id"))
     val m2 = CommitSink.parseManifest(java.nio.file.Paths.get(out2)).get
     val analyzed = m2.files.nonEmpty && m2.files.forall(f =>

@@ -90,13 +90,6 @@ class CommitIOContractSpec extends AnyFunSuite {
       val in = io.newInputStream(d.resolve("v.bin"))
       val got = try in.readAllBytes() finally in.close()
       assert(java.util.Arrays.equals(got, bytes))
-      // buffered reader/writer roundtrip (the json payload path)
-      val w = io.newBufferedWriter(d.resolve("j.json"))
-      try { w.write("{\"k\":1}"); w.newLine(); w.write("{\"k\":2}") } finally w.close()
-      val r = io.newBufferedReader(d.resolve("j.json"))
-      val lines = try Iterator.continually(r.readLine()).takeWhile(_ != null).toList
-      finally r.close()
-      assert(lines == List("{\"k\":1}", "{\"k\":2}"))
       // delete semantics: true when present, false when already gone
       assert(io.deleteIfExists(d.resolve("b.bin")))
       assert(!io.deleteIfExists(d.resolve("b.bin")))
@@ -109,7 +102,7 @@ class CommitIOContractSpec extends AnyFunSuite {
       }
       assert(io.deleteIfExists(d.resolve("sub").resolve("child")))
       assert(io.deleteIfExists(d.resolve("sub")), "empty dir deletes fine")
-      assert(io.list(d).toSet == Set("obj.txt", "v.bin", "j.json"))
+      assert(io.list(d).toSet == Set("obj.txt", "v.bin"))
     }
 
     test(s"[$name] promote moves and refuses to clobber; atomicReplace replaces") {

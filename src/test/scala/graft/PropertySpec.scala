@@ -259,9 +259,9 @@ object PropertySpec extends Properties("graft") {
 
   // --- CommitSink staged-file format: writer → reader round-trip ----------
 
-  private val jsonString: Gen[String] = {
-    // BMP minus surrogates, weighted toward the escape paths: quotes,
-    // backslashes, \n\r\t, raw control chars (the \uXXXX branch)
+  private val adversarialString: Gen[String] = {
+    // BMP minus surrogates, weighted toward escape-prone chars: quotes,
+    // backslashes, \n\r\t, raw control chars
     val ch = Gen.frequency(
       4 -> Gen.alphaNumChar,
       2 -> Gen.oneOf('"', '\\', '\n', '\r', '\t'),
@@ -270,7 +270,7 @@ object PropertySpec extends Properties("graft") {
     Gen.listOf(ch).map(_.mkString)
   }
 
-  private val jsonDouble: Gen[Double] = Gen.frequency(
+  private val adversarialDouble: Gen[Double] = Gen.frequency(
     2 -> Gen.choose(-1e12, 1e12),
     1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity,
       Double.NegativeInfinity, -0.0, 0.0, Double.MinPositiveValue,
@@ -281,9 +281,9 @@ object PropertySpec extends Properties("graft") {
     for {
       l <- Gen.option(Gen.choose(Long.MinValue, Long.MaxValue))
       i <- Gen.option(Gen.choose(Int.MinValue, Int.MaxValue))
-      d <- Gen.option(jsonDouble)
+      d <- Gen.option(adversarialDouble)
       b <- Gen.option(Gen.oneOf(true, false))
-      s <- Gen.option(jsonString)
+      s <- Gen.option(adversarialString)
     } yield (l, i, d, b, s)
 
   property("CommitSink staged-file format round-trips adversarial rows bit-exactly") =
@@ -304,8 +304,9 @@ object PropertySpec extends Properties("graft") {
             s.map(UTF8String.fromString).orNull)))
         }
         val staged = w.commit().asInstanceOf[graft.sources.StagedFile]
-        val r = new graft.sources.CommitFileReader(
-          dir.resolve("_staging").resolve(staged.name).toString, schema)
+        // the parquet writer and the DSv2 scan's reader, end to end
+        val r = new graft.sources.ParquetFilesReader(
+          Seq(dir.resolve("_staging").resolve(staged.name).toString), schema)
         val got = Iterator.continually(
           if (r.next()) Some(r.get()) else None).takeWhile(_.isDefined).flatten.toList
         r.close()
@@ -314,7 +315,7 @@ object PropertySpec extends Properties("graft") {
             if (v.isEmpty) row.isNullAt(idx) else !row.isNullAt(idx) && read == v.get
           n(0, l)(row.getLong(0)) && n(1, i)(row.getInt(1)) &&
             // doubles by BIT pattern: -0.0, denormals, infinities must
-            // survive; the writer canonicalizes NaN payloads (toString)
+            // survive; doubleToLongBits canonicalizes NaN payloads
             d.forall(dv => !row.isNullAt(2) &&
               java.lang.Double.doubleToLongBits(row.getDouble(2)) ==
                 java.lang.Double.doubleToLongBits(dv)) &&

@@ -176,24 +176,15 @@ class Round10Spec extends AnyFunSuite {
 
   test("o09: unsupported column types are rejected at write resolution") {
     val dir = o09Dir("types")
-    // the JSON payload keeps its portable scalar set: a timestamp is
-    // refused there (it lands fine under the r13 parquet default)
-    val withTs = Tables.events(spark, sf0001).select($"event_id", $"ts")
-    val e = intercept[Exception] {
-      withTs.write.format("graft-commit").option("path", dir)
-        .option("payload", "json").mode("overwrite").save()
-    }
-    assert(e.getMessage.contains("graft-commit (json payload) supports"),
-      s"expected the declared-type validation error, got: ${e.getMessage}")
-    // the parquet payload rejects what parquet-scalar cannot hold
+    // the payload rejects what parquet-scalar cannot hold
     val withArr = Tables.events(spark, sf0001)
       .select($"event_id", split($"event_type", "x").as("arr"))
-    val e2 = intercept[Exception] {
+    val e = intercept[Exception] {
       withArr.write.format("graft-commit").option("path", dir)
         .mode("overwrite").save()
     }
-    assert(e2.getMessage.contains("graft-commit (parquet payload) supports"),
-      s"expected the declared-type validation error, got: ${e2.getMessage}")
+    assert(e.getMessage.contains("graft-commit (parquet payload) supports"),
+      s"expected the declared-type validation error, got: ${e.getMessage}")
   }
 
   // --- d31: deletion-neighborhood fuzzy join ----------------------------

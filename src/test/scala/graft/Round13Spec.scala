@@ -14,12 +14,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * delta UPDATE/MERGE, the change data feed, and targeted vector
   * maintenance.
   *
-  *  - '''Parquet payload''': staged files default to columnar parquet;
+  *  - '''Parquet payload''': staged files are columnar parquet;
   *    every declared type (timestamp/ntz, date, decimal narrow+wide,
   *    float, smallint, tinyint) round-trips bit-exactly through write →
-  *    commit → DSv2 scan AND the Spark-native re-read; payloads are
-  *    homogeneous per lineage (append mismatch refused; an un-optioned
-  *    truncate KEEPS the table's recorded choice).
+  *    commit → DSv2 scan AND the Spark-native re-read. Parquet is the
+  *    only format: a `payload` write option or table property naming
+  *    anything else is refused, and so is a legacy JSON-lines manifest
+  *    that lists files.
   *  - '''Group-filter guard''': the matching-groups subquery only runs
   *    when the manifest's zone maps show prunable structure — a
   *    hash-scattered layout skips it (rewrite = statically planned
@@ -97,8 +98,11 @@ class Round13Spec extends AnyFunSuite {
     val in = typedFixture
     in.write.format("graft-commit").option("path", dir).mode("overwrite").save()
     val m = manifest(dir)
-    assert(m.payload == "parquet", "parquet is the default payload")
     assert(m.files.forall(_.endsWith(".parquet")))
+    // older builds read a manifest without the field as JSON-lines
+    assert(new String(Files.readAllBytes(Paths.get(dir, "_MANIFEST.json")), "UTF-8")
+      .contains("\"payload\":\"parquet\""),
+      "manifests keep recording the payload for older readers")
     // declared types survive in the manifest schema
     val sch = sources.CommitSink.readCommitted(spark, dir).schema
     assert(sch("dec").dataType == DecimalType(12, 4))
@@ -141,25 +145,120 @@ class Round13Spec extends AnyFunSuite {
     assert(desc.contains("columns: 2/4"), s"projection must reach the scan: $desc")
   }
 
+  // --- the one payload format: refusals -----------------------------------
+
+  private val payloadRefusal = "parquet is the only staged-file format"
+  private val legacyRefusal = "retired JSON-lines payload"
+
+  private def msgChain(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString(" <- ")
+
   test("parquet payload: appends carry the format; a json append onto parquet is refused") {
-    val dir = freshDir("payload_mismatch")
+    val dir = freshDir("payload_option")
     spark.range(5L).select($"id").write.format("graft-commit")
       .option("path", dir).mode("overwrite").save()
-    // un-optioned append joins the table's payload
+    // an un-optioned append writes parquet; naming the one format
+    // selects nothing new
     spark.range(5L, 10L).select($"id").write.format("graft-commit")
       .option("path", dir).mode("append").save()
-    assert(manifest(dir).payload == "parquet")
-    assert(sources.CommitSink.readCommitted(spark, dir).count() == 10L)
-    val e = intercept[Exception] {
-      spark.range(10L, 15L).select($"id").write.format("graft-commit")
-        .option("path", dir).option("payload", "json").mode("append").save()
+    spark.range(5L, 10L).select($"id").write.format("graft-commit")
+      .option("path", dir).option("payload", "parquet").mode("append").save()
+    assert(manifest(dir).files.size >= 3 && manifest(dir).files.forall(_.endsWith(".parquet")))
+    // the payload option is refused for anything but parquet, in
+    // either mode, never silently ignored
+    for (mode <- Seq("append", "overwrite"); p <- Seq("json", " JSON ", "avro")) {
+      val e = intercept[Exception] {
+        spark.range(10L, 15L).select($"id").write.format("graft-commit")
+          .option("path", dir).option("payload", p).mode(mode).save()
+      }
+      assert(msgChain(e).contains(payloadRefusal), msgChain(e))
     }
-    assert(e.getMessage.contains("payload mismatch"), e.getMessage)
-    // a truncate MAY switch
-    spark.range(3L).select($"id").write.format("graft-commit")
-      .option("path", dir).option("payload", "json").mode("overwrite").save()
-    assert(manifest(dir).payload == "json")
-    assert(sources.CommitSink.readCommitted(spark, dir).count() == 3L)
+    // the refused writes committed nothing
+    assert(manifest(dir).commit == 2L)
+    assert(sources.CommitSink.readCommitted(spark, dir).count() == 15L)
+    // a first write is refused before anything lands
+    val fresh = freshDir("payload_option_fresh")
+    val e = intercept[Exception] {
+      spark.range(3L).select($"id").write.format("graft-commit")
+        .option("path", fresh).option("payload", "json").mode("overwrite").save()
+    }
+    assert(msgChain(e).contains(payloadRefusal), msgChain(e))
+    assert(!Files.exists(Paths.get(fresh, "_MANIFEST.json")))
+  }
+
+  test("payload table property: TBLPROPERTIES naming anything but parquet is refused") {
+    val (cat, root) = withCatalog("payload_prop")
+    val e = intercept[Exception] {
+      spark.sql(s"CREATE TABLE $cat.`default`.j (id BIGINT) USING `graft-commit` " +
+        "TBLPROPERTIES ('payload'='json')")
+    }
+    assert(msgChain(e).contains(payloadRefusal), msgChain(e))
+    assert(!Files.exists(Paths.get(root, "default", "j")), "a refused CREATE leaves no table")
+    // the one format is accepted, and the table writes parquet
+    spark.sql(s"CREATE TABLE $cat.`default`.t (id BIGINT) USING `graft-commit` " +
+      "TBLPROPERTIES ('payload'='parquet')")
+    spark.sql(s"INSERT OVERWRITE $cat.`default`.t SELECT id FROM range(5)")
+    val path = s"$root/default/t"
+    assert(manifest(path).files.forall(_.endsWith(".parquet")))
+    assert(sources.CommitSink.readCommitted(spark, path).count() == 5L)
+  }
+
+  /** Hand-write a legacy table at `d`: one JSON-lines data file and a
+    * manifest carrying `payloadField` and listing `files`. */
+  private def legacyManifest(d: java.nio.file.Path, payloadField: String,
+                             files: String): Unit = {
+    Files.createDirectories(d)
+    Files.write(d.resolve("part-c00000-x-00000.json"), "{\"id\":1}\n".getBytes("UTF-8"))
+    Files.write(d.resolve("_MANIFEST.json"),
+      (s"""{"commit":0,"epochs":[],$payloadField"schema":"id BIGINT",""" +
+        s""""files":[$files]}""").getBytes("UTF-8"))
+  }
+
+  test("payload: a legacy JSON-lines manifest that lists files is refused at parse") {
+    val dir = freshDir("payload_legacy")
+    val d = Paths.get(dir)
+    def manifestWith(payloadField: String, files: String): Unit =
+      legacyManifest(d, payloadField, files)
+    manifestWith("\"payload\":\"json\",", "\"part-c00000-x-00000.json\"")
+    val e = intercept[IllegalArgumentException](sources.CommitSink.parseManifest(d))
+    assert(e.getMessage.contains(legacyRefusal), e.getMessage)
+    // every read surface goes through the same parse
+    val e2 = intercept[Exception] {
+      spark.read.format("graft-commit").option("path", dir).load().count()
+    }
+    assert(msgChain(e2).contains(legacyRefusal), msgChain(e2))
+    // so does a write that plans against the table
+    val e3 = intercept[Exception] {
+      spark.range(3L).select($"id").write.format("graft-commit")
+        .option("path", dir).mode("append").save()
+    }
+    assert(msgChain(e3).contains(legacyRefusal), msgChain(e3))
+    // manifests from before the payload field were JSON-lines too
+    manifestWith("", "\"part-c00000-x-00000.json\"")
+    assert(intercept[IllegalArgumentException](sources.CommitSink.parseManifest(d))
+      .getMessage.contains(legacyRefusal))
+    // a legacy table with no files has nothing to decode: it parses
+    manifestWith("\"payload\":\"json\",", "")
+    assert(sources.CommitSink.parseManifest(d).exists(_.files.isEmpty))
+  }
+
+  test("payload: an un-optioned INSERT OVERWRITE keeps a json table json") {
+    // a legacy JSON-lines table is never silently rewritten as parquet:
+    // the overwrite is refused and the table keeps its manifest and files
+    val (cat, root) = withCatalog("payload_pin")
+    val d = Paths.get(root, "default", "t")
+    legacyManifest(d, "\"payload\":\"json\",", "\"part-c00000-x-00000.json\"")
+    val before = Files.readAllBytes(d.resolve("_MANIFEST.json"))
+    val e = intercept[Exception] {
+      spark.sql(s"INSERT OVERWRITE $cat.`default`.t SELECT id FROM range(5)")
+    }
+    assert(msgChain(e).contains(legacyRefusal), msgChain(e))
+    assert(java.util.Arrays.equals(before, Files.readAllBytes(d.resolve("_MANIFEST.json"))),
+      "the refused overwrite must leave the json manifest as it was")
+    assert(Files.exists(d.resolve("part-c00000-x-00000.json")))
+    assert(d.toFile.listFiles().forall(!_.getName.endsWith(".parquet")),
+      "no parquet file lands")
   }
 
   test("parquet payload: DML (UPDATE zone-prune + MERGE) runs group-granular over parquet files") {
@@ -300,7 +399,7 @@ class Round13Spec extends AnyFunSuite {
             (i * 10L).toString, (i * 10L + 9).toString))).encode
       }.toMap
       sources.CommitSink.writeManifest(Paths.get(path), "id BIGINT", files, 1L,
-        stats = stats, payload = "parquet")
+        stats = stats)
     }
     val small = freshDir("bigmanifest_1k")
     Files.createDirectories(Paths.get(small))
@@ -543,23 +642,6 @@ class Round13Spec extends AnyFunSuite {
     assert(sources.CommitSink.readCommitted(spark, path).count() == 980L)
   }
 
-  test("mor delete: json payload falls back to copy-on-write (same answer)") {
-    val (cat, root) = withCatalog("mor_json")
-    val path = s"$root/default/t"
-    spark.range(100L).select($"id").repartitionByRange(2, $"id")
-      .write.format("graft-commit").option("path", path)
-      .option("payload", "json").mode("overwrite").save()
-    val before = manifest(path)
-    withDeleteMode("merge-on-read") {
-      spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 10 AND id < 20")
-    }
-    val after = manifest(path)
-    assert(after.deletes.isEmpty, "json payload has no stable positions: COW fallback")
-    assert(after.files.intersect(before.files).size == 1,
-      "the fallback is still group-granular: one file rewritten, one carried")
-    assert(sources.CommitSink.readCommitted(spark, path).count() == 90L)
-  }
-
   // --- o28: delta-based (merge-on-read) UPDATE / MERGE ---------------------
 
   private def withRowLevelMode[A](mode: String)(body: => A): A = {
@@ -629,25 +711,6 @@ class Round13Spec extends AnyFunSuite {
     sources.CommitSink.compact(spark, morPath, 2)
     assert(manifest(morPath).deletes.isEmpty)
     assert(sources.CommitSink.readCommitted(spark, morPath).count() == 1050L)
-  }
-
-  test("mor row-level ops: a json-payload table falls back to copy-on-write") {
-    // r14 lifted the partitioned-table exclusion (Round14Spec pins the
-    // delta path's layout preservation); the payload gate remains — json
-    // lines have no stable physical positions for a vector to name
-    val (cat, root) = withCatalog("mor_json_cow")
-    val path = s"$root/default/t"
-    spark.range(100L).select($"id", ($"id" * 1.0).as("v"))
-      .write.format("graft-commit").option("path", path)
-      .option("payload", "json").mode("overwrite").save()
-    withRowLevelMode("merge-on-read") {
-      spark.sql(s"UPDATE $cat.`default`.t SET v = -1.0 WHERE id = 7")
-    }
-    val m = manifest(path)
-    assert(m.deletes.isEmpty,
-      "json payload: no vectors — the COW path rewrites instead")
-    val back = sources.CommitSink.readCommitted(spark, path)
-    assert(back.filter($"v" === -1.0).count() == 1L && back.count() == 100L)
   }
 
   test("dv format: dense vectors switch to the bitmap container, sparse stay positional") {
@@ -826,23 +889,6 @@ class Round13Spec extends AnyFunSuite {
     assert(m.group(2).toInt == 16, desc)
     assert(m.group(1).toInt <= 4,
       s"a 1/64 box over a z-clustered layout must prune most files: $desc")
-  }
-
-  test("payload: an un-optioned INSERT OVERWRITE keeps a json table json") {
-    val (cat, root) = withCatalog("payload_pin")
-    spark.sql(s"CREATE TABLE $cat.`default`.t (id BIGINT) USING `graft-commit` " +
-      "TBLPROPERTIES ('payload'='json')")
-    val path = s"$root/default/t"
-    assert(manifest(path).payload == "json")
-    spark.sql(s"INSERT OVERWRITE $cat.`default`.t SELECT id FROM range(5)")
-    assert(manifest(path).payload == "json",
-      "the TBLPROPERTIES choice must survive an un-optioned overwrite")
-    assert(manifest(path).files.forall(_.endsWith(".json")))
-    assert(sources.CommitSink.readCommitted(spark, path).count() == 5L)
-    // an EXPLICIT truncate option still switches
-    spark.range(3L).select($"id").write.format("graft-commit")
-      .option("path", path).option("payload", "parquet").mode("overwrite").save()
-    assert(manifest(path).payload == "parquet")
   }
 
   // --- o29: change data feed ------------------------------------------------

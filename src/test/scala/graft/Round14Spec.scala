@@ -358,22 +358,19 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("upsert refusals: json payload, overwrite mode, unknown/bad-typed keys") {
-    val dir = freshDir("eq_refuse")
-    spark.range(10L).select($"id", ($"id" * 1.0).as("v"))
-      .write.format("graft-commit").option("path", dir)
-      .option("payload", "json").mode("overwrite").save()
     def refused(frag: String)(body: => Unit): Unit = {
       val e = intercept[Exception](body)
       assert(e.getMessage.contains(frag), e.getMessage)
     }
-    refused("parquet") {
-      spark.range(5L).select($"id", lit(0.0).as("v"))
-        .write.format("graft-commit").option("path", dir)
-        .option("upsertKeys", "id").mode("append").save()
-    }
     val pdir = freshDir("eq_refuse_pq")
     spark.range(10L).select($"id", ($"id" * 1.0).as("v"))
       .write.format("graft-commit").option("path", pdir).mode("overwrite").save()
+    // parquet is the only payload: an upsert asking for json is refused
+    refused("parquet is the only staged-file format") {
+      spark.range(5L).select($"id", lit(0.0).as("v"))
+        .write.format("graft-commit").option("path", pdir)
+        .option("payload", "json").option("upsertKeys", "id").mode("append").save()
+    }
     refused("APPEND-mode") {
       spark.range(5L).select($"id", lit(0.0).as("v"))
         .write.format("graft-commit").option("path", pdir)

@@ -466,8 +466,6 @@ class Round16Spec extends AnyFunSuite {
     override def outputFile(p: java.nio.file.Path) = d.outputFile(p)
     override def newInputStream(p: java.nio.file.Path) = d.newInputStream(p)
     override def newOutputStream(p: java.nio.file.Path) = d.newOutputStream(p)
-    override def newBufferedReader(p: java.nio.file.Path) = d.newBufferedReader(p)
-    override def newBufferedWriter(p: java.nio.file.Path) = d.newBufferedWriter(p)
     override def readString(p: java.nio.file.Path): String = {
       if (p.getFileName.toString.startsWith("_MANIFEST-g")) groupReads.incrementAndGet()
       d.readString(p)
@@ -497,7 +495,7 @@ class Round16Spec extends AnyFunSuite {
           (i * 10L).toString, (i * 10L + 9).toString))).encode
     }.toMap
     sources.CommitSink.writeManifest(Paths.get(dir), "id BIGINT", files, 1L,
-      stats = stats, payload = "parquet")
+      stats = stats)
     // the root lists ~30 group refs, not 120k file entries
     val rootBytes = java.nio.file.Files.size(Paths.get(dir, "_MANIFEST.json"))
     assert(rootBytes < 64 * 1024,

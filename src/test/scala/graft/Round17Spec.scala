@@ -124,7 +124,7 @@ class Round17Spec extends AnyFunSuite {
     val dir = s"$root/default/t"
     spark.range(100).select($"id", ($"id" % 10).as("k"))
       .write.format("graft-commit").option("path", dir)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     // MOR delete: vectors recorded, files kept
     val key = "spark.graft.commit.deleteMode"
     val prev = spark.conf.getOption(key)
@@ -202,7 +202,7 @@ class Round17Spec extends AnyFunSuite {
     spark.range(100).select($"id", ($"id" % 5).as("k"),
         concat(lit("s"), $"id").as("s"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     val v0 = manifest(path).commit
     spark.sql(s"ALTER TABLE $cat.`default`.t DROP COLUMN s")
     val m = manifest(path)
@@ -248,7 +248,7 @@ class Round17Spec extends AnyFunSuite {
     val path2 = s"$root2/default/t"
     spark.range(50).select($"id", ($"id" % 5).as("k"))
       .write.format("graft-commit").option("path", path2)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.range(3).select($"id", lit(7L).as("k"))
       .write.format("graft-commit").option("path", path2)
       .option("upsertKeys", "id").mode("append").save()
@@ -442,8 +442,7 @@ class Round17Spec extends AnyFunSuite {
     }.toMap
     withGroupSize(4) {
       sources.CommitSink.writeManifest(Paths.get(dir), "ts TIMESTAMP_NTZ",
-        files, 1L, stats = stats, partCol = Some("months(ts)"),
-        payload = "parquet")
+        files, 1L, stats = stats, partCol = Some("months(ts)"))
     }
     assert(sources.CommitSink.parseManifestRoot(Paths.get(dir)).get.groups.size == 6)
     // BETWEEN over months 308..309 (= 1995-09/1995-10): 2 files, 1 group
@@ -471,8 +470,6 @@ class Round17Spec extends AnyFunSuite {
     override def outputFile(p: java.nio.file.Path) = d.outputFile(p)
     override def newInputStream(p: java.nio.file.Path) = d.newInputStream(p)
     override def newOutputStream(p: java.nio.file.Path) = d.newOutputStream(p)
-    override def newBufferedReader(p: java.nio.file.Path) = d.newBufferedReader(p)
-    override def newBufferedWriter(p: java.nio.file.Path) = d.newBufferedWriter(p)
     override def readString(p: java.nio.file.Path): String = {
       if (p.getFileName.toString.startsWith("_MANIFEST-g")) groupReads.incrementAndGet()
       d.readString(p)
@@ -498,8 +495,6 @@ class Round17Spec extends AnyFunSuite {
     override def outputFile(p: java.nio.file.Path) = d.outputFile(p)
     override def newInputStream(p: java.nio.file.Path) = d.newInputStream(p)
     override def newOutputStream(p: java.nio.file.Path) = d.newOutputStream(p)
-    override def newBufferedReader(p: java.nio.file.Path) = d.newBufferedReader(p)
-    override def newBufferedWriter(p: java.nio.file.Path) = d.newBufferedWriter(p)
     override def readString(p: java.nio.file.Path): String = d.readString(p)
     override def writeString(p: java.nio.file.Path, s: String): Unit = {
       if (p.getFileName.toString.startsWith("_MANIFEST-g") &&
@@ -528,7 +523,7 @@ class Round17Spec extends AnyFunSuite {
       intercept[java.io.IOException] {
         sources.CommitSink.withIo(new FailingGroupWriteIo(failAt = 2)) {
           sources.CommitSink.writeManifest(Paths.get(dir), "id BIGINT",
-            files, 1L, stats = stats, payload = "parquet")
+            files, 1L, stats = stats)
         }
       }
     }
@@ -611,7 +606,7 @@ class Round17Spec extends AnyFunSuite {
     }
     sources.CommitSink.writeManifest(Paths.get(path), m.ddl, m.files,
       m.commit + 1, m.epochs, expectedPrev = m.commit, partCol = m.partCol,
-      stats = stripped, tableId = m.tableId, payload = m.payload,
+      stats = stripped, tableId = m.tableId,
       fileSeq = m.fileSeq)
     // INCLUSIVE in-day bounds: `< day3 00:00` would conservatively
     // project onto day3's key too (the interval projection keeps

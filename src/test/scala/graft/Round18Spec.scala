@@ -81,7 +81,7 @@ class Round18Spec extends AnyFunSuite {
     spark.range(1000L).select($"id", ($"id" * 2).as("v"))
       .repartitionByRange(4, $"id")
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     val m0 = manifest(path)
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN id TO row_id")
     val m1 = manifest(path)
@@ -108,7 +108,7 @@ class Round18Spec extends AnyFunSuite {
     val path = s"$root/default/t"
     spark.range(100L).select($"id".as("a"), ($"id" + 1000).as("c"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     // a -> b, then c -> a (reusing the freed name): an original file's
     // current 'b' is physical 'a' and current 'a' is physical 'c'
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN a TO b")
@@ -129,7 +129,7 @@ class Round18Spec extends AnyFunSuite {
     val path = s"$root/default/t"
     spark.range(100L).select($"id", ($"id" * 10).as("v"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN v TO amount")
     spark.range(100L, 200L).select($"id", ($"id" * 10).as("amount"))
       .write.format("graft-commit").option("path", path).mode("append").save()
@@ -162,7 +162,7 @@ class Round18Spec extends AnyFunSuite {
     val path = s"$root/default/u"
     spark.range(100L).select($"id".as("k"), $"id".as("v"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.range(10L).select($"id".as("k"), ($"id" + 500).as("v"))
       .write.format("graft-commit").option("path", path)
       .option("upsertKeys", "k").mode("append").save()
@@ -180,7 +180,7 @@ class Round18Spec extends AnyFunSuite {
     val path = s"$root/default/t"
     spark.range(100L).select($"id", ($"id" * 2).as("dead"), ($"id" * 3).as("old"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.sql(s"ALTER TABLE $cat.`default`.t DROP COLUMN dead")
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN old TO renamed")
     // the r17 ADVICE hole: a by-name re-add of 'dead' would silently
@@ -203,25 +203,12 @@ class Round18Spec extends AnyFunSuite {
       "the re-added column is fresh: NULL everywhere, never old bytes")
   }
 
-  test("o48: json payload maps old keys per file too") {
-    val (cat, root) = scopedCat("rename_json")
-    val path = s"$root/default/t"
-    spark.range(50L).select($"id", ($"id" * 2).as("v"))
-      .write.format("graft-commit").option("path", path)
-      .option("payload", "json").mode("overwrite").save()
-    spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN v TO w")
-    spark.range(50L, 100L).select($"id", ($"id" * 2).as("w"))
-      .write.format("graft-commit").option("path", path).mode("append").save()
-    val back = spark.read.format("graft-commit").option("path", path).load()
-    assert(back.agg(sum($"w")).head().getLong(0) == (0L until 100L).map(_ * 2).sum)
-  }
-
   test("o48: the change feed decodes pre-rename files under current names") {
     val (cat, root) = scopedCat("rename_cdf")
     val path = s"$root/default/t"
     spark.range(10L).select($"id", ($"id" * 2).as("v"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN v TO w")
     spark.range(10L, 20L).select($"id", ($"id" * 2).as("w"))
       .write.format("graft-commit").option("path", path).mode("append").save()
@@ -241,7 +228,7 @@ class Round18Spec extends AnyFunSuite {
     val path = freshDir("ts_travel")
     CommitSink.withClock(() => 10000L) {
       spark.range(10L).select($"id").write.format("graft-commit")
-        .option("path", path).option("payload", "parquet")
+        .option("path", path)
         .mode("overwrite").save()
     }
     CommitSink.withClock(() => 20000L) {
@@ -301,7 +288,7 @@ class Round18Spec extends AnyFunSuite {
     val path = freshDir("ts_cdf")
     CommitSink.withClock(() => 1000L) {
       spark.range(10L).select($"id").write.format("graft-commit")
-        .option("path", path).option("payload", "parquet")
+        .option("path", path)
         .mode("overwrite").save()
     }
     CommitSink.withClock(() => 2000L) {
@@ -337,7 +324,7 @@ class Round18Spec extends AnyFunSuite {
     val path = freshDir("ts_expire")
     CommitSink.withClock(() => 1000L) {
       spark.range(10L).select($"id").write.format("graft-commit")
-        .option("path", path).option("payload", "parquet")
+        .option("path", path)
         .mode("overwrite").save()
     }
     CommitSink.withClock(() => 2000L) {
@@ -370,7 +357,7 @@ class Round18Spec extends AnyFunSuite {
     spark.range(100L, 600L).select($"id", ($"id" % 7).as("k"),
         ($"id" / 10.0).as("x"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").option("ndvColumns", "k")
+      .option("ndvColumns", "k")
       .mode("overwrite").save()
     withConf("spark.sql.cbo.enabled", "true") {
       val stats = spark.read.format("graft-commit").option("path", path).load()
@@ -590,7 +577,7 @@ class Round18Spec extends AnyFunSuite {
     import sources.CommitSink
     val path = freshDir("branch_ff")
     spark.range(100L).select($"id").write.format("graft-commit")
-      .option("path", path).option("payload", "parquet")
+      .option("path", path)
       .mode("overwrite").save()
     CommitSink.createBranch(path, "exp", 0L)
     spark.range(100L, 150L).select($"id").write.format("graft-commit")
@@ -625,14 +612,14 @@ class Round18Spec extends AnyFunSuite {
     spark.range(100L).select(($"id" % 2).as("k"), $"id".as("v"))
       .repartition(2, $"k")
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").option("partitionBy", "k")
+      .option("partitionBy", "k")
       .mode("overwrite").save()
     val m = manifest(path)
     // strip one file's stats (a legacy/degraded manifest shape)
     val victim = m.files.head
     CommitSink.writeManifest(Paths.get(path), m.ddl, m.files, m.commit + 1,
       m.epochs, expectedPrev = m.commit, partCol = m.partCol,
-      stats = m.stats - victim, tableId = m.tableId, payload = m.payload,
+      stats = m.stats - victim, tableId = m.tableId,
       fileSeq = m.fileSeq)
     val parts = spark.read.format("graft-commit").option("path", path)
       .option("metaTable", "partitions").load().collect()
@@ -650,7 +637,7 @@ class Round18Spec extends AnyFunSuite {
     val path = freshDir("ndv_coverage")
     spark.range(1000L).select($"id", ($"id" % 7).as("k"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").option("ndvColumns", "id,k")
+      .option("ndvColumns", "id,k")
       .mode("overwrite").save()
     def attrNdv(c: String): Option[Long] = withConf("spark.sql.cbo.enabled", "true") {
       spark.read.format("graft-commit").option("path", path).load()
@@ -686,7 +673,6 @@ class Round18Spec extends AnyFunSuite {
     def write(path: String, df: org.apache.spark.sql.DataFrame,
               ndv: Seq[String]): Unit = {
       val w = df.write.format("graft-commit").option("path", path)
-        .option("payload", "parquet")
       (if (ndv.nonEmpty) w.option("ndvColumns", ndv.mkString(",")) else w)
         .mode("overwrite").save()
     }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-19 wave — the r18 ADVICE fixes first (all five), then the
   * engine-relative backlog (width-aware column stats, partition-source
-  * rename, json analyze, streaming partitionBy — separate sections
+  * rename, maintenance-pass coverage, streaming partitionBy — separate sections
   * below as they land):
   *
   *  - '''CDF binding ledger''' (ADVICE high): a bounded change-feed
@@ -89,7 +89,7 @@ class Round19Spec extends AnyFunSuite {
     // v0 + v1: files physically carry 'a'; v2: RENAME a -> b
     spark.range(10L).select($"id".as("a"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.range(10L, 20L).select($"id".as("a"))
       .write.format("graft-commit").option("path", path).mode("append").save()
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN a TO b")
@@ -124,7 +124,7 @@ class Round19Spec extends AnyFunSuite {
     val path = s"$root/default/t"
     spark.range(10L).select($"id".as("a"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.range(10L, 20L).select($"id".as("a"))
       .write.format("graft-commit").option("path", path).mode("append").save()
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN a TO b")
@@ -157,11 +157,11 @@ class Round19Spec extends AnyFunSuite {
     // inexpressible per commit, so a genesis CDF stream must bootstrap
     spark.range(100L).select($"id".as("k"), ($"id" * 2).as("x"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN x TO y")
     spark.range(10L).select($"id".as("k"), ($"id" + 1000L).as("y"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").option("upsertKeys", "k")
+      .option("upsertKeys", "k")
       .mode("append").save()
     assert(manifest(path).schemaLog.nonEmpty && manifest(path).eqDeletes.nonEmpty)
     var nulls = 0L
@@ -198,11 +198,11 @@ class Round19Spec extends AnyFunSuite {
     // table A: write-path sketches; table B: the analyze pass — same rows
     val pa = freshDir("ndv_writer")
     base.write.format("graft-commit").option("path", pa)
-      .option("payload", "parquet").option("ndvColumns", cols.mkString(","))
+      .option("ndvColumns", cols.mkString(","))
       .mode("overwrite").save()
     val pb = freshDir("ndv_analyze")
     base.write.format("graft-commit").option("path", pb)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     // a non-UTC session must not skew the NTZ cast (the pass scopes UTC)
     withConf("spark.sql.session.timeZone", "America/New_York") {
       CommitSink.analyzeNdv(spark, pb, cols)
@@ -242,11 +242,11 @@ class Round19Spec extends AnyFunSuite {
     val path = freshDir("ndv_upsert")
     spark.range(100L).select($"id".as("k"), ($"id" * 2).as("v"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").option("ndvColumns", "k")
+      .option("ndvColumns", "k")
       .mode("overwrite").save()
     spark.range(50L, 150L).select($"id".as("k"), ($"id" * 3).as("v"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").option("upsertKeys", "k")
+      .option("upsertKeys", "k")
       .option("ndvColumns", "k").mode("append").save()
     val m = manifest(path)
     assert(m.eqDeletes.nonEmpty, "the upsert must have landed as o32")
@@ -277,13 +277,13 @@ class Round19Spec extends AnyFunSuite {
       when($"id" % 10 === 0, lit(null).cast("string"))
         .otherwise(lpad($"id".cast("string"), 300, "x")).as("txt"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     val txt = attrStat(path, "txt")
     assert(txt.avgLen.contains(300L), txt.toString)
     assert(txt.maxLen.contains(300L), txt.toString)
     assert(txt.nullCount.map(_.toLong).contains(rows / 10), txt.toString)
-    // the json payload records the same facts (footer-less format)
-    val pj = freshDir("width_stats_json")
+    // an all-non-null column reports its width the same way
+    val pj = freshDir("width_stats_nonnull")
     spark.range(100L).select($"id", lpad($"id".cast("string"), 40, "y").as("txt"))
       .write.format("graft-commit").option("path", pj).mode("overwrite").save()
     assert(attrStat(pj, "txt").avgLen.contains(40L))
@@ -302,7 +302,7 @@ class Round19Spec extends AnyFunSuite {
       spark.range(20000L).select($"id".as("k"),
         lpad($"id".cast("string"), 300, "d").as("doc"))
         .write.format("graft-commit").option("path", dim)
-        .option("payload", "parquet").mode("overwrite").save()
+        .mode("overwrite").save()
       if (stripWidth) {
         // the strict facet-only proof: re-commit the manifest with the
         // width entries STRIPPED (zone maps and row counts intact)
@@ -312,12 +312,12 @@ class Round19Spec extends AnyFunSuite {
           stats = m.stats.map { case (f, e) =>
             f -> CommitSink.FileStat.decode(e).copy(wid = Map.empty).encode },
           tableId = m.tableId,
-          payload = m.payload, deletes = m.deletes, fileSeq = m.fileSeq,
+          deletes = m.deletes, fileSeq = m.fileSeq,
           eqDeletes = m.eqDeletes, blooms = m.blooms, schemaLog = m.schemaLog)
       }
       spark.range(500000L).select(($"id" % 20000L).as("k"), ($"id" * 2).as("v"))
         .write.format("graft-commit").option("path", fact)
-        .option("payload", "parquet").mode("overwrite").save()
+        .mode("overwrite").save()
       def t(p: String) = spark.read.format("graft-commit").option("path", p).load()
       withConf("spark.sql.cbo.enabled", "true") {
         withConf("spark.sql.autoBroadcastJoinThreshold", (2 * 1024 * 1024).toString) {
@@ -341,7 +341,7 @@ class Round19Spec extends AnyFunSuite {
     spark.range(1000L).select($"id".as("k"), ($"id" % 7).as("g"),
       lpad($"id".cast("string"), 120, "z").as("doc"))
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").option("ndvColumns", "k,g")
+      .option("ndvColumns", "k,g")
       .mode("overwrite").save()
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN k TO key")
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN doc TO body")
@@ -374,7 +374,7 @@ class Round19Spec extends AnyFunSuite {
     spark.range(500L).select(($"id" * 2).as("a"), $"id".as("v"))
       .repartition(2)
       .write.format("graft-commit").option("path", path)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN a TO key")
     // the build must read pre-rename files under physical 'a' (NOT as
     // an all-NULL 'key') and key each sidecar by the physical name the
@@ -449,31 +449,45 @@ class Round19Spec extends AnyFunSuite {
     assert(msgChain(e).contains("partition spec's source"), msgChain(e))
   }
 
-  // --- json-payload maintenance passes (r19) ---------------------------------
+  // --- maintenance passes: plain tables and legacy json payloads (r19) -----
 
   test("analyzeNdv and buildBloomIndex cover json-payload tables") {
     import sources.CommitSink
-    val path = freshDir("json_stats")
+    val path = freshDir("plain_stats")
     spark.range(1000L).select($"id".as("k"), ($"id" % 40).as("g"),
       concat(lit("user_"), $"id").as("name")).repartition(4)
-      .write.format("graft-commit").option("path", path)
-      .option("payload", "json").mode("overwrite").save()
-    assert(manifest(path).payload == "json")
+      .write.format("graft-commit").option("path", path).mode("overwrite").save()
     CommitSink.analyzeNdv(spark, path, Seq("k", "g", "name"))
     assert(attrNdv(path, "k").contains(1000L)) // HLL exact below the coupon cap
     assert(attrNdv(path, "g").contains(40L))
-    // bloom over json: even values, odd in-range probe (zone maps are
+    // bloom: even values, odd in-range probe (zone maps are
     // structurally unable to answer it — only the sidecar prunes)
-    val pb = freshDir("json_bloom")
+    val pb = freshDir("plain_bloom")
     spark.range(1000L).select(($"id" * 2).as("k"), $"id".as("v")).repartition(4)
-      .write.format("graft-commit").option("path", pb)
-      .option("payload", "json").mode("overwrite").save()
-    assert(manifest(pb).payload == "json")
+      .write.format("graft-commit").option("path", pb).mode("overwrite").save()
     CommitSink.buildBloomIndex(spark, pb, Seq("k"))
     def rd = spark.read.format("graft-commit").option("path", pb).load()
     assert(rd.filter($"k" === 778L).count() == 1L)
     assert(plannedFiles(rd.filter($"k" === 777L)) <= 1,
       "an absent odd key must bloom-prune (fpp tolerance: one file)")
+    // a legacy JSON-lines table: both passes refuse it with the
+    // retired-payload error instead of decoding its lines as parquet,
+    // and leave its manifest as it was
+    val pj = java.nio.file.Paths.get(freshDir("json_stats"))
+    java.nio.file.Files.createDirectories(pj)
+    java.nio.file.Files.write(pj.resolve("part-c00000-x-00000.json"),
+      "{\"k\":1}\n".getBytes("UTF-8"))
+    val legacy = """{"commit":0,"epochs":[],"payload":"json","schema":"k BIGINT",""" +
+      """"files":["part-c00000-x-00000.json"]}"""
+    java.nio.file.Files.write(pj.resolve("_MANIFEST.json"), legacy.getBytes("UTF-8"))
+    for (pass <- Seq[String => Unit](
+        p => CommitSink.analyzeNdv(spark, p, Seq("k")),
+        p => CommitSink.buildBloomIndex(spark, p, Seq("k")))) {
+      val e = intercept[Exception](pass(pj.toString))
+      assert(msgChain(e).contains("retired JSON-lines payload"), msgChain(e))
+      assert(new String(java.nio.file.Files.readAllBytes(pj.resolve("_MANIFEST.json")),
+        "UTF-8") == legacy)
+    }
   }
 
   // --- date-only timestampAsOf (ADVICE low) ----------------------------------
@@ -485,7 +499,7 @@ class Round19Spec extends AnyFunSuite {
     val c2 = java.time.Instant.parse("2026-01-02T10:00:00Z").toEpochMilli
     CommitSink.withClock(() => c1) {
       spark.range(10L).select($"id").write.format("graft-commit")
-        .option("path", path).option("payload", "parquet")
+        .option("path", path)
         .mode("overwrite").save()
     }
     CommitSink.withClock(() => c2) {

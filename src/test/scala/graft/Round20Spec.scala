@@ -64,7 +64,7 @@ class Round20Spec extends AnyFunSuite {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
     df.write.format("graft-commit").option("path", dir)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     val back = spark.read.format("graft-commit").option("path", dir).load()
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
       schema.fields.map(f => (f.name, f.dataType)).toSeq)
@@ -82,7 +82,7 @@ class Round20Spec extends AnyFunSuite {
     spark.range(100).selectExpr("id", "id % 7 AS k",
       "CAST(id AS STRING) AS tag")
       .write.format("graft-commit").option("path", dir)
-      .option("payload", "parquet").mode("overwrite").save()
+      .mode("overwrite").save()
     // a copy-on-write DELETE routes through ReplaceData with the
     // prepended __row_operation marker — the fieldOffset=1 branch of
     // the new write support
@@ -104,11 +104,11 @@ class Round20Spec extends AnyFunSuite {
     val dir = s"$root/default/t"
     val rows = spark.range(40).selectExpr("id", "id % 4 AS k", "id % 3 AS j")
     rows.write.format("graft-commit").option("path", dir)
-      .option("payload", "parquet").option("partitionBy", "k")
+      .option("partitionBy", "k")
       .mode("overwrite").save()
     // an explicit overwrite is the one write allowed to change the layout
     rows.write.format("graft-commit").option("path", dir)
-      .option("payload", "parquet").option("partitionBy", "j")
+      .option("partitionBy", "j")
       .mode("overwrite").save()
     val cat = spark.sessionState.catalogManager.catalog("graft_pin_layout")
       .asInstanceOf[TableCatalog]
