@@ -22,12 +22,17 @@ import org.apache.spark.unsafe.types.UTF8String
 // feed and metadata-aggregate scans, the changelog micro-batch
 // stream, and the file/vector readers.
 
-/** Filter pushdown here exists for SKIPPING, not evaluation: pushFilters
-  * returns EVERY filter as residual (Spark re-evaluates the full
-  * condition above the scan), and the skippable subset is used solely to
-  * prune whole files by their manifest-recorded ranges — the parquet
+/** Filter pushdown serves two ends. SKIPPING: the skippable subset
+  * prunes whole files by their manifest-recorded ranges — the parquet
   * row-group / Iceberg data-file skipping contract, where stats are an
-  * optimization and never a correctness dependency.
+  * optimization and never a correctness dependency. EVALUATION: a plain
+  * read (`absorbFilters`, set only by [[CommitSinkTable]]) ABSORBS the
+  * filters [[CommitPredicate]] can evaluate exactly — the reader drops
+  * non-matching rows right after decoding them, and Spark plans no
+  * Filter (and so generates no code embedding the literal) above the
+  * scan. Every other filter, and every filter of a row-level-operation,
+  * change-feed or stream scan, stays residual: Spark re-evaluates it
+  * above the scan.
   *
   * Column pruning (SupportsPushDownRequiredColumns) reaches the reader:
   * the parquet decoder reads ONLY requested columns' chunks, so a 2-column
@@ -35,10 +40,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * pushdown (SupportsPushDownAggregates) goes further — an unfiltered,
   * ungrouped COUNT(*)/MIN/MAX is answered ENTIRELY from the manifest's
   * per-file statistics (one row, zero data files opened): the Iceberg
-  * metadata-only query. Spark only attempts aggregate pushdown when no
-  * Filter remains between the aggregate and the scan, and this builder
-  * keeps every filter residual — so the metadata path is structurally
-  * unreachable under a WHERE clause, never merely "hoped correct". */
+  * metadata-only query. Spark attempts aggregate pushdown whenever no
+  * Filter remains between the aggregate and the scan — which is the
+  * case when every conjunct of a WHERE clause was absorbed — so
+  * [[pushAggregation]] declines whenever any filter was pushed at all:
+  * the manifest's totals know nothing of a predicate. */
 class CommitScanBuilder(path: String, version: Option[Long] = None,
                         /** Set for row-level-operation (UPDATE/MERGE/
                           * DELETE-rewrite) scans: the scan binds to the
@@ -71,7 +77,18 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
                           * output is the change rows themselves. */
                         changeFeed: Boolean = false,
                         startingVersion: Option[Long] = None,
-                        endingVersion: Option[Long] = None)
+                        endingVersion: Option[Long] = None,
+                        /** Evaluate the exact filters in the reader
+                          * ([[CommitPredicate]]) instead of returning
+                          * them to Spark. Set only for plain, version-
+                          * pinned/tag and branch reads: a row-level
+                          * operation's scan must return EVERY row of
+                          * the files it plans (the copy-on-write
+                          * rewrite carries the non-matching ones), and
+                          * the merge-on-read scan's `pinned` looks
+                          * exactly like a version pin — so absorption
+                          * is this explicit flag, never inferred. */
+                        absorbFilters: Boolean = false)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
@@ -98,6 +115,7 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
   private def fullSchema: StructType = root.fold(new StructType())(_.schema)
 
   private var skip: Array[Filter] = Array.empty
+  private var absorbed: Array[Filter] = Array.empty
   private var required: Option[StructType] = None
   private var aggs: Array[AggregateFunc] = Array.empty
 
@@ -110,9 +128,15 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
     // had to decline pruning; LakeSpec's 4-file range-partitioned UPDATE
     // now pins both no-data-loss AND the 1-rewritten/3-carried split).
     if (!changeFeed) skip = filters.filter(CommitSkip.usable)
-    filters
+    // Under CBO the residual Filter is what FilterEstimation prices (o50:
+    // a point predicate at rows/NDV decides a broadcast); the scan's
+    // statistics ignore absorbed filters, so a CBO plan keeps them all.
+    if (absorbFilters && !changeFeed &&
+        !org.apache.spark.sql.internal.SQLConf.get.cboEnabled)
+      absorbed = filters.filter(CommitPredicate.exact(_, fullSchema))
+    filters.filterNot(absorbed.contains)
   }
-  override def pushedFilters(): Array[Filter] = skip
+  override def pushedFilters(): Array[Filter] = (skip ++ absorbed).distinct
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     if (changeFeed) return // the feed's schema is fixed: rows + CDF columns
@@ -161,7 +185,9 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     if (changeFeed) return false
     if (aggregation.groupByExpressions.nonEmpty) return false
-    if (skip.nonEmpty) return false // unreachable (see scaladoc); belt+braces
+    // an absorbed filter leaves no Filter above the scan, so Spark offers
+    // the aggregate under a WHERE clause; the stats cannot apply it
+    if (skip.nonEmpty || absorbed.nonEmpty) return false
     // every surviving file must carry stats, or the totals are unknown
     val m = manifest.getOrElse(return false)
     if (!m.files.forall(m.stats.contains)) return false
@@ -225,7 +251,8 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
       // made against — a second disk read here could bind the scan to a
       // concurrently-swapped snapshot with a different schema
       new CommitScan(path, m,
-        version, skip, required, dmlOp, maxCommitsPerTrigger, snapshotOnRewrite)
+        version, skip, required, dmlOp, maxCommitsPerTrigger, snapshotOnRewrite,
+        absorbed)
     }
 }
 
@@ -366,7 +393,10 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
                  required: Option[StructType] = None,
                  dmlOp: Option[CommitRowLevelOperation] = None,
                  maxCommitsPerTrigger: Int = Int.MaxValue,
-                 snapshotOnRewrite: Boolean = false)
+                 snapshotOnRewrite: Boolean = false,
+                 /** Filters the reader evaluates (see
+                   * [[CommitScanBuilder]]); Spark re-applies none. */
+                 absorbed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -411,7 +441,8 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
   // storage ONLY for files that survived zone pruning AND only when a
   // pushed filter names an indexed column — a scan with no equality
   // predicate (or a table with no index) never opens one. Pruning stays
-  // advisory: every filter is residual, a false positive only costs IO.
+  // advisory: surviving files are still filtered row by row (by Spark or
+  // by the reader), so a false positive only costs IO.
   private val bloomCache =
     scala.collection.mutable.HashMap.empty[String, org.apache.spark.util.sketch.BloomFilter]
   private def bloomLookup(f: String)(c: String, v: Any): Boolean =
@@ -434,7 +465,7 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
   // bucket id: keep only files whose pk == bucket(n, v). Range
   // predicates never project (the hash destroys order) and unknown
   // shapes keep the file — over-approximation only, like every other
-  // skip here (the filter stays residual).
+  // skip here (rows are still filtered after the scan or in it).
   // possibly MULTI-transform (o46): each dimension prunes independently
   private val partSpecs: Seq[CommitSink.PartSpec] =
     manifest.partCol.toSeq.flatMap(CommitSink.PartSpec.parseSpecs)
@@ -636,9 +667,8 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
   private def eqOf(f: String): Seq[EqRef] = manifest.eqRefsFor(f, path)
 
   /** Pruned projection when Spark asked for one: the reader materializes
-    * exactly these fields (its per-line decoder skips keys it was not
-    * asked for, so unrequested columns cost a scan over their chars,
-    * never a parse or an allocation). */
+    * exactly these fields — plus any column an absorbed filter tests —
+    * and unrequested column chunks are never read off disk. */
   override def readSchema(): StructType =
     required.getOrElse(manifest.schema)
   override def toBatch: Batch = this
@@ -843,7 +873,10 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
       stampFile = readSchema().fieldNames.contains(CommitSink.FILE_COL) &&
         !manifest.schema.fieldNames.contains(CommitSink.FILE_COL),
       stampPos = readSchema().fieldNames.contains(CommitSink.POS_COL) &&
-        !manifest.schema.fieldNames.contains(CommitSink.POS_COL))
+        !manifest.schema.fieldNames.contains(CommitSink.POS_COL),
+      filters = absorbed.toSeq,
+      filterCols = StructType(manifest.schema.fields.filter(f =>
+        absorbed.exists(_.references.contains(f.name)))))
 
   /** The table AS A STREAM (o20) — each commit is a micro-batch. */
   override def toMicroBatchStream(checkpointLocation: String)
@@ -852,7 +885,11 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
       "graft-commit: a version-pinned table is a static fact, not a stream")
     // hand the stream the (possibly pruned) projection, not the full
     // manifest DDL: if a future Spark prunes columns on streaming scans,
-    // the readers must emit rows of the PLAN's schema, not full width
+    // the readers must emit rows of the PLAN's schema, not full width.
+    // The stream's readers apply no filter: Spark pushes none into a
+    // micro-batch scan, and one absorbed here would be silently lost.
+    require(absorbed.isEmpty,
+      "graft-commit: a streaming scan cannot carry absorbed filters")
     new CommitTableMicroBatchStream(path, readSchema().toDDL, maxCommitsPerTrigger,
       snapshotOnRewrite = snapshotOnRewrite)
   }
@@ -861,7 +898,9 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
     s"graft-commit scan of $path" +
       version.map(v => s" @v$v").getOrElse("") +
       s" [files: ${surviving.size}/${manifest.files.size}, " +
-      s"columns: ${readSchema().size}/${manifest.schema.size}]"
+      s"columns: ${readSchema().size}/${manifest.schema.size}" +
+      (if (absorbed.isEmpty) "" else s", filters: ${absorbed.mkString(", ")}") +
+      "]"
 }
 
 /** The CHANGELOG micro-batch stream over a committed table (o20) — the
@@ -1255,6 +1294,133 @@ private[sources] object EqMatch {
     }
 }
 
+/** The pushed filters a plain-read scan ABSORBS (see
+  * [[CommitScanBuilder]]): evaluated in [[ParquetFilesReader]] on the
+  * decoded values, right after decoding, so Spark plans no Filter above
+  * the scan — a point lookup's generated code then no longer embeds its
+  * key and is compiled once, not once per key. Exact subset only:
+  * `=`, `<=>`, `<`, `<=`, `>`, `>=`, IN, IS [NOT] NULL and AND of these,
+  * over top-level data columns of integral, boolean, string (binary
+  * collation), date, timestamp or timestamp_ntz type, with a literal of
+  * the column's own family. Literals normalise through [[CommitSkip.num]]
+  * — the file-skipping conversions — to Spark's internal values (days,
+  * micros), the representation [[ParquetPayload.FileRows]] decodes.
+  * SQL null semantics: a NULL value satisfies only IS NULL and
+  * `<=> NULL`, and a NULL inside IN matches nothing. Evaluation is plain
+  * closures built once per partition (the [[EqMatch]] style), never a
+  * code-generated predicate, which would move the per-key compile onto
+  * the executor. */
+private[sources] object CommitPredicate {
+  import org.apache.spark.sql.sources._
+
+  /** A literal in its column's comparison domain: Long for integral,
+    * date and timestamp columns, Boolean, UTF8String; None when the
+    * (column type, literal class) pair is not absorbed. */
+  private def literal(dt: DataType, v: Any): Option[Any] = {
+    def integral = CommitSkip.num(v).collect { case Left(l) => l }
+    (dt, v) match {
+      case (ByteType | ShortType | IntegerType | LongType,
+            _: Long | _: Int | _: Short | _: Byte) => integral
+      case (DateType, _: java.sql.Date | _: java.time.LocalDate) => integral
+      case (TimestampType, _: java.sql.Timestamp | _: java.time.Instant) => integral
+      case (TimestampNTZType, _: java.time.LocalDateTime) => integral
+      case (BooleanType, b: Boolean) => Some(b)
+      case (StringType, s: String) => Some(UTF8String.fromString(s))
+      case _ => None
+    }
+  }
+
+  private def absorbable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         DateType | TimestampType | TimestampNTZType => true
+    case StringType => true // the default (UTF8_BINARY) collation only
+    case _ => false
+  }
+
+  /** Can the reader evaluate `f` exactly over `schema`'s data columns? */
+  def exact(f: Filter, schema: StructType): Boolean = {
+    def col(a: String): Option[DataType] =
+      schema.fields.find(_.name == a).map(_.dataType).filter(absorbable)
+    def lit(a: String, v: Any): Boolean = col(a).exists(literal(_, v).isDefined)
+    f match {
+      case EqualTo(a, v)            => lit(a, v)
+      case EqualNullSafe(a, v)      => if (v == null) col(a).isDefined else lit(a, v)
+      case GreaterThan(a, v)        => lit(a, v)
+      case GreaterThanOrEqual(a, v) => lit(a, v)
+      case LessThan(a, v)           => lit(a, v)
+      case LessThanOrEqual(a, v)    => lit(a, v)
+      case In(a, vs)                => col(a).isDefined && vs.forall(v => v == null || lit(a, v))
+      case IsNull(a)                => col(a).isDefined
+      case IsNotNull(a)             => col(a).isDefined
+      case And(l, r)                => exact(l, schema) && exact(r, schema)
+      case _                        => false
+    }
+  }
+
+  /** The conjunction of `filters` (each [[exact]] over `schema`) as one
+    * test of the CURRENT row of a [[ParquetPayload.FileRows]] whose
+    * wanted schema starts with `schema`'s fields. */
+  def compile(filters: Seq[Filter], schema: StructType)
+      : ParquetPayload.FileRows => Boolean = {
+    type Test = ParquetPayload.FileRows => Boolean
+    /** The column's decoded value, widened into its comparison domain
+      * (null = SQL null). */
+    def value(a: String): ParquetPayload.FileRows => Any = {
+      val i = schema.fieldIndex(a)
+      val widen: Any => Any = schema(i).dataType match {
+        case IntegerType | DateType => v => v.asInstanceOf[Int].toLong
+        case ShortType => v => v.asInstanceOf[Short].toLong
+        case ByteType => v => v.asInstanceOf[Byte].toLong
+        case _ => v => v
+      }
+      fr => {
+        val fi = fr.fieldIndex(i)
+        val v = if (fi >= 0) fr.values(fi) else null
+        if (v == null) null else widen(v)
+      }
+    }
+    def cmp(a: String, v: Any)(ok: Int => Boolean): Test = {
+      val get = value(a)
+      val dt = schema(a).dataType
+      val x = literal(dt, v).get
+      val order: (Any, Any) => Int = dt match {
+        case BooleanType => (l, r) =>
+          java.lang.Boolean.compare(l.asInstanceOf[Boolean], r.asInstanceOf[Boolean])
+        case StringType => (l, r) =>
+          l.asInstanceOf[UTF8String].binaryCompare(r.asInstanceOf[UTF8String])
+        case _ => (l, r) =>
+          java.lang.Long.compare(l.asInstanceOf[Long], r.asInstanceOf[Long])
+      }
+      fr => { val y = get(fr); y != null && ok(order(y, x)) }
+    }
+    def test(f: Filter): Test = f match {
+      case EqualNullSafe(a, null)   => test(IsNull(a))
+      case EqualNullSafe(a, v)      => cmp(a, v)(_ == 0)
+      case EqualTo(a, v)            => cmp(a, v)(_ == 0)
+      case GreaterThan(a, v)        => cmp(a, v)(_ > 0)
+      case GreaterThanOrEqual(a, v) => cmp(a, v)(_ >= 0)
+      case LessThan(a, v)           => cmp(a, v)(_ < 0)
+      case LessThanOrEqual(a, v)    => cmp(a, v)(_ <= 0)
+      case In(a, vs) =>
+        val get = value(a)
+        val dt = schema(a).dataType
+        val set: Set[Any] = vs.filter(_ != null).map(literal(dt, _).get).toSet
+        fr => { val y = get(fr); y != null && set.contains(y) }
+      case IsNull(a)    => val get = value(a); fr => get(fr) == null
+      case IsNotNull(a) => val get = value(a); fr => get(fr) != null
+      case And(l, r)    => val (p, q) = (test(l), test(r)); fr => p(fr) && q(fr)
+      case other => sys.error(s"unreachable: $other is not absorbed")
+    }
+    val tests = filters.map(test).toArray
+    if (tests.isEmpty) _ => true
+    else fr => {
+      var i = 0
+      while (i < tests.length && tests(i)(fr)) i += 1
+      i == tests.length
+    }
+  }
+}
+
 /** `dvs` (o27): per-file deletion-vector ABSOLUTE path, parallel to
   * `files` ("" = no vector) — the reader skips the vector's positions.
   * `eqs` (o32): per-file APPLICABLE equality deletes, parallel to
@@ -1406,14 +1572,18 @@ case class CommitKeyedFilesPartition(files: Seq[String], key: Any,
 
 /** Ships the read schema itself (a fully-pruned projection — COUNT(*)
   * above a declined aggregate push — is an empty StructType), so no
-  * reader re-parses it. */
+  * reader re-parses it, and the scan's absorbed filters with the data
+  * columns they test (`filterCols`, names and types). */
 class CommitReaderFactory(schema: StructType, stampFile: Boolean = false,
-                          stampPos: Boolean = false)
+                          stampPos: Boolean = false,
+                          filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
+                          filterCols: StructType = new StructType())
     extends PartitionReaderFactory {
   private def reader(fs: Seq[String], dvs: Seq[String],
                      eqs: Seq[Seq[EqRef]],
                      renames: Seq[Seq[(String, String)]]): PartitionReader[InternalRow] =
-    new ParquetFilesReader(fs, schema, stampFile, stampPos, dvs, eqs, renames)
+    new ParquetFilesReader(fs, schema, stampFile, stampPos, dvs, eqs, renames,
+      filters, filterCols)
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case CommitFilesPartition(fs, dvs, eqs, rn)         => reader(fs, dvs, eqs, rn)
@@ -1428,7 +1598,9 @@ class CommitReaderFactory(schema: StructType, stampFile: Boolean = false,
   * requested columns' pages are read ([[ParquetPayload.FileRows]]),
   * and a fully-pruned projection (COUNT-shaped plans) reads NO pages at
   * all — row counts come straight from the footer. `_file`/`_pos`
-  * metadata columns are stamped per row. */
+  * metadata columns are stamped per row. Absorbed filters
+  * ([[CommitPredicate]]) drop rows after decoding, before the
+  * UnsafeProjection copy; a dropped row still advances `_pos`. */
 class ParquetFilesReader(files: Seq[String], schema: StructType,
                          stampFile: Boolean = false,
                          stampPos: Boolean = false,
@@ -1450,7 +1622,13 @@ class ParquetFilesReader(files: Seq[String], schema: StructType,
                            * Eq-delete key columns never rename (ALTER
                            * refuses live keys), so only the data
                            * projection remaps. */
-                         renames: Seq[Seq[(String, String)]] = Seq.empty)
+                         renames: Seq[Seq[(String, String)]] = Seq.empty,
+                         /** Absorbed filters — only rows satisfying all
+                           * of them are emitted. */
+                         filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
+                         /** The data columns `filters` test: decoded
+                           * even when the projection dropped them. */
+                         filterCols: StructType = new StructType())
     extends PartitionReader[InternalRow] {
   private val queue = files.zipWithIndex.iterator
   private val fileIdx: Int =
@@ -1467,6 +1645,13 @@ class ParquetFilesReader(files: Seq[String], schema: StructType,
   // consumers assume the binary row format
   private val toUnsafe =
     org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+  /** Filter columns the projection dropped: decoded right after
+    * dataSchema in every file, so the predicate's indices hold for the
+    * whole partition. */
+  private val filterExtra: Array[StructField] =
+    filterCols.fields.filterNot(f => dataSchema.fieldNames.contains(f.name))
+  private val keep: ParquetPayload.FileRows => Boolean =
+    CommitPredicate.compile(filters, StructType(dataSchema.fields ++ filterExtra))
   private var cur: ParquetPayload.FileRows = _
   private var curFile: UTF8String = _
   private var countOnly = 0L
@@ -1493,13 +1678,14 @@ class ParquetFilesReader(files: Seq[String], schema: StructType,
       val (name, idx) = queue.next()
       val f = Paths.get(name)
       curFile = UTF8String.fromString(f.getFileName.toString)
-      // widen the decode to cover key columns the projection dropped:
-      // fields appended AFTER dataSchema, so output-field decode indices
-      // are unchanged. A key column absent from the FILE (added by a
-      // later ALTER) decodes null → never matches.
+      // widen the decode to cover filter and key columns the projection
+      // dropped: fields appended AFTER dataSchema, so output-field decode
+      // indices are unchanged. A key column absent from the FILE (added
+      // by a later ALTER) decodes null → never matches.
       val refs = eqs.lift(idx).getOrElse(Seq.empty)
-      val extra = refs.flatMap(_.cols.fields)
-        .filterNot(kf => dataSchema.fieldNames.contains(kf.name))
+      val decoded = dataSchema.fieldNames ++ filterExtra.map(_.name)
+      val extra = filterExtra.toSeq ++ refs.flatMap(_.cols.fields)
+        .filterNot(kf => decoded.contains(kf.name))
         .groupBy(_.name).map(_._2.head).toSeq
       // o48: ask THIS file for its own (pre-rename) names — a pure
       // rename of the requested fields, so positions (and the emitted
@@ -1530,12 +1716,13 @@ class ParquetFilesReader(files: Seq[String], schema: StructType,
       // zero decoded columns (pure COUNT / metadata-only projection):
       // emit footer-counted rows without touching any page — skipping
       // the deletion vector's positions by count alone. Reachable with
-      // eq matchers only when every key column predates the file (all
-      // keys null → nothing matches), so counting stays sound.
+      // eq matchers or filters only when every key / filter column
+      // predates the file: all keys null → nothing matches, and the
+      // filters see an all-null row, so counting stays sound.
       if (countOnly > 0) {
         countOnly -= 1
         val p = pos; pos += 1
-        if (deleted(p)) advance()
+        if (deleted(p) || !keep(cur)) advance()
         else { row = emit(null, p); true }
       }
       else { cur.close(); cur = null; advance() }
@@ -1543,7 +1730,7 @@ class ParquetFilesReader(files: Seq[String], schema: StructType,
       if (!cur.next()) { cur.close(); cur = null; advance() }
       else {
         val p = pos; pos += 1
-        if (deleted(p) || EqMatch.deleted(eqMatchers, cur)) advance()
+        if (deleted(p) || !keep(cur) || EqMatch.deleted(eqMatchers, cur)) advance()
         else { row = emit(cur.values, p); true }
       }
     }

@@ -3099,9 +3099,10 @@ object CommitSink {
 /** File-skipping predicate evaluation over the manifest's per-file column
   * ranges (o14) — the zone-map device: a file whose recorded [min, max]
   * provably cannot satisfy the scan's pushed conjunction is never opened.
-  * Pruning is ADVISORY ONLY: [[CommitScanBuilder.pushFilters]] returns
-  * every filter as residual, so Spark re-evaluates the full condition
-  * above the scan and a missed prune can only cost IO, never a wrong row.
+  * Pruning is ADVISORY ONLY: a file that survives is still read row by
+  * row — by Spark above the scan for a residual filter, by the reader for
+  * an absorbed one ([[CommitPredicate]]) — so a missed prune can only
+  * cost IO, never a wrong row.
   * Conservatism rules: a column with no recorded range never prunes; a
   * filter value whose numeric family differs from the recorded kind never
   * prunes (comparing longs as doubles rounds above 2^53 — at corpus scale
@@ -3116,8 +3117,10 @@ private[graft] object CommitSkip {
     * Date/timestamp values translate to the writer's recorded
     * representation (days / micros — the InternalRow encoding the
     * parquet payload stores), so time-range predicates prune files: the
-    * first filter every time-partitioned 100 TB scan pushes. */
-  private def num(v: Any): Option[Either[Long, Double]] = v match {
+    * first filter every time-partitioned 100 TB scan pushes. The
+    * plain-read scan's absorbed predicates normalise their literals
+    * here too ([[CommitPredicate]]). */
+  private[sources] def num(v: Any): Option[Either[Long, Double]] = v match {
     case l: Long   => Some(Left(l))
     case i: Int    => Some(Left(i.toLong))
     case s: Short  => Some(Left(s.toLong))

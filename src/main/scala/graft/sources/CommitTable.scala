@@ -299,6 +299,9 @@ class CommitSinkTable(path: String,
       }
     new CommitScanBuilder(path, version.orElse(branchVersion),
       pinned = pinnedRoot,
+      // plain, version/tag and branch reads evaluate exact filters in the
+      // reader; DML scans are built by the row-level operations instead
+      absorbFilters = true,
       maxCommitsPerTrigger =
         Option(options.get("maxCommitsPerTrigger")).map { v =>
           val n = try v.trim.toInt catch {

@@ -30,7 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * writers through a custom [[InternalRowWriteSupport]] — no per-row
   * example-Group allocation or primitive boxing (the Group path this
   * replaced built an Object[] per field and traversed every row twice).
-  * DECODE stays on the public example-Group record assembly (one file
+  * DECODE (r20, [[FileRows]]) assembles each row's values straight into
+  * one reused array in their Spark-internal representation (one file
   * group per input partition at the sink's task boundary), while every
   * DRIVER-side read path (`readCommitted`, compact, DML re-reads) goes
   * through `spark.read.parquet` and gets Spark's native vectorized

@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *  - '''o14 zone-map file skipping''': per-file numeric ranges recorded
   *    during the write prune whole files at planning; pruning is
-  *    advisory (all filters stay residual) so a wrong prune can only be
-  *    caught, never silently produce rows.
+  *    advisory (surviving files are still filtered row by row — by the
+  *    reader for the predicates a plain read absorbs, by Spark above the
+  *    scan for the rest) so a wrong prune can only be caught, never
+  *    silently produce rows.
   *  - '''o15 statistics reporting''': exact manifest row/byte totals
   *    flow into the optimizer — a small committed table auto-broadcasts
   *    where the V2 default ("assume infinite") would shuffle.
@@ -111,7 +113,8 @@ class LakeSpec extends AnyFunSuite {
     val read = spark.read.format("graft-commit").option("path", dir).load()
     // the surviving file contains ids 0..49; the predicate must still
     // filter WITHIN it (a scan that trusted pruning as exact would
-    // return all 50 rows of the file)
+    // return all 50 rows of the file). This plain read absorbs both
+    // conjuncts, so the reader applies them row by row
     assert(read.filter($"id" >= 10L && $"id" < 20L).count() == 10L)
   }
 
@@ -378,6 +381,137 @@ class LakeSpec extends AnyFunSuite {
     val dmax = read.agg(max($"score"))
     assert(!dmax.queryExecution.executedPlan.toString.contains("META-ONLY"))
     assert(dmax.head().getDouble(0) == 99.9)
+  }
+
+  // --- absorbed predicates: the reader evaluates the exact subset ----------
+
+  /** Every absorbable column type, with a NULL in each column on every
+    * tenth row, written as 3 range files. */
+  private def typedFixture(dir: String): Unit =
+    spark.range(300L).selectExpr(
+      "id",
+      "IF(id % 10 = 0, NULL, CAST(id % 50 AS INT)) AS i",
+      "IF(id % 10 = 0, NULL, CAST(id % 40 AS SMALLINT)) AS s",
+      "IF(id % 10 = 0, NULL, CAST(id % 30 AS TINYINT)) AS b",
+      "IF(id % 10 = 0, NULL, id % 3 = 0) AS flag",
+      "IF(id % 10 = 0, NULL, concat('v-', id % 20)) AS str",
+      "IF(id % 10 = 0, NULL, date_add(DATE'2024-01-01', CAST(id % 25 AS INT))) AS d",
+      "IF(id % 10 = 0, NULL, TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id % 35)) AS ts",
+      "IF(id % 10 = 0, NULL, CAST(TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id % 15) AS TIMESTAMP_NTZ)) AS ntz",
+      "CAST(id % 9 AS DOUBLE) / 2 AS score")
+      .repartitionByRange(3, $"id")
+      .write.format("graft-commit").option("path", dir).mode("overwrite").save()
+
+  private def absorbedFilters(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan
+    plan.collect { case f: org.apache.spark.sql.execution.FilterExec => f }.isEmpty &&
+      scanOf(df).scan.description().contains("filters: ")
+  }
+
+  test("absorb: each supported type filters in the reader exactly as Spark does over the files") {
+    val dir = freshDir("absorb_types")
+    typedFixture(dir)
+    val read = spark.read.format("graft-commit").option("path", dir).load()
+    val ref = sources.CommitSink.readCommitted(spark, dir)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val absorbed = Seq(
+      "id = 7", "id <=> 7", "id < 5", "id <= 5", "id > 295", "id >= 295",
+      "id IN (1, 2, 299)", "i = 3", "i IN (1, NULL)", "i <=> NULL", "i IS NULL",
+      "i IS NOT NULL AND i > 45", "s >= 38", "b < 2", "flag = true",
+      "flag <=> NULL", "str = 'v-7'", "str > 'v-8'", "str IN ('v-1', NULL)",
+      "d >= DATE'2024-01-23'", "ts < TIMESTAMP'2024-01-01 00:00:02'",
+      "ntz = TIMESTAMP_NTZ'2024-01-01 00:00:05'", "id < 100 AND str <= 'v-11'")
+    absorbed.foreach { p =>
+      val got = read.where(p)
+      withClue(s"$p:\n${got.queryExecution.executedPlan}") {
+        assert(absorbedFilters(got), "the predicate must be absorbed")
+        assert(rows(got) == rows(ref.where(p)))
+      }
+    }
+    // a filter column outside the SELECT list is still decoded and tested
+    val narrow = read.where("i = 3 AND str IS NOT NULL").select($"score")
+    assert(absorbedFilters(narrow))
+    assert(rows(narrow) == rows(ref.where("i = 3 AND str IS NOT NULL").select($"score")))
+    // doubles, OR and functions stay with Spark, same answer
+    Seq("score > 2.0", "id = 1 OR id = 2", "length(str) = 3").foreach { p =>
+      val got = read.where(p)
+      withClue(p) {
+        assert(!absorbedFilters(got))
+        assert(rows(got) == rows(ref.where(p)))
+      }
+    }
+  }
+
+  test("absorb: COUNT(*) under an absorbed WHERE counts real rows, never META-ONLY") {
+    val dir = freshDir("absorb_count")
+    typedFixture(dir)
+    val read = spark.read.format("graft-commit").option("path", dir).load()
+    val ref = sources.CommitSink.readCommitted(spark, dir)
+    Seq("i = 3", "str IS NULL", "id >= 120 AND id < 130").foreach { p =>
+      val n = read.where(p).agg(count(lit(1)))
+      val plan = n.queryExecution.executedPlan.toString
+      withClue(s"$p:\n$plan") {
+        assert(!plan.contains("META-ONLY"))
+        assert(!plan.contains("Filter "))
+        assert(n.head().getLong(0) == ref.where(p).count())
+      }
+    }
+  }
+
+  test("absorb: _pos under a filter equals the unfiltered positions") {
+    val dir = freshDir("absorb_pos")
+    typedFixture(dir)
+    val read = spark.read.format("graft-commit").option("path", dir).load()
+    val meta = read.select($"_file", $"_pos", $"id")
+    val filtered = meta.where($"id" >= 150L && $"id" < 160L)
+    assert(absorbedFilters(filtered))
+    val all = meta.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(filtered.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet ==
+      all.filter(t => t._3 >= 150L && t._3 < 160L).toSet)
+    assert(all.exists(t => t._3 >= 150L && t._3 < 160L && t._2 > 0L),
+      "the lookup's rows sit past position 0 of their file")
+  }
+
+  test("absorb: copy-on-write and merge-on-read DML keep every non-matching row") {
+    // DML scans never absorb: the copy-on-write rewrite carries each
+    // scanned file's non-matching rows, and the merge-on-read scan is
+    // pinned like a version read — both must see every row
+    val root = freshDir("absorb_dml")
+    spark.conf.set("spark.sql.catalog.graft_lake_ab", "graft.sources.CommitCatalog")
+    spark.conf.set("spark.sql.catalog.graft_lake_ab.root", root)
+    val base = fixture(1000).select($"id", $"score", $"tag")
+    Seq("cow", "mor").foreach { t =>
+      base.repartitionByRange(4, $"id") // 4 files with DISJOINT id ranges
+        .write.format("graft-commit").option("path", s"$root/default/$t")
+        .mode("overwrite").save()
+    }
+    spark.range(500L, 510L).union(spark.range(2000L, 2003L))
+      .select($"id", lit(-1.0).as("score")).createOrReplaceTempView("ab_src")
+    def dml(t: String): Unit = {
+      spark.sql(s"UPDATE graft_lake_ab.`default`.$t SET score = score + 1000.0 " +
+        "WHERE id >= 250 AND id < 260")
+      spark.sql(s"DELETE FROM graft_lake_ab.`default`.$t WHERE id < 300 AND id % 7 = 0")
+      spark.sql(s"""MERGE INTO graft_lake_ab.`default`.$t t USING ab_src s ON t.id = s.id
+                   WHEN MATCHED THEN UPDATE SET score = s.score
+                   WHEN NOT MATCHED THEN INSERT (id, score, tag) VALUES (s.id, s.score, 'new')""")
+    }
+    dml("cow")
+    spark.conf.set("spark.graft.commit.rowLevelMode", "merge-on-read")
+    try dml("mor") finally spark.conf.unset("spark.graft.commit.rowLevelMode")
+    val mor = sources.CommitSink.parseManifest(java.nio.file.Paths.get(s"$root/default/mor")).get
+    assert(mor.deletes.nonEmpty, "the merge-on-read table took deletion vectors")
+    val expected = base
+      .where(!($"id" < 300L && $"id" % 7 === 0L))
+      .select($"id",
+        when($"id" >= 500L && $"id" < 510L, lit(-1.0))
+          .when($"id" >= 250L && $"id" < 260L, $"score" + 1000.0)
+          .otherwise($"score").as("score"), $"tag")
+      .union(spark.range(2000L, 2003L).select($"id", lit(-1.0).as("score"), lit("new").as("tag")))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val want = rows(expected)
+    assert(want.size == 1000 - 43 + 3)
+    assert(rows(sources.CommitSink.readCommitted(spark, s"$root/default/cow")) == want)
+    assert(rows(spark.read.format("graft-commit").option("path", s"$root/default/mor").load()) == want)
   }
 
   // --- o19: compaction + snapshot expiry ------------------------------------

@@ -113,7 +113,7 @@ class Round13Spec extends AnyFunSuite {
     // both read paths decode identical rows (NaN-safe comparison via <=>)
     for (back <- Seq(
         sources.CommitSink.readCommitted(spark, dir),            // native vectorized
-        spark.read.format("graft-commit").option("path", dir).load())) { // DSv2 Group reader
+        spark.read.format("graft-commit").option("path", dir).load())) { // DSv2 FileRows reader
       assert(back.count() == 3)
       val joined = back.as("a").join(in.as("b"), $"a.id" === $"b.id")
       in.columns.filter(_ != "id").foreach { c =>
