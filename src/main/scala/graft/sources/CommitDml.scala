@@ -43,18 +43,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`OptimizeMetadataOnlyDeleteFromTable` converts the rewritten plan
   * back to [[CommitSinkTable.deleteWhere]], itself group-granular).
   *
-  * The scan and write BOTH bind to [[planning]], the manifest read once
-  * when Spark builds the operation — the snapshot-isolation pin.
+  * The scan and write BOTH bind to [[planning]] — the table instance's
+  * one manifest, with every group resolved — the snapshot-isolation pin.
   * Streaming-epoch ledger: a group rewrite CARRIES the ledger (unlike
   * TRUNCATE, which resets it) — the table's content lineage is
   * continuous, so a re-delivered micro-batch commit must still be
   * recognized and dropped. */
-class CommitRowLevelOperation(path: String, cmd: RowLevelOperation.Command)
+class CommitRowLevelOperation(path: String, cmd: RowLevelOperation.Command,
+                              /** The snapshot this operation reads AND
+                                * replaces against. */
+                              private[sources] val planning: CommitSink.Manifest)
     extends RowLevelOperation {
-  /** The snapshot this operation reads AND replaces against. */
-  private[sources] val planning: CommitSink.Manifest =
-    CommitSink.parseManifest(Paths.get(path)).getOrElse(
-      sys.error(s"graft-commit: no committed manifest at $path"))
   /** Files the operation's scan actually planned (set by
     * [[CommitScan.planInputPartitions]], which always runs before the
     * write's commit). Never set ⇒ the optimizer proved the scan empty
@@ -157,7 +156,7 @@ class CommitRowLevelOperation(path: String, cmd: RowLevelOperation.Command)
       Array(org.apache.spark.sql.connector.expressions.Expressions
         .column(CommitSink.FILE_COL))
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CommitScanBuilder(path, dmlOp = Some(this))
+    new CommitScanBuilder(path, Some(planning), dmlOp = Some(this))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new CommitWriteBuilder(path, info,
       rewrite = Some(CommitSink.DmlRewrite(planning,
@@ -194,17 +193,14 @@ class CommitRowLevelOperation(path: String, cmd: RowLevelOperation.Command)
   * one-key-per-file layout) — copy-on-write stays the default and
   * the fallback, matching Iceberg's write.update.mode/write.merge.mode
   * table properties (a cost knob, never a semantics change). */
-class CommitDeltaRowLevelOperation(path: String, cmd: RowLevelOperation.Command)
+class CommitDeltaRowLevelOperation(path: String, cmd: RowLevelOperation.Command,
+                                   planning: CommitSink.Manifest)
     extends RowLevelOperation with SupportsDelta {
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 
-  private[sources] val planning: CommitSink.Manifest =
-    CommitSink.parseManifest(Paths.get(path)).getOrElse(
-      sys.error(s"graft-commit: no committed manifest at $path"))
-
   override def command(): RowLevelOperation.Command = cmd
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CommitScanBuilder(path, pinned = Some(planning))
+    new CommitScanBuilder(path, Some(planning))
   override def rowId(): Array[NamedReference] =
     Array(Expressions.column(CommitSink.FILE_COL),
       Expressions.column(CommitSink.POS_COL))

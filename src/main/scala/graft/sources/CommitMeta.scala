@@ -64,8 +64,7 @@ private[graft] object CommitMeta {
   def rowsOf(path: String, kind: String, version: Option[Long]): Array[Array[Any]] = {
     val dir = Paths.get(path)
     def resolved: Option[CommitSink.Manifest] =
-      version.map(v => Some(CommitSink.parseManifestVersion(dir, v)))
-        .getOrElse(CommitSink.parseManifest(dir))
+      CommitSink.loadRoot(dir, version).map(CommitSink.resolveGroups(dir, _))
     kind match {
       case "files" =>
         resolved.map { m =>

@@ -45,26 +45,32 @@ import org.apache.spark.unsafe.types.UTF8String
   * case when every conjunct of a WHERE clause was absorbed — so
   * [[pushAggregation]] declines whenever any filter was pushed at all:
   * the manifest's totals know nothing of a predicate. */
-class CommitScanBuilder(path: String, version: Option[Long] = None,
-                        /** Set for row-level-operation (UPDATE/MERGE/
-                          * DELETE-rewrite) scans: the scan binds to the
-                          * operation's PLANNING manifest and reports the
-                          * file set it planned back to the operation —
-                          * the group-granular replace contract. Zone-map
-                          * pruning of the pushed DML condition is safe
-                          * here: a pruned file is carried forward by the
-                          * rewrite commit, never deleted. */
+class CommitScanBuilder(path: String,
+                        /** The manifest this builder's decisions and its
+                          * scan bind to — ONE snapshot, never re-read:
+                          * the table instance's root (header + group
+                          * refs; per-file entries are loaded only when
+                          * the build needs them), or a row-level
+                          * operation's fully-resolved planning manifest.
+                          * None = never written. */
+                        root: Option[CommitSink.Manifest],
+                        /** The pinned version (o17) or branch head (o44)
+                          * `root` came from; None for a live read. Only
+                          * labels the scan and refuses to stream it. */
+                        version: Option[Long] = None,
+                        /** Set for copy-on-write row-level-operation
+                          * (UPDATE/MERGE/DELETE-rewrite) scans: `root` is
+                          * the operation's PLANNING manifest and the scan
+                          * reports the file set it planned back to the
+                          * operation — the group-granular replace
+                          * contract. Zone-map pruning of the pushed DML
+                          * condition is safe here: a pruned file is
+                          * carried forward by the rewrite commit, never
+                          * deleted. */
                         dmlOp: Option[CommitRowLevelOperation] = None,
                         /** Streaming-read admission knob (o20): how many
                           * COMMITS one micro-batch may consume. */
                         maxCommitsPerTrigger: Int = Int.MaxValue,
-                        /** Pin the scan to THIS manifest: a version-
-                          * pinned table's root (already read for its
-                          * schema), or the delta row-level operation's
-                          * planning snapshot — like dmlOp's pin, but
-                          * with no scanned-files reporting: a delta
-                          * commit replaces no files. */
-                        pinned: Option[CommitSink.Manifest] = None,
                         /** Opt-in changelog SELF-SERVICE RECOVERY: when a
                           * rewrite or generation change fires the
                           * append-only check, re-bootstrap from the
@@ -85,9 +91,10 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
                           * operation's scan must return EVERY row of
                           * the files it plans (the copy-on-write
                           * rewrite carries the non-matching ones), and
-                          * the merge-on-read scan's `pinned` looks
-                          * exactly like a version pin — so absorption
-                          * is this explicit flag, never inferred. */
+                          * the merge-on-read scan's planning `root`
+                          * looks exactly like a plain read's — so
+                          * absorption is this explicit flag, never
+                          * inferred. */
                         absorbFilters: Boolean = false)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
@@ -97,16 +104,6 @@ class CommitScanBuilder(path: String, version: Option[Long] = None,
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
 
-  /** ROOT view (r16): header + group refs, no per-file entries loaded —
-    * what every pre-build decision (schema, pushdown eligibility) needs.
-    * On a single-level table this IS the full manifest; DML scans
-    * arrive already resolved. The read happens once, here: the builder's
-    * decisions and the scan must bind to ONE snapshot. */
-  private val root =
-    dmlOp.map(_.planning).orElse(pinned).orElse(version match {
-      case Some(v) => Some(CommitSink.parseManifestVersionRoot(Paths.get(path), v))
-      case None => CommitSink.parseManifestRoot(Paths.get(path))
-    })
   /** The fully-resolved manifest — forced only by paths that genuinely
     * need every per-file entry (metadata aggregation, unfiltered scans,
     * the change feed). */
@@ -286,16 +283,16 @@ class CommitChangesScan(path: String, manifest: CommitSink.Manifest,
   override def planInputPartitions(): Array[InputPartition] =
     CommitSink.changePartitions(dir, path,
       startingVersion.map(_ - 1).getOrElse(-1L),
-      endingVersion.getOrElse(manifest.commit), manifest.ddl,
+      endingVersion.getOrElse(manifest.commit),
       // r19: the feed decodes with THIS manifest's names — its ledger
       // carries renames newer than a bounded range's endingVersion
-      bindingCommit = manifest.commit, bindingLog = manifest.schemaLog)
+      binding = manifest)
   override def createReaderFactory(): PartitionReaderFactory =
     new CommitChangesReaderFactory(readSchema())
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new CommitTableMicroBatchStream(path, manifest.ddl, maxCommitsPerTrigger,
-      snapshotOnRewrite = snapshotOnRewrite, changeFeed = true,
+    new CommitTableMicroBatchStream(path, manifest, manifest.schema,
+      maxCommitsPerTrigger, snapshotOnRewrite = snapshotOnRewrite, changeFeed = true,
       // startingVersion is INCLUSIVE: the first batch begins there
       startAfter = startingVersion.map(_ - 1).getOrElse(-1L))
   override def description(): String =
@@ -884,13 +881,13 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
     require(version.isEmpty,
       "graft-commit: a version-pinned table is a static fact, not a stream")
     // hand the stream the (possibly pruned) projection, not the full
-    // manifest DDL: if a future Spark prunes columns on streaming scans,
-    // the readers must emit rows of the PLAN's schema, not full width.
-    // The stream's readers apply no filter: Spark pushes none into a
-    // micro-batch scan, and one absorbed here would be silently lost.
+    // manifest schema: if a future Spark prunes columns on streaming
+    // scans, the readers must emit rows of the PLAN's schema, not full
+    // width. The stream's readers apply no filter: Spark pushes none into
+    // a micro-batch scan, and one absorbed here would be silently lost.
     require(absorbed.isEmpty,
       "graft-commit: a streaming scan cannot carry absorbed filters")
-    new CommitTableMicroBatchStream(path, readSchema().toDDL, maxCommitsPerTrigger,
+    new CommitTableMicroBatchStream(path, manifest, readSchema(), maxCommitsPerTrigger,
       snapshotOnRewrite = snapshotOnRewrite)
   }
 
@@ -922,7 +919,17 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
   * must still have its version manifest — retain at least as many
   * versions as the slowest consumer lags, the same operational rule
   * Delta documents for its checkpoint retention. */
-class CommitTableMicroBatchStream(path: String, ddl: String,
+class CommitTableMicroBatchStream(path: String,
+                                  /** The manifest the creating scan bound
+                                    * to: its generation id and (r19) its
+                                    * schema ledger bind the stream, and
+                                    * `schema` came from it. Root fields
+                                    * only — its file list is never read. */
+                                  binding: CommitSink.Manifest,
+                                  /** The rows each batch emits (data
+                                    * columns; a change-feed stream adds
+                                    * its two feed columns itself). */
+                                  schema: StructType,
                                   maxCommitsPerTrigger: Int,
                                   /** Opt-in SELF-SERVICE RECOVERY
                                     * (`option("snapshotOnRewrite", true)`) —
@@ -967,7 +974,6 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
   private val dir = Paths.get(path)
-  private lazy val schema = StructType.fromDDL(ddl) // once, for every batch
 
   /** This stream's table GENERATION. An offset restored from a
     * checkpoint that names a different generation means the table was
@@ -975,14 +981,7 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
     * the NEW generation's manifests against the old offset would skip
     * (lose) every new-generation commit up to it, so the mismatch is a
     * hard error (Delta's reservoir-id check). */
-  // ONE construction-time manifest read serves the generation id AND
-  // (r19) the CDF binding ledger — the stream's bound `ddl` came from
-  // this same snapshot, so its schema ledger is what maps a bounded
-  // batch's pre-rename files back to their physical names
-  private val bindingManifest: Option[CommitSink.Manifest] =
-    CommitSink.parseManifest(dir)
-  private val generation: String =
-    bindingManifest.map(_.tableId).getOrElse("")
+  private val generation: String = binding.tableId
 
   /** Commit id already consumed (-1 = genesis) + the generation that
     * assigned it. */
@@ -1020,7 +1019,7 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
     CommitSink.listVersions(dir).filter(v => v > from && v <= current)
 
   private def manifestAt(commit: Long): CommitSink.Manifest =
-    if (commit < 0) CommitSink.Manifest(-1L, ddl, Seq.empty, Seq.empty)
+    if (commit < 0) CommitSink.Manifest(-1L, binding.ddl, Seq.empty, Seq.empty)
     else CommitSink.parseManifestVersion(dir, commit)
 
   private def filesAt(commit: Long): Seq[String] = manifestAt(commit).files
@@ -1126,7 +1125,7 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
         // the snapshot's live rows = files minus vectors minus equality
         // deletes — ship the applicable key files per partition so the
         // re-bootstrap never re-inserts a replaced row
-        // r19 (ADVICE): the reader decodes with the STREAM-BOUND ddl —
+        // r19 (ADVICE): the reader decodes with the STREAM-BOUND schema —
         // a table with an un-retired RENAME needs each pre-rename file's
         // current→physical map here too, exactly like the incremental
         // changePartitions and the non-CDF part() helper; without it the
@@ -1144,9 +1143,9 @@ class CommitTableMicroBatchStream(path: String, ddl: String,
       }
       if (snapshotOnRewrite && !genMatches(sp)) return bootstrap
       checkGeneration(sp)
-      try return CommitSink.changePartitions(dir, path, sp.commit, endCommit, ddl,
-        bindingCommit = bindingManifest.map(_.commit).getOrElse(-1L),
-        bindingLog = bindingManifest.map(_.schemaLog).getOrElse(Seq.empty))
+      // the binding's schema ledger maps a bounded batch's pre-rename
+      // files back to their physical names
+      try return CommitSink.changePartitions(dir, path, sp.commit, endCommit, binding)
       catch { case e: IllegalArgumentException =>
         // a rewrite or expired version inside the range: refuse
         // (default) or re-bootstrap under the flag, like the changelog

@@ -674,13 +674,11 @@ object CommitSink {
     * net change is inexpressible) from a full-vector file drop. */
   private[graft] def changePartitions(dir: Path, path: String,
                                       fromExclusive: Long, to: Long,
-                                      ddl: String,
-                                      /** The BINDING manifest's commit +
-                                        * schema ledger (the manifest whose
-                                        * ddl the feed decodes with) — see
+                                      /** The BINDING manifest: the feed
+                                        * decodes with its data schema, and
+                                        * its commit + schema ledger feed
                                         * the ledger note below. */
-                                      bindingCommit: Long = -1L,
-                                      bindingLog: Seq[SchemaEvt] = Seq.empty)
+                                      binding: Manifest)
       : Array[InputPartition] = {
     if (to <= fromExclusive) return Array.empty
     val first = if (fromExclusive < 0) 0L else fromExclusive
@@ -701,7 +699,7 @@ object CommitSink {
     // and the rename ledger below needs the whole range up front)
     val manifests: Map[Long, Manifest] =
       ((fromExclusive max -1L) to to).map { v =>
-        v -> (if (v < 0) Manifest(-1L, ddl, Seq.empty, Seq.empty)
+        v -> (if (v < 0) Manifest(-1L, binding.ddl, Seq.empty, Seq.empty)
               else parseManifestVersion(dir, v))
       }.toMap
     def at(v: Long): Manifest = manifests(v max -1L)
@@ -726,10 +724,10 @@ object CommitSink {
     // binding never apply (the binding ddl predates them, so their
     // newName keys cannot match — and must not: a post-binding name
     // reuse would mis-map the binding's own column).
-    if (bindingCommit > to) {
+    if (binding.commit > to) {
       val staged = listStaged(dir)
       listVersions(dir)
-        .filter(v => v > to && v < bindingCommit && v < BRANCH_BASE &&
+        .filter(v => v > to && v < binding.commit && v < BRANCH_BASE &&
           !staged.contains(v))
         .foreach { v =>
           // best-effort: an intermediate version expiring mid-plan is
@@ -738,10 +736,10 @@ object CommitSink {
           catch { case _: IllegalArgumentException => () }
         }
     }
-    ledger ++= bindingLog
-    // the binding DATA schema's column names (the `ddl` param is the
-    // data ddl — the reader appends the two feed columns itself)
-    val dataCols = StructType.fromDDL(ddl).fieldNames.toSeq
+    ledger ++= binding.schemaLog
+    // the binding DATA schema's column names (the reader appends the two
+    // feed columns itself)
+    val dataCols = binding.schema.fieldNames.toSeq
     def rnOf(m: Manifest, f: String): Seq[(String, String)] =
       if (ledger.isEmpty) Nil
       else physNamesFor(ledger.toSeq, m.seqOf(f), dataCols).toSeq
@@ -2614,31 +2612,26 @@ object CommitSink {
       fileSeq = fileSeq.result(), blooms = blooms.toMap)
   }
 
-  /** Root-only parse: for a two-level manifest, header fields + group
-    * refs without loading one per-file entry (the planner's entry
-    * point); identical to [[parseManifest]] on single-level tables. */
-  private[graft] def parseManifestRoot(dir: Path): Option[Manifest] = {
-    val mf = dir.resolve(MANIFEST)
-    if (!CommitSink.io.exists(mf)) None
-    else Some(parseManifestText(CommitSink.io.readString(mf), mf.toString))
+  /** The ROOT manifest (header fields + group refs; a two-level table's
+    * per-file entries stay unloaded — [[resolveGroups]] loads them) of
+    * `version`'s immutable `_MANIFEST-v<n>.json`, or of the live
+    * `_MANIFEST.json` when None. One read. A version that never
+    * committed fails loudly; a never-written live target is None. */
+  private[graft] def loadRoot(dir: Path, version: Option[Long] = None): Option[Manifest] = {
+    val mf = dir.resolve(version.fold(MANIFEST)(versionFile))
+    val present = io.exists(mf)
+    require(present || version.isEmpty,
+      s"graft-commit: no version ${version.get} at $dir (have: " +
+        listVersions(dir).mkString(", ") + ")")
+    if (present) Some(parseManifestText(io.readString(mf), mf.toString)) else None
   }
 
   private[graft] def parseManifest(dir: Path): Option[Manifest] =
-    parseManifestRoot(dir).map(resolveGroups(dir, _))
-
-  /** [[parseManifestRoot]] of a PAST version's immutable manifest. Fails
-    * loudly on a version that never committed. */
-  private[graft] def parseManifestVersionRoot(dir: Path, version: Long): Manifest = {
-    val mf = dir.resolve(versionFile(version))
-    require(CommitSink.io.exists(mf),
-      s"graft-commit: no version $version at $dir (have: " +
-        listVersions(dir).mkString(", ") + ")")
-    parseManifestText(CommitSink.io.readString(mf), mf.toString)
-  }
+    loadRoot(dir).map(resolveGroups(dir, _))
 
   /** The immutable manifest of a PAST version (time travel, o17). */
   private[graft] def parseManifestVersion(dir: Path, version: Long): Manifest =
-    resolveGroups(dir, parseManifestVersionRoot(dir, version))
+    resolveGroups(dir, loadRoot(dir, Some(version)).get)
 
   /** TIMESTAMP AS OF resolution (o49): the newest MAIN-lineage
     * committed version whose recorded commit wall time (`committs`,
@@ -2658,16 +2651,7 @@ object CommitSink {
     * manifest headers, planning-cheap at any version count this side
     * of expiry. */
   private[graft] def versionAtTimestamp(dir: Path, tMicros: Long): Long = {
-    val staged = listStaged(dir).toSet
-    val candidates = listVersions(dir)
-      .filter(v => v < BRANCH_BASE && !staged.contains(v))
-    require(candidates.nonEmpty,
-      s"graft-commit: no committed versions at $dir to time-travel into")
-    val stamped = candidates.map { v =>
-      val txt = io.readString(dir.resolve(versionFile(v)))
-      v -> "\"committs\":(-?[0-9]+)".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong).getOrElse(-1L)
-    }
+    val stamped = mainCommitTimes(dir)
     val eligible = stamped.filter { case (_, ts) =>
       ts >= 0 && ts * 1000L <= tMicros
     }
@@ -2688,22 +2672,31 @@ object CommitSink {
     * the newest commit refuses, there is nothing to stream). Same
     * main-lineage/root-parse discipline as [[versionAtTimestamp]]. */
   private[graft] def versionAtOrAfterTimestamp(dir: Path, tMicros: Long): Long = {
-    val staged = listStaged(dir).toSet
-    val candidates = listVersions(dir)
-      .filter(v => v < BRANCH_BASE && !staged.contains(v))
-    require(candidates.nonEmpty,
-      s"graft-commit: no committed versions at $dir to time-travel into")
-    val eligible = candidates.filter { v =>
-      val txt = io.readString(dir.resolve(versionFile(v)))
-      val ts = "\"committs\":(-?[0-9]+)".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong).getOrElse(-1L)
-      ts >= 0 && ts * 1000L >= tMicros
+    val eligible = mainCommitTimes(dir).collect {
+      case (v, ts) if ts >= 0 && ts * 1000L >= tMicros => v
     }
     require(eligible.nonEmpty,
       s"graft-commit: no version of $dir committed at or after " +
         s"${java.time.Instant.ofEpochMilli(Math.floorDiv(tMicros, 1000L))} — " +
         "nothing to stream from that starting timestamp")
     eligible.min
+  }
+
+  /** (version, `committs`) of every MAIN-lineage version — staged (WAP)
+    * and branch-range ids excluded; -1 where a pre-o49 version records
+    * no commit time. One regex per version file, never a full parse.
+    * Refuses a table with no main version at all. */
+  private def mainCommitTimes(dir: Path): Seq[(Long, Long)] = {
+    val staged = listStaged(dir).toSet
+    val candidates = listVersions(dir)
+      .filter(v => v < BRANCH_BASE && !staged.contains(v))
+    require(candidates.nonEmpty,
+      s"graft-commit: no committed versions at $dir to time-travel into")
+    candidates.map { v =>
+      v -> "\"committs\":(-?[0-9]+)".r
+        .findFirstMatchIn(io.readString(dir.resolve(versionFile(v))))
+        .map(_.group(1).toLong).getOrElse(-1L)
+    }
   }
 
   /** `timestampAsOf` option value → epoch micros: a bare integer is
@@ -2765,13 +2758,6 @@ object CommitSink {
   private[sources] def sameColumns(a: StructType, b: StructType): Boolean = {
     def cols(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
     cols(a) == cols(b)
-  }
-
-  /** (schema DDL, relative file names) of a manifest. Hand-rolled parse
-    * of our own hand-rolled format — both sides live in this file. */
-  private[graft] def readManifest(mf: Path): (String, Seq[String]) = {
-    val m = parseManifestText(io.readString(mf), mf.toString)
-    (m.ddl, m.files)
   }
 
   /** Write-and-swap the manifest under the per-path commit lock: the

@@ -136,9 +136,9 @@ class CommitSinkTable(path: String,
                         * write/DML surface is withdrawn. */
                       changeFeed: Boolean = false,
                       /** BRANCH binding (o44, `option("branch", n)`):
-                        * reads resolve the branch HEAD (fresh per scan
-                        * build — a branch is a live lineage, unlike a
-                        * version pin) and batch writes advance it; DML,
+                        * reads resolve the branch HEAD as of this table
+                        * instance's [[root]] (a later head is the next
+                        * load's) and batch writes advance it; DML,
                         * streaming, and the change feed stay
                         * main-lineage. */
                       branch: Option[String] = None) extends Table
@@ -190,30 +190,35 @@ class CommitSinkTable(path: String,
     file ++ pos
   }
 
-  /** The branch head resolved NOW — a branch read binds to the head as
-    * of plan/scan time, never a stale pin. */
-  private def branchVersion: Option[Long] =
-    branch.map(b => CommitSink.branchHead(Paths.get(path), b))
+  /** The version this instance reads: the pin, else the branch head
+    * (resolved once, with [[root]]), else None — the live manifest. */
+  private lazy val readVersion: Option[Long] =
+    version.orElse(branch.map(CommitSink.branchHead(Paths.get(path), _)))
 
-  /** A version pin's `_MANIFEST-v<n>.json` is immutable: read once per
-    * table instance for schema(), metadataColumns() and the scan. */
-  private lazy val pinnedRoot: Option[CommitSink.Manifest] =
-    version.map(CommitSink.parseManifestVersionRoot(Paths.get(path), _))
+  /** The ONE root manifest (header + group refs; schema and partition
+    * spec live there) this table instance describes AND reads, loaded
+    * once on first use; None if never written. schema(), partitioning(),
+    * metadataColumns(), every scan, the merge-on-read eligibility check
+    * and the DML planning manifests all take this value, so an analysed
+    * plan and the scan it builds can never straddle a commit: a
+    * DataFrame keeps reading the version it was analysed against, and a
+    * new `spark.table`/`spark.sql`/`load()` loads a new instance. Writes
+    * re-read the live manifest for their compare-and-swap commit. */
+  private lazy val root: Option[CommitSink.Manifest] =
+    CommitSink.loadRoot(Paths.get(path), readVersion)
 
-  /** The ROOT manifest (schema and partition spec live there; group
-    * files are never read for them) this table describes: the version
-    * pin, else the branch head, else the live one; None if never written. */
-  private def describedRoot: Option[CommitSink.Manifest] =
-    pinnedRoot.orElse(branchVersion.map(
-      CommitSink.parseManifestVersionRoot(Paths.get(path), _)))
-      .orElse(CommitSink.parseManifestRoot(Paths.get(path)))
+  /** [[root]] with every per-file entry loaded: what a DML statement
+    * plans, carries and CAS-checks against. */
+  private def resolvedRoot: CommitSink.Manifest =
+    CommitSink.resolveGroups(Paths.get(path), root.getOrElse(
+      sys.error(s"graft-commit: no committed manifest at $path")))
 
   /** The committed version's schema when one exists (the catalog /
     * row-level-operation path needs real columns to resolve against);
     * empty for a never-written target (the write-only provider path —
     * ACCEPT_ANY_SCHEMA makes the incoming query's schema bind). */
   override def schema(): StructType = {
-    val base = describedRoot.fold(new StructType())(_.schema)
+    val base = root.fold(new StructType())(_.schema)
     if (changeFeed) CommitSink.cdfSchema(base) else base
   }
 
@@ -224,7 +229,7 @@ class CommitSinkTable(path: String,
     * on the SCAN's reported KeyGroupedPartitioning, not on this. */
   override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] =
     if (changeFeed) Array.empty
-    else describedRoot.flatMap(_.partCol).toSeq
+    else root.flatMap(_.partCol).toSeq
       .flatMap(CommitSink.PartSpec.parseSpecs).map(spec =>
       spec match {
         case CommitSink.IdentitySpec(c) =>
@@ -297,8 +302,7 @@ class CommitSinkTable(path: String,
             s"graft-commit: option $key must be a version number, got '$v'")
         }
       }
-    new CommitScanBuilder(path, version.orElse(branchVersion),
-      pinned = pinnedRoot,
+    new CommitScanBuilder(path, root, readVersion,
       // plain, version/tag and branch reads evaluate exact filters in the
       // reader; DML scans are built by the row-level operations instead
       absorbFilters = true,
@@ -374,7 +378,7 @@ class CommitSinkTable(path: String,
         "graft-commit: spark.graft.commit.rowLevelMode must be " +
           s"'copy-on-write' or 'merge-on-read', got '$mode'")
       val eligible = mode == "merge-on-read" &&
-        CommitSink.parseManifestRoot(Paths.get(path)).exists { m =>
+        root.exists { m =>
           val names = m.schema.fieldNames
           !names.contains(CommitSink.FILE_COL) &&
             !names.contains(CommitSink.POS_COL) &&
@@ -385,8 +389,9 @@ class CommitSinkTable(path: String,
             m.partCol.map(CommitSink.PartSpec.parse)
               .forall(_.isInstanceOf[CommitSink.IdentitySpec])
         }
-      if (eligible) new CommitDeltaRowLevelOperation(path, info.command())
-      else new CommitRowLevelOperation(path, info.command())
+      if (eligible)
+        new CommitDeltaRowLevelOperation(path, info.command(), resolvedRoot)
+      else new CommitRowLevelOperation(path, info.command(), resolvedRoot)
     }
   }
 
@@ -432,10 +437,10 @@ class CommitSinkTable(path: String,
 
   override def deleteWhere(filters: Array[sf.Filter]): Unit = {
     val spark = SparkSession.active
-    // pin ONE manifest: the rows read, the carried set, and the commit
-    // CAS all bind to it (a commit landing mid-delete hard-fails the swap)
-    val m = CommitSink.parseManifest(Paths.get(path)).getOrElse(
-      sys.error(s"graft-commit: no committed manifest at $path"))
+    // the table's ONE manifest: the rows read, the carried set, and the
+    // commit CAS all bind to it (a commit landing after the table loaded
+    // hard-fails the swap)
+    val m = resolvedRoot
     // DELETE MODE (o27): `spark.graft.commit.deleteMode=merge-on-read`
     // records deletion vectors instead of rewriting files — Iceberg's
     // write.delete.mode knob. Requires the _file/_pos metadata columns

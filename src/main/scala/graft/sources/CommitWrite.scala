@@ -132,10 +132,10 @@ class CommitWriteBuilder(path: String, info: LogicalWriteInfo,
 
   /** The manifest this write plans against: the branch head when the
     * write targets a branch, else main's current manifest. */
-  private def planningManifest: Option[CommitSink.Manifest] = branch match {
-    case Some(b) => Some(CommitSink.parseManifestVersion(Paths.get(path),
-      CommitSink.branchHead(Paths.get(path), b)))
-    case None => CommitSink.parseManifest(Paths.get(path))
+  private def planningManifest: Option[CommitSink.Manifest] = {
+    val dir = Paths.get(path)
+    CommitSink.loadRoot(dir, branch.map(CommitSink.branchHead(dir, _)))
+      .map(CommitSink.resolveGroups(dir, _))
   }
 
   override def build(): Write = {
@@ -480,11 +480,9 @@ class CommitBatchWrite(path: String, schema: StructType, truncate: Boolean,
 
   /** The manifest this commit composes with: the branch head for branch
     * commits, else main's current manifest. */
-  private def planningManifest: Option[CommitSink.Manifest] = branch match {
-    case Some(b) => Some(CommitSink.parseManifestVersion(dir,
-      CommitSink.branchHead(dir, b)))
-    case None => CommitSink.parseManifest(dir)
-  }
+  private def planningManifest: Option[CommitSink.Manifest] =
+    CommitSink.loadRoot(dir, branch.map(CommitSink.branchHead(dir, _)))
+      .map(CommitSink.resolveGroups(dir, _))
   /** This write's identity: names its private staging subdirectory AND
     * makes its promoted file names attempt-unique. */
   private val nonce = CommitSink.writeNonce()

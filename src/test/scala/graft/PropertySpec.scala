@@ -103,10 +103,9 @@ object PropertySpec extends Properties("graft") {
       try {
         graft.sources.CommitSink.writeManifest(dir, ddl, files.distinct,
           commit, epochs.distinct)
-        val (gotDdl, gotFiles) =
-          graft.sources.CommitSink.readManifest(dir.resolve("_MANIFEST.json"))
-        gotDdl == ddl &&
-          gotFiles == files.distinct.sorted &&
+        val got = graft.sources.CommitSink.parseManifest(dir).get
+        got.ddl == ddl &&
+          got.files == files.distinct.sorted &&
           graft.sources.CommitSink.committedEpochs(dir) == epochs.distinct.sorted
       } finally {
         // writeManifest also lands the immutable _MANIFEST-v<n>.json

@@ -93,7 +93,7 @@ class Round10Spec extends AnyFunSuite {
       "doubles and all other columns must round-trip bit-exactly")
     // the manifest is the table: exactly its files exist, staging swept
     val p = java.nio.file.Paths.get(dir)
-    val listed = sources.CommitSink.readManifest(p.resolve("_MANIFEST.json"))._2.toSet
+    val listed = sources.CommitSink.parseManifest(p).get.files.toSet
     import scala.jdk.CollectionConverters._
     val onDisk = java.nio.file.Files.list(p).iterator().asScala
       .map(_.getFileName.toString).filter(_.startsWith("part-")).toSet

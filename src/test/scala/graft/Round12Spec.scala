@@ -325,7 +325,8 @@ class Round12Spec extends AnyFunSuite {
     val dir = freshDir("gen_guard")
     fixture(10).write.format("graft-commit").option("path", dir)
       .mode("overwrite").save()
-    val scan = new sources.CommitScanBuilder(dir).build()
+    val scan = new sources.CommitScanBuilder(dir,
+      sources.CommitSink.loadRoot(Paths.get(dir))).build()
       .asInstanceOf[sources.CommitScan]
     val stream = scan.toMicroBatchStream(s"$dir-ck")
     // a legacy offset with no '@generation' suffix must be refused — the

@@ -413,7 +413,8 @@ class Round13Spec extends AnyFunSuite {
     // parse + plan: one driver read, bounded time, all 8000 partitions
     val t0 = System.nanoTime()
     val m = manifest(dir)
-    val scan = new sources.CommitScanBuilder(dir).build()
+    val scan = new sources.CommitScanBuilder(dir,
+      sources.CommitSink.loadRoot(Paths.get(dir))).build()
     val parts = scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
       .planInputPartitions()
     val planMs = (System.nanoTime() - t0) / 1e6

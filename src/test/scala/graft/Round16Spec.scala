@@ -456,18 +456,24 @@ class Round16Spec extends AnyFunSuite {
 
   // --- two-level manifest (the manifest-list, r16) -----------------------
 
-  /** A CommitIO that counts group-manifest reads — the sublinearity
-    * instrument: planning a selective scan must parse only the groups
-    * its predicate cannot rule out. */
+  /** A CommitIO that counts manifest reads: group manifests (the
+    * sublinearity instrument — planning a selective scan must parse only
+    * the groups its predicate cannot rule out), the live root
+    * `_MANIFEST.json` and the immutable `_MANIFEST-v<n>.json` files. */
   private class CountingIo extends sources.CommitIO {
     val groupReads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val rootReads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val versionReads = new java.util.concurrent.atomic.AtomicInteger(0)
     private val d = sources.NioCommitIO
     override def inputFile(p: java.nio.file.Path) = d.inputFile(p)
     override def outputFile(p: java.nio.file.Path) = d.outputFile(p)
     override def newInputStream(p: java.nio.file.Path) = d.newInputStream(p)
     override def newOutputStream(p: java.nio.file.Path) = d.newOutputStream(p)
     override def readString(p: java.nio.file.Path): String = {
-      if (p.getFileName.toString.startsWith("_MANIFEST-g")) groupReads.incrementAndGet()
+      val name = p.getFileName.toString
+      if (name.startsWith("_MANIFEST-g")) groupReads.incrementAndGet()
+      else if (name == "_MANIFEST.json") rootReads.incrementAndGet()
+      else if (name.startsWith("_MANIFEST-v")) versionReads.incrementAndGet()
       d.readString(p)
     }
     override def writeString(p: java.nio.file.Path, s: String): Unit = d.writeString(p, s)
@@ -480,6 +486,43 @@ class Round16Spec extends AnyFunSuite {
     override def list(p: java.nio.file.Path): Seq[String] = d.list(p)
     override def size(p: java.nio.file.Path): Long = d.size(p)
     override def lastModifiedMs(p: java.nio.file.Path): Long = d.lastModifiedMs(p)
+  }
+
+  test("one manifest per table instance: a point lookup reads the root once") {
+    val (cat, root) = scopedCat("root_reads")
+    val path = s"$root/default/t"
+    spark.range(100L).select($"id", ($"id" * 3).as("v"))
+      .write.format("graft-commit").option("path", path)
+      .mode("overwrite").save()
+    spark.range(100L, 200L).select($"id", ($"id" * 3).as("v"))
+      .write.format("graft-commit").option("path", path)
+      .mode("append").save()
+    def counted(q: => Array[org.apache.spark.sql.Row]): (Seq[Long], CountingIo) = {
+      val c = new CountingIo
+      val rows = sources.CommitSink.withIo(c)(q)
+      (rows.map(_.getLong(0)).toSeq, c)
+    }
+    // catalog point lookup: schema, metadata columns, scan and
+    // eligibility checks all take the one root the table loaded
+    val (live, c1) = counted(spark.sql(
+      s"SELECT v FROM $cat.`default`.t WHERE id = 42").collect())
+    assert(live == Seq(126L))
+    assert(c1.rootReads.get() == 1 && c1.versionReads.get() == 0,
+      s"catalog lookup read the root ${c1.rootReads.get()}x, " +
+        s"version files ${c1.versionReads.get()}x")
+    // VERSION AS OF: the immutable version file once, the root never
+    val (old, c2) = counted(spark.sql(
+      s"SELECT v FROM $cat.`default`.t VERSION AS OF 0 WHERE id = 42").collect())
+    assert(old == Seq(126L))
+    assert(c2.rootReads.get() == 0 && c2.versionReads.get() == 1,
+      s"VERSION AS OF read the root ${c2.rootReads.get()}x, " +
+        s"version files ${c2.versionReads.get()}x")
+    // a path read: the provider's inferSchema and getTable build one
+    // table instance each
+    val (byPath, c3) = counted(spark.read.format("graft-commit")
+      .option("path", path).load().filter($"id" === 142L).select($"v").collect())
+    assert(byPath == Seq(426L))
+    assert(c3.rootReads.get() <= 2, s"path read read the root ${c3.rootReads.get()}x")
   }
 
   test("manifest list: 120k files — small root, selective planning parses ONE group") {
@@ -515,7 +558,8 @@ class Round16Spec extends AnyFunSuite {
     // THE SUBLINEARITY PIN: a point predicate plans through ONE group
     val counting = new CountingIo
     val planned = sources.CommitSink.withIo(counting) {
-      val b = new sources.CommitScanBuilder(dir)
+      val b = new sources.CommitScanBuilder(dir,
+        sources.CommitSink.loadRoot(Paths.get(dir)))
       b.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("id", 42L)))
       b.build().asInstanceOf[org.apache.spark.sql.connector.read.Batch]
         .planInputPartitions().length

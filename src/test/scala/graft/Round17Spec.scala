@@ -444,13 +444,14 @@ class Round17Spec extends AnyFunSuite {
       sources.CommitSink.writeManifest(Paths.get(dir), "ts TIMESTAMP_NTZ",
         files, 1L, stats = stats, partCol = Some("months(ts)"))
     }
-    assert(sources.CommitSink.parseManifestRoot(Paths.get(dir)).get.groups.size == 6)
+    assert(sources.CommitSink.loadRoot(Paths.get(dir)).get.groups.size == 6)
     // BETWEEN over months 308..309 (= 1995-09/1995-10): 2 files, 1 group
     val lo = java.time.LocalDateTime.of(1995, 9, 1, 0, 0)
     val hi = java.time.LocalDateTime.of(1995, 10, 31, 23, 59)
     val counting = new CountingIo
     val planned = sources.CommitSink.withIo(counting) {
-      val b = new sources.CommitScanBuilder(dir)
+      val b = new sources.CommitScanBuilder(dir,
+        sources.CommitSink.loadRoot(Paths.get(dir)))
       b.pushFilters(Array(
         org.apache.spark.sql.sources.GreaterThanOrEqual("ts", lo),
         org.apache.spark.sql.sources.LessThanOrEqual("ts", hi)))

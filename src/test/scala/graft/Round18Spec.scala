@@ -147,6 +147,46 @@ class Round18Spec extends AnyFunSuite {
       (0L until 200L).count(i => i * 10 + (if (i % 2 == 0) 1 else 0) <= 1500))
   }
 
+  test("o48: a DataFrame analysed before a RENAME reads its analysed version") {
+    val (cat, root) = scopedCat("rename_tear")
+    val path = s"$root/default/t"
+    spark.range(100L).select($"id".as("a"), ($"id" * 2).as("v"))
+      .write.format("graft-commit").option("path", path)
+      .mode("overwrite").save()
+    // analysed against (a, v); the scan is built only at collect()
+    val byCatalog = spark.table(s"$cat.`default`.t").select($"a")
+    val byPath = spark.read.format("graft-commit").option("path", path)
+      .load().select($"a")
+    spark.sql(s"ALTER TABLE $cat.`default`.t RENAME COLUMN a TO b")
+    // the rename committed between analysis and scan: each DataFrame
+    // still reads the version it was analysed against, never a torn mix
+    // of the old plan and the new schema
+    assert(byCatalog.collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
+    assert(byPath.collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
+    // a new load sees the rename
+    assert(spark.table(s"$cat.`default`.t").columns.toSeq == Seq("b", "v"))
+    assert(spark.table(s"$cat.`default`.t").agg(sum($"b")).head().getLong(0) ==
+      (0L until 100L).sum)
+  }
+
+  test("a DataFrame reused across an append answers every action from one version") {
+    val (cat, root) = scopedCat("reuse")
+    val path = s"$root/default/t"
+    spark.range(10L).select($"id")
+      .write.format("graft-commit").option("path", path)
+      .mode("overwrite").save()
+    val df = spark.table(s"$cat.`default`.t")
+    assert(df.collect().length == 10)
+    spark.range(10L, 15L).select($"id")
+      .write.format("graft-commit").option("path", path)
+      .mode("append").save()
+    // count() plans a new query over the same analysed table; collect()
+    // reuses the executed plan — both answer from the analysed version
+    assert(df.count() == df.collect().length.toLong)
+    assert(df.count() == 10L)
+    assert(spark.table(s"$cat.`default`.t").count() == 15L)
+  }
+
   test("o48: refusal matrix — live eq-delete key, existing target") {
     val (cat, root) = scopedCat("rename_refuse")
     // (r19 lifted the partition-source refusal: the rename rewrites the
