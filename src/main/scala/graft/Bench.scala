@@ -51,16 +51,21 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def onePass(): Seq[(String, Double)] = ordered.map { case (name, fn) =>
+    /** Each entry's seconds; None when it threw — a failure has no time. */
+    def onePass(): Seq[(String, Option[Double])] = ordered.map { case (name, fn) =>
       // provider choice is per query (see Verify): multi-column-family
       // entries opt into RocksDB at build time; the rest run the default
       // HDFS-backed provider, and no entry's choice leaks into the next
       // (or into pass 2 — the reset keeps both passes on equal footing)
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      name -> (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        name -> Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        name -> None
+      }
     }
     // per-pass storage/GC telemetry: lets a reader tell "slow because the
     // heap was under storage pressure / GC" (the r11 eviction cluster)
@@ -188,8 +193,8 @@ object Bench {
       * steal percentage over the attempt, host block-IO ms over the
       * attempt, block-IO ms per wall second; steal/io -1 = unreadable). */
     def gatedPass(first: Boolean)
-        : (Map[String, Double], Seq[(Double, Double, Double, Long, Double)], Long, Long, Long) = {
-      var attempts = Vector.empty[(Map[String, Double], (Double, Double, Double, Long, Double))]
+        : (Map[String, Option[Double]], Seq[(Double, Double, Double, Long, Double)], Long, Long, Long) = {
+      var attempts = Vector.empty[(Map[String, Option[Double]], (Double, Double, Double, Long, Double))]
       var gcTotal = 0L
       var heap = 0L; var stor = 0L
       var go = true
@@ -224,8 +229,9 @@ object Bench {
         if (go) System.err.println(
           f"[bench] pass ran at steal $stealPct%.2f%% / io $ioRate%.1f ms/s (load $l1%.2f) — contended; retrying")
       }
+      // an entry that threw in any attempt stays failed
       val best = attempts.map(_._1).reduce((a, b) =>
-        a.map { case (k, v) => k -> math.min(v, b(k)) })
+        a.map { case (k, v) => k -> v.zip(b(k)).map { case (x, y) => math.min(x, y) } })
       (best, attempts.map(_._2), gcTotal, heap, stor)
     }
     val (pass1, loads1, gc1, heap1, stor1) = gatedPass(first = true)
@@ -260,8 +266,11 @@ object Bench {
         s""""loadavg":${loadArr(loads2)},""" +
         s""""steal_pct":${stealArr(loads2)},"io_ms":${ioArr(loads2)},""" +
         s""""io_ms_per_sec":${ioRateArr(loads2)}}}"""
-    val twoPass = pass2.map { case (name, t2) =>
-      name -> math.min(pass1(name), t2)
+    // a failed entry (threw in either pass) has no time: it is listed in
+    // "failed" and left out of the per-query map and the composite
+    val failed = pass2.collect { case (name, t2) if t2.isEmpty || pass1(name).isEmpty => name }.sorted
+    val twoPass = pass2.collect { case (name, Some(t2)) if pass1(name).isDefined =>
+      name -> math.min(pass1(name).get, t2)
     }
     // The reported timings are the MEASUREMENTS (min of the two passes),
     // never substituted: earlier rounds damped against a committed prior
@@ -291,7 +300,8 @@ object Bench {
     def line(rs: Seq[(String, Double)], total: Double, sfName: String): String = {
       val qs = rs.map { case (k, v) => "\"" + k + "\":" + f(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"sf":"$sfName"}"""
+      val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"sf":"$sfName","failed":$fs}"""
     }
     val total = results.map(_._2).sum
     val sfName = sfName0
@@ -312,12 +322,13 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     // per-pass totals: lets a reader tell host variance (p1 vs p2 spread)
     // from plan regressions without re-running anything
-    val p1Total = pass1.values.sum
-    val p2Total = pass2.map(_._2).sum
+    val p1Total = pass1.values.flatten.sum
+    val p2Total = pass2.flatMap(_._2).sum
     // full per-pass maps (file only): lets a reader attribute an inflated
-    // min to "slow in pass 1" vs "slow in both" without re-running
-    def qmap(rs: Seq[(String, Double)]): String = rs.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    // min to "slow in pass 1" vs "slow in both" without re-running; a
+    // failed entry reads null
+    def qmap(rs: Seq[(String, Option[Double])]): String = rs.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":" + v.fold("null")(f) }.mkString("{", ",", "}")
     val record = full.dropRight(1) +
       s""","cpus":$cpus,"best":$bestQs,"pass_totals":[${f(p1Total)},${f(p2Total)}],""" +
       s"""$telemetry,""" +

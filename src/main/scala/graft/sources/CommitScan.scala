@@ -44,7 +44,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * Filter remains between the aggregate and the scan — which is the
   * case when every conjunct of a WHERE clause was absorbed — so
   * [[pushAggregation]] declines whenever any filter was pushed at all:
-  * the manifest's totals know nothing of a predicate. */
+  * the manifest's totals know nothing of a predicate.
+  *
+  * LOCAL reads: a read that absorbed a lookup (`=`, `<=>` or `IN`),
+  * plans no key groups, and whose surviving files all record stats and
+  * total at most [[CommitLocalScan.MaxBytes]] (1 MiB) builds a
+  * [[CommitLocalScan]] — its rows decode on the driver and the query
+  * runs no Spark job (a `VERSION AS OF … WHERE id = k` point lookup).
+  * Everything else stays a batch [[CommitScan]]: unfiltered and
+  * range-filtered reads (they feed joins — Spark infers range and
+  * IS NOT NULL constraints on a join input — runtime filtering,
+  * storage-partitioned joins and the partition-per-file layout),
+  * key-grouped layouts (SPJ), row-level operations, the change feed,
+  * streams, and CBO sessions (they absorb nothing). */
 class CommitScanBuilder(path: String,
                         /** The manifest this builder's decisions and its
                           * scan bind to — ONE snapshot, never re-read:
@@ -208,6 +220,17 @@ class CommitScanBuilder(path: String,
     ok
   }
 
+  /** A lookup by value: `=`, `<=>` or `IN`. The range and IS NOT NULL
+    * constraints Spark infers on a join input from the other side are
+    * not lookups, so a join keeps its batch scan and runtime filtering. */
+  private def isLookup(f: Filter): Boolean = f match {
+    case _: org.apache.spark.sql.sources.EqualTo |
+         _: org.apache.spark.sql.sources.EqualNullSafe |
+         _: org.apache.spark.sql.sources.In => true
+    case org.apache.spark.sql.sources.And(l, r) => isLookup(l) || isLookup(r)
+    case _ => false
+  }
+
   override def build(): Scan =
     if (changeFeed)
       new CommitChangesScan(path,
@@ -247,10 +270,50 @@ class CommitScanBuilder(path: String,
       // hand the scan the manifest THIS builder's pushdown decisions were
       // made against — a second disk read here could bind the scan to a
       // concurrently-swapped snapshot with a different schema
-      new CommitScan(path, m,
+      val scan = new CommitScan(path, m,
         version, skip, required, dmlOp, maxCommitsPerTrigger, snapshotOnRewrite,
         absorbed)
+      // an absorbed lookup excludes unfiltered reads and DML, change-feed,
+      // stream and CBO scans (none of which absorbs)
+      if (absorbed.exists(isLookup) &&
+          scan.localBytes.exists(_ <= CommitLocalScan.MaxBytes))
+        new CommitLocalScan(scan)
+      else scan
     }
+}
+
+/** A small lookup served on the driver ([[CommitScanBuilder]] decides
+  * when): Spark plans a `LocalTableScanExec`, whose `executeCollect`
+  * returns [[rows]] without running a job, and with no exchange in the
+  * plan AQE does not wrap it. The rows are decoded once, on first use
+  * (at physical planning — so `explain` decodes too), by the wrapped
+  * scan's own partitions and reader factory: absorbed filters, deletion
+  * vectors, equality deletes, renames and `_file`/`_pos` stamping behave
+  * exactly as in the batch scan. */
+class CommitLocalScan(val inner: CommitScan)
+    extends org.apache.spark.sql.connector.read.LocalScan
+    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+  private lazy val decoded: Array[InternalRow] = {
+    val factory = inner.createReaderFactory()
+    inner.planInputPartitions().flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r).takeWhile(_.next()).map(_.get()).toArray
+      finally r.close()
+    }
+  }
+  override def rows(): Array[InternalRow] = decoded
+  override def readSchema(): StructType = inner.readSchema()
+  override def toBatch: Batch = inner.toBatch
+  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
+    inner.estimateStatistics()
+  override def description(): String = inner.description()
+}
+
+object CommitLocalScan {
+  /** Surviving-file bytes up to which a filtered read is served locally:
+    * a few small files decode on the driver in well under the fixed cost
+    * of scheduling one job. */
+  val MaxBytes: Long = 1L << 20
 }
 
 /** The CHANGE DATA FEED scan (o29) — `option("readChangeFeed", true)`:
@@ -743,6 +806,14 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
       new UnknownPartitioning(multiGroups.map(_.size).getOrElse(surviving.size))
   }
 
+  /** Total bytes of the surviving files, when every one records stats
+    * and the scan plans no key groups (the [[CommitLocalScan]] gate). */
+  private[sources] def localBytes: Option[Long] = {
+    val sts = surviving.map(fileStats.get)
+    if (partGroups.isDefined || multiGroups.isDefined || sts.exists(_.isEmpty)) None
+    else Some(sts.flatten.map(_.bytes).sum)
+  }
+
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
       private val sts = surviving.map(fileStats.get)
@@ -898,6 +969,28 @@ class CommitScan(path: String, manifest: CommitSink.Manifest,
       s"columns: ${readSchema().size}/${manifest.schema.size}" +
       (if (absorbed.isEmpty) "" else s", filters: ${absorbed.mkString(", ")}") +
       "]"
+}
+
+object CommitScan {
+  /** The DSv2 scan of a single-scan DataFrame, read from its OPTIMIZED
+    * plan's `DataSourceV2ScanRelation` — no physical planning, so a
+    * [[CommitLocalScan]] decodes nothing; it is unwrapped to the
+    * [[CommitScan]] it serves. Plan introspection for registry entries'
+    * prune proofs and for specs. */
+  def of(df: DataFrame): Scan =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan match {
+          case l: CommitLocalScan => l.inner
+          case s => s
+        }
+    }.getOrElse(sys.error(
+      s"no DSv2 scan in plan:\n${df.queryExecution.optimizedPlan}"))
+
+  /** The input partitions [[of]]`(df)` plans — its post-prune file (or
+    * key-group) units, without running or decoding anything. */
+  def plannedPartitions(df: DataFrame): Seq[InputPartition] =
+    of(df).toBatch.planInputPartitions().toSeq
 }
 
 /** The CHANGELOG micro-batch stream over a committed table (o20) — the

@@ -84,12 +84,22 @@ class CommitSinkProvider extends TableProvider
       case Some(kind) => CommitMeta.schemaOf(kind)
       case None => inferDataSchema(options)
     }
+  /** The table [[inferDataSchema]] loaded, with the options it was
+    * loaded for (keys lower-cased): [[getTable]] hands this instance to
+    * the plan when the options match, so a path read loads its manifest
+    * once and its schema and scan bind to the same commit. */
+  private var inferred: Option[(Map[String, String], CommitSinkTable)] = None
+  private def optionKey(options: util.Map[String, String]): Map[String, String] =
+    options.asScala.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }.toMap
   // the table resolves which manifest describes the read; a path-less
   // read binds no columns here and fails in getTable()
   private def inferDataSchema(options: CaseInsensitiveStringMap): StructType =
-    Option(options.get("path")).fold(new StructType())(p =>
-      new CommitSinkTable(p, version = versionOf(options),
-        changeFeed = cdfOf(options), branch = branchOf(options)).schema())
+    Option(options.get("path")).fold(new StructType()) { p =>
+      val t = new CommitSinkTable(p, version = versionOf(options),
+        changeFeed = cdfOf(options), branch = branchOf(options))
+      inferred = Some(optionKey(options) -> t)
+      t.schema()
+    }
   override def supportsExternalMetadata(): Boolean = true
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
@@ -107,8 +117,12 @@ class CommitSinkProvider extends TableProvider
         require(branch.isEmpty || versionOf(properties).isEmpty,
           "graft-commit: branch and versionAsOf/tagAsOf are mutually " +
             "exclusive — a branch read already follows the branch head")
-        new CommitSinkTable(path, version = versionOf(properties),
-          changeFeed = cdfOf(properties), branch = branch)
+        val reused = inferred.collect {
+          case (key, t) if key == optionKey(properties) => t
+        }
+        inferred = None
+        reused.getOrElse(new CommitSinkTable(path, version = versionOf(properties),
+          changeFeed = cdfOf(properties), branch = branch))
     }
   }
 }

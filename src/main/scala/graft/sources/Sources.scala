@@ -1229,15 +1229,11 @@ object Sources {
     }
 
   /** Planned (post zone-map prune) file count of a single-commit-scan
-    * DataFrame — plan introspection only (BatchScanExec.inputPartitions
+    * DataFrame — plan introspection only ([[CommitScan.plannedPartitions]]
     * runs the scan's planning, never its execution). Shared by the
-    * clustering entries' prune-proof columns; a filter+scan plan has no
-    * exchange, so AQE never wraps it and the collect is total. */
+    * clustering entries' prune-proof columns. */
   private def plannedFiles(df: DataFrame): Long =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.length.toLong
-    }.getOrElse(sys.error("no BatchScanExec in plan"))
+    CommitScan.plannedPartitions(df).size.toLong
 
   /** Per-file [min, max] of a LONG column from the manifest's zone maps
     * (the stats the write recorded — no file is opened). */

@@ -17,10 +17,6 @@ class Dsv2Spec extends AnyFunSuite {
     spark.read.format("graft-sensors")
       .option("rows", rows).option("slices", slices).load()
 
-  private def scanOf(df: org.apache.spark.sql.DataFrame): BatchScanExec =
-    df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }
-      .getOrElse(fail("no BatchScanExec in plan"))
-
   /** The row formula restated over spark.range — the independent twin. */
   private def reference(rows: Long) =
     spark.range(rows).select(
@@ -43,8 +39,8 @@ class Dsv2Spec extends AnyFunSuite {
 
   test("id predicates are absorbed by the source and prune partitions") {
     val df = sensors(100000, 16).filter(col("id") >= 20000L && col("id") < 60000L)
-    val scan = scanOf(df)
-    val desc = scan.scan.description()
+    val scan = sources.CommitScan.of(df)
+    val desc = scan.description()
     assert(desc.contains("GreaterThanOrEqual(id,20000)"), desc)
     assert(desc.contains("LessThan(id,60000)"), desc)
     // 16 slices of 6250 over [0,100000); [20000,60000) touches slices 3..9
@@ -58,7 +54,7 @@ class Dsv2Spec extends AnyFunSuite {
 
   test("non-id predicates stay residual but still filter") {
     val df = sensors(1000, 2).filter(col("status") === "alert")
-    val desc = scanOf(df).scan.description()
+    val desc = sources.CommitScan.of(df).description()
     val pushedSeg = desc.substring(desc.indexOf("PushedFilters=["))
       .takeWhile(_ != ']')
     assert(!pushedSeg.contains("status"),
@@ -70,7 +66,7 @@ class Dsv2Spec extends AnyFunSuite {
 
   test("column pruning reaches the reader") {
     val df = sensors(1000, 2).select("sensor", "reading")
-    val desc = scanOf(df).scan.description()
+    val desc = sources.CommitScan.of(df).description()
     assert(desc.contains("ReadSchema=sensor,reading"), desc)
     assert(df.columns.toSeq == Seq("sensor", "reading"))
     assert(df.distinct().count() > 0)
@@ -96,14 +92,12 @@ class Dsv2Spec extends AnyFunSuite {
       .filter(col("id") >= 250000L && col("id") < 750000L)
       .agg(count(lit(1)).as("n"), min(col("id")).as("min_id"),
         max(col("id")).as("max_id"))
-    val scan = df.queryExecution.executedPlan
-      .collectFirst { case b: BatchScanExec => b }
-      .getOrElse(fail("no BatchScanExec in plan"))
-    val desc = scan.scan.description()
+    val scan = sources.CommitScan.of(df)
+    val desc = scan.description()
     assert(desc.contains("PushedAggregates=[COUNT(*), MIN(id), MAX(id)]"), desc)
     // the scan emits one partial row per surviving slice, not 500k rows:
     // [250000, 750000) over 32 slices of 31250 tiles slices 8..23 = 16
-    val parts = scan.scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
+    val parts = scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
       .planInputPartitions().length
     assert(parts == 16, s"expected 16 partial partitions, got $parts")
     val r = df.head()
@@ -113,22 +107,22 @@ class Dsv2Spec extends AnyFunSuite {
   test("aggregate pushdown declines group-by and non-id aggregates") { withoutAqe {
     // grouped aggregate: not pushed — falls back to the row scan
     val grouped = sensors(10000, 4).groupBy(col("status")).agg(count(lit(1)).as("n"))
-    val gdesc = scanOf(grouped).scan.description()
+    val gdesc = sources.CommitScan.of(grouped).description()
     assert(!gdesc.contains("PushedAggregates"), gdesc)
     assert(grouped.collect().map(_.getLong(1)).sum == 10000L)
     // sum(reading): not closed-form — declined, answered from real rows
     val sums = sensors(10000, 4).agg(sum(col("reading")).as("s"), count(lit(1)).as("n"))
-    val sdesc = scanOf(sums).scan.description()
+    val sdesc = sources.CommitScan.of(sums).description()
     assert(!sdesc.contains("PushedAggregates"), sdesc)
     assert(sums.head().getLong(1) == 10000L)
   } }
 
   test("limit pushdown: the scan generates a k-row prefix and plans one slice") { withoutAqe {
     val df = sensors(100000, 16).limit(10)
-    val scan = scanOf(df)
-    assert(scan.scan.description().contains("PushedLimit=10"), scan.scan.description())
+    val scan = sources.CommitScan.of(df)
+    assert(scan.description().contains("PushedLimit=10"), scan.description())
     // [0, 10) intersects only the first 6250-row slice
-    val parts = scan.scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
+    val parts = scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
       .planInputPartitions().length
     assert(parts == 1, s"expected 1 planned slice, got $parts")
     assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
@@ -138,11 +132,11 @@ class Dsv2Spec extends AnyFunSuite {
     val df = sensors(100000, 16)
       .filter(col("id") >= 20000L && col("id") < 90000L)
       .orderBy(col("id").desc).limit(25)
-    val scan = scanOf(df)
-    val desc = scan.scan.description()
+    val scan = sources.CommitScan.of(df)
+    val desc = scan.description()
     assert(desc.contains("PushedTopNDescLimit=25"), desc)
     // the 25-row suffix [89975, 90000) lives in one slice
-    val parts = scan.scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
+    val parts = scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
       .planInputPartitions().length
     assert(parts == 1, s"expected 1 planned slice, got $parts")
     assert(df.collect().map(_.getLong(0)).toSeq == (89999L to 89975L by -1L))
@@ -150,14 +144,14 @@ class Dsv2Spec extends AnyFunSuite {
 
   test("topN pushdown on id ASC rides the prefix path") { withoutAqe {
     val df = sensors(100000, 16).orderBy(col("id").asc).limit(7)
-    val desc = scanOf(df).scan.description()
+    val desc = sources.CommitScan.of(df).description()
     assert(desc.contains("PushedLimit=7"), desc)
     assert(df.collect().map(_.getLong(0)).toSeq == (0L until 7L))
   } }
 
   test("topN on a non-id or multi-key sort is declined; sort runs above the scan") { withoutAqe {
     val df = sensors(1000, 4).orderBy(col("status").asc, col("id").asc).limit(5)
-    val desc = scanOf(df).scan.description()
+    val desc = sources.CommitScan.of(df).description()
     assert(!desc.contains("PushedLimit") && !desc.contains("PushedTopN"), desc)
     // 'alert' ids sort first: 0, 13, 26, 39, 52
     assert(df.collect().map(_.getLong(0)).toSeq == Seq(0L, 13L, 26L, 39L, 52L))

@@ -43,11 +43,6 @@ class LakeSpec extends AnyFunSuite {
       (($"id" * 7 % 1000) / 10.0).as("score"),
       concat(lit("doc-"), $"id").as("tag"))
 
-  private def scanOf(df: DataFrame): BatchScanExec =
-    df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }
-      .getOrElse(fail("no BatchScanExec in plan:\n" +
-        df.queryExecution.executedPlan.toString))
-
   // --- o14: stats collection + file skipping ------------------------------
 
   test("o14: the write records per-file rows/bytes/ranges in the manifest") {
@@ -78,13 +73,13 @@ class LakeSpec extends AnyFunSuite {
       .write.format("graft-commit").option("path", dir).mode("overwrite").save()
     val read = spark.read.format("graft-commit").option("path", dir).load()
     val pruned = read.filter($"id" >= 0L && $"id" < 100L)
-    assert(scanOf(pruned).inputPartitions.length == 1,
+    assert(sources.CommitScan.plannedPartitions(pruned).size == 1,
       "a 100-id prefix must plan exactly the first of 4 range files")
     assert(pruned.count() == 100L)
     // equality and IN prune too
-    assert(scanOf(read.filter($"id" === 999L)).inputPartitions.length == 1)
+    assert(sources.CommitScan.plannedPartitions(read.filter($"id" === 999L)).size == 1)
     assert(read.filter($"id" === 999L).count() == 1L)
-    assert(scanOf(read.filter($"id".isin(1L, 2L, 998L))).inputPartitions.length == 2)
+    assert(sources.CommitScan.plannedPartitions(read.filter($"id".isin(1L, 2L, 998L))).size == 2)
     assert(read.filter($"id".isin(1L, 2L, 998L)).count() == 3L)
     // a double-range predicate prunes nothing here (score spans all files)
     // but must not over-prune
@@ -98,11 +93,11 @@ class LakeSpec extends AnyFunSuite {
       .write.format("graft-commit").option("path", dir).mode("overwrite").save()
     val read = spark.read.format("graft-commit").option("path", dir).load()
     val both = read.filter($"id" < 50L || $"id" >= 950L)
-    assert(scanOf(both).inputPartitions.length == 2,
+    assert(sources.CommitScan.plannedPartitions(both).size == 2,
       "an OR of the two extremes must keep exactly the first and last file")
     assert(both.count() == 100L)
     // a filter the stats can't decide (string) must not prune at all
-    assert(scanOf(read.filter($"tag" === "doc-7")).inputPartitions.length == 4)
+    assert(sources.CommitScan.plannedPartitions(read.filter($"tag" === "doc-7")).size == 4)
     assert(read.filter($"tag" === "doc-7").count() == 1L)
   }
 
@@ -133,8 +128,8 @@ class LakeSpec extends AnyFunSuite {
       s"16-row committed dim must auto-broadcast via reported stats:\n$plan")
     assert(joined.count() == 100000L)
     // the reported numbers are the manifest's exact totals
-    val scan = scanOf(dim)
-    val st = scan.scan.asInstanceOf[sources.CommitScan].estimateStatistics()
+    val st = sources.CommitScan.of(dim).asInstanceOf[sources.CommitScan]
+      .estimateStatistics()
     assert(st.numRows().getAsLong == 16L)
     assert(st.sizeInBytes().getAsLong > 0L)
   }
@@ -144,7 +139,7 @@ class LakeSpec extends AnyFunSuite {
     fixture(1000).repartitionByRange(4, $"id")
       .write.format("graft-commit").option("path", dir).mode("overwrite").save()
     val read = spark.read.format("graft-commit").option("path", dir).load()
-    val scan = scanOf(read.filter($"id" < 100L)).scan.asInstanceOf[sources.CommitScan]
+    val scan = sources.CommitScan.of(read.filter($"id" < 100L)).asInstanceOf[sources.CommitScan]
     assert(scan.estimateStatistics().numRows().getAsLong == 250L,
       "the estimate must count only the one surviving file's rows")
   }
@@ -215,11 +210,11 @@ class LakeSpec extends AnyFunSuite {
     // every partitioned file records pk as its k-range (min = max = key),
     // so the zone-map skip IS partition pruning here — no extra machinery
     val one = read.filter($"k" === 3L)
-    assert(scanOf(one).inputPartitions.length == 1,
+    assert(sources.CommitScan.plannedPartitions(one).size == 1,
       "a single-key filter must plan exactly that key's group")
     assert(one.count() == 40L)
     val three = read.filter($"k".isin(1L, 5L, 9L))
-    assert(scanOf(three).inputPartitions.length == 3)
+    assert(sources.CommitScan.plannedPartitions(three).size == 3)
     assert(three.count() == 120L)
   }
 
@@ -329,7 +324,7 @@ class LakeSpec extends AnyFunSuite {
       .mode("overwrite").save()
     val read = spark.read.format("graft-commit").option("path", dir).load()
     val two = read.select($"id", $"tag")
-    val scan = scanOf(two).scan.asInstanceOf[sources.CommitScan]
+    val scan = sources.CommitScan.of(two).asInstanceOf[sources.CommitScan]
     assert(scan.readSchema().fieldNames.toSeq == Seq("id", "tag"),
       "the scan must read only the projected columns")
     assert(two.count() == 100L)
@@ -338,7 +333,7 @@ class LakeSpec extends AnyFunSuite {
     // CountStar pushdown) must prune to an EMPTY read schema and still
     // count rows — the empty-DDL reader path
     val none = read.select(lit(1).as("one"))
-    assert(scanOf(none).scan.asInstanceOf[sources.CommitScan]
+    assert(sources.CommitScan.of(none).asInstanceOf[sources.CommitScan]
       .readSchema().isEmpty, "literal-only projection prunes every column")
     assert(none.count() == 100L)
   }
@@ -405,7 +400,7 @@ class LakeSpec extends AnyFunSuite {
   private def absorbedFilters(df: DataFrame): Boolean = {
     val plan = df.queryExecution.executedPlan
     plan.collect { case f: org.apache.spark.sql.execution.FilterExec => f }.isEmpty &&
-      scanOf(df).scan.description().contains("filters: ")
+      sources.CommitScan.of(df).description().contains("filters: ")
   }
 
   test("absorb: each supported type filters in the reader exactly as Spark does over the files") {
@@ -512,6 +507,160 @@ class LakeSpec extends AnyFunSuite {
     assert(want.size == 1000 - 43 + 3)
     assert(rows(sources.CommitSink.readCommitted(spark, s"$root/default/cow")) == want)
     assert(rows(spark.read.format("graft-commit").option("path", s"$root/default/mor").load()) == want)
+  }
+
+  // --- driver-local reads: a small filtered read runs no Spark job ---------
+
+  private def scans(df: DataFrame): (Int, Int) = {
+    val plan = df.queryExecution.executedPlan
+    (plan.collect { case l: org.apache.spark.sql.execution.LocalTableScanExec => l }.size,
+      plan.collect { case b: BatchScanExec => b }.size)
+  }
+  private def isLocal(df: DataFrame): Boolean = scans(df) == (1, 0)
+  private def isBatch(df: DataFrame): Boolean = scans(df) == (0, 1)
+
+  /** A catalog over a fresh root, for the DML and ALTER the fixtures need. */
+  private def localCatalog(tag: String): (String, String) = {
+    val root = freshDir(tag)
+    val cat = s"graft_lake_$tag"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.CommitCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    (s"$cat.`default`", s"$root/default")
+  }
+
+  private def manifest(path: String) =
+    sources.CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** The local read of `path` under `p` returns exactly what Spark's own
+    * parquet scan of the committed files returns under `p`. */
+  private def assertLocalEqualsCommitted(path: String, p: String): Unit = {
+    val got = spark.read.format("graft-commit").option("path", path).load().where(p)
+    withClue(s"$p:\n${got.queryExecution.executedPlan}") {
+      assert(isLocal(got), "the read must be served locally")
+      assert(sortedRows(got) ==
+        sortedRows(sources.CommitSink.readCommitted(spark, path).where(p)))
+    }
+  }
+
+  test("local read: deletion vectors, _file/_pos and empty results match readCommitted") {
+    val (cat, dir) = localCatalog("local_dv")
+    fixture(1000).select($"id", $"score", $"tag").repartitionByRange(4, $"id")
+      .write.format("graft-commit").option("path", s"$dir/t").mode("overwrite").save()
+    spark.conf.set("spark.graft.commit.deleteMode", "merge-on-read")
+    try spark.sql(s"DELETE FROM $cat.t WHERE id >= 100 AND id < 110")
+    finally spark.conf.unset("spark.graft.commit.deleteMode")
+    val path = s"$dir/t"
+    assert(manifest(path).deletes.nonEmpty, "the DELETE must land as a vector")
+    Seq(s"id IN (${(95 until 120).mkString(", ")})", "id = 105", "id = 5000",
+      "tag = 'doc-7'", "id <=> 3 AND tag IS NOT NULL")
+      .foreach(assertLocalEqualsCommitted(path, _))
+    val read = spark.read.format("graft-commit").option("path", path).load()
+    assert(read.where("id = 105").collect().isEmpty && read.where("id = 5000").collect().isEmpty)
+    // _file/_pos: the local rows carry the positions the batch scan of the
+    // whole table stamps, vectors skipped
+    val meta = read.select($"_file", $"_pos", $"id")
+    val local = meta.where($"id".isin(95L until 120L: _*))
+    assert(isLocal(local))
+    val all = meta.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(isBatch(meta))
+    val want = all.filter(t => t._3 >= 95L && t._3 < 120L).toSet
+    assert(want.size == 15)
+    assert(local.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet == want)
+  }
+
+  test("local read: equality deletes and pre-rename files match readCommitted") {
+    val (cat, dir) = localCatalog("local_eq")
+    val path = s"$dir/t"
+    fixture(1000).select($"id", $"score", $"tag").repartitionByRange(4, $"id")
+      .write.format("graft-commit").option("path", path).mode("overwrite").save()
+    spark.sql(s"ALTER TABLE $cat.t RENAME COLUMN tag TO label")
+    spark.range(100L, 110L).select($"id", lit(-1.0).as("score"), lit("up").as("label"))
+      .write.format("graft-commit").option("path", path)
+      .option("upsertKeys", "id").mode("append").save()
+    val m = manifest(path)
+    assert(m.eqDeletes.nonEmpty && m.schemaLog.nonEmpty,
+      "the upsert must land as an equality delete over pre-rename files")
+    Seq(s"id IN (${(95 until 120).mkString(", ")})", "id IN (3, 7, 11)", "id = 105",
+      "label = 'doc-7'", "label = 'up'", "label IN ('doc-98', 'up') AND id < 500")
+      .foreach(assertLocalEqualsCommitted(path, _))
+  }
+
+  test("local read: over the byte bound, unfiltered, range, change-feed and CBO reads stay batch") {
+    val dir = freshDir("local_bound")
+    // two range files of ~0.6 MiB of incompressible text: one fits the
+    // bound, both together are just over it
+    spark.range(10000L).select($"id", sha2($"id".cast("string"), 512).as("h"))
+      .repartitionByRange(2, $"id")
+      .write.format("graft-commit").option("path", dir).mode("overwrite").save()
+    val bytes = manifest(dir).stats.values.map(sources.CommitSink.FileStat.decode(_).bytes)
+    val bound = sources.CommitLocalScan.MaxBytes
+    assert(bytes.size == 2 && bytes.forall(_ <= bound) && bytes.sum > bound &&
+      bytes.sum < 2 * bound, s"file bytes $bytes against the bound $bound")
+    val read = spark.read.format("graft-commit").option("path", dir).load()
+    val one = read.where($"id".isin(1L, 2L, 3L))
+    assert(isLocal(one) && one.collect().length == 3)
+    val both = read.where($"id".isin(1L, 9999L))
+    assert(isBatch(both) && both.collect().length == 2)
+    // unfiltered: the read that feeds joins, runtime filtering and SPJ
+    val small = freshDir("local_unfiltered")
+    fixture(100).write.format("graft-commit").option("path", small).mode("overwrite").save()
+    val whole = spark.read.format("graft-commit").option("path", small).load()
+    assert(isBatch(whole) && whole.collect().length == 100)
+    // a range filter: what Spark infers on a join input from the other side
+    val range = whole.where($"id" >= 10L && $"id" < 20L)
+    assert(isBatch(range) && range.collect().length == 10)
+    // the change feed never absorbs
+    val feed = spark.read.format("graft-commit").option("path", small)
+      .option("readChangeFeed", true).load().where($"id" === 7L)
+    assert(isBatch(feed) && feed.collect().length == 1)
+    // a CBO session absorbs nothing: its Filter is what CBO prices
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    try {
+      val cbo = spark.read.format("graft-commit").option("path", small).load()
+        .where($"id" === 7L)
+      assert(isBatch(cbo) && cbo.collect().length == 1)
+    } finally spark.conf.unset("spark.sql.cbo.enabled")
+  }
+
+  test("local read: DML and stream scans stay batch and micro-batch scans") {
+    import org.apache.spark.sql.execution.{CommandResultExec, LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case x => Seq(x)
+    }
+    val (cat, dir) = localCatalog("local_dml")
+    val path = s"$dir/t"
+    fixture(100).select($"id", $"score").write.format("graft-commit")
+      .option("path", path).mode("overwrite").save()
+    val upd = spark.sql(s"UPDATE $cat.t SET score = -1.0 WHERE id = 5")
+    val plan = nodes(upd.queryExecution.executedPlan)
+    assert(plan.exists {
+      case b: BatchScanExec => b.scan.isInstanceOf[sources.CommitScan]
+      case _ => false
+    }, plan.mkString("\n"))
+    assert(!plan.exists(_.isInstanceOf[LocalTableScanExec]), plan.mkString("\n"))
+    assert(sources.CommitSink.readCommitted(spark, path).where($"score" === -1.0)
+      .collect().map(_.getLong(0)).toSeq == Seq(5L))
+    // a filtered stream reads through the micro-batch scan
+    val q = spark.readStream.format("graft-commit").option("path", path).load()
+      .where($"id".isin(1L, 2L, 3L)).writeStream.format("memory").queryName("lake_local_stream")
+      .option("checkpointLocation", freshDir("local_stream_ck")).start()
+    try {
+      q.processAllAvailable()
+      val exec = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      assert(exec.collect {
+        case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => m
+      }.size == 1, exec)
+      assert(exec.collect { case l: LocalTableScanExec => l }.isEmpty, exec)
+    } finally q.stop()
+    assert(spark.table("lake_local_stream").count() == 3L)
   }
 
   // --- o19: compaction + snapshot expiry ------------------------------------

@@ -136,11 +136,7 @@ class Round13Spec extends AnyFunSuite {
       .filter($"day" < to_date(lit("2024-01-05"))) // days 0..3 → ids < 40: 1 of 4 files
       .select($"id", $"day")
     assert(df.count() == 40)
-    val scans = df.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
-    }
-    assert(scans.nonEmpty)
-    val desc = scans.head.scan.description()
+    val desc = sources.CommitScan.of(df).description()
     assert(desc.contains("files: 1/4"), s"date zone map must prune 3 of 4 files: $desc")
     assert(desc.contains("columns: 2/4"), s"projection must reach the scan: $desc")
   }
@@ -547,16 +543,12 @@ class Round13Spec extends AnyFunSuite {
     val df = spark.read.format("graft-commit").option("path", path).load()
     val cnt = df.agg(count(lit(1)).as("n"))
     assert(cnt.head().getLong(0) == 990L)
-    val cntScans = cnt.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s }
-    assert(cntScans.exists(_.scan.isInstanceOf[sources.CommitMetaAggScan]),
+    assert(sources.CommitScan.of(cnt).isInstanceOf[sources.CommitMetaAggScan],
       "COUNT over vectors is still manifest arithmetic: physical minus ndel")
     val mx = df.agg(max($"id").as("mx"))
     assert(mx.head().getLong(0) == 989L,
       "MAX must NOT be answered from physical zone maps (the deleted rows held the max)")
-    val mxScans = mx.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s }
-    assert(!mxScans.exists(_.scan.isInstanceOf[sources.CommitMetaAggScan]),
+    assert(!sources.CommitScan.of(mx).isInstanceOf[sources.CommitMetaAggScan],
       "MIN/MAX declines the metadata path when vectors exist")
   }
 
@@ -854,9 +846,7 @@ class Round13Spec extends AnyFunSuite {
     val pruned = spark.read.format("graft-commit").option("path", dir).load()
       .filter($"id" >= 100L).select($"id")
     pruned.collect()
-    val desc = pruned.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
-    }.head.scan.description()
+    val desc = sources.CommitScan.of(pruned).description()
     assert(desc.contains("files: 1/2"), s"id ranges still prune: $desc")
   }
 
@@ -883,9 +873,7 @@ class Round13Spec extends AnyFunSuite {
     val box = spark.read.format("graft-commit").option("path", dir).load()
       .filter($"x" >= 64 && $"x" < 96 && $"y" >= 128 && $"y" < 160)
     assert(box.count() == 32L * 32L)
-    val desc = box.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
-    }.head.scan.description()
+    val desc = sources.CommitScan.of(box).description()
     val m = "files: (\\d+)/(\\d+)".r.findFirstMatchIn(desc).get
     assert(m.group(2).toInt == 16, desc)
     assert(m.group(1).toInt <= 4,

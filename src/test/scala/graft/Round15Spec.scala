@@ -72,11 +72,6 @@ class Round15Spec extends AnyFunSuite {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.length
-    }.getOrElse(fail("no BatchScanExec in plan"))
 
   test("changeFeedWithRewrites: caught-up poller (from = newest+1) gets an empty CDF frame") {
     val dir = freshDir("feed_caught_up")
@@ -191,7 +186,7 @@ class Round15Spec extends AnyFunSuite {
       .write.format("graft-commit").option("path", dir).mode("overwrite").save()
     val narrow = $"id" >= 300L && $"id" < 340L
     def read() = spark.read.format("graft-commit").option("path", dir).load()
-    assert(plannedFiles(read().filter(narrow)) == 8,
+    assert(sources.CommitScan.plannedPartitions(read().filter(narrow)).size == 8,
       "hash layout: zone maps prune nothing")
     val rewritten = sources.CommitSink.compactAndCluster(spark, dir, 4, Seq("id"))
     assert(rewritten.size == 8, "full-table cluster rewrites every file")
@@ -202,14 +197,14 @@ class Round15Spec extends AnyFunSuite {
       case Seq((_, aHi), (bLo, _)) => aHi < bLo
       case _ => true
     }, s"clustered zones must be pairwise disjoint: $ranges")
-    assert(plannedFiles(read().filter(narrow)) == 1,
+    assert(sources.CommitScan.plannedPartitions(read().filter(narrow)).size == 1,
       "the same narrow range now plans exactly one file")
     // content untouched, old layout time-travel readable
     assert(read().count() == 1000L &&
       read().agg(sum($"id")).head().getLong(0) == 999L * 1000L / 2)
     val v0 = spark.read.format("graft-commit").option("path", dir)
       .option("versionAsOf", 0).load()
-    assert(v0.count() == 1000L && plannedFiles(v0.filter(narrow)) == 8,
+    assert(v0.count() == 1000L && sources.CommitScan.plannedPartitions(v0.filter(narrow)).size == 8,
       "version 0 keeps the pre-cluster layout")
     // refusals: unknown column, unknown selected file, partitioned table
     intercept[IllegalArgumentException] {
@@ -305,7 +300,7 @@ class Round15Spec extends AnyFunSuite {
     }
     def read() = spark.read.format("graft-commit").option("path", dir).load()
     val box = read().filter($"x" < 16L && $"y" < 16L)
-    assert(plannedFiles(box) < 4, "a quarter box must prune z-files")
+    assert(sources.CommitScan.plannedPartitions(box).size < 4, "a quarter box must prune z-files")
     assert(box.count() == 256L)
     assert(read().agg(sum($"payload")).head().getLong(0) == 4095L * 4096L / 2)
     // helper z-value column never lands in the table
@@ -324,7 +319,7 @@ class Round15Spec extends AnyFunSuite {
     assert(m0.files.size == 4, "one file per key before the rewrite")
     def read() = spark.read.format("graft-commit").option("path", dir).load()
     // within a key, a narrow t-range predicate cannot prune anything
-    assert(plannedFiles(read().filter($"k" === 2L && $"t" >= 100L && $"t" < 140L)) == 1)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"k" === 2L && $"t" >= 100L && $"t" < 140L)).size == 1)
     val rewritten = sources.CommitSink
       .compactAndCluster(spark, dir, 8, Seq("t"))
     assert(rewritten.size == 4)
@@ -350,7 +345,7 @@ class Round15Spec extends AnyFunSuite {
       .sortBy(_._1).head
     val (lo, hi) = (keyed._1 + (keyed._2 - keyed._1) / 4,
       keyed._1 + (keyed._2 - keyed._1) / 2)
-    assert(plannedFiles(read().filter($"k" === 2L && $"t" >= lo && $"t" < hi)) == 1)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"k" === 2L && $"t" >= lo && $"t" < hi)).size == 1)
     // content exact, storage-partitioned join still exchange-free
     assert(read().count() == 1600L &&
       read().agg(sum($"t")).head().getLong(0) ==
@@ -524,8 +519,8 @@ class Round15Spec extends AnyFunSuite {
       .write.format("graft-commit").option("path", dir).mode("overwrite").save()
     def read() = spark.read.format("graft-commit").option("path", dir).load()
     // without the index: an in-range point predicate opens every file
-    assert(plannedFiles(read().filter($"id" === 246L)) == 8)
-    assert(plannedFiles(read().filter($"id" === 555L)) == 8,
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 246L)).size == 8)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 555L)).size == 8,
       "an absent-but-in-range key is invisible to zone maps")
     val indexed = sources.CommitSink
       .buildBloomIndex(spark, dir, Seq("id", "s"), fpp = 0.01,
@@ -534,37 +529,37 @@ class Round15Spec extends AnyFunSuite {
     val m = manifest(dir)
     assert(m.blooms.size == 8 && m.blooms.values.forall(_.keySet == Set("id", "s")))
     // present key: planned somewhere, row found (long and string columns)
-    assert(plannedFiles(read().filter($"id" === 246L)) >= 1)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 246L)).size >= 1)
     assert(read().filter($"id" === 246L).count() == 1L)
     assert(read().filter($"s" === "name-1554").count() == 1L)
     // absent in-range key: nearly everything prunes (<= 2 allows the
     // documented false positives)
-    assert(plannedFiles(read().filter($"id" === 555L)) <= 2)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 555L)).size <= 2)
     assert(read().filter($"id" === 555L).count() == 0L)
-    assert(plannedFiles(read().filter($"s" === "name-555")) <= 2)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"s" === "name-555")).size <= 2)
     // IN with only absent keys prunes; mixed keeps the present key's file
-    assert(plannedFiles(read().filter($"id".isin(555L, 777L))) <= 3)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id".isin(555L, 777L))).size <= 3)
     assert(read().filter($"id".isin(246L, 555L)).count() == 1L)
     // a range predicate never consults the bloom (zone maps' job)
     assert(read().filter($"id" >= 200L && $"id" < 240L).count() == 20L)
     // an appended (un-indexed) file NEVER prunes: an absent key inside
     // ONLY its zone plans exactly that file, and the residual keeps the
     // answer right
-    assert(plannedFiles(read().filter($"id" === 3001L)) == 0) // outside all zones
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 3001L)).size == 0) // outside all zones
     spark.range(1500L, 1550L)
       .select(($"id" * 2).as("id"),
         concat(lit("name-"), $"id" * 2).as("s"), ($"id" % 9).as("g"))
       .coalesce(1)
       .write.format("graft-commit").option("path", dir).mode("append").save()
-    assert(plannedFiles(read().filter($"id" === 3001L)) == 1,
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 3001L)).size == 1,
       "the un-indexed appended file must not bloom-prune")
     assert(read().filter($"id" === 3001L).count() == 0L)
     assert(read().filter($"id" === 3000L).count() == 1L)
     // a REBUILD covers the appended file too (entries merge per file/col)
     sources.CommitSink.buildBloomIndex(spark, dir, Seq("id"),
       fpp = 0.01, expectedItemsPerFile = 10000L)
-    assert(plannedFiles(read().filter($"id" === 3001L)) <= 1)
-    assert(plannedFiles(read().filter($"id" === 555L)) <= 2)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 3001L)).size <= 1)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 555L)).size <= 2)
   }
 
   test("bloom index: sidecars are GC-protected, die on rewrite, refusal matrix") {
@@ -582,14 +577,14 @@ class Round15Spec extends AnyFunSuite {
     sources.CommitSink.expireVersions(dir, keepLast = 1)
     sources.CommitSink.removeOrphanFiles(dir, graceMs = 0L)
     def read() = spark.read.format("graft-commit").option("path", dir).load()
-    assert(plannedFiles(read().filter($"id" === 399L)) <= 1,
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 399L)).size <= 1,
       "blooms still load (sidecars survived the GC pair)")
     assert(read().count() == 400L)
     // a full rewrite retires the index with the files it described
     sources.CommitSink.compact(spark, dir, 2)
     assert(manifest(dir).blooms.isEmpty,
       "a rewritten file's bloom dies with it")
-    assert(plannedFiles(read().filter($"id" === 399L)) == 2,
+    assert(sources.CommitScan.plannedPartitions(read().filter($"id" === 399L)).size == 2,
       "un-indexed files never prune on equality")
     // refusals: unknown column, non-indexable (double) type
     intercept[RuntimeException] {

@@ -51,11 +51,6 @@ class Round16Spec extends AnyFunSuite {
   private def fileStat(path: String, f: String) =
     sources.CommitSink.FileStat.decode(manifest(path).stats(f))
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.length
-    }.getOrElse(fail("no BatchScanExec in plan"))
 
   private def withSpj[A](body: => A): A = {
     val conf = spark.conf
@@ -136,7 +131,7 @@ class Round16Spec extends AnyFunSuite {
     }
     // point prune: an equality predicate on the key plans ONE bucket group
     val probe = spark.table(s"$cat.`default`.fact").filter($"user_id" === 123L)
-    assert(plannedFiles(probe) == 1,
+    assert(sources.CommitScan.plannedPartitions(probe).size == 1,
       "a key point-lookup must plan exactly the key's bucket group")
     assert(probe.count() ==
       (0L until 4000L).count(i => i % 997L == 123L).toLong)
@@ -159,7 +154,7 @@ class Round16Spec extends AnyFunSuite {
       "stale identity keys must be stripped — they are values of the OLD spec")
     // mixed layout: per-file planning (no grouped partitions)
     def read() = spark.read.format("graft-commit").option("path", dir).load()
-    assert(plannedFiles(read()) == after.files.size)
+    assert(sources.CommitScan.plannedPartitions(read()).size == after.files.size)
     // appends must use the NEW layout on the path surface
     val e = intercept[Exception] {
       spark.range(10L).select(($"id" % 3).as("k"), $"id".as("v"))
@@ -173,13 +168,13 @@ class Round16Spec extends AnyFunSuite {
     val m2 = manifest(dir)
     assert(m2.files.forall(f => fileStat(dir, f).pk.exists(k => k >= 0 && k < 4)))
     val groups = m2.files.map(f => fileStat(dir, f).pk.get).distinct.size
-    assert(plannedFiles(read()) == groups,
+    assert(sources.CommitScan.plannedPartitions(read()).size == groups,
       "after migration the scan plans one partition per bucket group")
     // content identical through the whole evolution
     assert(read().agg(sum($"v")).head().getLong(0) == (0L until 900L).sum)
     // after migration a point lookup on the bucket source column prunes
     // to the key's single bucket group (transform predicate projection)
-    assert(plannedFiles(read().filter($"v" === 123L)) == 1)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"v" === 123L)).size == 1)
     val _ = (cat, root) // catalog retained for scratch hygiene symmetry
   }
 
@@ -322,7 +317,7 @@ class Round16Spec extends AnyFunSuite {
         s"$f rows outside its band: [${r.min}, ${r.max}] vs pk ${st.pk.get}")
     }
     def read() = spark.read.format("graft-commit").option("path", dir).load()
-    assert(plannedFiles(read().filter($"v" === 555L)) == 1)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"v" === 555L)).size == 1)
     assert(read().agg(sum($"v")).head().getLong(0) == (0L until 1000L).sum)
     // days(ts) through the catalog: each file one epoch day
     val (cat, root) = scopedCat("days")
@@ -343,7 +338,7 @@ class Round16Spec extends AnyFunSuite {
     val oneDay = spark.table(s"$cat.`default`.ev")
       .filter($"ts" >= expr("timestamp_ntz'2026-01-03 00:00:00'") &&
         $"ts" < expr("timestamp_ntz'2026-01-04 00:00:00'"))
-    assert(plannedFiles(oneDay) == md.files.count(f =>
+    assert(sources.CommitScan.plannedPartitions(oneDay).size == md.files.count(f =>
       fileStat(s"$root/default/ev", f).pk.contains(epochDay0 + 2)))
     assert(oneDay.count() == 100L)
     // refusal: days on a non-temporal column
@@ -517,12 +512,11 @@ class Round16Spec extends AnyFunSuite {
     assert(c2.rootReads.get() == 0 && c2.versionReads.get() == 1,
       s"VERSION AS OF read the root ${c2.rootReads.get()}x, " +
         s"version files ${c2.versionReads.get()}x")
-    // a path read: the provider's inferSchema and getTable build one
-    // table instance each
+    // a path read: getTable reuses the table instance inferSchema loaded
     val (byPath, c3) = counted(spark.read.format("graft-commit")
       .option("path", path).load().filter($"id" === 142L).select($"v").collect())
     assert(byPath == Seq(426L))
-    assert(c3.rootReads.get() <= 2, s"path read read the root ${c3.rootReads.get()}x")
+    assert(c3.rootReads.get() == 1, s"path read read the root ${c3.rootReads.get()}x")
   }
 
   test("manifest list: 120k files — small root, selective planning parses ONE group") {

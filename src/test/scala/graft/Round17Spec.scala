@@ -51,11 +51,6 @@ class Round17Spec extends AnyFunSuite {
     (cat, root)
   }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.length
-    }.getOrElse(fail("no BatchScanExec in plan"))
 
   private def meta(path: String, kind: String) =
     spark.read.format("graft-commit").option("path", path)
@@ -599,7 +594,7 @@ class Round17Spec extends AnyFunSuite {
     assert(nDays >= 4 && m.files.size <= nDays * 2)
     // planning granularity: one partition per composite group
     def read() = spark.read.format("graft-commit").option("path", path).load()
-    assert(plannedFiles(read()) == composites.size)
+    assert(sources.CommitScan.plannedPartitions(read()).size == composites.size)
     // STRIP every zone entry — both dimensions must prune by key alone
     val stripped = m.stats.map { case (f, e) =>
       val st = sources.CommitSink.FileStat.decode(e)
@@ -616,12 +611,12 @@ class Round17Spec extends AnyFunSuite {
     val day2End = java.time.LocalDateTime.of(2001, 1, 2, 23, 59, 59)
     val day2Key = day2.toLocalDate.toEpochDay
     val day2Files = stats.count(_.pks.head == day2Key)
-    assert(plannedFiles(read().filter($"ts" >= lit(day2) && $"ts" <= lit(day2End)))
+    assert(sources.CommitScan.plannedPartitions(read().filter($"ts" >= lit(day2) && $"ts" <= lit(day2End))).size
       == day2Files, "a one-day range plans that day's bucket files by KEY alone")
     val b7 = sources.BucketFunction.bucketId(2, 7L).toLong
     val pointFiles = stats.count(st => st.pks.head == day2Key && st.pks(1) == b7)
-    assert(plannedFiles(read().filter($"ts" >= lit(day2) && $"ts" <= lit(day2End) &&
-        $"k" === 7L)) == pointFiles && pointFiles == 1,
+    assert(sources.CommitScan.plannedPartitions(read().filter($"ts" >= lit(day2) && $"ts" <= lit(day2End) &&
+        $"k" === 7L)).size == pointFiles && pointFiles == 1,
       "day range + key point plans exactly the (day, bucket) file")
     // content intact through the composite layout
     assert(spark.sql(s"SELECT sum(v) FROM $cat.`default`.t").head().getLong(0)
@@ -783,7 +778,7 @@ class Round17Spec extends AnyFunSuite {
       "GROUP BY sensor HAVING count(*) > 1").collect()
     assert(snap.isEmpty, s"upsert must keep one row per key: ${snap.mkString(",")}")
     // grouped planning survives: the scan plans bucket GROUPS, not files
-    val planned = plannedFiles(spark.sql(s"SELECT * FROM $cat.`default`.state"))
+    val planned = sources.CommitScan.plannedPartitions(spark.sql(s"SELECT * FROM $cat.`default`.state")).size
     assert(planned <= 8,
       s"bucket table must plan at most 8 key groups, planned $planned")
   }

@@ -56,11 +56,6 @@ class Round18Spec extends AnyFunSuite {
     (cat, root)
   }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.length
-    }.getOrElse(fail("no BatchScanExec in plan"))
 
   private def msgChain(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -93,7 +88,7 @@ class Round18Spec extends AnyFunSuite {
     // old bytes surface under the new name
     assert(read().agg(sum($"row_id")).head().getLong(0) == (0L until 1000L).sum)
     // zone maps remap: the 4 range files still prune on the new name
-    assert(plannedFiles(read().filter($"row_id" >= 0L && $"row_id" < 100L)) == 1)
+    assert(sources.CommitScan.plannedPartitions(read().filter($"row_id" >= 0L && $"row_id" < 100L)).size == 1)
     // column pruning still reaches the renamed chunk (projection-only read)
     assert(read().select($"row_id").filter($"row_id" === 7L).count() == 1L)
     // time travel keeps each version's own shape
@@ -459,14 +454,11 @@ class Round18Spec extends AnyFunSuite {
     // (multi layouts plan one PARTITION per composite key, so count the
     // FILES inside the planned partitions, not the partitions)
     def plannedDataFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.collectFirst {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.map {
-            case p: sources.CommitFilesPartition => p.files.size
-            case p: sources.CommitKeyedFilesPartition => p.files.size
-            case _ => 0
-          }.sum
-      }.getOrElse(fail("no BatchScanExec in plan"))
+      sources.CommitScan.plannedPartitions(df).map {
+        case p: sources.CommitFilesPartition => p.files.size
+        case p: sources.CommitKeyedFilesPartition => p.files.size
+        case _ => 0
+      }.sum
     def read() = spark.read.format("graft-commit").option("path", path).load()
     val day = java.time.LocalDateTime.of(2003, 3, 1, 0, 0)
     val target = read().filter($"ts" >= lit(day) &&

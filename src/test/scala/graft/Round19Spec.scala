@@ -55,11 +55,6 @@ class Round19Spec extends AnyFunSuite {
     (cat, root)
   }
 
-  private def plannedFiles(df: DataFrame): Int =
-    df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputPartitions.length
-    }.getOrElse(fail("no BatchScanExec in plan"))
 
   private def msgChain(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -384,10 +379,10 @@ class Round19Spec extends AnyFunSuite {
     // a present value survives the bloom — an empty (mis-read) sidecar
     // would prune EVERYTHING, so this is the mis-read detector
     assert(rd.filter($"key" === 334L).count() == 1L)
-    assert(plannedFiles(rd.filter($"key" === 334L)) >= 1)
+    assert(sources.CommitScan.plannedPartitions(rd.filter($"key" === 334L)).size >= 1)
     // an absent in-range odd value prunes through the current name
     // (fpp 0.01: allow one false positive, never both files)
-    assert(plannedFiles(rd.filter($"key" === 333L)) <= 1)
+    assert(sources.CommitScan.plannedPartitions(rd.filter($"key" === 333L)).size <= 1)
   }
 
   // --- partition-source rename via spec rewrite (r19) ------------------------
@@ -407,14 +402,14 @@ class Round19Spec extends AnyFunSuite {
     def rd = spark.read.format("graft-commit").option("path", path).load()
     // point predicate on the NEW name stays key-granular (the per-file
     // pk values are computed keys — no byte was rewritten)
-    assert(plannedFiles(rd.filter($"shard" === 2L)) == 1)
+    assert(sources.CommitScan.plannedPartitions(rd.filter($"shard" === 2L)).size == 1)
     assert(rd.filter($"shard" === 2L).count() == 100L)
     // appends under the new name keep the layout: still ONE planned
     // group for the key (grouped planning counts groups, not files)
     spark.range(400L, 500L).select(($"id" % 4).as("shard"), $"id".as("v"))
       .createOrReplaceTempView("r19_ps_src2")
     spark.sql(s"INSERT INTO $cat.`default`.t SELECT * FROM r19_ps_src2")
-    assert(plannedFiles(rd.filter($"shard" === 2L)) == 1)
+    assert(sources.CommitScan.plannedPartitions(rd.filter($"shard" === 2L)).size == 1)
     assert(rd.filter($"shard" === 2L).count() == 125L)
     // $partitions keys by value; every file still keyed (no '(unknown)')
     val parts = spark.read.format("graft-commit").option("path", path)
@@ -441,8 +436,8 @@ class Round19Spec extends AnyFunSuite {
       manifest(p2).partCol.toString)
     def rd2 = spark.read.format("graft-commit").option("path", p2).load()
     assert(rd2.count() == 200L)
-    assert(plannedFiles(rd2.filter(
-      $"event_ts" < lit("1970-01-02").cast("timestamp_ntz"))) == 1)
+    assert(sources.CommitScan.plannedPartitions(rd2.filter(
+      $"event_ts" < lit("1970-01-02").cast("timestamp_ntz"))).size == 1)
     // DROP of a spec source still refuses (r18 matrix, re-pointed here)
     val e = intercept[Exception](
       spark.sql(s"ALTER TABLE $cat.`default`.e DROP COLUMN event_ts"))
@@ -468,7 +463,7 @@ class Round19Spec extends AnyFunSuite {
     CommitSink.buildBloomIndex(spark, pb, Seq("k"))
     def rd = spark.read.format("graft-commit").option("path", pb).load()
     assert(rd.filter($"k" === 778L).count() == 1L)
-    assert(plannedFiles(rd.filter($"k" === 777L)) <= 1,
+    assert(sources.CommitScan.plannedPartitions(rd.filter($"k" === 777L)).size <= 1,
       "an absent odd key must bloom-prune (fpp tolerance: one file)")
     // a legacy JSON-lines table: both passes refuse it with the
     // retired-payload error instead of decoding its lines as parquet,

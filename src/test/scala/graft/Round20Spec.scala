@@ -128,8 +128,7 @@ class Round20Spec extends AnyFunSuite {
 
   test("point lookups VERSION AS OF compile no code per key: the filter is absorbed") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    import org.apache.spark.sql.execution.FilterExec
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec}
     val root = freshDir("point_lookup")
     spark.conf.set("spark.sql.catalog.graft_r20_pt", "graft.sources.CommitCatalog")
     spark.conf.set("spark.sql.catalog.graft_r20_pt.root", root)
@@ -151,9 +150,47 @@ class Round20Spec extends AnyFunSuite {
     // generated classes under different context classloaders)
     assert(compiles == 0L, s"$compiles codegen compiles across ${keys.size} lookups")
     val plan = lookup(11L).queryExecution.executedPlan
-    assert(plan.collect { case s: BatchScanExec => s }.size == 1)
+    assert(plan.collect { case s: LocalTableScanExec => s }.size == 1)
     assert(plan.collect { case f: FilterExec => f }.isEmpty,
       s"no Filter may remain above the scan:\n$plan")
+  }
+
+  test("point lookups VERSION AS OF run no Spark job: the read is served on the driver") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    val root = freshDir("local_lookup")
+    spark.conf.set("spark.sql.catalog.graft_r20_local", "graft.sources.CommitCatalog")
+    spark.conf.set("spark.sql.catalog.graft_r20_local.root", root)
+    spark.range(2000L).selectExpr("id", "concat('n-', id) AS name",
+        "id % 7 AS position", "CAST(id * 3 AS DOUBLE) AS salary")
+      .repartitionByRange(4, $"id")
+      .write.format("graft-commit").option("path", s"$root/default/cur")
+      .mode("overwrite").save()
+    def sql(where: String): DataFrame = spark.sql(
+      "SELECT id, name, position, salary FROM graft_r20_local.`default`.cur " +
+        s"VERSION AS OF 0$where")
+    val sc = spark.sparkContext
+    def inGroup[A](group: String)(body: => A): A = {
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+    }
+    val keys = (1 to 20).map(_ * 97L)
+    val got = inGroup("r20-local-lookups") {
+      keys.map(k => sql(s" WHERE id = $k").collect().map(_.getString(1)).toSeq)
+    }
+    assert(got == keys.map(k => Seq(s"n-$k")))
+    // control: an unfiltered read of the same table runs a job. Job
+    // events reach the status tracker in order, so once the control's
+    // job shows, any lookup job would have shown too.
+    assert(inGroup("r20-local-control")(sql("").collect()).length == 2000)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup("r20-local-control").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup("r20-local-control").nonEmpty)
+    val jobs = sc.statusTracker.getJobIdsForGroup("r20-local-lookups")
+    assert(jobs.isEmpty, s"${jobs.length} jobs across ${keys.size} lookups")
+    val plan = sql(" WHERE id = 11").queryExecution.executedPlan
+    assert(plan.collect { case s: LocalTableScanExec => s }.size == 1, plan)
+    assert(plan.children.isEmpty, s"the local scan is the whole plan:\n$plan")
   }
 
   // --- r19 measured-negative reverts stay retired (VERDICT item 7) --------
