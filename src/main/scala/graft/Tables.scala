@@ -12,6 +12,10 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
+  /** Files below this size never fan out under `graft.scan.repartition`:
+    * 32 KB is sized to catch exactly the key-cardinality dims. */
+  private val RepartitionMinBytes = 32L * 1024
+
   /** Local-mode scan parallelism knob. The driver's testdata is one
     * parquet file with ONE row group per table, so a scan — and anything
     * cached from it — is a single partition and every downstream narrow
@@ -27,15 +31,12 @@ object Tables {
     // dimension (region/nation/supplier — ≤ tens of KB at every SF) out
     // to N partitions buys no parallelism and taxes every downstream
     // stage of every query that touches it with N tasks of scheduling
-    // floor. Tables under `graft.scan.repartition.minBytes` (default
-    // 32 KB — sized to catch exactly the key-cardinality dims) keep
-    // their natural single-row-group scan; real corpus/fact tables
-    // still fan out to all cores.
-    val minBytes = spark.conf.getOption("graft.scan.repartition.minBytes")
-      .map(_.toLong).getOrElse(32L * 1024)
+    // floor. Tables under [[RepartitionMinBytes]] keep their natural
+    // single-row-group scan; real corpus/fact tables still fan out to
+    // all cores.
     val small =
       try java.nio.file.Files.size(
-        java.nio.file.Paths.get(dir, s"$name.parquet")) < minBytes
+        java.nio.file.Paths.get(dir, s"$name.parquet")) < RepartitionMinBytes
       catch { case _: Exception => false }
     if (n > 0 && !small) df.repartition(n) else df
   }

@@ -54,25 +54,20 @@ object Curation {
       .select($"doc_id", $"text", $"n_tokens", $"quality", $"lang")
   }
 
-  /** p01: the chunk manifest of the curated corpus. The memoized value
-    * is the MATERIALIZED manifest (eager localCheckpoint), not a plan:
-    * the manifest is chunk-cardinality (corpus tokens / 512 rows — tiny
-    * relative to the corpus at every scale), so pinning its rows makes
-    * every later call O(manifest) regardless of what the session's
-    * storage-eviction pressure did to the pipeline caches in between —
-    * the r14 bench regression was exactly that: pass 2 re-ran the whole
-    * curation because the LRU had evicted the intermediate caches by
-    * the time the second pass got back here. The pipeline caches are
-    * RELEASED after the checkpoint lands (they exist only to keep the
-    * one materialization from computing the dedup twice), so p01 leaves
-    * no storage pinned for the rest of the battery. */
+  /** p01: the chunk manifest of the curated corpus, returned
+    * CHECKPOINTED (eager localCheckpoint): the manifest is
+    * chunk-cardinality (corpus tokens / 512 rows — tiny relative to the
+    * corpus at every scale), and the curated-docs cache is RELEASED
+    * once the checkpoint lands (it exists only to keep the one
+    * materialization from computing the dedup twice), so p01 leaves no
+    * storage pinned for the rest of the battery. */
   def p01CurateCorpus(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoDf(spark, dir, "p01:curate") {
+      Dedup.checkpointed {
     import spark.implicits._
     // consumed twice (chunk assignment + lang join): cache, or the whole
     // dedup pipeline behind curatedDocs runs twice
     val docs = curatedDocs(spark, dir).cache()
-    val manifest = TextAnalysis
+    TextAnalysis
       .assignChunks(docs.select($"doc_id", $"n_tokens"), ChunkBudget)
       .join(docs.select($"doc_id", $"lang"), "doc_id")
       .groupBy($"chunk_id")
@@ -80,10 +75,7 @@ object Curation {
            sum($"n_tokens").as("n_tokens"),
            min($"doc_id").as("first_doc"),
            max($"doc_id").as("last_doc"),
-           array_join(array_sort(collect_set($"lang")), ",").as("langs"))
-      .localCheckpoint(true)
-    docs.unpersist()
-    manifest
+           array_join(array_sort(collect_set($"lang")), ",").as("langs")) -> Seq(docs)
   }
 
   /** p11: temperature-scaled mixture weights — the multilingual sampling
@@ -393,8 +385,7 @@ object Curation {
     * division each — engine-exact); the funnel itself is ONE global
     * 5-counter aggregate, so the whole operator is a single scan with a
     * scalar reduce, at any corpus size. */
-  def p05FilterFunnel(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoMaterialized(spark, dir, "p05:funnel") {
+  def p05FilterFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val toks = TextAnalysis.tokens($"text")
     val fstop = array(lit("a"), lit("the"), lit("value"))
@@ -426,7 +417,7 @@ object Curation {
              3, 'distinct_ratio', s2, s3,
              4, 'stopwords',      s3, s4,
              5, 'repetition',     s4, s5) AS (stage, rule, n_in, n_out)"""))
-      .withColumn("n_rejected", $"n_in" - $"n_out") -> Nil
+      .withColumn("n_rejected", $"n_in" - $"n_out")
   }
 
   /** p06: the one-row dataset card — corpus-level totals a data release

@@ -104,11 +104,13 @@ object Dedup {
   def aCoef(i: Int): Long = 37L + 101L * i
   def bCoef(i: Int): Long = 17L + 997L * i
 
+  /** The K minhash aggregates min_0..min_{K-1} over a `sid` column. */
+  private def minHashes: Seq[Column] =
+    (0 until K).map(i => min((col("sid") * aCoef(i) + bCoef(i)) % P).as(s"min_$i"))
+
   /** Per-doc minhash signature columns min_0..min_{K-1}. */
   def signatures(shWithIds: DataFrame): DataFrame =
-    shWithIds.groupBy(col("doc_id")).agg(
-      min((col("sid") * aCoef(0) + bCoef(0)) % P).as("min_0"),
-      (1 until K).map(i => min((col("sid") * aCoef(i) + bCoef(i)) % P).as(s"min_$i")): _*)
+    shWithIds.groupBy(col("doc_id")).agg(minHashes.head, minHashes.tail: _*)
 
   /** Verified near-pair set over an arbitrary corpus (dictionary shingle
     * ids — the oracle-portable hashing; see class note). Returns
@@ -118,7 +120,7 @@ object Dedup {
     minHashPairsDictStaged(corpus)._1
 
   /** [[minHashPairsDict]] exposing its pipeline caches, for callers that
-    * materialize the pair set ([[memoMaterialized]]) and release them. */
+    * materialize the pair set ([[checkpointed]]) and release them. */
   private def minHashPairsDictStaged(corpus: DataFrame): (DataFrame, Seq[DataFrame]) = {
     import corpus.sparkSession.implicits._
     val sh = shingles(corpus)
@@ -150,7 +152,7 @@ object Dedup {
   }
 
   def d02MinHashLsh(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d02:pairs") {
+      checkpointed {
     import spark.implicits._
     val (pairs, caches) =
       minHashPairsDictStaged(corpusWithCopies(Tables.documents(spark, dir)))
@@ -166,7 +168,7 @@ object Dedup {
     * (No oracle by construction — xxhash64 is Spark-specific; the spec
     * asserts it finds the same planted duplicates as d02.) */
   def minHashLshScale(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d06:pairs") {
+      checkpointed {
     import spark.implicits._
     val corpus = corpusWithCopies(Tables.documents(spark, dir))
     val ids = shingles(corpus)
@@ -218,7 +220,7 @@ object Dedup {
     * signatures vs the exploded build and exact pair parity with the
     * oracle-checked dictionary form (d02). */
   def d18MinHashMapSide(spark: SparkSession, dir: String): DataFrame =
-    memoMaterialized(spark, dir, "d18:pairs") {
+    checkpointed {
       minHashPairsMapSideStaged(corpusWithCopies(Tables.documents(spark, dir)))
     }
 
@@ -236,7 +238,7 @@ object Dedup {
     minHashPairsMapSideStaged(corpus, doCache)._1
 
   /** [[minHashPairsMapSide]] exposing its pipeline caches, for callers
-    * that materialize the pair set ([[memoMaterialized]]) and release
+    * that materialize the pair set ([[checkpointed]]) and release
     * them afterwards. */
   private[graft] def minHashPairsMapSideStaged(
       corpus: DataFrame, doCache: Boolean = true): (DataFrame, Seq[DataFrame]) = {
@@ -273,33 +275,24 @@ object Dedup {
   def dedupCorpus(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val corpus = corpusWithCopies(Tables.documents(spark, dir))
-    // The memoized value is the id-cardinality KEEP set (exact-canon
-    // min-ids minus verified near-dup drops) — never the cleaned corpus
-    // itself, which is corpus-sized and would violate the memo contract.
-    // Before r17 every call re-ran the md5 group-by + both joins even
-    // though d18's pair memo was materialized (9.2× best in the r16
-    // bench, both passes); now repeat calls pay one semi-join against
-    // the checkpointed keep ids.
-    val keepIds = memoMaterialized(spark, dir, "d07:keepIds") {
-      // near pairs via the zero-explode map-side LSH (d18): MinHashSpec
-      // pins its survivor pair set equal to the exploded minHashLshScale
-      // path, so the drops are identical — with no corpus-token-scale
-      // shuffle
-      val nearDrops = d18MinHashMapSide(spark, dir)
-        .select($"id2".as("doc_id")).distinct()
-      val exactKeeps = corpus
-        .groupBy(md5($"text".cast("binary")).as("h"))
-        .agg(min($"doc_id").as("doc_id"))
-        .select($"doc_id")
-      (exactKeeps.join(nearDrops, Seq("doc_id"), "left_anti"), Nil)
-    }
-    // final join stays LAZY over the corpus — the cleaned corpus is
-    // never pinned; doc_id is unique in corpusWithCopies, so the keep-id
-    // semi-join selects exactly the rows the canonical-row join did. No
-    // broadcast hint: keep ids are O(N) rows (8-byte ids, tiny to PIN
-    // but not guaranteed executor-memory-sized at 100 TB) — AQE
-    // broadcasts the checkpointed set when its stats allow and shuffles
-    // on doc_id otherwise.
+    // near pairs via the zero-explode map-side LSH (d18): MinHashSpec
+    // pins its survivor pair set equal to the exploded minHashLshScale
+    // path, so the drops are identical — with no corpus-token-scale
+    // shuffle
+    val nearDrops = d18MinHashMapSide(spark, dir)
+      .select($"id2".as("doc_id")).distinct()
+    // the id-cardinality KEEP set: exact-canon min ids minus the
+    // verified near-dup drops
+    val keepIds = corpus
+      .groupBy(md5($"text".cast("binary")).as("h"))
+      .agg(min($"doc_id").as("doc_id"))
+      .select($"doc_id")
+      .join(nearDrops, Seq("doc_id"), "left_anti")
+    // doc_id is unique in corpusWithCopies, so the keep-id semi-join
+    // selects exactly the rows the canonical-row join did. No broadcast
+    // hint: keep ids are O(N) rows (8-byte ids, but not guaranteed
+    // executor-memory-sized at 100 TB) — AQE broadcasts them when their
+    // stats allow and shuffles on doc_id otherwise.
     corpus.join(keepIds, Seq("doc_id"), "left_semi")
       .select($"doc_id", $"text")
   }
@@ -369,68 +362,27 @@ object Dedup {
       .distinct().cache()
     val labels = clusterLabels(corpus.select(col("doc_id")).distinct(), edges)
     val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
-    // the memo materializes this labeling (label-cardinality) and then
-    // releases `edges` — d19/d20 (keep-policy) read the pinned rows
+    // the caller checkpoints this labeling (label-cardinality) and then
+    // releases `edges`
     (labels.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size")),
       Seq(edges))
   }
 
-  /** Session-scoped labeling memo. The propagation in [[clusterLabels]]
-    * is EAGER — its convergence loop runs jobs at DataFrame-construction
-    * time — so Spark's CacheManager plan-matching (which round 6 relied
-    * on) cannot stop a second caller from re-running the whole
-    * propagation: the loop fires before the cached result is ever
-    * consulted. Memoizing the labeling per (session, corpus dir, hash
-    * family) makes it what it is in production: a cluster-assignment
-    * table materialized once per corpus, read by the keep-policy, the
-    * corpus dedup, and any downstream curation. Inputs are immutable
-    * parquet, so the memo can never go stale within a session.
-    *
-    * Keyed by the session OBJECT (reference equality — no
-    * identity-hash-collision risk), computed under a lock (two
-    * concurrent first callers must not both run the eager propagation),
-    * and entries of stopped sessions are evicted on every access so a
-    * dead session's DataFrames are never served and never pinned past
-    * the next memoized call. Shared by the cluster labelings (eager
-    * propagation) and the d17/d21 banding sweeps (three consumers per
-    * config over the same cached candidates — the memo makes repeat
-    * calls in one JVM return the already-cached 2-row report instead of
-    * re-running both band joins). Since r10 also shared (`private[ext]`)
-    * with Similarity's cache-carrying entries (s14/s18/s20), so repeated
-    * registry runs in one JVM REUSE their cached intermediates instead
-    * of stacking fresh unreachable cached relations per call. */
-  private val dfMemo =
-    scala.collection.mutable.HashMap.empty[(SparkSession, String, String), DataFrame]
-
-  private[ext] def memoDf(spark: SparkSession, dir: String, key: String)(
-      compute: => DataFrame): DataFrame = dfMemo.synchronized {
-    dfMemo.keys.filter(_._1.sparkContext.isStopped).toList
-      .foreach(dfMemo.remove)
-    dfMemo.getOrElseUpdate((spark, dir, key), compute)
+  /** Materializes a staged result: `localCheckpoint`s its rows
+    * eagerly, then releases the pipeline caches that existed only to
+    * keep that one materialization from recomputing shared stages.
+    * Every result staged this way is pair/cell/label/report-cardinality
+    * (tiny relative to the corpus at any scale), so the checkpoint pins
+    * O(result) rows and nothing of the pipeline; a plan over the caches
+    * would instead leave them pinned after the call returns. Nothing is
+    * kept between calls: every call computes from its inputs. */
+  private[ext] def checkpointed(staged: (DataFrame, Seq[DataFrame])): DataFrame = {
+    val (result, pipelineCaches) = staged
+    val out = result.localCheckpoint(true)
+    pipelineCaches.foreach(_.unpersist())
+    out
   }
-
-  /** [[memoDf]] with p01's materialization contract (Curation.scala): the
-    * memoized value is the MATERIALIZED result (eager `localCheckpoint`),
-    * never a plan over pipeline `.cache()`s, and those caches are RELEASED
-    * once the checkpoint lands. A memoized PLAN is only fast while the
-    * LRU keeps its pipeline caches alive — across a 280-entry battery the
-    * storage churn evicts them and every repeat action silently re-runs
-    * the band joins (the r14 p01 regression, generalized: r15's
-    * d21/d22/d24/d26 were the same disease). Every value memoized this
-    * way is pair/cell/label/report-cardinality — tiny relative to the
-    * corpus at any scale — so pinning its ROWS is O(result) forever while
-    * pinning nothing of the pipeline. `compute` returns the result plan
-    * plus the pipeline caches that existed only to keep the ONE
-    * materialization from recomputing shared stages. */
-  private[ext] def memoMaterialized(spark: SparkSession, dir: String, key: String)(
-      compute: => (DataFrame, Seq[DataFrame])): DataFrame =
-    memoDf(spark, dir, key) {
-      val (result, pipelineCaches) = compute
-      val out = result.localCheckpoint(true)
-      pipelineCaches.foreach(_.unpersist())
-      out
-    }
 
   /** One (band, bkey) row per input row per band as a SINGLE projection
     * (`posexplode` over the per-band key array) instead of a
@@ -448,7 +400,7 @@ object Dedup {
     * near-dup edges), plus the component size. Oracle replays the
     * propagation as a recursive reachability walk. */
   def d09DedupClusters(spark: SparkSession, dir: String): DataFrame =
-    memoMaterialized(spark, dir, "labels:dict") {
+    checkpointed {
       import spark.implicits._
       val corpus = corpusWithCopies(Tables.documents(spark, dir))
       clustersOver(corpus, d02MinHashLsh(spark, dir).select($"id1", $"id2"))
@@ -465,7 +417,7 @@ object Dedup {
     * reachability walk); ExtSpec additionally asserts cluster parity
     * with d09. */
   def dedupClustersScale(spark: SparkSession, dir: String): DataFrame =
-    memoMaterialized(spark, dir, "labels:scale") {
+    checkpointed {
       import spark.implicits._
       val corpus = corpusWithCopies(Tables.documents(spark, dir))
       clustersOver(corpus, d18MinHashMapSide(spark, dir).select($"id1", $"id2"))
@@ -479,7 +431,7 @@ object Dedup {
     * doubling, O(log diameter) rounds); each cluster is labeled by its
     * min vec_id, which is also the kept representative. */
   def d13SemanticClusters(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d13:clusters") {
+      checkpointed {
     import spark.implicits._
     val ids = Tables.embeddings(spark, dir).select($"vec_id")
     val nodes = ids
@@ -582,28 +534,22 @@ object Dedup {
     bitSums.select(col("doc_id"), simhash.as("simhash"))
   }
 
-  def d03SimHash(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d03:fp") {
+  def d03SimHash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // memoized MATERIALIZED (r16): d03's repeat cost used to ride d02's
-    // ids cache via CacheManager plan-matching; with that cache released
-    // by d02's materializing memo, d03 pins its own (doc-cardinality)
-    // fingerprint rows instead of re-running the dictionary sort
     val corpus = corpusWithCopies(Tables.documents(spark, dir))
     val sh = shingles(corpus)
-    (simHashFrom(sh.join(shingleDict(sh), "shingle").select($"doc_id", $"sid")), Nil)
+    simHashFrom(sh.join(shingleDict(sh), "shingle").select($"doc_id", $"sid"))
   }
 
   /** Scale-path SimHash: identical bit-vote pipeline to [[d03SimHash]] but
     * shingle ids from `xxhash64` — no dictionary, no global sort. Pure
     * map + one groupBy at any corpus size. (No oracle — xxhash64 is
     * Spark-specific; ExtSpec asserts it finds the planted structure.) */
-  def simHashScale(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d08:fp") {
+  def simHashScale(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val corpus = corpusWithCopies(Tables.documents(spark, dir))
-    (simHashFrom(shingles(corpus)
-      .select($"doc_id", pmod(xxhash64($"shingle"), lit(P)).as("sid"))), Nil)
+    simHashFrom(shingles(corpus)
+      .select($"doc_id", pmod(xxhash64($"shingle"), lit(P)).as("sid")))
   }
 
   /** d25: zero-explode SimHash — the plan [[simHashScale]] should become
@@ -614,16 +560,12 @@ object Dedup {
     * and the fingerprint pass has NO exchange at all (PlanSpec-guarded).
     * SimHashExprSpec pins bit-identical fingerprints vs the exploded
     * xxhash64 build. Rows-only (xxhash64 has no DuckDB twin). */
-  def d25SimHashMapSide(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d25:fp") {
+  def d25SimHashMapSide(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // memoized MATERIALIZED (r16): d25's repeat cost used to plan-match
-    // d18's shingle-array cache — released since the memo generalization
     val corpus = corpusWithCopies(Tables.documents(spark, dir))
-    (shingleArrays(corpus).filter(size($"shingles") > 0)
+    shingleArrays(corpus).filter(size($"shingles") > 0)
       .select($"doc_id",
-        graft.functions.SimHash.simhashSig($"shingles", SimBits, P).as("simhash")),
-      Nil)
+        graft.functions.SimHash.simhashSig($"shingles", SimBits, P).as("simhash"))
   }
 
   // --- d23: SimHash hamming near-dup (banded pairing) -------------------
@@ -690,16 +632,16 @@ object Dedup {
     * Round7Spec pins the planted structure and the brute-force
     * hamming≤3 completeness. */
   def d26SimHashNearDupScale(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d26:pairs") {
+      checkpointed {
     simHashPairsWideStaged(corpusWithCopies(Tables.documents(spark, dir)))
   }
 
   /** The zero-explode wide-fingerprint pair pipeline of
     * [[d26SimHashNearDupScale]], exposing its pipeline caches for the
-    * materializing memo. `doCache=false` exists only for plan-shape tests
+    * checkpointing caller. `doCache=false` exists only for plan-shape tests
     * (Round7Spec asserts the posexplode-only Generate guarantee on the
-    * uncached plan, which caching — let alone the memo's checkpoint —
-    * would hide). */
+    * uncached plan, which caching — let alone the checkpoint — would
+    * hide). */
   private[graft] def simHashPairsWideStaged(
       corpus: DataFrame, doCache: Boolean = true): (DataFrame, Seq[DataFrame]) = {
     import corpus.sparkSession.implicits._
@@ -726,7 +668,7 @@ object Dedup {
   /** Jaccard over 3-gram shingles for constructed pair lists: exact pairs,
     * near pairs, and unrelated control pairs. */
   def d04NgramJaccard(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d04:pairs") {
+      checkpointed {
     import spark.implicits._
     val corpus = corpusWithCopies(Tables.documents(spark, dir))
     val sh = shingles(corpus)
@@ -799,13 +741,13 @@ object Dedup {
     * duplicates are deliberately missed (the known SemDeDup
     * approximation; more/raised probes are the recall knob). */
   def d24SemDedup(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d24:cells") {
+      checkpointed {
     semDedupStaged(spark, dir)
   }
 
   /** [[d24SemDedup]]'s pipeline, exposing the cached IVF assignment for
-    * the materializing memo (PlanSpec asserts the within-cell equi-join
-    * shape on this plan — the memo's checkpoint would hide it). */
+    * the checkpointing caller (PlanSpec asserts the within-cell equi-join
+    * shape on this plan — the checkpoint would hide it). */
   private[graft] def semDedupStaged(spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
@@ -917,28 +859,20 @@ object Dedup {
 
   // --- d17: LSH banding-configuration sweep --------------------------------
 
-  /** Candidate pairs for a (bands, rows-per-band) split of the K-minhash
-    * signature — the tunable at the heart of LSH: more bands ⇒ higher
-    * recall, lower precision (the s-curve moves left). */
-  def lshCandidates(sig: DataFrame, b: Int, r: Int): DataFrame = {
-    require(b * r == K, s"banding $b x $r must tile the $K-hash signature")
-    val bands = explodeBands(sig, Seq(col("doc_id")), (0 until b).map(i =>
-      concat_ws(":", (0 until r).map(j => col(s"min_${i * r + j}")): _*)))
-    bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2")).distinct()
-  }
+  /** The (bands, rows-per-band) splits of the K-minhash signature the
+    * sweep reports — the tunable at the heart of LSH: more bands ⇒
+    * higher recall, lower precision (the s-curve moves left). */
+  private val SweepConfigs = Seq((4, 2), (2, 4))
 
   /** LSH tuning sweep: the same K=8 signature banded as 4×2 and 2×4,
     * with per-config candidate volume, verified-near precision, and
     * recall over the planted pairs — the measurement that picks a
     * banding before a corpus-scale dedup run (d15 evaluates the
-    * estimator; this evaluates the INDEX built from it). Each config is
-    * band self-join + candidate-only verification (never all pairs);
-    * the report is a union of 1-row aggregates. */
+    * estimator; this evaluates the INDEX built from it). All configs
+    * share one band self-join and one candidate-only verification
+    * (never all pairs); the report is one per-config aggregate. */
   def d17LshTuning(spark: SparkSession, dir: String): DataFrame =
-    memoMaterialized(spark, dir, "sweep:dict") {
+    checkpointed {
       import spark.implicits._
       val corpus = corpusWithCopies(Tables.documents(spark, dir))
       val sh = shingles(corpus)
@@ -957,8 +891,8 @@ object Dedup {
 
   /** d21: [[d17LshTuning]]'s banding sweep on dictionary-free map-side
     * shingle ids — the form a corpus-scale tuning run executes (no
-    * global id dictionary; the only shuffles are the per-config band
-    * joins and the signature groupBy). Since r10 the id family is the
+    * global id dictionary; the only shuffles are the signature groupBy,
+    * the one band join, the verification and the report). Since r10 the id family is the
     * portable [[sidPortable]] md5-prefix hash rather than xxhash64,
     * which keeps the map-side/dictionary-free shape IDENTICAL while
     * making every readout column — banding-specific candidate counts
@@ -969,7 +903,7 @@ object Dedup {
     * exercising exactly that family. Round7Spec pins the sweep's
     * structure against d17's dictionary sweep. */
   def d21LshTuningScale(spark: SparkSession, dir: String): DataFrame =
-    memoMaterialized(spark, dir, "sweep:scale") {
+    checkpointed {
       import spark.implicits._
       val corpus = corpusWithCopies(Tables.documents(spark, dir))
       lshTuningOver(spark, dir,
@@ -977,49 +911,75 @@ object Dedup {
     }
 
   /** The (bands × rows) sweep body shared by d17 (dictionary ids) and
-    * d21 (portable md5-prefix ids): per config, band self-join candidates, sid-join
-    * verification, and precision/recall over the planted pairs. */
+    * d21 (portable md5-prefix ids), as ONE plan over every config:
+    *   - one doc-keyed aggregate gives each doc its signature and its
+    *     shingle count;
+    *   - one posexplode emits every config's band keys (band positions
+    *     are global, so a position names its config), and one band
+    *     self-join yields the (config, id1, id2) candidate set;
+    *   - the sid-join verification runs once over the distinct candidate
+    *     pairs of all configs;
+    *   - one `groupBy(config)` counts candidates, verified pairs and
+    *     planted pairs found.
+    * The planted flag is an expression on (id1, id2): a candidate is the
+    * planted pair of base doc `d` iff it is (d, d + 1000000) with
+    * d % 10 = 0 or (d, d + 2000000) with d % 10 = 5 — copies carry ids
+    * above 1000000, so no pair of copies matches either shape. */
   private def lshTuningOver(spark: SparkSession, dir: String,
                             rawIds: DataFrame): (DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
+    SweepConfigs.foreach { case (b, r) =>
+      require(b * r == K, s"banding $b x $r must tile the $K-hash signature") }
+    // cached: the signature aggregate and both verify sides read it
     val ids = rawIds.cache()
-    val sig = signatures(ids).cache()
-    val cands = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val sizes = ids.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val base = Tables.documents(spark, dir).select($"doc_id")
-    val planted = base.filter($"doc_id" % 10 === 0)
-        .select($"doc_id".as("id1"), ($"doc_id" + 1000000L).as("id2"))
-      .unionByName(base.filter($"doc_id" % 10 === 5)
-        .select($"doc_id".as("id1"), ($"doc_id" + 2000000L).as("id2")))
-    val nPlanted = planted.agg(count(lit(1)).as("n_planted"))
-    val report = Seq((4, 2), (2, 4)).map { case (b, r) =>
-      // cand feeds THREE consumers (its own count, the verify join, the
-      // planted-recall semi-join): uncached, the band self-join would run
-      // 3x per config — 6x per sweep. Candidate sets are pair-id-sized.
-      val cand = lshCandidates(sig, b, r).cache()
-      cands += cand
-      val verified = cand
-        .join(ids.select($"doc_id".as("id1"), $"sid".as("s1")), "id1")
-        .join(ids.select($"doc_id".as("id2"), $"sid".as("s2")), "id2")
-        .filter($"s1" === $"s2")
-        .groupBy($"id1", $"id2").agg(count(lit(1)).as("inter"))
-        .join(sizes.select($"doc_id".as("id1"), $"n".as("n1")), "id1")
-        .join(sizes.select($"doc_id".as("id2"), $"n".as("n2")), "id2")
-        .filter($"inter" * 2 >= ($"n1" + $"n2" - $"inter"))
-      cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(verified.agg(count(lit(1)).as("n_verified")))
-        .crossJoin(planted.join(cand, Seq("id1", "id2"), "left_semi")
-          .agg(count(lit(1)).as("n_planted_found")))
-        .crossJoin(nPlanted)
-        .select(lit(s"b${b}r$r").as("config"), lit(b).as("b"), lit(r).as("r"),
-          $"n_candidates", $"n_verified",
-          ($"n_verified".cast("double") / $"n_candidates").as("precision"),
-          $"n_planted", $"n_planted_found",
-          ($"n_planted_found".cast("double") / $"n_planted").as("recall"))
-    }.reduce(_ unionByName _)
-    // 2 rows; the memo materializes the report and releases every
-    // pipeline cache (ids, sig, the per-config candidate sets)
-    (report, Seq(ids, sig) ++ cands)
+    // cached: both band self-join sides and both size lookups read it
+    val sig = ids.groupBy($"doc_id")
+      .agg(count(lit(1)).as("n"), minHashes: _*).cache()
+    val bandCfg = for (((b, r), c) <- SweepConfigs.zipWithIndex; i <- 0 until b)
+      yield (c, concat_ws(":", (0 until r).map(j => col(s"min_${i * r + j}")): _*))
+    val bands = explodeBands(sig, Seq($"doc_id"), bandCfg.map(_._2))
+    def cfgOf(band: Column): Column =
+      element_at(array(bandCfg.map(bc => lit(bc._1)): _*), band + 1)
+    // cached: the verification and the per-config counts both read it
+    val cand = bands.as("x").join(bands.as("y"),
+        $"x.band" === $"y.band" && $"x.bkey" === $"y.bkey" && $"x.doc_id" < $"y.doc_id")
+      .select(cfgOf($"x.band").as("cfg"), $"x.doc_id".as("id1"), $"y.doc_id".as("id2"))
+      .distinct().cache()
+    // true shingle jaccard ≥ 0.5 (integer cross-multiplication); the
+    // second sid join is an equi-join on (id2, sid), so it emits only
+    // the matching rows
+    val verified = cand.select($"id1", $"id2").distinct()
+      .join(ids.select($"doc_id".as("id1"), $"sid"), "id1")
+      .join(ids.select($"doc_id".as("id2"), $"sid"), Seq("id2", "sid"))
+      .groupBy($"id1", $"id2").agg(count(lit(1)).as("inter"))
+      .join(sig.select($"doc_id".as("id1"), $"n".as("n1")), "id1")
+      .join(sig.select($"doc_id".as("id2"), $"n".as("n2")), "id2")
+      .filter($"inter" * 2 >= ($"n1" + $"n2" - $"inter"))
+      .select($"id1", $"id2", lit(true).as("verified"))
+    val planted =
+      ($"id2" === $"id1" + 1000000L && $"id1" % 10 === 0) ||
+        ($"id2" === $"id1" + 2000000L && $"id1" % 10 === 5)
+    val counts = cand.join(verified, Seq("id1", "id2"), "left")
+      .groupBy($"cfg")
+      .agg(count(lit(1)).as("n_candidates"), count($"verified").as("n_verified"),
+        count(when(planted, 1)).as("n_planted_found"))
+    val nPlanted = Tables.documents(spark, dir)
+      .agg(count(when($"doc_id" % 10 === 0 || $"doc_id" % 10 === 5, 1)).as("n_planted"))
+    // every config reports a row, with zero counts if it found nothing
+    val report = SweepConfigs.zipWithIndex
+      .map { case ((b, r), c) => (c, s"b${b}r$r", b, r) }.toDF("cfg", "config", "b", "r")
+      .join(counts, Seq("cfg"), "left")
+      .crossJoin(nPlanted)
+      .select($"config", $"b", $"r",
+        coalesce($"n_candidates", lit(0L)).as("n_candidates"),
+        coalesce($"n_verified", lit(0L)).as("n_verified"),
+        ($"n_verified".cast("double") / $"n_candidates").as("precision"),
+        $"n_planted",
+        coalesce($"n_planted_found", lit(0L)).as("n_planted_found"),
+        (coalesce($"n_planted_found", lit(0L)).cast("double") / $"n_planted").as("recall"))
+    // 2 rows; the caller checkpoints the report and releases every
+    // pipeline cache
+    (report, Seq(ids, sig, cand))
   }
 
   // --- d16: normalization-aware exact dedup --------------------------------
@@ -1143,7 +1103,7 @@ object Dedup {
     * one groupBy over (doc, shingle-id); the eval joins only the planted
     * pair list — never all pairs. */
   def d15MinhashEstimate(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d15:estimate") {
+      checkpointed {
     import spark.implicits._
     val corpus = corpusWithCopies(Tables.documents(spark, dir))
     val sh = shingles(corpus)
@@ -1244,8 +1204,7 @@ object Dedup {
     * per-doc window. At 100 TB the stride-1 hash volume is the honest cost
     * of exact-substring semantics — a winnowed (Schleimer 2003) anchor
     * subset is the approximate fallback if even that shuffle is too big. */
-  def d27RepeatedSpans(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d27:spans") {
+  def d27RepeatedSpans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val K = RepSpanK
     val toks = TextAnalysis.tokens($"text")
@@ -1261,7 +1220,7 @@ object Dedup {
       .agg(count(lit(1)).as("cnt")).filter($"cnt" > 1).select($"h")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"doc_id").orderBy($"p")
-    (wins.join(repeated, "h")
+    wins.join(repeated, "h")
       .withColumn("gap",
         when($"p" - lag($"p", 1).over(w) > K, 1L).otherwise(0L))
       .withColumn("island", sum($"gap").over(w))
@@ -1270,8 +1229,7 @@ object Dedup {
       .groupBy($"doc_id", $"n_tokens")
       .agg(count(lit(1)).as("n_spans"), sum($"span_len").as("rep_tokens"))
       .select($"doc_id", $"n_spans", $"rep_tokens", $"n_tokens",
-        ($"rep_tokens".cast("double") / $"n_tokens").as("rep_frac")),
-      Nil)
+        ($"rep_tokens".cast("double") / $"n_tokens").as("rep_frac"))
   }
 
   // --- d29: winnowed fingerprint anchors ----------------------------------
@@ -1312,10 +1270,10 @@ object Dedup {
   /** The winnowed anchor table over the planted corpus — one row per
     * selected (doc_id, apos) anchor with its full gram hash `h` and the
     * doc's gram count. The shared substrate of d29 (per-doc fingerprint
-    * report) and d30 (cross-doc containment pairing); memoized per
-    * (session, dir) so both consumers read ONE cached table. */
+    * report) and d30 (cross-doc containment pairing); checkpointed, so
+    * each consumer's passes over it read the pinned anchor rows. */
   private[graft] def winnowAnchors(spark: SparkSession, dir: String): DataFrame =
-    memoMaterialized(spark, dir, "winnowAnchors") {
+    checkpointed {
       import spark.implicits._
       val K = WinnowK; val W = WinnowW
       val base = corpusWithCopies(Tables.documents(spark, dir))
@@ -1393,7 +1351,7 @@ object Dedup {
     * Every step is exact integer arithmetic + one IEEE division, so the
     * oracle replays it verbatim over the d29 CTE chain. */
   def d30ContainmentDedup(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d30:contain") {
+      checkpointed {
     import spark.implicits._
     val anc = winnowAnchors(spark, dir)
     val hFreq = anc.groupBy($"h").agg(countDistinct($"doc_id").as("nd"))
@@ -1489,7 +1447,7 @@ object Dedup {
     * index-side partners ([[exactNearCtesFor]]); Round7Spec additionally
     * pins the planted admit/reject structure and parity with d12. */
   def d22IncrementalScale(spark: SparkSession, dir: String): DataFrame =
-      memoMaterialized(spark, dir, "d22:admit") {
+      checkpointed {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
     incrementalDecisionStaged(docs.select($"doc_id", $"text"), incomingBatch(docs))
@@ -1610,11 +1568,11 @@ object Dedup {
     // band table, and the content-hash table are a STORED index a live
     // ingest MAINTAINS, not something recomputed per arrival wave. The
     // three tables are cached for the QUERY's lifetime and unpersisted
-    // once the decisions have landed: a session-lifetime memo here
-    // stacked three corpus-sized cached relations on top of the 27
-    // shared memos and evicted the dedup family's working set between
-    // bench passes (the r11 2-7.5x outlier cluster) — the maintained
-    // index a live ingest keeps is storage, not executor cache.
+    // once the decisions have landed: session-lifetime caches here
+    // stacked three corpus-sized cached relations and evicted the dedup
+    // family's working set between bench passes (the r11 2-7.5x outlier
+    // cluster) — the maintained index a live ingest keeps is storage,
+    // not executor cache.
     val sharrIdx = shingleArrays(index).filter(size($"shingles") > 0).cache()
     val bandsIdx = bandsOf(sharrIdx.select($"doc_id",
       graft.functions.MinHash.minhashSig($"shingles", K, P).as("sig"))).cache()

@@ -324,7 +324,7 @@ object Multimodal {
     * bits since 4×16 tiles the long exactly). Still all integer
     * arithmetic — oracle-exact, not rows-only. */
   def m08PhashNearDupWide(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoMaterialized(spark, dir, "m08:phash") {
+      Dedup.checkpointed {
     import spark.implicits._
     val base = Tables.documents(spark, dir).select($"doc_id", $"text")
     val corpus = base
@@ -400,7 +400,7 @@ object Multimodal {
     * unrelated payloads never clear the vote. All integer until the one
     * final division — oracle-exact. */
   def m09VideoNearDup(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoMaterialized(spark, dir, "m09:frames") {
+      Dedup.checkpointed {
     import spark.implicits._
     val base = Tables.documents(spark, dir).select($"doc_id", $"text")
     val corpus = base
@@ -460,7 +460,7 @@ object Multimodal {
     * both invisible to m09's positional vote. All integer until the
     * final division — oracle-exact. */
   def m10AudioOffsetMatch(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoMaterialized(spark, dir, "m10:frames") {
+      Dedup.checkpointed {
     val frames = frameHashes(m10Corpus(spark, dir)).cache()
     // pair/delta-sized match report materializes; frame cache released
     (m10OffsetMatch(frames), Seq(frames))

@@ -460,7 +460,7 @@ object Similarity {
     * executor. Fixed iteration count = fixed plan depth — the loop
     * lives in the driver as plan composition, like s16's Lloyd rounds. */
   def s18PcaPower(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoMaterialized(spark, dir, "s18:pca") {
+      Dedup.checkpointed {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val moments = dimMoments(e)
@@ -477,7 +477,9 @@ object Similarity {
       .agg(aggregate(transform(array_sort(collect_list(struct($"pos", $"v_pos"))),
         p => p.getField("v_pos")), lit(0.0), (a, x) => a + x).as("tr"))
     val v0 = spark.range(1).select(array_repeat(lit(0.125), 64).as("v"))
-    val v3 = powerStep(e, mu, powerStep(e, mu, powerStep(e, mu, v0)))
+    val v1 = powerStep(e, mu, v0)
+    val v2 = powerStep(e, mu, v1)
+    val v3 = powerStep(e, mu, v2)
     // Rayleigh quotient of the final direction: one more projection pass
     val proj = e.crossJoin(broadcast(mu)).crossJoin(broadcast(v3))
       .select($"vec_id", expr("CAST(FLOOR(vec_id / 256.0) AS BIGINT)").as("b"),
@@ -501,9 +503,9 @@ object Similarity {
       .crossJoin(broadcast(trace))
       .select($"pos", $"mean_comp", $"pc1", $"lambda",
         ($"lambda" / $"tr").as("explained_share")),
-      // 64-row result; the dim-sized pipeline caches are released once
-      // it materializes (memoMaterialized contract)
-      Seq(means, mu))
+      // 64-row result; the dim-sized pipeline caches (the power steps'
+      // included) are released once it materializes
+      Seq(means, mu, v1, v2, v3))
   }
 
   /** s20: IVF tuning sweep — recall@5 AND candidate cost per `nprobe` ∈
@@ -517,7 +519,7 @@ object Similarity {
     * configs (the per-config work is a filter on the probe rank — no
     * index rebuild per config); ground truth is the s01 contract. */
   def s20IvfTuning(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoMaterialized(spark, dir, "s20:ivfTuning") {
+      Dedup.checkpointed {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     // cached: all three configs read the same assignment, probe ranking,
@@ -525,7 +527,7 @@ object Similarity {
     // scale the assignment is the stored index payload; s20Sweep is a
     // pure function of it, so swapping the cache for a parquet write +
     // re-read changes nothing downstream (Round11Spec executes that).
-    // The memoized value is the 15-row sweep report; assignment + sweep
+    // The checkpointed value is the 15-row sweep report; assignment + sweep
     // caches are released once it materializes.
     val assigned = ivfAssigned(e).cache()
     val (report, sweepCaches) = s20SweepStaged(spark, dir, assigned)
@@ -539,7 +541,7 @@ object Similarity {
                               assigned: DataFrame): DataFrame =
     s20SweepStaged(spark, dir, assigned)._1
 
-  /** [[s20Sweep]] exposing its internal caches so the memoizing caller
+  /** [[s20Sweep]] exposing its internal caches so the checkpointing caller
     * can release them after materialization. */
   private[graft] def s20SweepStaged(spark: SparkSession, dir: String,
                                     assigned: DataFrame): (DataFrame, Seq[DataFrame]) = {
@@ -601,25 +603,23 @@ object Similarity {
     * literals to DOUBLE — DuckDB's bare 0.85 is DECIMAL), and the
     * oracle replays both two-level folds add-for-add. */
   def s21PagerankKnn(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoMaterialized(spark, dir, "s21:pagerank") {
+      Dedup.checkpointed {
     s21PagerankKnnStaged(spark, dir)
   }
 
   /** [[s21PagerankKnn]]'s pipeline, exposing its per-iteration rank
-    * caches for the materializing memo (Round11Spec asserts the
-    * bucket-bounded fold shapes on this plan — the memo's checkpoint
-    * would hide them). The memoized value is node-sized (one rank row
-    * per vector); every cache below is edge- or node-sized and released
-    * once it lands. */
+    * caches for the checkpointing caller (Round11Spec asserts the
+    * bucket-bounded fold shapes on this plan — the checkpoint would hide
+    * them). The checkpointed result is node-sized (one rank row per
+    * vector); every cache below is node-sized and released once it
+    * lands. */
   private[graft] def s21PagerankKnnStaged(spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
     val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    // cached: the top-3 window over the memoized s14 assignment would
-    // otherwise re-run once per iteration (each iteration's contrib
-    // joins the edge list); edge-sized (≤ 3N rows)
-    val edges = s14KnnGraph(spark, dir).select($"vid", $"nid").cache()
-    caches += edges
+    // s14's checkpointed edge list (≤ 3N rows): each iteration's contrib
+    // joins it without re-running the top-3 window behind it
+    val edges = s14KnnGraph(spark, dir).select($"vid", $"nid")
     val nodes = e.select($"vec_id")
     val degrees = nodes.join(
         edges.groupBy($"vid").agg(count(lit(1)).as("deg"))
@@ -630,8 +630,8 @@ object Similarity {
     // each iteration's rank frame is read by THREE consumers (shares,
     // the dangling fold, and the next iteration's base) — uncached, the
     // lineage would re-execute multiplicatively per round (measured:
-    // 12 s → ~1 s at sf0.1 from exactly this). Node-sized rows; created
-    // once per (session, dir) behind the memo.
+    // 12 s → ~1 s at sf0.1 from exactly this). Node-sized rows,
+    // released once the result is checkpointed.
     var r = degrees.crossJoin(broadcast(nRow))
       .select($"vec_id", $"deg", (lit(1.0) / $"n").as("pr"))
       .cache()
@@ -1012,20 +1012,17 @@ object Similarity {
     * graph build makes (edges across cell boundaries are missed; raising
     * NProbe on the probe side is the recall knob, cf. s07's readout).
     * Emits one row per (vector, rank) with the neighbor and its cosine —
-    * exact-fold cosine, so oracle-exact. The memoized value is the
-    * MATERIALIZED edge list (≤ 3N small rows — graph-sized, never
-    * corpus-sized), and the assignment cache is released once it lands:
-    * a memoized PLAN over the cache re-ran the Σ|cell|² join whenever
-    * the 280-entry battery's LRU churn evicted it (the r16 bench showed
-    * s14 5.6× best in both passes from exactly that). */
+    * exact-fold cosine, so oracle-exact. The result is the CHECKPOINTED
+    * edge list (≤ 3N small rows — graph-sized, never corpus-sized), and
+    * the assignment cache is released once it lands. */
   def s14KnnGraph(spark: SparkSession, dir: String): DataFrame =
-      Dedup.memoMaterialized(spark, dir, "s14:knnGraph") {
+      Dedup.checkpointed {
     s14KnnGraphStaged(spark, dir)
   }
 
   /** [[s14KnnGraph]]'s pipeline, exposing the cached IVF assignment for
-    * the materializing memo (PlanSpec asserts the within-cell equi-join
-    * shape on this plan — the memo's checkpoint would hide it). */
+    * the checkpointing caller (PlanSpec asserts the within-cell equi-join
+    * shape on this plan — the checkpoint would hide it). */
   private[graft] def s14KnnGraphStaged(spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
@@ -1044,23 +1041,12 @@ object Similarity {
   val queries: Map[String, Q] = Map(
     "s14_knn_graph"      -> s14KnnGraph _,
     "s21_pagerank_knn"   -> s21PagerankKnn _,
-    "s15_dim_stats"      -> ((s: SparkSession, d: String) =>
-      Dedup.memoMaterialized(s, d, "s15:dims")((s15DimStats(s, d), Nil))),
-    // registry entries memoize the MATERIALIZED result (k×dim / langs²×3
-    // / cluster-cardinality rows) while the NAMED functions stay
-    // un-memoized for the plan-shape specs: these four recompute the IVF
-    // assignment per call, and before r17 their bench speed came from
-    // CacheManager plan-matching s14/s20's pipeline caches — releasing
-    // those (the memoMaterialized migration) exposed them as free-riders
-    // (the r16 d25/d03/p05 lesson, next family over)
-    "s16_kmeans_lloyd"   -> ((s: SparkSession, d: String) =>
-      Dedup.memoMaterialized(s, d, "s16:lloyd")((s16KmeansLloyd(s, d), Nil))),
+    "s15_dim_stats"      -> s15DimStats _,
+    "s16_kmeans_lloyd"   -> s16KmeansLloyd _,
     "s18_pca_power"      -> s18PcaPower _,
-    "s19_silhouette"     -> ((s: SparkSession, d: String) =>
-      Dedup.memoMaterialized(s, d, "s19:sil")((s19Silhouette(s, d), Nil))),
+    "s19_silhouette"     -> s19Silhouette _,
     "s20_ivf_tuning"     -> s20IvfTuning _,
-    "s17_crosslingual_mining" -> ((s: SparkSession, d: String) =>
-      Dedup.memoMaterialized(s, d, "s17:mining")((s17CrosslingualMining(s, d), Nil))),
+    "s17_crosslingual_mining" -> s17CrosslingualMining _,
     "s01_knn_bruteforce" -> s01KnnBruteForce _,
     "s11_hybrid_search"  -> s11HybridSearch _,
     "s08_quantized_knn"  -> s08QuantizedKnn _,
@@ -1070,8 +1056,7 @@ object Similarity {
     "s10_lang_centroids" -> s10LangCentroids _,
     "s06_range_search"   -> s06RangeSearch _,
     "s07_ann_recall"     -> s07AnnRecall _,
-    "s05_centroid_agg"   -> ((s: SparkSession, d: String) =>
-      Dedup.memoMaterialized(s, d, "s05:centroids")((s05CentroidAgg(s, d), Nil))),
+    "s05_centroid_agg"   -> s05CentroidAgg _,
     "s02_ann_lsh"        -> s02AnnLsh _,
     // scale-path twin: bounded-heap partial-agg top-k. Oracle-exact
     // since r9: its contract IS s01's output (the spec asserts window

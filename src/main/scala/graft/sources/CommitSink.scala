@@ -139,6 +139,10 @@ object CommitSink {
     pendingRewrites.put(t, r)
     t
   }
+  /** The planning manifest of a registered, not yet taken rewrite: the
+    * root the table instance its write loads describes. */
+  private[graft] def rewritePlanning(token: String): Option[Manifest] =
+    Option(pendingRewrites.get(token)).map(_.planning)
   private[graft] def takeRewrite(token: String): DmlRewrite =
     Option(pendingRewrites.remove(token)).getOrElse(
       sys.error(s"graft-commit: unknown or already-consumed rewrite token $token"))

@@ -121,8 +121,14 @@ class CommitSinkProvider extends TableProvider
           case (key, t) if key == optionKey(properties) => t
         }
         inferred = None
+        // a rewrite's write (compact / deleteWhere hand over a
+        // `rewriteToken`) describes the manifest its commit CASes
+        // against, so its table takes that manifest instead of
+        // re-reading the root
+        val planned = optionKey(properties).get("rewritetoken")
+          .flatMap(CommitSink.rewritePlanning)
         reused.getOrElse(new CommitSinkTable(path, version = versionOf(properties),
-          changeFeed = cdfOf(properties), branch = branch))
+          changeFeed = cdfOf(properties), branch = branch, planned = planned))
     }
   }
 }
@@ -155,7 +161,11 @@ class CommitSinkTable(path: String,
                         * load's) and batch writes advance it; DML,
                         * streaming, and the change feed stay
                         * main-lineage. */
-                      branch: Option[String] = None) extends Table
+                      branch: Option[String] = None,
+                      /** The root this instance describes when a caller
+                        * already holds it (a rewrite's planning
+                        * manifest); None loads it from storage. */
+                      planned: Option[CommitSink.Manifest] = None) extends Table
     with SupportsWrite
     with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -219,7 +229,7 @@ class CommitSinkTable(path: String,
     * new `spark.table`/`spark.sql`/`load()` loads a new instance. Writes
     * re-read the live manifest for their compare-and-swap commit. */
   private lazy val root: Option[CommitSink.Manifest] =
-    CommitSink.loadRoot(Paths.get(path), readVersion)
+    planned.orElse(CommitSink.loadRoot(Paths.get(path), readVersion))
 
   /** [[root]] with every per-file entry loaded: what a DML statement
     * plans, carries and CAS-checks against. */

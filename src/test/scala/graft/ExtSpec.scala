@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
@@ -241,5 +242,34 @@ class ExtSpec extends AnyFunSuite {
       .select($"doc_id", $"fp_pos", $"fp_sq").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(fp == fp2)
+  }
+
+  test("ext entries compute from their inputs: a corpus swapped under the same path") {
+    val root = java.nio.file.Files.createTempDirectory("ext_swap")
+    val live = root.resolve("live").toString
+    val fresh = root.resolve("fresh").toString
+    def put(dir: String, keep: Column => Column): Unit = {
+      Tables.documents(spark, sf0001).filter(keep($"doc_id"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      Tables.embeddings(spark, sf0001).filter(keep($"vec_id"))
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
+    val subset = (id: Column) => id % 3 =!= 1
+    val entries = Seq("d21_lsh_tuning_scale", "s17_crosslingual_mining",
+      "p01_curate_corpus", "d09_dedup_clusters")
+    def run(name: String, dir: String): Seq[String] =
+      SparkEntry.queries(name)(spark, dir).collect().map(_.toString).toSeq.sorted
+    try {
+      put(live, _ => lit(true))
+      val before = entries.map(run(_, live))
+      put(live, subset)
+      put(fresh, subset)
+      entries.zip(before).foreach { case (name, first) =>
+        val expected = run(name, fresh)
+        assert(expected != first, s"$name: the subset must change the result")
+        assert(run(name, live) == expected,
+          s"$name returned rows of the corpus it read before the swap")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 }

@@ -225,11 +225,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("s14/d24: within-cell pairing stays an equi-join on the cell id — no pair blowup") {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    // d24 via its staged pipeline: the registry entry memoizes the
-    // MATERIALIZED result (localCheckpoint), which would hide the join
+    // d24 via its staged pipeline: the registry entry returns the
+    // CHECKPOINTED result (localCheckpoint), which would hide the join
     val (d24df, d24caches) = ext.Dedup.semDedupStaged(spark, sf0001)
-    // s14 via its staged pipeline too — since r17 the registry entry
-    // memoizes the materialized edge list, which would hide the join
+    // s14 via its staged pipeline too — the registry entry returns the
+    // checkpointed edge list, which would hide the join
     val (s14df, s14caches) = ext.Similarity.s14KnnGraphStaged(spark, sf0001)
     Seq(s14df, d24df).foreach { df =>
       // typed collect: does NOT descend into InMemoryRelation, so the

@@ -290,8 +290,8 @@ class Round11Spec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    // staged pipeline — since r17 the registry entry memoizes the
-    // materialized ranks, whose checkpoint would hide the folds
+    // staged pipeline — the registry entry returns the checkpointed
+    // ranks, whose checkpoint would hide the folds
     val (df, s21caches) = ext.Similarity.s21PagerankKnnStaged(spark, sf0001)
     val folds = df.queryExecution.analyzed.collect { case a: Aggregate =>
       val collects = a.aggregateExpressions.flatMap(_.collect { case c: CollectList => c })

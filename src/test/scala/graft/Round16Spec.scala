@@ -517,6 +517,18 @@ class Round16Spec extends AnyFunSuite {
       .option("path", path).load().filter($"id" === 142L).select($"v").collect())
     assert(byPath == Seq(426L))
     assert(c3.rootReads.get() == 1, s"path read read the root ${c3.rootReads.get()}x")
+    // DELETE: a translatable predicate lands its copy-on-write rewrite
+    // through a path write, whose builder plans against the rewrite's
+    // manifest instead of re-reading the root — the same 2 reads as the
+    // row-level DELETE (table load + the commit's compare-and-swap)
+    def deleteReads(where: String): Int = {
+      val c = new CountingIo
+      sources.CommitSink.withIo(c)(spark.sql(s"DELETE FROM $cat.`default`.t WHERE $where"))
+      c.rootReads.get()
+    }
+    assert(deleteReads("id = 5") == 2, "translatable DELETE root reads")
+    assert(deleteReads("id % 7 = 3") == 2, "row-level DELETE root reads")
+    assert(spark.table(s"$cat.`default`.t").count() == 200L - 1L - 29L)
   }
 
   test("manifest list: 120k files — small root, selective planning parses ONE group") {

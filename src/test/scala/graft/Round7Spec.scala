@@ -261,7 +261,7 @@ class Round7Spec extends AnyFunSuite {
     // shingle-count blowup); the band projection is a constant-4
     // posexplode since r12 (Dedup.explodeBands) — forbid any OTHER
     // Generate shape. Guarded on the UNCACHED staged pipeline: the
-    // registry entry memoizes the MATERIALIZED pair set (localCheckpoint),
+    // registry entry returns the CHECKPOINTED pair set (localCheckpoint),
     // whose LogicalRDD plan would make this check vacuous (the PlanSpec
     // d18 device).
     val plan = Dedup.simHashPairsWideStaged(corpus, doCache = false)._1
