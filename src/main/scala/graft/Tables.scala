@@ -1,14 +1,23 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md) plus
   * shared helpers for DuckDB-oracle numeric parity.
   *
   * Design note (100 TB posture): all loaders return lazy DataFrames over
   * parquet — Catalyst pushes filters/column pruning down to the scan, so
-  * callers never pay for columns they don't read. Nothing here collects.
+  * callers never pay for columns they don't read. Nothing here collects,
+  * and building a loader's DataFrame runs no Spark job: the schema comes
+  * from the file's footer, read on the driver (see [[load]]).
   */
 object Tables {
 
@@ -16,7 +25,16 @@ object Tables {
     * 32 KB is sized to catch exactly the key-cardinality dims. */
   private val RepartitionMinBytes = 32L * 1024
 
-  /** Local-mode scan parallelism knob. The driver's testdata is one
+  /** One base table as a lazy parquet scan, built without a Spark job.
+    *
+    * `spark.read.parquet(p)` with no schema infers it by running a
+    * one-task job that reads a footer. Here the driver reads that footer
+    * itself ([[footerSchema]]) and hands the schema to `.schema(..)`, so
+    * building a DataFrame over the base tables runs no job at all. The
+    * footer is read on every call and nothing is kept: a table swapped
+    * under the same path is seen by the next load.
+    *
+    * Local-mode scan parallelism knob. The driver's testdata is one
     * parquet file with ONE row group per table, so a scan — and anything
     * cached from it — is a single partition and every downstream narrow
     * stage runs on one core. A real 100 TB table is thousands of
@@ -25,7 +43,8 @@ object Tables {
     * `load` so cached plans and query plans stay equal (CacheManager
     * substitutes on plan equality). Default 0 = off. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
     val n = spark.conf.getOption("graft.scan.repartition").map(_.toInt).getOrElse(0)
     // Scale-adaptive, not constant (r20, guide §2): fanning a 5-row
     // dimension (region/nation/supplier — ≤ tens of KB at every SF) out
@@ -39,6 +58,41 @@ object Tables {
         java.nio.file.Paths.get(dir, s"$name.parquet")) < RepartitionMinBytes
       catch { case _: Exception => false }
     if (n > 0 && !small) df.repartition(n) else df
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer, read from one
+    * footer on the driver — what Spark's `readSchemaFromFooter` does
+    * inside its inference job: the Spark row metadata a Spark writer
+    * leaves in the footer, else the parquet schema converted under the
+    * session's SQL confs (so `nanosAsLong` and friends still apply). A
+    * directory is read through its first data file by name, as a
+    * non-merging inference reads one file. `None` when there is no
+    * footer to read (a missing path, no data file): Spark's own
+    * inference then reports the error. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      try {
+        val st = fs.getFileStatus(p)
+        if (!st.isDirectory) Some(st)
+        else fs.listStatus(p)
+          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+            !f.getPath.getName.startsWith("."))
+          .sortBy(_.getPath.getName).headOption
+      } catch { case _: java.io.FileNotFoundException => None }
+    file.map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(meta.getSchema))
+    }
   }
 
   /** HARNESS SHIM for FIXTURE-SIZED results only: pin the rows on the

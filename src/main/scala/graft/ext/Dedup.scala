@@ -870,15 +870,16 @@ object Dedup {
     * banding before a corpus-scale dedup run (d15 evaluates the
     * estimator; this evaluates the INDEX built from it). All configs
     * share one band self-join and one candidate-only verification
-    * (never all pairs); the report is one per-config aggregate. */
-  def d17LshTuning(spark: SparkSession, dir: String): DataFrame =
-    checkpointed {
-      import spark.implicits._
-      val corpus = corpusWithCopies(Tables.documents(spark, dir))
-      val sh = shingles(corpus)
-      lshTuningOver(spark, dir,
-        sh.join(shingleDict(sh), "shingle").select($"doc_id", $"sid"))
-    }
+    * (never all pairs); the report is one per-config aggregate. Returns
+    * the plan: nothing runs until the caller's action
+    * ([[lshTuningOver]]). */
+  def d17LshTuning(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val corpus = corpusWithCopies(Tables.documents(spark, dir))
+    val sh = shingles(corpus)
+    lshTuningOver(spark, dir,
+      sh.join(shingleDict(sh), "shingle").select($"doc_id", $"sid"))
+  }
 
   /** Dictionary-free shingle id from an md5 prefix (mod [[P]]) — the g01
     * portable-hash device (Workload.h32): pure map-side, no global
@@ -901,72 +902,51 @@ object Dedup {
     * xxhash64 would be the cheaper per-shingle hash; swapping the one
     * `sid` projection back is the only change, and d06/d18/d22 keep
     * exercising exactly that family. Round7Spec pins the sweep's
-    * structure against d17's dictionary sweep. */
-  def d21LshTuningScale(spark: SparkSession, dir: String): DataFrame =
-    checkpointed {
-      import spark.implicits._
-      val corpus = corpusWithCopies(Tables.documents(spark, dir))
-      lshTuningOver(spark, dir,
-        shingles(corpus).select($"doc_id", sidPortable($"shingle").as("sid")))
-    }
+    * structure against d17's dictionary sweep. Two distinct shingles
+    * of one doc may share an md5-prefix sid; the sweep counts them as
+    * the oracle's sid equi-join does. Returns the plan: building it runs
+    * no Spark job (LshSweepSpec pins that, and at most 8 jobs for its
+    * `collect()`). */
+  def d21LshTuningScale(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val corpus = corpusWithCopies(Tables.documents(spark, dir))
+    lshTuningOver(spark, dir,
+      shingles(corpus).select($"doc_id", sidPortable($"shingle").as("sid")))
+  }
 
   /** The (bands × rows) sweep body shared by d17 (dictionary ids) and
-    * d21 (portable md5-prefix ids), as ONE plan over every config:
-    *   - one doc-keyed aggregate gives each doc its signature and its
-    *     shingle count;
+    * d21 (portable md5-prefix ids), as ONE fused plan over every config,
+    * with no cache and no intermediate materialization:
+    *   - one `groupBy(doc_id)` gives each doc its signature, its row
+    *     count `n` and its ascending sid list;
     *   - one posexplode emits every config's band keys (band positions
     *     are global, so a position names its config), and one band
-    *     self-join yields the (config, id1, id2) candidate set;
-    *   - the sid-join verification runs once over the distinct candidate
-    *     pairs of all configs;
+    *     self-join, carrying `n` and the sid lists along, yields the
+    *     (config, id1, id2) candidates;
+    *   - per distinct candidate, the shared-sid count `inter` is a
+    *     sorted merge of the two lists
+    *     ([[graft.functions.SortedLongIntersectCount]]);
     *   - one `groupBy(config)` counts candidates, verified pairs and
     *     planted pairs found.
     * The planted flag is an expression on (id1, id2): a candidate is the
     * planted pair of base doc `d` iff it is (d, d + 1000000) with
     * d % 10 = 0 or (d, d + 2000000) with d % 10 = 5 — copies carry ids
     * above 1000000, so no pair of copies matches either shape. */
-  private def lshTuningOver(spark: SparkSession, dir: String,
-                            rawIds: DataFrame): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def lshTuningOver(spark: SparkSession, dir: String,
+                                   ids: DataFrame): DataFrame = {
     import spark.implicits._
-    SweepConfigs.foreach { case (b, r) =>
-      require(b * r == K, s"banding $b x $r must tile the $K-hash signature") }
-    // cached: the signature aggregate and both verify sides read it
-    val ids = rawIds.cache()
-    // cached: both band self-join sides and both size lookups read it
-    val sig = ids.groupBy($"doc_id")
-      .agg(count(lit(1)).as("n"), minHashes: _*).cache()
-    val bandCfg = for (((b, r), c) <- SweepConfigs.zipWithIndex; i <- 0 until b)
-      yield (c, concat_ws(":", (0 until r).map(j => col(s"min_${i * r + j}")): _*))
-    val bands = explodeBands(sig, Seq($"doc_id"), bandCfg.map(_._2))
-    def cfgOf(band: Column): Column =
-      element_at(array(bandCfg.map(bc => lit(bc._1)): _*), band + 1)
-    // cached: the verification and the per-config counts both read it
-    val cand = bands.as("x").join(bands.as("y"),
-        $"x.band" === $"y.band" && $"x.bkey" === $"y.bkey" && $"x.doc_id" < $"y.doc_id")
-      .select(cfgOf($"x.band").as("cfg"), $"x.doc_id".as("id1"), $"y.doc_id".as("id2"))
-      .distinct().cache()
-    // true shingle jaccard ≥ 0.5 (integer cross-multiplication); the
-    // second sid join is an equi-join on (id2, sid), so it emits only
-    // the matching rows
-    val verified = cand.select($"id1", $"id2").distinct()
-      .join(ids.select($"doc_id".as("id1"), $"sid"), "id1")
-      .join(ids.select($"doc_id".as("id2"), $"sid"), Seq("id2", "sid"))
-      .groupBy($"id1", $"id2").agg(count(lit(1)).as("inter"))
-      .join(sig.select($"doc_id".as("id1"), $"n".as("n1")), "id1")
-      .join(sig.select($"doc_id".as("id2"), $"n".as("n2")), "id2")
-      .filter($"inter" * 2 >= ($"n1" + $"n2" - $"inter"))
-      .select($"id1", $"id2", lit(true).as("verified"))
+    // true shingle jaccard ≥ 0.5 (integer cross-multiplication)
+    val verified = $"inter" * 2 >= ($"n1" + $"n2" - $"inter")
     val planted =
       ($"id2" === $"id1" + 1000000L && $"id1" % 10 === 0) ||
         ($"id2" === $"id1" + 2000000L && $"id1" % 10 === 5)
-    val counts = cand.join(verified, Seq("id1", "id2"), "left")
-      .groupBy($"cfg")
-      .agg(count(lit(1)).as("n_candidates"), count($"verified").as("n_verified"),
+    val counts = lshCandidates(ids).groupBy($"cfg")
+      .agg(count(lit(1)).as("n_candidates"), count(when(verified, 1)).as("n_verified"),
         count(when(planted, 1)).as("n_planted_found"))
     val nPlanted = Tables.documents(spark, dir)
       .agg(count(when($"doc_id" % 10 === 0 || $"doc_id" % 10 === 5, 1)).as("n_planted"))
     // every config reports a row, with zero counts if it found nothing
-    val report = SweepConfigs.zipWithIndex
+    SweepConfigs.zipWithIndex
       .map { case ((b, r), c) => (c, s"b${b}r$r", b, r) }.toDF("cfg", "config", "b", "r")
       .join(counts, Seq("cfg"), "left")
       .crossJoin(nPlanted)
@@ -977,9 +957,32 @@ object Dedup {
         $"n_planted",
         coalesce($"n_planted_found", lit(0L)).as("n_planted_found"),
         (coalesce($"n_planted_found", lit(0L)).cast("double") / $"n_planted").as("recall"))
-    // 2 rows; the caller checkpoints the report and releases every
-    // pipeline cache
-    (report, Seq(ids, sig, cand))
+  }
+
+  /** [[lshTuningOver]]'s distinct (cfg, id1 < id2) band candidates over
+    * `ids(doc_id, sid)`, each with both docs' row counts `n1`/`n2` and
+    * their shared-sid count `inter`. A sid repeated within a doc (two
+    * shingles with one md5-prefix id) counts mult₁·mult₂ times in
+    * `inter` and once per row in `n`: exactly the oracle's (doc_id, sid)
+    * equi-join and size aggregate. */
+  private[graft] def lshCandidates(ids: DataFrame): DataFrame = {
+    import ids.sparkSession.implicits._
+    SweepConfigs.foreach { case (b, r) =>
+      require(b * r == K, s"banding $b x $r must tile the $K-hash signature") }
+    val sig = ids.groupBy($"doc_id")
+      .agg(count(lit(1)).as("n"), (array_sort(collect_list($"sid")).as("sids") +: minHashes): _*)
+    val bandCfg = for (((b, r), c) <- SweepConfigs.zipWithIndex; i <- 0 until b)
+      yield (c, concat_ws(":", (0 until r).map(j => col(s"min_${i * r + j}")): _*))
+    val bands = explodeBands(sig, Seq($"doc_id", $"n", $"sids"), bandCfg.map(_._2))
+    def cfgOf(band: Column): Column =
+      element_at(array(bandCfg.map(bc => lit(bc._1)): _*), band + 1)
+    bands.as("x").join(bands.as("y"),
+        $"x.band" === $"y.band" && $"x.bkey" === $"y.bkey" && $"x.doc_id" < $"y.doc_id")
+      .select(cfgOf($"x.band").as("cfg"), $"x.doc_id".as("id1"), $"y.doc_id".as("id2"),
+        $"x.n".as("n1"), $"y.n".as("n2"), $"x.sids".as("sids1"), $"y.sids".as("sids2"))
+      .dropDuplicates("cfg", "id1", "id2")
+      .select($"cfg", $"id1", $"id2", $"n1", $"n2",
+        graft.functions.VectorExpressions.sortedInterCount($"sids1", $"sids2").as("inter"))
   }
 
   // --- d16: normalization-aware exact dedup --------------------------------

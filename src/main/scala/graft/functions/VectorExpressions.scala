@@ -196,9 +196,97 @@ case class FloatVectorL2(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Codegen'd multiset intersection size of two ascending-sorted
+  * `array<bigint>` columns — a sorted merge, O(|a| + |b|), no
+  * allocation. For every value present on both sides it adds
+  * mult_a(v) · mult_b(v), which is exactly the row count of the
+  * equi-join of the two lists on the value: duplicates multiply, as the
+  * join's do. The LSH sweep (`Dedup.lshTuningOver`) computes each
+  * candidate pair's shared-shingle count with it, where a hashed
+  * shingle id may repeat within a document.
+  *
+  * Inputs must be sorted ascending as `array_sort` leaves them, nulls
+  * last; a null element ends its side (nulls never join). A null array
+  * gives null.
+  */
+case class SortedLongIntersectCount(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "sorted_inter_count"
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val ok = Seq(left, right).forall(_.dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    })
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (array<bigint>, array<bigint>), got " +
+        s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
+  }
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    val nx = x.numElements()
+    val ny = y.numElements()
+    var s = 0L
+    var i = 0
+    var j = 0
+    while (i < nx && j < ny && !x.isNullAt(i) && !y.isNullAt(j)) {
+      val v = x.getLong(i)
+      val w = y.getLong(j)
+      if (v < w) i += 1
+      else if (v > w) j += 1
+      else {
+        var ci = 0L
+        while (i < nx && !x.isNullAt(i) && x.getLong(i) == v) { ci += 1; i += 1 }
+        var cj = 0L
+        while (j < ny && !y.isNullAt(j) && y.getLong(j) == v) { cj += 1; j += 1 }
+        s += ci * cj
+      }
+    }
+    s
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val Seq(nx, ny, s, i, j, v, w, ci, cj) =
+        Seq("nx", "ny", "s", "i", "j", "v", "w", "ci", "cj").map(ctx.freshName)
+      s"""
+         |final int $nx = $a.numElements();
+         |final int $ny = $b.numElements();
+         |long $s = 0L;
+         |int $i = 0;
+         |int $j = 0;
+         |while ($i < $nx && $j < $ny && !$a.isNullAt($i) && !$b.isNullAt($j)) {
+         |  final long $v = $a.getLong($i);
+         |  final long $w = $b.getLong($j);
+         |  if ($v < $w) {
+         |    $i++;
+         |  } else if ($v > $w) {
+         |    $j++;
+         |  } else {
+         |    long $ci = 0L;
+         |    while ($i < $nx && !$a.isNullAt($i) && $a.getLong($i) == $v) { $ci++; $i++; }
+         |    long $cj = 0L;
+         |    while ($j < $ny && !$b.isNullAt($j) && $b.getLong($j) == $v) { $cj++; $j++; }
+         |    $s += $ci * $cj;
+         |  }
+         |}
+         |${ev.value} = $s;
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 object VectorExpressions {
 
-  /** Register `vec_dot` + `vec_cos` in a session's function registry.
+  /** Register `vec_dot`, `vec_cos`, `vec_l2sq` and `sorted_inter_count`
+    * in a session's function registry.
     * Skips when already present (r20): the Column APIs register on
     * EVERY call, so a 293-entry bench session re-registered (and
     * warn-logged) hundreds of times for three map puts that never
@@ -214,6 +302,8 @@ object VectorExpressions {
         "vec_cos", exprs => FloatVectorCosine(exprs(0), exprs(1)), "built-in")
       reg.createOrReplaceTempFunction(
         "vec_l2sq", exprs => FloatVectorL2(exprs(0), exprs(1)), "built-in")
+      reg.createOrReplaceTempFunction("sorted_inter_count",
+        exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
     }
   }
 
@@ -235,5 +325,11 @@ object VectorExpressions {
   def vecL2(a: Column, b: Column): Column = {
     register(SparkSession.active)
     call_function("vec_l2sq", a, b)
+  }
+
+  /** Column API for [[SortedLongIntersectCount]]. */
+  def sortedInterCount(a: Column, b: Column): Column = {
+    register(SparkSession.active)
+    call_function("sorted_inter_count", a, b)
   }
 }

@@ -151,7 +151,7 @@ object Jdbc {
   def j01JdbcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val url = "jdbc:derby:memory:graftq;create=true"
-    spark.read.parquet(s"$dir/supplier.parquet")
+    graft.Tables.supplier(spark, dir)
       .select($"s_suppkey".cast("long").as("s_suppkey"),
               $"s_nationkey".cast("long").as("s_nationkey"),
               $"s_acctbal")

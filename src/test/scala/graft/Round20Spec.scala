@@ -168,26 +168,15 @@ class Round20Spec extends AnyFunSuite {
     def sql(where: String): DataFrame = spark.sql(
       "SELECT id, name, position, salary FROM graft_r20_local.`default`.cur " +
         s"VERSION AS OF 0$where")
-    val sc = spark.sparkContext
-    def inGroup[A](group: String)(body: => A): A = {
-      sc.setJobGroup(group, group, interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-    }
     val keys = (1 to 20).map(_ * 97L)
-    val got = inGroup("r20-local-lookups") {
+    val (got, jobs) = withJobCount {
       keys.map(k => sql(s" WHERE id = $k").collect().map(_.getString(1)).toSeq)
     }
     assert(got == keys.map(k => Seq(s"n-$k")))
-    // control: an unfiltered read of the same table runs a job. Job
-    // events reach the status tracker in order, so once the control's
-    // job shows, any lookup job would have shown too.
-    assert(inGroup("r20-local-control")(sql("").collect()).length == 2000)
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (sc.statusTracker.getJobIdsForGroup("r20-local-control").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(20)
-    assert(sc.statusTracker.getJobIdsForGroup("r20-local-control").nonEmpty)
-    val jobs = sc.statusTracker.getJobIdsForGroup("r20-local-lookups")
-    assert(jobs.isEmpty, s"${jobs.length} jobs across ${keys.size} lookups")
+    assert(jobs == 0, s"$jobs jobs across ${keys.size} lookups")
+    // control: an unfiltered read of the same table runs a job
+    val (all, controlJobs) = withJobCount(sql("").collect())
+    assert(all.length == 2000 && controlJobs > 0)
     val plan = sql(" WHERE id = 11").queryExecution.executedPlan
     assert(plan.collect { case s: LocalTableScanExec => s }.size == 1, plan)
     assert(plan.children.isEmpty, s"the local scan is the whole plan:\n$plan")

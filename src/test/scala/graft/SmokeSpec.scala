@@ -16,6 +16,26 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the number of Spark jobs it started, counted
+    * by job group. Job events reach the status tracker in order but
+    * asynchronously, so a control job runs in its own group afterwards:
+    * once the control shows, every job `body` started has shown too. */
+  def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    def inGroup[B](group: String)(b: => B): B = {
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      try b finally sc.clearJobGroup()
+    }
+    val out = inGroup(s"counted-$tag")(body)
+    inGroup(s"control-$tag")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(s"control-$tag").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup(s"control-$tag").nonEmpty)
+    (out, sc.statusTracker.getJobIdsForGroup(s"counted-$tag").length)
+  }
 }
 
 class SmokeSpec extends AnyFunSuite {

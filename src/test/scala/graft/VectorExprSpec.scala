@@ -3,7 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
-import graft.functions.VectorExpressions
+import graft.functions.{SortedLongIntersectCount, VectorExpressions}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 class VectorExprSpec extends AnyFunSuite {
   import TestSpark._
@@ -91,5 +96,55 @@ class VectorExprSpec extends AnyFunSuite {
     info(f"fold: $tFold%.3f s, codegen: $tFast%.3f s")
     e.unpersist()
     assert(tFast <= tFold * 3, "codegen path should not be dramatically slower")
+  }
+
+  // --- sorted_inter_count: the LSH sweep's shared-sid kernel ------------
+
+  /** The kernel over one (a, b) row, interpreted and generated. `None`
+    * is a null array, a `null` element a null entry. */
+  private def interBoth(a: Option[Seq[java.lang.Long]],
+                        b: Option[Seq[java.lang.Long]]): (Any, Any) = {
+    val t = ArrayType(LongType, containsNull = true)
+    val e = SortedLongIntersectCount(BoundReference(0, t, nullable = true),
+      BoundReference(1, t, nullable = true))
+    def arr(x: Option[Seq[java.lang.Long]]): Any =
+      x.map(v => new GenericArrayData(v.map(l => l: Any).toArray)).orNull
+    val row = InternalRow(arr(a), arr(b))
+    val gen = GenerateUnsafeProjection.generate(Seq(e)).apply(row)
+    (e.eval(row), if (gen.isNullAt(0)) null else gen.getLong(0))
+  }
+
+  private def L(xs: Long*): Option[Seq[java.lang.Long]] =
+    Some(xs.map(java.lang.Long.valueOf))
+
+  test("sorted_inter_count: interpreted and codegen paths agree on every shape") {
+    val cases: Seq[(Option[Seq[java.lang.Long]], Option[Seq[java.lang.Long]], Any)] = Seq(
+      // duplicates on both sides multiply: 1 → 2·3, 5 → 1·1, 7 → 1·2
+      (L(1, 1, 2, 5, 7), L(1, 1, 1, 5, 6, 7, 7), 9L),
+      (L(1, 3, 5), L(2, 4, 6), 0L),           // disjoint
+      (L(), L(1, 2), 0L),                     // empty
+      (L(), L(), 0L),
+      (L(-3, 0, 4), L(-3, 4, 4), 3L),         // negatives, run at the end
+      (None, L(1), null), (L(1), None, null), // null lists
+      // array_sort leaves nulls last; a null element never matches
+      (Some(Seq[java.lang.Long](2L, 3L, null)), Some(Seq[java.lang.Long](3L, null, null)), 1L))
+    cases.foreach { case (a, b, want) =>
+      val (interp, gen) = interBoth(a, b)
+      assert(interp == want, s"interpreted $a ∩ $b")
+      assert(gen == want, s"codegen $a ∩ $b")
+    }
+  }
+
+  test("sorted_inter_count equals the equi-join count of the two lists") {
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 200).map { _ =>
+      (Seq.fill(rnd.nextInt(12))(rnd.nextInt(6).toLong),
+        Seq.fill(rnd.nextInt(12))(rnd.nextInt(6).toLong))
+    }
+    val got = rows.toDF("a", "b")
+      .select(VectorExpressions.sortedInterCount(array_sort($"a"), array_sort($"b")))
+      .as[Long].collect().toSeq
+    val want = rows.map { case (a, b) => a.map(x => b.count(_ == x).toLong).sum }
+    assert(got == want)
   }
 }
