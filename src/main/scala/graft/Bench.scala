@@ -53,11 +53,6 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
     /** Each entry's seconds; None when it threw — a failure has no time. */
     def onePass(): Seq[(String, Option[Double])] = ordered.map { case (name, fn) =>
-      // provider choice is per query (see Verify): multi-column-family
-      // entries opt into RocksDB at build time; the rest run the default
-      // HDFS-backed provider, and no entry's choice leaks into the next
-      // (or into pass 2 — the reset keeps both passes on equal footing)
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()

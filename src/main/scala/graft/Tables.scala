@@ -9,6 +9,8 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import scala.jdk.CollectionConverters._
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md) plus
   * shared helpers for DuckDB-oracle numeric parity.
@@ -29,7 +31,7 @@ object Tables {
     *
     * `spark.read.parquet(p)` with no schema infers it by running a
     * one-task job that reads a footer. Here the driver reads that footer
-    * itself ([[footerSchema]]) and hands the schema to `.schema(..)`, so
+    * itself ([[footer]]) and hands the schema to `.schema(..)`, so
     * building a DataFrame over the base tables runs no job at all. The
     * footer is read on every call and nothing is kept: a table swapped
     * under the same path is seen by the next load.
@@ -44,64 +46,93 @@ object Tables {
     * substitutes on plan equality). Default 0 = off. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val df = footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+    val found = footer(spark, path)
+    val df = found.map(_._1).fold(spark.read)(spark.read.schema).parquet(path)
     val n = spark.conf.getOption("graft.scan.repartition").map(_.toInt).getOrElse(0)
     // Scale-adaptive, not constant (r20, guide §2): fanning a 5-row
     // dimension (region/nation/supplier — ≤ tens of KB at every SF) out
     // to N partitions buys no parallelism and taxes every downstream
     // stage of every query that touches it with N tasks of scheduling
-    // floor. Tables under [[RepartitionMinBytes]] keep their natural
-    // single-row-group scan; real corpus/fact tables still fan out to
-    // all cores.
-    val small =
-      try java.nio.file.Files.size(
-        java.nio.file.Paths.get(dir, s"$name.parquet")) < RepartitionMinBytes
-      catch { case _: Exception => false }
-    if (n > 0 && !small) df.repartition(n) else df
+    // floor. Tables whose data files total under [[RepartitionMinBytes]]
+    // keep their natural single-row-group scan; real corpus/fact tables
+    // still fan out to all cores.
+    if (n > 0 && found.exists(_._2 >= RepartitionMinBytes)) df.repartition(n) else df
   }
 
   /** The schema `spark.read.parquet(path)` would infer, read from one
     * footer on the driver — what Spark's `readSchemaFromFooter` does
     * inside its inference job: the Spark row metadata a Spark writer
     * leaves in the footer, else the parquet schema converted under the
-    * session's SQL confs (so `nanosAsLong` and friends still apply). A
-    * directory is read through its first data file by name, as a
-    * non-merging inference reads one file. `None` when there is no
-    * footer to read (a missing path, no data file): Spark's own
-    * inference then reports the error. */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    * session's SQL confs (so `nanosAsLong` and friends still apply) —
+    * and the byte total of the table's data files. A directory is read
+    * through its first data file by name, as a non-merging inference
+    * reads one file. `None` when there is no footer to read (a missing
+    * path, no data file): Spark's own inference then reports the error. */
+  private def footer(spark: SparkSession, path: String): Option[(StructType, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    val file =
+    val files =
       try {
         val st = fs.getFileStatus(p)
-        if (!st.isDirectory) Some(st)
-        else fs.listStatus(p)
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(p).toSeq
           .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
             !f.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName).headOption
-      } catch { case _: java.io.FileNotFoundException => None }
-    file.map { st =>
+          .sortBy(_.getPath.getName)
+      } catch { case _: java.io.FileNotFoundException => Nil }
+    files.headOption.map { st =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
         HadoopReadOptions.builder(conf)
           .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
       val meta = try reader.getFooter.getFileMetaData finally reader.close()
-      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
-        .collect { case s: StructType => s }
-        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(meta.getSchema))
+      // Spark reads an INT64 TIMESTAMP(NANOS) column (the older events
+      // layout, see [[events]]) only as a long under nanosAsLong, and it
+      // reads the conf again when the scan executes: set it on the
+      // session the frame runs on, for a file that holds such a column
+      if (meta.getSchema.getColumns.asScala.exists(
+          _.getPrimitiveType.getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => false
+          }))
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val schema =
+        Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+          .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+          .collect { case s: StructType => s }
+          .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+            .convert(meta.getSchema))
+      (schema, files.map(_.getLen).sum)
     }
+  }
+
+  /** A fresh session on the caller's SparkContext for an entry whose plan
+    * needs its own confs (state-store provider, shuffle or state
+    * partitions, join shaping, a scratch catalog): the caller's session
+    * is never written, so nothing is restored afterwards and nothing
+    * races a concurrent user of it. The session carries every conf the
+    * caller changed at runtime — `graft.scan.repartition` included,
+    * which [[load]] bakes into the plan (the CacheManager, shared across
+    * sessions, substitutes cached tables by plan equality) — and then
+    * `overrides`. Static and SparkContext keys come from the same
+    * SparkConf in both sessions, so they never differ and are never set
+    * (`set` refuses them). A frame built on the returned session executes
+    * under its confs whenever the caller runs it; the temp views and
+    * streaming queries it registers live in it too. */
+  def isolated(spark: SparkSession, overrides: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    for ((k, v) <- spark.conf.getAll ++ overrides if !s.conf.getOption(k).contains(v))
+      s.conf.set(k, v)
+    s
   }
 
   /** HARNESS SHIM for FIXTURE-SIZED results only: pin the rows on the
     * driver and rebuild the frame from them, cutting its lineage — so
-    * the scratch dirs / checkpoints the plan reads can be deleted (or
-    * session confs restored) before the entry returns. Every call site
-    * is bounded by construction (key-count or top-k results); never
-    * use on corpus-sized output. One shared helper replaces the
-    * per-call-site copies. */
+    * the scratch dirs / checkpoints the plan reads can be deleted
+    * before the entry returns. Every call site is bounded by
+    * construction (key-count or top-k results); never use on
+    * corpus-sized output. One shared helper replaces the per-call-site
+    * copies. */
   def materialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val rows = df.collect().toSeq
@@ -158,12 +189,14 @@ object Tables {
 
   /** `events.parquet` has shipped in two layouts: INT64 TIMESTAMP(NANOS)
     * (older driver drops) and plain TIMESTAMP(MICROS, isAdjustedToUTC=false)
-    * (current). Branch on the type the reader actually infers; both paths
-    * normalize `ts` to TIMESTAMP_NTZ at microsecond precision — the same
-    * value DuckDB sees — so oracle comparisons on `ts` agree bit-for-bit.
+    * (current). Branch on the type the reader actually infers ([[load]]
+    * reads the nanos layout as a long); both paths normalize `ts` to
+    * TIMESTAMP_NTZ at microsecond precision — the same value DuckDB
+    * sees — so oracle comparisons on `ts` agree bit-for-bit. The frame
+    * stays on the caller's session: `Graft.init` registers it there as
+    * the `events` view.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, dir, "events")
     val ts = raw.schema("ts").dataType match {
       // legacy nanos-as-long layout: truncate to micros like DuckDB's

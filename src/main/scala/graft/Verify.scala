@@ -28,14 +28,6 @@ object Verify {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .foreach { case (name, fn) =>
-      // state-store provider is PER QUERY, not per session: only the
-      // multi-column-family entries (o26/w09/w14/w15) need RocksDB and
-      // they set it themselves at build time; everything else gets the
-      // default HDFS-backed provider, which is the right store for
-      // single-family bounded state (the r14 o23 finding: the global
-      // RocksDB default taxed every small stateful entry). Unsetting
-      // here also stops one entry's choice leaking into the next.
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       // drop any stale result first: a query that errors must not leave a
       // previous run's parquet behind to be graded as if it were current
       Tables.deleteRecursively(s"$outDir/$name")

@@ -282,30 +282,30 @@ object Streaming {
     * emission per type equals this batch run. */
   def w14MapStateLeaderboard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    requireRocksDb(spark)
     typeLeaderboard(
-      Tables.events(spark, dir)
+      Tables.events(rocksDb(spark), dir)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .as[UserEvent])
       .toDF()
   }
 
-  /** Multi-column-family state (MapState/ListState — w14/w15) requires
-    * the RocksDB state store; the default HDFS-backed provider throws
-    * STATE_STORE_MULTIPLE_COLUMN_FAMILIES. The choice is PER QUERY (the
-    * r14 o23 finding: a session-global RocksDB default taxed every
+  /** Multi-column-family state (MapState/ListState — w14/w15/o26)
+    * requires the RocksDB state store; the default HDFS-backed provider
+    * throws STATE_STORE_MULTIPLE_COLUMN_FAMILIES. The choice is PER QUERY
+    * (the r14 o23 finding: a session-global RocksDB default taxed every
     * single-family entry with its per-(trigger × partition) open/commit
-    * cost): entries that need it call this at build time, and
-    * Verify/Bench unset the provider key before each entry so the
-    * opt-in never leaks into the next query or the next pass. */
-  private def requireRocksDb(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    * cost): an entry that needs it builds its plan on this isolated
+    * session ([[Tables.isolated]], plus `confs`), so the opt-in never
+    * reaches the caller's session, the next query or the next pass. */
+  private[graft] def rocksDb(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val s = Tables.isolated(spark, ("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") +: confs: _*)
     // RocksDB registers with the driver's StateStoreCoordinator RPC
     // endpoint, which only the StreamingQueryManager creates — in a
     // pure-batch session it doesn't exist yet and executors fail with
     // RpcEndpointNotFoundException. Touching `streams` instantiates it.
-    spark.streams
+    s.streams
+    s
   }
 
   // --- transformWithState LIST STATE (bounded CEP pattern window) --------
@@ -354,25 +354,15 @@ object Streaming {
     * triple in each user's event_id-ordered value sequence. */
   def w15ListStateCep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    requireRocksDb(spark)
     // per-workload store sizing (w17/o23 device): RocksDB opens one
     // instance PER STATE PARTITION — 150 users of 2-double state don't
     // need the session's 32 shards, and instance open/commit dominates
     // this entry's cost
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.getOption(shuffleKey)
-    spark.conf.set(shuffleKey, "8")
-    try {
-      val out = risingValueAlerts(
-        Tables.events(spark, dir)
-          .select($"event_id", $"user_id", $"event_type", $"value")
-          .as[UserEvent])
-        .toDF()
-      // materialize under the scoped conf: the partition count binds at
-      // EXECUTION, and this entry's caller may run the plan later
-      out.localCheckpoint(true)
-    } finally savedShuffle.fold(spark.conf.unset(shuffleKey))(
-      spark.conf.set(shuffleKey, _))
+    risingValueAlerts(
+      Tables.events(rocksDb(spark, "spark.sql.shuffle.partitions" -> "8"), dir)
+        .select($"event_id", $"user_id", $"event_type", $"value")
+        .as[UserEvent])
+      .toDF()
   }
 
   // --- transformWithState TIMERS (event-time state eviction) -------------
@@ -548,14 +538,8 @@ object Streaming {
     * asserts the streaming run over MemoryStream matches). */
   def w09TransformWithState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // a batch TWS run under the RocksDB provider needs the driver's
-    // StateStoreCoordinator endpoint, which only exists once spark.streams
-    // is touched — without this, w09 fails when it's the FIRST stateful
-    // query of the session (found by a filtered Verify run; the full
-    // battery masked it because c17's streaming query runs earlier)
-    requireRocksDb(spark)
     statefulUserTotalsTws(
-      Tables.events(spark, dir)
+      Tables.events(rocksDb(spark), dir)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .as[UserEvent])
       .toDF()

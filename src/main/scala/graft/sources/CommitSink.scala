@@ -1727,8 +1727,8 @@ object CommitSink {
     // days, widened short/byte) — so each column is cast to EXACTLY the
     // value the writer updates with, which both unblocks temporal columns
     // and keeps the two sketch sources mergeable. TimestampNTZ relies on
-    // the UTC session scope below: cast(ntz AS timestamp) under UTC is
-    // the identity on the physical micros.
+    // the UTC session below: cast(ntz AS timestamp) under UTC is the
+    // identity on the physical micros.
     def sketchInput(logical: String, physical: String)
         : org.apache.spark.sql.Column = {
       val c = col(physical)
@@ -1741,11 +1741,12 @@ object CommitSink {
         case _ => c.cast(LongType) // int/short/byte, widened like the writer
       }
     }
+    val utc = graft.Tables.isolated(spark, "spark.sql.session.timeZone" -> "UTC")
     val perGroup = groups.map { case (fw, fs) =>
       val phys = StructType(schema.fields.map(f =>
         fw.get(f.name).map(n => f.copy(name = n)).getOrElse(f)))
       val paths = fs.map(f => Paths.get(dir, f).toString)
-      spark.read.schema(phys).parquet(paths: _*)
+      utc.read.schema(phys).parquet(paths: _*)
         .groupBy(col("_metadata.file_name").as("_graft_f"))
         .agg(hll_sketch_agg(sketchInput(cols.head, fw.getOrElse(cols.head, cols.head)), lgK)
             .as(cols.head),
@@ -1759,23 +1760,15 @@ object CommitSink {
     // the column's report
     val fileFw: Map[String, Map[String, String]] =
       groups.flatMap { case (fw, fs) => fs.map(_ -> fw) }.toMap
-    // one row per file (file-count-sized; sketches are ≤ KBs each).
-    // UTC scope: the conf binds at EXECUTION, and the collect() happens
-    // inside the scope — restore in a finally like the w15 state-sizing
-    // override (Streaming.scala)
-    val TZ_KEY = "spark.sql.session.timeZone"
-    val prevTz = spark.conf.get(TZ_KEY)
+    // one row per file (file-count-sized; sketches are ≤ KBs each)
     val sketched: Map[String, Seq[(String, String)]] =
-      try {
-        spark.conf.set(TZ_KEY, "UTC")
-        perGroup.reduce(_ union _).collect().map { r =>
-          val f = r.getString(0)
-          f -> cols.zipWithIndex.flatMap { case (c, i) =>
-            Option(r.get(i + 1)).map(b => c ->
-              java.util.Base64.getEncoder.encodeToString(b.asInstanceOf[Array[Byte]]))
-          }
-        }.toMap
-      } finally spark.conf.set(TZ_KEY, prevTz)
+      perGroup.reduce(_ union _).collect().map { r =>
+        val f = r.getString(0)
+        f -> cols.zipWithIndex.flatMap { case (c, i) =>
+          Option(r.get(i + 1)).map(b => c ->
+            java.util.Base64.getEncoder.encodeToString(b.asInstanceOf[Array[Byte]]))
+        }
+      }.toMap
     val merged = m.stats.map { case (f, e) =>
       sketched.get(f).filter(_ => targets.contains(f)) match {
         case Some(entries) =>

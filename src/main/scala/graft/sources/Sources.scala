@@ -372,33 +372,27 @@ object Sources {
   def o10Dsv2StreamRead(spark: SparkSession, dir: String): DataFrame = {
     val ckpt = s"/tmp/graft_o10/${new java.io.File(dir).getName}"
     graft.Tables.deleteRecursively(ckpt)
-    // repeat runs in one session (bench pass 2) must re-register the sink
-    spark.catalog.dropTempView("o10_sensor_stream")
     // state-partition sizing is per-stream (the w17/o23 device): a
     // handful of sensor keys don't need the session's 32 state shards —
     // per-trigger cost is (partitions × operators) store commits, and
     // this query pays it on every one of its 3 triggers
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.getOption(shuffleKey)
-    spark.conf.set(shuffleKey, "8")
-    try {
-      val q = spark.readStream.format("graft-sensors")
-        .option("rows", 50000).option("slices", 8)
-        .option("streamBatchRows", 20000).load()
-        .filter(col("id") >= 5000L && col("id") < 45000L)
-        .groupBy(col("sensor"))
-        .agg(count(lit(1)).as("n"),
-          graft.Tables.dsum(col("reading")).as("total_reading"),
-          max(col("id")).as("max_id"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("o10_sensor_stream")
-        .option("checkpointLocation", ckpt)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally savedShuffle.fold(spark.conf.unset(shuffleKey))(
-      spark.conf.set(shuffleKey, _))
-    spark.table("o10_sensor_stream")
+    val s = graft.Tables.isolated(spark, "spark.sql.shuffle.partitions" -> "8")
+    val q = s.readStream.format("graft-sensors")
+      .option("rows", 50000).option("slices", 8)
+      .option("streamBatchRows", 20000).load()
+      .filter(col("id") >= 5000L && col("id") < 45000L)
+      .groupBy(col("sensor"))
+      .agg(count(lit(1)).as("n"),
+        graft.Tables.dsum(col("reading")).as("total_reading"),
+        max(col("id")).as("max_id"))
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("o10_sensor_stream")
+      .option("checkpointLocation", ckpt)
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    // the memory sink's view lives in the session that ran the stream
+    s.table("o10_sensor_stream")
   }
 
   /** o11: the full DSv2 STREAMING pipeline — micro-batch READ
@@ -434,6 +428,24 @@ object Sources {
         max(col("id")).as("max_id"))
   }
 
+  /** The session an entry that addresses graft-commit tables by name
+    * runs on: [[graft.Tables.isolated]] with `confs` (DML-mode knobs)
+    * and a CommitCatalog registered as [[cat]], rooted at a freshly
+    * wiped per-(query, dir) scratch dir. A fresh session has its own
+    * CatalogManager, so the one catalog name never serves an instance
+    * cached for another root. Returns (session, root). */
+  private def scopedCatalog(spark: SparkSession, tag: String, dir: String,
+                            confs: (String, String)*): (SparkSession, String) = {
+    val dirName = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
+    val root = s"/tmp/graft_$tag/$dirName"
+    graft.Tables.deleteRecursively(root)
+    (graft.Tables.isolated(spark, Seq(s"spark.sql.catalog.$cat" -> "graft.sources.CommitCatalog",
+      s"spark.sql.catalog.$cat.root" -> root) ++ confs: _*), root)
+  }
+
+  /** The catalog name in every [[scopedCatalog]] session. */
+  private val cat = "lake"
+
   /** o12: SQL row-level DELETE against the commit sink, addressed by
     * NAME through [[CommitCatalog]] — the row-level-operation member of
     * the DSv2 connector matrix (read o05-o08/o10, write o09, streaming
@@ -448,50 +460,19 @@ object Sources {
     * read-back aggregate must equal the oracle's aggregate over `events
     * WHERE NOT (cond)` — proving the delete removed exactly the selected
     * rows (NULL-condition rows would be kept; the fixture has none). */
-  /** Register a CommitCatalog whose NAME encodes (query tag, dir):
-    * CatalogManager caches catalog instances by name and silently
-    * ignores a re-pointed `root` conf, so a fixed name would serve a
-    * STALE root when one session runs the query against two scale dirs
-    * (the trap Round11Spec.withCatalog documents). Returns
-    * (catalogName, freshly-wiped root). */
-  /** Session clone for registry entries that set DML-mode knobs or temp
-    * views (the d32 precedent): shared SparkContext and CacheManager,
-    * private conf/catalog/view state — a future parallel Verify cannot
-    * interleave one entry's knobs into another's statement. The
-    * scan-repartition knob is copied over because [[graft.Tables.load]]
-    * bakes it into the plan (cache substitution is plan-equality-based:
-    * a clone without the knob would silently MISS the warmed cache). */
-  private def dmlSession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    spark.conf.getOption("graft.scan.repartition")
-      .foreach(s.conf.set("graft.scan.repartition", _))
-    s
-  }
-
-  private def scopedCatalog(spark: SparkSession, tag: String,
-                            dir: String): (String, String) = {
-    val dirName = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"/tmp/graft_$tag/$dirName"
-    graft.Tables.deleteRecursively(root)
-    val cat = s"graft_${tag}_$dirName"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.CommitCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
-
   def o12Dsv2DeleteWhere(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    val (cat, root) = scopedCatalog(spark, "o12", dir)
+    val (lake, root) = scopedCatalog(spark, "o12", dir)
     val path = s"$root/default/events"
-    graft.Tables.events(spark, dir)
+    graft.Tables.events(lake, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .repartition(4, col("user_id"))
       .write.format("graft-commit").option("path", path).mode("overwrite").save()
     // 90.0D: a DOUBLE literal — a bare 90.0 is DECIMAL and the implicit
     // cast could land on the column, blocking predicate translation
-    spark.sql(s"DELETE FROM $cat.`default`.events " +
+    lake.sql(s"DELETE FROM $cat.`default`.events " +
       "WHERE event_type = 'error' OR value > 90.0D")
-    CommitSink.readCommitted(spark, path)
+    CommitSink.readCommitted(lake, path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.Tables.dsum(col("value")).as("total_value"),
@@ -517,9 +498,9 @@ object Sources {
     * same three branches. */
   def o13Dsv2MergeUpsert(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, sum}
-    val (cat, root) = scopedCatalog(spark, "o13", dir)
+    val (lake, root) = scopedCatalog(spark, "o13", dir)
     val path = s"$root/default/user_state"
-    val ev = graft.Tables.events(spark, dir)
+    val ev = graft.Tables.events(lake, dir)
       .select(col("event_id"), col("user_id"))
     // target: per-user state over events with event_id % 3 != 0
     ev.filter(col("event_id") % 3 =!= 0)
@@ -535,16 +516,15 @@ object Sources {
     val src = s2.unionByName(
       s2.filter(col("user_id") % 10 === 0)
         .select((col("user_id") + 10000000L).as("user_id"), col("n"), col("s")))
-    spark.catalog.dropTempView("o13_src")
     src.createTempView("o13_src")
-    spark.sql(s"""MERGE INTO $cat.`default`.user_state t
+    lake.sql(s"""MERGE INTO $cat.`default`.user_state t
                  USING o13_src s ON t.user_id = s.user_id
                  WHEN MATCHED AND t.n_events + s.n > 66 THEN DELETE
                  WHEN MATCHED THEN UPDATE SET
                    n_events = t.n_events + s.n, sum_eid = t.sum_eid + s.s
                  WHEN NOT MATCHED THEN INSERT (user_id, n_events, sum_eid)
                    VALUES (s.user_id, s.n, s.s)""")
-    CommitSink.readCommitted(spark, path)
+    CommitSink.readCommitted(lake, path)
   }
 
   /** o21: MERGE with RUNTIME GROUP FILTERING — the `_file` metadata
@@ -568,27 +548,26 @@ object Sources {
     * table. */
   def o21Dsv2MergeGroupPrune(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    val (cat, root) = scopedCatalog(spark, "o21", dir)
+    val (lake, root) = scopedCatalog(spark, "o21", dir)
     val path = s"$root/default/ev"
-    val ev = graft.Tables.events(spark, dir)
+    val ev = graft.Tables.events(lake, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     ev.repartitionByRange(8, col("event_id"))
       .write.format(CommitSink.NAME).option("path", path).mode("overwrite").save()
     val before = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     val matched = ev.filter(col("event_id") < 50)
       .select(col("event_id"), (col("value") + 1.0).as("v"))
-    spark.catalog.dropTempView("o21_src")
     matched.unionByName(matched.filter(col("event_id") % 2 === 0)
         .select((col("event_id") + 100000000L).as("event_id"), col("v")))
       .createTempView("o21_src")
-    spark.sql(s"""MERGE INTO $cat.`default`.ev t USING o21_src s
+    lake.sql(s"""MERGE INTO $cat.`default`.ev t USING o21_src s
                  ON t.event_id = s.event_id
                  WHEN MATCHED THEN UPDATE SET value = t.value + s.v
                  WHEN NOT MATCHED THEN INSERT (event_id, event_type, value)
                    VALUES (s.event_id, 'merged', s.v)""")
     val after = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     val carried = after.files.toSet.intersect(before.files.toSet).size
-    CommitSink.readCommitted(spark, path)
+    CommitSink.readCommitted(lake, path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.Tables.dsum(col("value")).as("total_value"),
@@ -647,11 +626,8 @@ object Sources {
     // bounded state don't need the session's 32 shards — per-trigger
     // cost is (partitions × operators) store commits, and 8 is the
     // right size for the volume; read back below at the same count
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.getOption(shuffleKey)
-    spark.conf.set(shuffleKey, "8")
-    try {
-    val q = spark.readStream.format("graft-sensors")
+    val s = graft.Tables.isolated(spark, "spark.sql.shuffle.partitions" -> "8")
+    val q = s.readStream.format("graft-sensors")
       .option("rows", 20000).option("slices", 8)
       .option("streamBatchRows", 10000).load()
       .select((col("id") % 97L).as("k"), col("id"))
@@ -665,7 +641,7 @@ object Sources {
     // the state VALUE struct carries the physical aggregation buffer —
     // field names are the agg functions' (`count`, `sum`), not the
     // query aliases (those live above the state)
-    val snap = spark.read.format("statestore").load(ck)
+    val snap = s.read.format("statestore").load(ck)
       .select(col("key.k").as("k"),
         col("value.count").as("n_events"),
         col("value.sum").as("sum_id"))
@@ -675,8 +651,6 @@ object Sources {
     val out = graft.Tables.materialize(snap)
     graft.Tables.deleteRecursively(ck)
     out
-    } finally savedShuffle.fold(spark.conf.unset(shuffleKey))(
-      spark.conf.set(shuffleKey, _))
   }
 
   /** o24: the FULL TYPE SURFACE committed through graft-commit — the
@@ -725,32 +699,31 @@ object Sources {
     * even ids doubled n/price, odd ids verbatim. Every value round-trips
     * the parquet payload twice (seed commit + rewrite commit). */
   def o25TypedCdcMerge(spark: SparkSession, dir: String): DataFrame = {
-    val (cat, root) = scopedCatalog(spark, "o25", dir)
-    spark.sql(s"""CREATE TABLE $cat.`default`.readings (
+    val (lake, root) = scopedCatalog(spark, "o25", dir)
+    lake.sql(s"""CREATE TABLE $cat.`default`.readings (
       id BIGINT, tiny TINYINT, small SMALLINT, med INT, n INT, big BIGINT,
       f FLOAT, d DOUBLE, price DECIMAL(12,4), flag BOOLEAN, name STRING,
       born DATE, updated TIMESTAMP_NTZ, t STRING, y SMALLINT, u STRING,
       j STRING, e STRING) USING `graft-commit`""")
-    spark.catalog.dropTempView("o25_src")
     // cached across the two MERGE statements (r20, the c21 device): the
     // source is the full envelope parse + latest-per-id window — each
     // MERGE re-executed the view's plan, so the corpus paid the
     // to_json/from_json/cast pass twice. Computed fresh per entry call
     // (cache scope is this entry), released before the readout.
-    val src = graft.cdc.CdcQueries.c15TypedSnapshot(spark, dir).cache()
+    val src = graft.cdc.CdcQueries.c15TypedSnapshot(lake, dir).cache()
     src.createTempView("o25_src")
-    spark.sql(s"""MERGE INTO $cat.`default`.readings tg
+    lake.sql(s"""MERGE INTO $cat.`default`.readings tg
                  USING (SELECT * FROM o25_src WHERE id % 2 = 0) s
                  ON tg.id = s.id
                  WHEN NOT MATCHED THEN INSERT *""")
-    spark.sql(s"""MERGE INTO $cat.`default`.readings tg
+    lake.sql(s"""MERGE INTO $cat.`default`.readings tg
                  USING o25_src s ON tg.id = s.id
                  WHEN MATCHED THEN UPDATE SET
                    n = tg.n + s.n,
                    price = CAST(tg.price + s.price AS DECIMAL(12,4))
                  WHEN NOT MATCHED THEN INSERT *""")
     src.unpersist()
-    CommitSink.readCommitted(spark, s"$root/default/readings")
+    CommitSink.readCommitted(lake, s"$root/default/readings")
       .select(col("id"),
         col("tiny").cast("smallint").as("tiny"),
         col("small"), col("med"), col("n"), col("big"),
@@ -794,33 +767,25 @@ object Sources {
     ev.filter(col("event_id") > cut)
       .write.format(CommitSink.NAME).option("path", tbl).mode("append").save()
     // MapState is a second column family — RocksDB required (the w14
-    // session contract); touching `streams` registers the coordinator
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.streams
+    // contract). State-partition sizing is per-stream (the w17/o23
+    // device, r20): the grouping key is event_type (single-digit
+    // cardinality), so the session's 32 shards buy nothing and cost
+    // (partitions × families) RocksDB store commits per trigger; 8
+    // matches o23's sizing. The readout is partition-count-independent —
+    // the processor sorts each key's rows by event_id before folding
+    // (LeaderboardProcessor).
+    val s = graft.ops.Streaming.rocksDb(spark, "spark.sql.shuffle.partitions" -> "8")
     import spark.implicits._
-    val stream = spark.readStream.format(CommitSink.NAME).option("path", tbl)
+    val stream = s.readStream.format(CommitSink.NAME).option("path", tbl)
       .option("maxCommitsPerTrigger", 1).load()
       .as[graft.ops.Streaming.UserEvent]
-    // state-partition sizing is per-stream (the w17/o23 device, r20):
-    // the grouping key is event_type (single-digit cardinality), so the
-    // session's 32 shards buy nothing and cost (partitions × families)
-    // RocksDB store commits per trigger; 8 matches o23's sizing. The
-    // readout is partition-count-independent — the processor sorts each
-    // key's rows by event_id before folding (LeaderboardProcessor).
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.getOption(shuffleKey)
-    spark.conf.set(shuffleKey, "8")
-    try {
-      val q = graft.ops.Streaming.typeLeaderboard(stream)
-        .writeStream.outputMode("update").format("noop")
-        .option("checkpointLocation", ck).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally savedShuffle.fold(spark.conf.unset(shuffleKey))(
-      spark.conf.set(shuffleKey, _))
+    val q = graft.ops.Streaming.typeLeaderboard(stream)
+      .writeStream.outputMode("update").format("noop")
+      .option("checkpointLocation", ck).start()
+    q.processAllAvailable()
+    q.stop()
     // one row per (grouping key, map sub-key): the flattened MapState
-    val store = spark.read.format("statestore")
+    val store = s.read.format("statestore")
       .option("stateVarName", "totals").load(ck)
       .select(col("key.value").as("event_type"),
         col("user_map_key.value").as("user_id"),
@@ -861,17 +826,13 @@ object Sources {
     * stream refusing a vector commit as non-append-only. */
   def o27DeleteVectors(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    // the MOR knob + catalog registration live on a CLONED session (the
-    // d32 precedent): registry entries must not mutate the shared
-    // session's conf — a future parallel Verify could interleave knobs
-    val dml = dmlSession(spark)
-    val (cat, root) = scopedCatalog(dml, "o27", dir)
+    val (dml, root) = scopedCatalog(spark, "o27", dir,
+      "spark.graft.commit.deleteMode" -> "merge-on-read")
     val path = s"$root/default/events"
     graft.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .repartitionByRange(8, col("event_id"))
       .write.format(CommitSink.NAME).option("path", path).mode("overwrite").save()
-    dml.conf.set("spark.graft.commit.deleteMode", "merge-on-read")
     dml.sql(s"DELETE FROM $cat.`default`.events " +
       "WHERE event_id >= 100 AND event_id < 2000 AND event_type = 'click'")
     dml.sql(s"DELETE FROM $cat.`default`.events WHERE value > 95.0D")
@@ -901,12 +862,12 @@ object Sources {
     * which DuckDB computes as COUNT(*) of the match predicate). */
   def o28MorMerge(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    // cloned session: the MOR knob, the catalog registration AND the
-    // o28_src temp view are all session-scoped to this entry
-    val dml = dmlSession(spark)
-    val (cat, root) = scopedCatalog(dml, "o28", dir)
+    // the MOR knob, the catalog registration AND the o28_src temp view
+    // are all scoped to this entry's session
+    val (dml, root) = scopedCatalog(spark, "o28", dir,
+      "spark.graft.commit.rowLevelMode" -> "merge-on-read")
     val path = s"$root/default/ev"
-    // the source view must be OWNED by the clone — createTempView
+    // the source view must be OWNED by dml — createTempView
     // registers in the DataFrame's own session — so ev reads through dml
     // (the CacheManager is shared state: the cached base-table plan
     // substitutes across sessions)
@@ -917,11 +878,9 @@ object Sources {
     val before = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     val matched = ev.filter(col("event_id") < 50)
       .select(col("event_id"), (col("value") + 1.0).as("v"))
-    dml.catalog.dropTempView("o28_src")
     matched.unionByName(matched.filter(col("event_id") % 2 === 0)
         .select((col("event_id") + 100000000L).as("event_id"), col("v")))
       .createTempView("o28_src")
-    dml.conf.set("spark.graft.commit.rowLevelMode", "merge-on-read")
     dml.sql(s"""MERGE INTO $cat.`default`.ev t USING o28_src s
                ON t.event_id = s.event_id
                WHEN MATCHED AND t.value > 95.0D THEN DELETE
@@ -956,8 +915,8 @@ object Sources {
     * oracle reproduces from the raw table. */
   def o29ChangeDataFeed(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    val dml = dmlSession(spark)
-    val (cat, root) = scopedCatalog(dml, "o29", dir)
+    val (dml, root) = scopedCatalog(spark, "o29", dir,
+      "spark.graft.commit.deleteMode" -> "merge-on-read")
     val path = s"$root/default/ev"
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
@@ -966,7 +925,6 @@ object Sources {
       .write.format(CommitSink.NAME).option("path", path).mode("overwrite").save()
     ev.filter(col("event_id") % 2 === 0)
       .write.format(CommitSink.NAME).option("path", path).mode("append").save()
-    dml.conf.set("spark.graft.commit.deleteMode", "merge-on-read")
     dml.sql(s"DELETE FROM $cat.`default`.ev WHERE value > 90.0D")
     spark.read.format(CommitSink.NAME).option("path", path)
       .option("readChangeFeed", true).option("startingVersion", 0).load()
@@ -996,8 +954,13 @@ object Sources {
     * readout proves the position total, not the vector count). */
   def o30VectorMaintenance(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    val dml = dmlSession(spark)
-    val (cat, root) = scopedCatalog(dml, "o30", dir)
+    // both MOR knobs: the range DELETE takes the metadata path
+    // (deleteMode), the modulo DELETE is untranslatable as V1 filters
+    // and routes through the row-level operation (rowLevelMode) —
+    // either way, positions land as vectors, no file rewrites
+    val (dml, root) = scopedCatalog(spark, "o30", dir,
+      "spark.graft.commit.deleteMode" -> "merge-on-read",
+      "spark.graft.commit.rowLevelMode" -> "merge-on-read")
     val path = s"$root/default/ev"
     // zone 1 of 4 covers the lowest event_id quartile: kill most of it
     // (the 22nd-percentile cut ≈ 88% of the zone), then nick sparse rows
@@ -1017,13 +980,6 @@ object Sources {
           org.apache.spark.sql.functions.expr("percentile_cont(0.40) WITHIN GROUP (ORDER BY event_id)"))
         .head() match { case r => Array(r.getDouble(0).toLong, r.getDouble(1).toLong) })
     val Array(cut, cutHigh) = cuts.asInstanceOf[Array[Long]]
-    // both MOR knobs: the range DELETE takes the metadata path
-    // (deleteMode), the modulo DELETE is untranslatable as V1 filters
-    // and routes through the row-level operation (rowLevelMode) —
-    // either way, positions land as vectors, no file rewrites. Knobs on
-    // the entry's cloned session only.
-    dml.conf.set("spark.graft.commit.deleteMode", "merge-on-read")
-    dml.conf.set("spark.graft.commit.rowLevelMode", "merge-on-read")
     dml.sql(s"DELETE FROM $cat.`default`.ev WHERE event_id <= $cut")
     dml.sql(s"DELETE FROM $cat.`default`.ev WHERE event_id % 97 = 0 AND event_id > $cutHigh")
     val rewritten = CommitSink.compactDeletes(spark, path, 0.5)
@@ -1056,8 +1012,7 @@ object Sources {
     * generation hash-mismatches. */
   def o31SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min, when}
-    val dml = dmlSession(spark)
-    val (cat, root) = scopedCatalog(dml, "o31", dir)
+    val (dml, root) = scopedCatalog(spark, "o31", dir)
     val path = s"$root/default/ord"
     val ord = graft.Tables.orders(spark, dir)
     // generation 0: three columns (commit 0)
@@ -1153,8 +1108,7 @@ object Sources {
     * commits from the raw table with no layout dependence. */
   def o33CowChangeFeed(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    val dml = dmlSession(spark)
-    val (cat, root) = scopedCatalog(dml, "o33", dir)
+    val (dml, root) = scopedCatalog(spark, "o33", dir)
     val path = s"$root/default/ev"
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
@@ -1543,25 +1497,24 @@ object Sources {
     * evolution + compact migration, not a stop-the-world re-land. */
   def o40BucketPartitioning(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, sum}
-    val dirName = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"/tmp/graft_o40/$dirName"
-    graft.Tables.deleteRecursively(root)
-    val cat = s"graft_o40_$dirName"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.CommitCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    spark.sql(s"CREATE TABLE $cat.`default`.fact (event_id BIGINT, " +
+    // the join-shaping confs serve the SPJ readout; nothing else here
+    // plans a join
+    val (lake, root) = scopedCatalog(spark, "o40", dir,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    lake.sql(s"CREATE TABLE $cat.`default`.fact (event_id BIGINT, " +
       "user_id BIGINT, event_type STRING, value DOUBLE) " +
       "PARTITIONED BY (bucket(8, user_id))")
-    spark.sql(s"CREATE TABLE $cat.`default`.dim (user_id BIGINT, " +
+    lake.sql(s"CREATE TABLE $cat.`default`.dim (user_id BIGINT, " +
       "segment BIGINT) PARTITIONED BY (bucket(8, user_id))")
-    graft.Tables.events(spark, dir)
+    graft.Tables.events(lake, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .createOrReplaceTempView("o40_events_src")
     // fact and dim land concurrently — independent tables (guide §2.6)
     graft.Tables.inParallel(
-      () => spark.sql(s"INSERT INTO $cat.`default`.fact " +
+      () => lake.sql(s"INSERT INTO $cat.`default`.fact " +
         "SELECT event_id, user_id, event_type, value FROM o40_events_src"),
-      () => spark.sql(s"INSERT INTO $cat.`default`.dim " +
+      () => lake.sql(s"INSERT INTO $cat.`default`.dim " +
         "SELECT DISTINCT user_id, user_id % 10 AS segment FROM o40_events_src"))
     // layout proof: bounded file count, one bucket id per file, and the
     // recorded id is the Iceberg transform of the file's rows
@@ -1573,41 +1526,20 @@ object Sources {
           .exists(k => k >= 0 && k < 8))
     }
     val bounded = layoutOk("fact") && layoutOk("dim")
-    // the SPJ proof runs under the join-shaping confs, restored after
-    val conf = spark.conf
-    val prevB = conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevT = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    val (zeroExchange, joined) =
-      try {
-        conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val j = spark.sql(
-          s"SELECT f.event_type, f.value, d.segment FROM $cat.`default`.fact f " +
-            s"JOIN $cat.`default`.dim d ON f.user_id = d.user_id")
-        val noExchange = !j.queryExecution.executedPlan.toString.contains("Exchange")
-        // materialize the readout UNDER the SPJ plan, then restore confs
-        val out = j.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            graft.Tables.dsum(col("value")).as("total_value"),
-            sum(col("segment")).as("seg_sum"))
-          .collect()
-        (noExchange, out)
-      } finally {
-        prevB.fold(conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-          conf.set("spark.sql.sources.v2.bucketing.enabled", _))
-        prevT.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-          conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      }
+    val joined = lake.sql(
+      s"SELECT f.event_type, f.value, d.segment FROM $cat.`default`.fact f " +
+        s"JOIN $cat.`default`.dim d ON f.user_id = d.user_id")
+    val zeroExchange = !joined.queryExecution.executedPlan.toString.contains("Exchange")
     // point prune: an equality on the bucket source column plans ONE
     // bucket group (the predicate projects onto the recorded bucket id)
-    val probeKey = spark.table(s"$cat.`default`.fact")
+    val probeKey = lake.table(s"$cat.`default`.fact")
       .agg(org.apache.spark.sql.functions.min(col("user_id"))).head().getLong(0)
     val planned = plannedFiles(
-      spark.table(s"$cat.`default`.fact").filter(col("user_id") === probeKey))
-    import spark.implicits._
-    spark.createDataset(joined.toSeq.map(r =>
-        (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3))))
-      .toDF("event_type", "n", "total_value", "seg_sum")
+      lake.table(s"$cat.`default`.fact").filter(col("user_id") === probeKey))
+    joined.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        graft.Tables.dsum(col("value")).as("total_value"),
+        sum(col("segment")).as("seg_sum"))
       .withColumn("files_bounded", lit(if (bounded) 1L else 0L))
       .withColumn("spj_zero_exchange", lit(if (zeroExchange) 1L else 0L))
       .withColumn("planned_point", lit(planned))
@@ -1987,16 +1919,16 @@ object Sources {
     * match the manifest's own composite inventory. */
   def o46MultiTransform(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, countDistinct, lit, max, min, to_date}
-    val (cat, root) = scopedCatalog(spark, "o46", dir)
+    val (lake, root) = scopedCatalog(spark, "o46", dir)
     val path = s"$root/default/ev"
-    spark.sql(s"CREATE TABLE $cat.`default`.ev (event_id BIGINT, " +
+    lake.sql(s"CREATE TABLE $cat.`default`.ev (event_id BIGINT, " +
       "ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE) " +
       "USING `graft-commit` PARTITIONED BY (days(ts), bucket(4, user_id))")
-    graft.Tables.events(spark, dir)
+    graft.Tables.events(lake, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .createOrReplaceTempView("o46_src")
-    spark.sql(s"INSERT INTO $cat.`default`.ev SELECT * FROM o46_src")
+    lake.sql(s"INSERT INTO $cat.`default`.ev SELECT * FROM o46_src")
     val m = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     def stat(f: String) = CommitSink.FileStat.decode(m.stats(f))
     // every file: a full 2-key vector, day == its ts range's day,
@@ -2012,7 +1944,7 @@ object Sources {
     val nDays = m.files.map(f => stat(f).pks.head).distinct.size
     val bounded = m.files.size <= nDays * 4
     // the middle day + a user present in it
-    val ev = graft.Tables.events(spark, dir)
+    val ev = graft.Tables.events(lake, dir)
     val lo0 = ev.agg(min(col("ts"))).head().getAs[java.time.LocalDateTime](0)
     val dayLo = lo0.toLocalDate.plusDays(2).atStartOfDay()
     val dayHi = dayLo.plusDays(1)
@@ -2025,13 +1957,13 @@ object Sources {
       st.pks.head == dayKey &&
         st.pks(1) == BucketFunction.bucketId(4, u).toLong
     }
-    def read() = spark.read.format(CommitSink.NAME).option("path", path).load()
+    def read() = lake.read.format(CommitSink.NAME).option("path", path).load()
     val dayPlanned = plannedFiles(read()
       .filter(col("ts") >= lit(dayLo) && col("ts") < lit(dayHi)))
     val pointPlanned = plannedFiles(read()
       .filter(col("ts") >= lit(dayLo) && col("ts") < lit(dayHi) &&
         col("user_id") === u))
-    CommitSink.readCommitted(spark, path)
+    CommitSink.readCommitted(lake, path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.Tables.dsum(col("value")).as("total_value"),
@@ -2063,26 +1995,26 @@ object Sources {
     * "stop paying for a dead column" without rewriting a byte. */
   def o47DropColumn(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    val (cat, root) = scopedCatalog(spark, "o47", dir)
+    val (lake, root) = scopedCatalog(spark, "o47", dir)
     val path = s"$root/default/ev"
-    val ev = graft.Tables.events(spark, dir)
+    val ev = graft.Tables.events(lake, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("props"))
     ev.write.format(CommitSink.NAME).option("path", path)
       .mode("overwrite").save()
     val m0 = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
-    spark.sql(s"ALTER TABLE $cat.`default`.ev DROP COLUMN props")
+    lake.sql(s"ALTER TABLE $cat.`default`.ev DROP COLUMN props")
     val m1 = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     val metadataOnly = m1.files == m0.files && m1.commit == m0.commit + 1
-    val narrowed = !spark.table(s"$cat.`default`.ev").columns.contains("props")
+    val narrowed = !lake.table(s"$cat.`default`.ev").columns.contains("props")
     // time travel keeps the pre-DROP shape (and its rows still decode)
-    val oldShape = spark.read.format(CommitSink.NAME).option("path", path)
+    val oldShape = lake.read.format(CommitSink.NAME).option("path", path)
       .option("versionAsOf", m0.commit).load()
     val travelKeeps = oldShape.columns.contains("props") &&
       oldShape.filter(col("props").isNotNull).count() > 0
     ev.filter(col("event_id") % 4 === 0).drop("props")
       .write.format(CommitSink.NAME).option("path", path).mode("append").save()
-    CommitSink.readCommitted(spark, path)
+    CommitSink.readCommitted(lake, path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.Tables.dsum(col("value")).as("total_value"),
@@ -2111,22 +2043,22 @@ object Sources {
     * "fix the column name" without rewriting a byte. */
   def o48RenameColumn(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    val (cat, root) = scopedCatalog(spark, "o48", dir)
+    val (lake, root) = scopedCatalog(spark, "o48", dir)
     val path = s"$root/default/ev"
-    val ev = graft.Tables.events(spark, dir)
+    val ev = graft.Tables.events(lake, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     ev.repartitionByRange(8, col("event_id"))
       .write.format(CommitSink.NAME).option("path", path)
       .mode("overwrite").save()
     val m0 = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
-    spark.sql(s"ALTER TABLE $cat.`default`.ev RENAME COLUMN event_id TO ev_id")
+    lake.sql(s"ALTER TABLE $cat.`default`.ev RENAME COLUMN event_id TO ev_id")
     val m1 = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     val metadataOnly = m1.files == m0.files && m1.commit == m0.commit + 1 &&
       m1.schemaLog.exists {
         case CommitSink.RenameEvt("event_id", "ev_id", s) => s == m1.commit
         case _ => false
       }
-    def read() = spark.read.format(CommitSink.NAME).option("path", path).load()
+    def read() = lake.read.format(CommitSink.NAME).option("path", path).load()
     // old files' values surface under the NEW name (no silent nulls)
     val renamedReads = read().filter(col("ev_id").isNull).count() == 0L &&
       read().columns.contains("ev_id") && !read().columns.contains("event_id")
@@ -2135,13 +2067,13 @@ object Sources {
     val pruned = plannedFiles(
       read().filter(col("ev_id") >= 100L && col("ev_id") < 2000L)) <= 2
     // time travel keeps the pre-rename shape
-    val travelKeeps = spark.read.format(CommitSink.NAME).option("path", path)
+    val travelKeeps = lake.read.format(CommitSink.NAME).option("path", path)
       .option("versionAsOf", m0.commit).load().columns.contains("event_id")
     // append post-rename (current names) + DML across the mixed shapes
     ev.filter(col("event_id") % 4 === 0).withColumnRenamed("event_id", "ev_id")
       .write.format(CommitSink.NAME).option("path", path).mode("append").save()
-    spark.sql(s"DELETE FROM $cat.`default`.ev WHERE ev_id % 10 = 3")
-    CommitSink.readCommitted(spark, path)
+    lake.sql(s"DELETE FROM $cat.`default`.ev WHERE ev_id % 10 = 3")
+    CommitSink.readCommitted(lake, path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.Tables.dsum(col("value")).as("total_value"),
@@ -2166,9 +2098,9 @@ object Sources {
     * millis, ISO, boundary-exact, SQL-surface and refusal shapes. */
   def o49TimestampTravel(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
-    val (cat, root) = scopedCatalog(spark, "o49", dir)
+    val (lake, root) = scopedCatalog(spark, "o49", dir)
     val path = s"$root/default/ev"
-    val ev = graft.Tables.events(spark, dir)
+    val ev = graft.Tables.events(lake, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     def slice(r: Int) = ev.filter(col("event_id") % 3 === r)
     CommitSink.withClock(() => 1000L) {
@@ -2182,7 +2114,7 @@ object Sources {
       slice(2).write.format(CommitSink.NAME).option("path", path).mode("append").save()
     }
     val n0 = slice(0).count(); val n1 = slice(1).count()
-    def at(t: String): Long = spark.read.format(CommitSink.NAME)
+    def at(t: String): Long = lake.read.format(CommitSink.NAME)
       .option("path", path).option("timestampAsOf", t).load().count()
     // epoch millis between commits → first slice; ISO + boundary-exact
     // (≤) → first two; late timestamp → everything
@@ -2190,7 +2122,7 @@ object Sources {
     val isoExact = at("1970-01-01 00:00:02") == n0 + n1
     val late = at("2099-01-01T00:00:00") == ev.count()
     // SQL surface through the catalog (micros via Spark's analyzer)
-    val sqlRows = spark.sql(
+    val sqlRows = lake.sql(
       s"SELECT COUNT(*) FROM $cat.`default`.ev " +
         "TIMESTAMP AS OF TIMESTAMP'1970-01-01 00:00:01.500'").head().getLong(0)
     val sqlMid = sqlRows == n0
@@ -2199,7 +2131,7 @@ object Sources {
       try { at("500"); false }
       catch { case e: IllegalArgumentException =>
         e.getMessage.contains("committed at or before") }
-    CommitSink.readCommitted(spark, path)
+    CommitSink.readCommitted(lake, path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.Tables.dsum(col("value")).as("total_value"),
@@ -2245,18 +2177,14 @@ object Sources {
     val trueUsers = ev.agg(countDistinct(col("user_id"))).head().getLong(0)
     val trueTypes = ev.agg(countDistinct(col("event_type"))).head().getLong(0)
     // CBO surface: attribute stats of the optimized plan under cbo
-    val cboWas = spark.conf.get("spark.sql.cbo.enabled", "false")
-    val (estUsers, estTypes) =
-      try {
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        val stats = spark.read.format(CommitSink.NAME).option("path", out)
-          .load().queryExecution.optimizedPlan.stats.attributeStats
-        def ndvOf(c: String): Long = stats.collectFirst {
-          case (a, s) if a.name == c && s.distinctCount.isDefined =>
-            s.distinctCount.get.toLong
-        }.getOrElse(-1L)
-        (ndvOf("user_id"), ndvOf("event_type"))
-      } finally spark.conf.set("spark.sql.cbo.enabled", cboWas)
+    val stats = graft.Tables.isolated(spark, "spark.sql.cbo.enabled" -> "true")
+      .read.format(CommitSink.NAME).option("path", out)
+      .load().queryExecution.optimizedPlan.stats.attributeStats
+    def ndvOf(c: String): Long = stats.collectFirst {
+      case (a, s) if a.name == c && s.distinctCount.isDefined =>
+        s.distinctCount.get.toLong
+    }.getOrElse(-1L)
+    val (estUsers, estTypes) = (ndvOf("user_id"), ndvOf("event_type"))
     val typesExact = estTypes == trueTypes // HLL exact at low cardinality
     val usersClose = estUsers > 0 &&
       math.abs(estUsers - trueUsers).toDouble / trueUsers < 0.05
@@ -2297,18 +2225,18 @@ object Sources {
     * and a two-hour band, and pins the ordinal parity per file. */
   def o51HoursTransform(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, countDistinct, hour, lit, max, min, to_date}
-    val (cat, root) = scopedCatalog(spark, "o51", dir)
+    val (lake, root) = scopedCatalog(spark, "o51", dir)
     val path = s"$root/default/ev"
-    spark.sql(s"CREATE TABLE $cat.`default`.ev (event_id BIGINT, " +
+    lake.sql(s"CREATE TABLE $cat.`default`.ev (event_id BIGINT, " +
       "ts TIMESTAMP_NTZ, event_type STRING, value DOUBLE) " +
       "USING `graft-commit` PARTITIONED BY (hours(ts))")
-    val ev = graft.Tables.events(spark, dir)
+    val ev = graft.Tables.events(lake, dir)
     val day0 = ev.agg(min(to_date(col("ts")))).head().getDate(0).toLocalDate
     val dayLo = day0.atStartOfDay(); val dayHi = day0.plusDays(1).atStartOfDay()
     ev.filter(col("ts") >= lit(dayLo) && col("ts") < lit(dayHi))
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       .createOrReplaceTempView("o51_src")
-    spark.sql(s"INSERT INTO $cat.`default`.ev SELECT * FROM o51_src")
+    lake.sql(s"INSERT INTO $cat.`default`.ev SELECT * FROM o51_src")
     val m = CommitSink.parseManifest(java.nio.file.Paths.get(path)).get
     // ordinal parity: each file's recorded key IS floorDiv(micros, 1h)
     // of its whole ts range (one hour per file)
@@ -2319,14 +2247,14 @@ object Sources {
           Math.floorDiv(r.max.toLong, 3600000000L) == st.pk.get
       }
     }
-    def read() = spark.read.format(CommitSink.NAME).option("path", path).load()
+    def read() = lake.read.format(CommitSink.NAME).option("path", path).load()
     // hour 12 of the day: exactly one planned group; a 2-hour band: two
     val h12 = dayLo.plusHours(12); val h13 = dayLo.plusHours(13)
     val hourPlanned = plannedFiles(read()
       .filter(col("ts") >= lit(h12) && col("ts") < lit(h13))) == 1L
     val bandPlanned = plannedFiles(read()
       .filter(col("ts") >= lit(h12) && col("ts") < lit(dayLo.plusHours(14)))) == 2L
-    CommitSink.readCommitted(spark, path)
+    CommitSink.readCommitted(lake, path)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.Tables.dsum(col("value")).as("total_value"),
@@ -2425,31 +2353,19 @@ object Sources {
       .agg(count(lit(1)).as("b_n"), sum(col("event_id")).as("b_sum"))
       .write.format(CommitSink.NAME).option("path", s"$base/b")
       .option("partitionBy", "bucket").mode("overwrite").save()
-    val conf = spark.conf
-    val prevBucketing = conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBcast = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      // without this the o15 stats would (correctly) broadcast tiny B —
-      // the point here is the co-partitioned path a 100 TB B-side needs
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val a = spark.read.format(CommitSink.NAME).option("path", s"$base/a").load()
-      val b = spark.read.format(CommitSink.NAME).option("path", s"$base/b").load()
-      val joined = a.join(b, "bucket")
-        .groupBy(col("bucket"))
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          sum(col("a_n")).as("a_events"), sum(col("a_sum")).as("a_sum_eid"),
-          max(col("b_n")).as("b_events"), max(col("b_sum")).as("b_sum_eid"))
-      // materialize under the SPJ confs (the bucket-count-sized result),
-      // then restore — leaving a session-wide conf flipped would change
-      // every later query's planning
-      graft.Tables.materialize(joined)
-    } finally {
-      prevBucketing.fold(conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-        conf.set("spark.sql.sources.v2.bucketing.enabled", _))
-      prevBcast.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-    }
+    // without the broadcast threshold at -1 the o15 stats would
+    // (correctly) broadcast tiny B — the point here is the co-partitioned
+    // path a 100 TB B-side needs
+    val spj = graft.Tables.isolated(spark,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val a = spj.read.format(CommitSink.NAME).option("path", s"$base/a").load()
+    val b = spj.read.format(CommitSink.NAME).option("path", s"$base/b").load()
+    a.join(b, "bucket")
+      .groupBy(col("bucket"))
+      .agg(countDistinct(col("user_id")).as("n_users"),
+        sum(col("a_n")).as("a_events"), sum(col("a_sum")).as("a_sum_eid"),
+        max(col("b_n")).as("b_events"), max(col("b_sum")).as("b_sum_eid"))
   }
 
   /** o17: TIME TRAVEL — every commit also lands an immutable
@@ -2576,11 +2492,11 @@ object Sources {
     * 4-trigger shape and the per-batch version ledger.) */
   def w16StreamMergeUpsert(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, sum}
-    val (cat, root) = scopedCatalog(spark, "w16", dir)
+    val (lake, root) = scopedCatalog(spark, "w16", dir)
     val ck = s"$root/ck"
-    spark.sql(s"CREATE TABLE $cat.`default`.sensor_state " +
+    lake.sql(s"CREATE TABLE $cat.`default`.sensor_state " +
       "(sensor INT, n BIGINT, sum_id BIGINT) USING `graft-commit`")
-    val q = spark.readStream.format("graft-sensors")
+    val q = lake.readStream.format("graft-sensors")
       .option("rows", 20000).option("slices", 8)
       .option("streamBatchRows", 5000).load()
       .select(col("id"), col("sensor"))
@@ -2602,7 +2518,7 @@ object Sources {
       .start()
     q.processAllAvailable()
     q.stop()
-    CommitSink.readCommitted(spark, s"$root/default/sensor_state")
+    CommitSink.readCommitted(lake, s"$root/default/sensor_state")
   }
 
   /** w17: streaming dedup with BOUNDED state —
@@ -2625,20 +2541,13 @@ object Sources {
     import org.apache.spark.sql.functions.{count, lit, sum}
     val ck = s"/tmp/graft_w17/${new java.io.File(dir).getName}"
     graft.Tables.deleteRecursively(ck)
-    spark.catalog.dropTempView("w17_dedup")
     // Store choice is per-workload, like a real deployment: this query
     // keeps one tiny bounded-state family — the HDFS-backed in-memory
     // provider is the right store for it, and the RocksDB open/commit
     // tax per (trigger x state partition) was most of w17's r11 cost.
-    // Since r15 the runners leave the provider unset per entry (RocksDB
-    // is an opt-in for the multi-family entries), but the explicit pin
-    // stays: the entry must choose its store no matter what a caller's
-    // session carries. Saved/restored around the run (the provider is
-    // read at query start; the fresh checkpoint pins it per run).
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    // The pin is explicit: the entry must choose its store no matter
+    // what a caller's session carries (the provider is read at query
+    // start; the fresh checkpoint pins it per run).
     // State-partition sizing is per-stream, like the store choice: this
     // query keeps 2000 keys of state across TWO stateful operators, and
     // the per-trigger cost is dominated by (partitions x operators)
@@ -2646,16 +2555,16 @@ object Sources {
     // is the right size for the state volume; the session's 32 stays
     // for the batch registry. (At 100 TB the same knob is what sizes a
     // production stream's state shards to its key cardinality.)
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.getOption(shuffleKey)
-    spark.conf.set(shuffleKey, "8")
-    try {
+    val s = graft.Tables.isolated(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+      "spark.sql.shuffle.partitions" -> "8")
     // 2 triggers (20000 ids / 10000 per batch): the multi-batch proof
     // shape at half the r11 trigger tax — duplicates still arrive both
     // within and ACROSS batches (k = id % 2000 spans every batch), so
     // the suppress-across-triggers property is exercised either way
     // (the c17/o10 precedent: trigger count halved, property kept)
-    val q = spark.readStream.format("graft-sensors")
+    val q = s.readStream.format("graft-sensors")
       .option("rows", 20000).option("slices", 8)
       .option("streamBatchRows", 10000).load()
       // watermarks require TIMESTAMP (LTZ); the source's ts is NTZ under
@@ -2672,13 +2581,7 @@ object Sources {
       .start()
     q.processAllAvailable()
     q.stop()
-    spark.table("w17_dedup")
-    } finally {
-      savedProvider.fold(spark.conf.unset(providerKey))(
-        spark.conf.set(providerKey, _))
-      savedShuffle.fold(spark.conf.unset(shuffleKey))(
-        spark.conf.set(shuffleKey, _))
-    }
+    s.table("w17_dedup")
   }
 
   /** o20: the table AS A STREAM — the changelog micro-batch read
@@ -2701,7 +2604,6 @@ object Sources {
     graft.Tables.deleteRecursively(out)
     val ck = s"/tmp/graft_o20_ck/${new java.io.File(dir).getName}"
     graft.Tables.deleteRecursively(ck)
-    spark.catalog.dropTempView("o20_table_stream")
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     ev.filter(col("event_id") % 3 === 0)
@@ -2712,26 +2614,21 @@ object Sources {
       .write.format(CommitSink.NAME).option("path", out).mode("append").save()
     // per-stream state sizing (w17/o23 device): 5 event_type keys over
     // 3 per-commit triggers — 8 state shards, not the session's 32
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.getOption(shuffleKey)
-    spark.conf.set(shuffleKey, "8")
-    try {
-      val q = spark.readStream.format(CommitSink.NAME)
-        .option("path", out).option("maxCommitsPerTrigger", "1").load()
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          graft.Tables.dsum(col("value")).as("total_value"),
-          min(col("event_id")).as("min_event_id"),
-          max(col("event_id")).as("max_event_id"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("o20_table_stream")
-        .option("checkpointLocation", ck)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally savedShuffle.fold(spark.conf.unset(shuffleKey))(
-      spark.conf.set(shuffleKey, _))
-    spark.table("o20_table_stream")
+    val s = graft.Tables.isolated(spark, "spark.sql.shuffle.partitions" -> "8")
+    val q = s.readStream.format(CommitSink.NAME)
+      .option("path", out).option("maxCommitsPerTrigger", "1").load()
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        graft.Tables.dsum(col("value")).as("total_value"),
+        min(col("event_id")).as("min_event_id"),
+        max(col("event_id")).as("max_event_id"))
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("o20_table_stream")
+      .option("checkpointLocation", ck)
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    s.table("o20_table_stream")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -82,10 +82,8 @@ class Dsv2Spec extends AnyFunSuite {
   /** Aggregate plans wrap in AdaptiveSparkPlanExec, which hides the scan
     * from collectFirst until execution — disable AQE around the plan
     * assertions (the pushdown itself is AQE-independent). */
-  private def withoutAqe[A](body: => A): A = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  private def withoutAqe[A](body: => A): A =
+    withConf("spark.sql.adaptive.enabled" -> "false")(body)
 
   test("aggregate pushdown: closed-form partials, no data rows generated") { withoutAqe {
     val df = sensors(1000000, 32)

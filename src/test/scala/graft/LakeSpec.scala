@@ -174,12 +174,8 @@ class LakeSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("k_n"), sum($"id").as("k_sum"))
       .write.format("graft-commit").option("path", dirB)
       .option("partitionBy", "k").mode("overwrite").save()
-    val conf = spark.conf
-    val prevBucketing = conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBcast = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the SPJ path
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force the SPJ path
       val a = spark.read.format("graft-commit").option("path", dirA).load()
       val b = spark.read.format("graft-commit").option("path", dirB).load()
       val joined = a.join(b, "k")
@@ -193,11 +189,6 @@ class LakeSpec extends AnyFunSuite {
       val expect = plainA.join(plainB, "k")
       assert(joined.exceptAll(expect).count() == 0 &&
         expect.exceptAll(joined).count() == 0)
-    } finally {
-      prevBucketing.fold(conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-        conf.set("spark.sql.sources.v2.bucketing.enabled", _))
-      prevBcast.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
     }
   }
 
@@ -289,10 +280,8 @@ class LakeSpec extends AnyFunSuite {
 
   /** BatchScanExec hides its scan behind lazy fields until execution —
     * disable AQE around plan assertions (mirrors Dsv2Spec). */
-  private def withoutAqe[A](body: => A): A = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  private def withoutAqe[A](body: => A): A =
+    withConf("spark.sql.adaptive.enabled" -> "false")(body)
 
   test("o14: RUNTIME file skipping — a selective broadcast dim prunes fact files at execution") { withoutAqe {
     val dir = freshDir("dpp")
@@ -491,8 +480,7 @@ class LakeSpec extends AnyFunSuite {
                    WHEN NOT MATCHED THEN INSERT (id, score, tag) VALUES (s.id, s.score, 'new')""")
     }
     dml("cow")
-    spark.conf.set("spark.graft.commit.rowLevelMode", "merge-on-read")
-    try dml("mor") finally spark.conf.unset("spark.graft.commit.rowLevelMode")
+    withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read")(dml("mor"))
     val mor = sources.CommitSink.parseManifest(java.nio.file.Paths.get(s"$root/default/mor")).get
     assert(mor.deletes.nonEmpty, "the merge-on-read table took deletion vectors")
     val expected = base
@@ -549,9 +537,9 @@ class LakeSpec extends AnyFunSuite {
     val (cat, dir) = localCatalog("local_dv")
     fixture(1000).select($"id", $"score", $"tag").repartitionByRange(4, $"id")
       .write.format("graft-commit").option("path", s"$dir/t").mode("overwrite").save()
-    spark.conf.set("spark.graft.commit.deleteMode", "merge-on-read")
-    try spark.sql(s"DELETE FROM $cat.t WHERE id >= 100 AND id < 110")
-    finally spark.conf.unset("spark.graft.commit.deleteMode")
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
+      spark.sql(s"DELETE FROM $cat.t WHERE id >= 100 AND id < 110")
+    }
     val path = s"$dir/t"
     assert(manifest(path).deletes.nonEmpty, "the DELETE must land as a vector")
     Seq(s"id IN (${(95 until 120).mkString(", ")})", "id = 105", "id = 5000",
@@ -617,12 +605,11 @@ class LakeSpec extends AnyFunSuite {
       .option("readChangeFeed", true).load().where($"id" === 7L)
     assert(isBatch(feed) && feed.collect().length == 1)
     // a CBO session absorbs nothing: its Filter is what CBO prices
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
+    withConf("spark.sql.cbo.enabled" -> "true") {
       val cbo = spark.read.format("graft-commit").option("path", small).load()
         .where($"id" === 7L)
       assert(isBatch(cbo) && cbo.collect().length == 1)
-    } finally spark.conf.unset("spark.sql.cbo.enabled")
+    }
   }
 
   test("local read: DML and stream scans stay batch and micro-batch scans") {

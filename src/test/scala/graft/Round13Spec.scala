@@ -446,14 +446,6 @@ class Round13Spec extends AnyFunSuite {
 
   // --- o27: merge-on-read deletion vectors ---------------------------------
 
-  private def withDeleteMode[A](mode: String)(body: => A): A = {
-    val key = "spark.graft.commit.deleteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, mode)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   /** 1000 ids range-clustered into 4 files (disjoint id zones). */
   private def rangeTable(cat: String, root: String, tag: String): String = {
     val path = s"$root/default/$tag"
@@ -467,7 +459,7 @@ class Round13Spec extends AnyFunSuite {
     val (cat, root) = withCatalog("mor_basic")
     val path = rangeTable(cat, root, "t")
     val before = manifest(path)
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 10 AND id < 20")
     }
     val after = manifest(path)
@@ -491,7 +483,7 @@ class Round13Spec extends AnyFunSuite {
   test("mor delete: a second delete UNIONS vectors; _pos stays physical") {
     val (cat, root) = withCatalog("mor_union")
     val path = rangeTable(cat, root, "t")
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 10 AND id < 20")
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 15 AND id < 30")
     }
@@ -515,7 +507,7 @@ class Round13Spec extends AnyFunSuite {
     val (cat, root) = withCatalog("mor_drop")
     val path = rangeTable(cat, root, "t")
     val before = manifest(path)
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       // file zones are [0,250) [250,500) [500,750) [750,1000): wipe one whole zone
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 250 AND id < 500")
     }
@@ -537,7 +529,7 @@ class Round13Spec extends AnyFunSuite {
   test("mor delete: COUNT stays metadata-only (live rows); MIN/MAX falls back") {
     val (cat, root) = withCatalog("mor_meta")
     val path = rangeTable(cat, root, "t")
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 990")
     }
     val df = spark.read.format("graft-commit").option("path", path).load()
@@ -555,7 +547,7 @@ class Round13Spec extends AnyFunSuite {
   test("mor delete: compaction materializes the deletes; UPDATE drops the rewritten file's vector") {
     val (cat, root) = withCatalog("mor_compact")
     val path = rangeTable(cat, root, "t")
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 10 AND id < 20")
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 300 AND id < 305")
     }
@@ -618,7 +610,7 @@ class Round13Spec extends AnyFunSuite {
   test("mor delete: GC — expiry reclaims a dropped version's vector, keeps live ones") {
     val (cat, root) = withCatalog("mor_gc")
     val path = rangeTable(cat, root, "t")
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 10 AND id < 20")   // v1: dv A
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 15 AND id < 30")   // v2: dv B (superset)
     }
@@ -637,19 +629,11 @@ class Round13Spec extends AnyFunSuite {
 
   // --- o28: delta-based (merge-on-read) UPDATE / MERGE ---------------------
 
-  private def withRowLevelMode[A](mode: String)(body: => A): A = {
-    val key = "spark.graft.commit.rowLevelMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, mode)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   test("mor update: data files unchanged, vector + one new file, values exact") {
     val (cat, root) = withCatalog("mor_update")
     val path = rangeTable(cat, root, "t")
     val before = manifest(path)
-    withRowLevelMode("merge-on-read") {
+    withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read") {
       spark.sql(s"UPDATE $cat.`default`.t SET score = -1.0 WHERE id >= 10 AND id < 20")
     }
     val after = manifest(path)
@@ -683,10 +667,10 @@ class Round13Spec extends AnyFunSuite {
         WHEN NOT MATCHED THEN INSERT (id, score) VALUES (s.id, s.score)""")
     }
     val cowPath = build("cow")
-    withRowLevelMode("copy-on-write") { mergeInto("cow") }
+    withConf("spark.graft.commit.rowLevelMode" -> "copy-on-write") { mergeInto("cow") }
     val morPath = build("mor")
     val beforeMor = manifest(morPath)
-    withRowLevelMode("merge-on-read") { mergeInto("mor") }
+    withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read") { mergeInto("mor") }
     val afterMor = manifest(morPath)
     assert(beforeMor.files.forall(afterMor.files.contains),
       "merge-on-read MERGE must not rewrite existing files")
@@ -723,7 +707,7 @@ class Round13Spec extends AnyFunSuite {
     // end-to-end: a dense MOR delete reads back exactly (bitmap on disk)
     val (cat, root) = withCatalog("dv_dense")
     val path = rangeTable(cat, root, "t")
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id % 2 = 0 AND id < 250")
     }
     val back = sources.CommitSink.readCommitted(spark, path)
@@ -740,7 +724,7 @@ class Round13Spec extends AnyFunSuite {
     // vector instead of being dropped as fully dead (w16's all-keys
     // update degenerates to exactly that drop+append, also vector-true
     // but trivially so)
-    withRowLevelMode("merge-on-read") {
+    withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read") {
       val q = spark.readStream.format("graft-sensors")
         .option("rows", 20000).option("slices", 8)
         .option("streamBatchRows", 5000).load()
@@ -797,7 +781,7 @@ class Round13Spec extends AnyFunSuite {
   test("compactDeletes: only delete-dominated files rewrite; sparse vectors carry") {
     val (cat, root) = withCatalog("compact_deletes")
     val path = rangeTable(cat, root, "t")
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       // file zones: [0,250) [250,500) [500,750) [750,1000)
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id < 200")          // 80% of file 1
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 300 AND id < 305") // 2% of file 2
@@ -893,7 +877,7 @@ class Round13Spec extends AnyFunSuite {
     spark.range(50L, 100L).select($"id", ($"id" % 10 * 1.0).as("v"))
       .coalesce(1)
       .write.format("graft-commit").option("path", path).mode("append").save()
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 10 AND id < 20")
     }
     (cat, path)
@@ -928,7 +912,7 @@ class Round13Spec extends AnyFunSuite {
   test("cdf batch: a merge-on-read MERGE surfaces as delete+insert at one version") {
     val (cat, path) = cdfTable("cdf_merge")
     spark.range(30L, 35L).select($"id").createOrReplaceTempView("r13_cdf_src")
-    withRowLevelMode("merge-on-read") {
+    withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read") {
       spark.sql(s"""MERGE INTO $cat.`default`.t t USING r13_cdf_src s
         ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = -1.0""")
     }
@@ -1026,7 +1010,7 @@ class Round13Spec extends AnyFunSuite {
       .write.format("graft-commit").option("path", path)
       .option("partitionBy", "k").mode("overwrite").save()
     val before = manifest(path)
-    withDeleteMode("merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       // translatable predicate -> the metadata MOR path; only the delta
       // (UPDATE/MERGE) op needs unpartitioned layouts — a vector DELETE
       // changes no files, so the one-key-per-file contract is untouched

@@ -64,13 +64,6 @@ class Round14Spec extends AnyFunSuite {
     (cat, root)
   }
 
-  private def withConf[A](key: String, v: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   // --- merge-on-read on partitioned tables ----------------------------------
 
   test("partitioned mor merge: layout preserved, vectors per key group, inserts roll per key") {
@@ -84,7 +77,7 @@ class Round14Spec extends AnyFunSuite {
     spark.range(20L).select($"id", ($"id" % 4).as("k"), lit(-1.0).as("v"))
       .unionByName(Seq((1000L, 7L, 5.0), (1001L, 7L, 6.0)).toDF("id", "k", "v"))
       .createOrReplaceTempView("r14_mor_src")
-    withConf("spark.graft.commit.rowLevelMode", "merge-on-read") {
+    withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read") {
       spark.sql(s"""MERGE INTO $cat.`default`.t t USING r14_mor_src s
                    ON t.id = s.id
                    WHEN MATCHED THEN UPDATE SET v = s.v
@@ -397,7 +390,7 @@ class Round14Spec extends AnyFunSuite {
     spark.range(100L).select($"id", ($"id" * 1.0).as("v"))
       .repartitionByRange(2, $"id")
       .write.format("graft-commit").option("path", path).mode("overwrite").save()
-    withConf("spark.graft.commit.deleteMode", "merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       // kills one zone file ENTIRELY -> the file drops with a tombstone
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id < 50")
     }
@@ -541,7 +534,7 @@ class Round14Spec extends AnyFunSuite {
       .repartitionByRange(4, $"id")
       .write.format("graft-commit").option("path", path).mode("overwrite").save()
     // MOR vectors BEFORE the ALTER
-    withConf("spark.graft.commit.deleteMode", "merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id >= 10 AND id < 20")
     }
     assert(manifest(path).deletes.nonEmpty)
@@ -559,7 +552,7 @@ class Round14Spec extends AnyFunSuite {
     assert(back.filter($"tag" === "low").count() == 90L) // 100 - 10 deleted
     assert(back.filter($"tag".isNull).count() == 300L)
     // and MOR DML keeps working on the evolved table
-    withConf("spark.graft.commit.rowLevelMode", "merge-on-read") {
+    withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE id % 100 = 50")
     }
     assert(sources.CommitSink.readCommitted(spark, path).count() == 386L)
@@ -599,7 +592,7 @@ class Round14Spec extends AnyFunSuite {
       .write.format("graft-commit").option("path", path)
       .option("partitionBy", "k").mode("overwrite").save()
     val before = manifest(path)
-    withConf("spark.graft.commit.rowLevelMode", "merge-on-read") {
+    withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read") {
       // modulo predicate: untranslatable as V1 filters, routes through
       // the DELTA row-level operation — a pure DELETE's delta plan
       // projects no data columns, so clustering stays on _file alone

@@ -65,14 +65,6 @@ class Round15Spec extends AnyFunSuite {
   private def manifest(path: String) =
     sources.CommitSink.parseManifest(Paths.get(path)).get
 
-  private def withConf[A](key: String, v: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-
   test("changeFeedWithRewrites: caught-up poller (from = newest+1) gets an empty CDF frame") {
     val dir = freshDir("feed_caught_up")
     spark.range(40L).select($"id", lit("a").as("s"))
@@ -267,7 +259,7 @@ class Round15Spec extends AnyFunSuite {
     spark.range(400L).select($"id", ($"id" * 1.0).as("v"))
       .repartitionByRange(4, $"id")
       .write.format("graft-commit").option("path", path).mode("overwrite").save()
-    withConf("spark.graft.commit.deleteMode", "merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       spark.sql(s"DELETE FROM $catName.`default`.t WHERE id >= 50 AND id < 150")
     }
     val mv = manifest(path)
@@ -354,22 +346,13 @@ class Round15Spec extends AnyFunSuite {
       .groupBy($"k").agg(count(lit(1)).as("kn"))
       .write.format("graft-commit").option("path", dim)
       .option("partitionBy", "k").mode("overwrite").save()
-    val conf = spark.conf
-    val prevBucketing = conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBcast = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = read().join(
         spark.read.format("graft-commit").option("path", dim).load(), "k")
       assert(!joined.queryExecution.executedPlan.toString.contains("Exchange"),
         "multi-file-per-key grouping must keep the SPJ exchange-free")
       assert(joined.count() == 1600L)
-    } finally {
-      prevBucketing.fold(conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-        conf.set("spark.sql.sources.v2.bucketing.enabled", _))
-      prevBcast.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
     }
     // refusals: the partition column as a sort column, z-order, and the
     // preShaped option without its rewrite context
@@ -432,23 +415,14 @@ class Round15Spec extends AnyFunSuite {
       .groupBy($"b").agg(count(lit(1)).as("bn"))
       .write.format("graft-commit").option("path", dim)
       .option("partitionBy", "b").mode("overwrite").save()
-    val conf = spark.conf
-    val prevBucketing = conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBcast = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val f = spark.read.format("graft-commit").option("path", dir).load()
       val d = spark.read.format("graft-commit").option("path", dim).load()
       val joined = f.join(d, "b")
       assert(!joined.queryExecution.executedPlan.toString.contains("Exchange"),
         "post-migration the evolved column storage-partition-joins")
       assert(joined.count() == 880L)
-    } finally {
-      prevBucketing.fold(conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-        conf.set("spark.sql.sources.v2.bucketing.enabled", _))
-      prevBcast.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
     }
     // refusals: no-op evolution, unknown column, non-integer column
     intercept[IllegalArgumentException] {
@@ -482,8 +456,8 @@ class Round15Spec extends AnyFunSuite {
     spark.range(300L).select($"id", ($"id" % 3).as("k"), lit("x").as("s"))
       .write.format("graft-commit").option("path", path)
       .option("partitionBy", "k").mode("overwrite").save()
-    withConf("spark.graft.commit.deleteMode", "merge-on-read") {
-      withConf("spark.graft.commit.rowLevelMode", "merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
+      withConf("spark.graft.commit.rowLevelMode" -> "merge-on-read") {
         spark.sql(s"DELETE FROM $cat.`default`.t WHERE id % 10 = 0")
       }
     }

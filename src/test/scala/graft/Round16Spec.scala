@@ -52,21 +52,6 @@ class Round16Spec extends AnyFunSuite {
     sources.CommitSink.FileStat.decode(manifest(path).stats(f))
 
 
-  private def withSpj[A](body: => A): A = {
-    val conf = spark.conf
-    val prevB = conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevT = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body
-    finally {
-      prevB.fold(conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-        conf.set("spark.sql.sources.v2.bucketing.enabled", _))
-      prevT.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-    }
-  }
-
   private def scopedCat(tag: String): (String, String) = {
     val root = s"/tmp/graft_r16_spec/cat_$tag"
     Tables.deleteRecursively(root)
@@ -120,7 +105,8 @@ class Round16Spec extends AnyFunSuite {
       assert(fileStat(s"$root/default/fact", f).pk.contains(
         sources.BucketFunction.bucketId(8, uid).toLong))
     }
-    withSpj {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.sql(
         s"SELECT f.user_id, f.v, d.tag FROM $cat.`default`.fact f " +
           s"JOIN $cat.`default`.dim d ON f.user_id = d.user_id")

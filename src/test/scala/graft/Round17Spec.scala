@@ -121,11 +121,9 @@ class Round17Spec extends AnyFunSuite {
       .write.format("graft-commit").option("path", dir)
       .mode("overwrite").save()
     // MOR delete: vectors recorded, files kept
-    val key = "spark.graft.commit.deleteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "merge-on-read")
-    try spark.sql(s"DELETE FROM $cat.`default`.t WHERE id < 10")
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
+      spark.sql(s"DELETE FROM $cat.`default`.t WHERE id < 10")
+    }
     val afterDv = meta(dir, "files").collect()
     assert(afterDv.map(_.getLong(5)).sum == 10,
       s"dv_deleted must total the 10 deleted rows")
@@ -693,21 +691,6 @@ class Round17Spec extends AnyFunSuite {
     assert(sources.CommitSink.FileStat.decode(st.encode) == st)
   }
 
-  private def withSpj[A](body: => A): A = {
-    val conf = spark.conf
-    val prevB = conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevT = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body
-    finally {
-      prevB.fold(conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-        conf.set("spark.sql.sources.v2.bucketing.enabled", _))
-      prevT.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-    }
-  }
-
   test("o46: two (days, bucket) tables join exchange-free (composite SPJ)") {
     val (cat, root) = scopedCat("multi_spj")
     Seq("fact", "dim").foreach { t =>
@@ -721,7 +704,8 @@ class Round17Spec extends AnyFunSuite {
       .createOrReplaceTempView("r17_spj_src")
     spark.sql(s"INSERT INTO $cat.`default`.fact SELECT * FROM r17_spj_src")
     spark.sql(s"INSERT INTO $cat.`default`.dim SELECT ts, k, v * 2 FROM r17_spj_src")
-    withSpj {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.sql(
         s"SELECT f.ts, f.k, f.v, d.v AS dv FROM $cat.`default`.fact f " +
           s"JOIN $cat.`default`.dim d ON f.ts = d.ts AND f.k = d.k")

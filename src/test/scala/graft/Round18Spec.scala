@@ -61,13 +61,6 @@ class Round18Spec extends AnyFunSuite {
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
       .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   // --- o48: RENAME COLUMN ---------------------------------------------------
 
   test("o48: rename is metadata-only; old files read, prune and travel correctly") {
@@ -394,7 +387,7 @@ class Round18Spec extends AnyFunSuite {
       .write.format("graft-commit").option("path", path)
       .option("ndvColumns", "k")
       .mode("overwrite").save()
-    withConf("spark.sql.cbo.enabled", "true") {
+    withConf("spark.sql.cbo.enabled" -> "true") {
       val stats = spark.read.format("graft-commit").option("path", path).load()
         .queryExecution.optimizedPlan.stats.attributeStats
       def statOf(c: String) = stats.collectFirst {
@@ -473,7 +466,7 @@ class Round18Spec extends AnyFunSuite {
 
   test("advice fix: compactDeletes pre-shapes multi-transform layouts") {
     val (cat, _, path) = multiTable("multi_cdel")
-    withConf("spark.graft.commit.deleteMode", "merge-on-read") {
+    withConf("spark.graft.commit.deleteMode" -> "merge-on-read") {
       // kill most of day 1 (ids 0..1079 = ts < day2): vector-dense files
       spark.sql(s"DELETE FROM $cat.`default`.t WHERE v < 1000")
     }
@@ -506,7 +499,7 @@ class Round18Spec extends AnyFunSuite {
       1704067200000001L,        // 2024-01-01T00:00:00.000001Z
       1703980799999999L,        // 2023-12-31T23:59:59.999999Z
       -62135596800000000L)      // year 1
-    withConf("spark.sql.session.timeZone", "America/Los_Angeles") {
+    withConf("spark.sql.session.timeZone" -> "America/Los_Angeles") {
       val dfLtz = micros.toDF("us").select(timestamp_micros($"us").as("c"), $"us")
       val schemaLtz = StructType.fromDDL("c TIMESTAMP")
       for (spec <- Seq(DaysSpec("c"), HoursSpec("c"), MonthsSpec("c"), YearsSpec("c"))) {
@@ -671,7 +664,7 @@ class Round18Spec extends AnyFunSuite {
       .write.format("graft-commit").option("path", path)
       .option("ndvColumns", "id,k")
       .mode("overwrite").save()
-    def attrNdv(c: String): Option[Long] = withConf("spark.sql.cbo.enabled", "true") {
+    def attrNdv(c: String): Option[Long] = withConf("spark.sql.cbo.enabled" -> "true") {
       spark.read.format("graft-commit").option("path", path).load()
         .queryExecution.optimizedPlan.stats.attributeStats.collectFirst {
           case (a, s) if a.name == c && s.distinctCount.isDefined =>
@@ -720,9 +713,9 @@ class Round18Spec extends AnyFunSuite {
       write(b, spark.range(50000L).select(($"id" % 5).as("k2"), $"id".as("w")),
         Seq.empty)
       def t(p: String) = spark.read.format("graft-commit").option("path", p).load()
-      withConf("spark.sql.cbo.enabled", "true") {
-        withConf("spark.sql.autoBroadcastJoinThreshold", (300 * 1024).toString) {
-          withConf("spark.sql.adaptive.enabled", "false") { // static planning only
+      withConf("spark.sql.cbo.enabled" -> "true") {
+        withConf("spark.sql.autoBroadcastJoinThreshold" -> (300 * 1024).toString) {
+          withConf("spark.sql.adaptive.enabled" -> "false") { // static planning only
             val q = t(fact).filter($"k1" === 777L).join(t(b), "k2")
             lastPlan = q.queryExecution.executedPlan.toString
             lastPlan.contains("BroadcastHashJoin")

@@ -60,15 +60,8 @@ class Round19Spec extends AnyFunSuite {
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
       .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   private def attrNdv(path: String, c: String): Option[Long] =
-    withConf("spark.sql.cbo.enabled", "true") {
+    withConf("spark.sql.cbo.enabled" -> "true") {
       spark.read.format("graft-commit").option("path", path).load()
         .queryExecution.optimizedPlan.stats.attributeStats.collectFirst {
           case (a, s) if a.name == c && s.distinctCount.isDefined =>
@@ -199,7 +192,7 @@ class Round19Spec extends AnyFunSuite {
     base.write.format("graft-commit").option("path", pb)
       .mode("overwrite").save()
     // a non-UTC session must not skew the NTZ cast (the pass scopes UTC)
-    withConf("spark.sql.session.timeZone", "America/New_York") {
+    withConf("spark.sql.session.timeZone" -> "America/New_York") {
       CommitSink.analyzeNdv(spark, pb, cols)
     }
     cols.foreach { c =>
@@ -257,7 +250,7 @@ class Round19Spec extends AnyFunSuite {
 
   private def attrStat(path: String, c: String)
       : org.apache.spark.sql.catalyst.plans.logical.ColumnStat =
-    withConf("spark.sql.cbo.enabled", "true") {
+    withConf("spark.sql.cbo.enabled" -> "true") {
       spark.read.format("graft-commit").option("path", path).load()
         .queryExecution.optimizedPlan.stats.attributeStats.collectFirst {
           case (a, s) if a.name == c => s
@@ -314,9 +307,9 @@ class Round19Spec extends AnyFunSuite {
         .write.format("graft-commit").option("path", fact)
         .mode("overwrite").save()
       def t(p: String) = spark.read.format("graft-commit").option("path", p).load()
-      withConf("spark.sql.cbo.enabled", "true") {
-        withConf("spark.sql.autoBroadcastJoinThreshold", (2 * 1024 * 1024).toString) {
-          withConf("spark.sql.adaptive.enabled", "false") { // static planning only
+      withConf("spark.sql.cbo.enabled" -> "true") {
+        withConf("spark.sql.autoBroadcastJoinThreshold" -> (2 * 1024 * 1024).toString) {
+          withConf("spark.sql.adaptive.enabled" -> "false") { // static planning only
             val q = t(dim).filter($"k" >= 0L).join(t(fact), "k")
             lastPlan = q.queryExecution.executedPlan.toString
             lastPlan.contains("BroadcastHashJoin")

@@ -204,11 +204,9 @@ class Round5Spec extends AnyFunSuite {
 
   test("w09 streaming: transformWithState over MemoryStream converges to batch totals") {
     implicit val sq = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     // transformWithState requires the RocksDB state store in streaming mode
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val rows = Tables.events(spark, sf0001)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .as[Streaming.UserEvent].collect().toSeq
@@ -229,11 +227,6 @@ class Round5Spec extends AnyFunSuite {
         .as[(Long, Long, Double)].collect().toMap2
       // identical event_id-ordered fold on both paths ⇒ exact equality
       assert(finalState == expected)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

@@ -17,6 +17,15 @@ object TestSpark {
   }
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** `body` with `confs` set on the shared session; each key is put
+    * back as it was afterwards (unset again when it was not set). */
+  def withConf[A](confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** `body`'s result and the number of Spark jobs it started, counted
     * by job group. Job events reach the status tracker in order but
     * asynchronously, so a control job runs in its own group afterwards:
@@ -50,10 +59,27 @@ class SmokeSpec extends AnyFunSuite {
     val qs = SparkEntry.queries
     assert(qs.nonEmpty)
     SparkEntry.oracleSql.keys.foreach(k => assert(qs.contains(k), s"oracle without query: $k"))
-    qs.foreach { case (name, fn) =>
+    // an entry that needs its own confs builds on Tables.isolated: the
+    // caller's session conf is the same before and after every entry
+    val leaks = qs.toSeq.flatMap { case (name, fn) =>
+      val before = spark.conf.getAll
       val n = fn(spark, sf0001).count()
       withClue(s"$name should produce rows at sf0.001: ") { assert(n >= 0) }
+      val after = spark.conf.getAll
+      val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+      if (changed.isEmpty) None else Some(s"$name: ${changed.toSeq.sorted.mkString(", ")}")
     }
+    assert(leaks.isEmpty, leaks.mkString("entries that changed the caller's conf:\n", "\n", ""))
+  }
+
+  test("shuffle-scoped entries run concurrently on one session, each as if alone") {
+    val runs = Seq("o20_dsv2_table_stream", "o23_state_introspection").map(SparkEntry.queries)
+      .map(fn => () => fn(spark, sf0001).collect().map(_.toString).sorted.toSeq)
+    val sequential = runs.map(_())
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    val parallel = Tables.inParallel(runs: _*)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == shuffle)
+    assert(parallel == sequential)
   }
 
   test("approx_count_distinct is within rsd of exact counts") {

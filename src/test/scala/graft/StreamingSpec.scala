@@ -191,10 +191,8 @@ class StreamingSpec extends AnyFunSuite {
   test("w14/w15: MapState leaderboard and ListState CEP — streaming == batch across micro-batches") {
     import ops.Streaming.UserEvent
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val feed = Tables.events(spark, sf0001)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .as[UserEvent].collect().sortBy(_.event_id)
@@ -241,9 +239,6 @@ class StreamingSpec extends AnyFunSuite {
         .as[(Long, Long, Double, Double, Double)].collect().toSet
       assert(streamed == batch15, "CEP emissions must match the batch LAG window form")
       assert(streamed.nonEmpty)
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -251,10 +246,8 @@ class StreamingSpec extends AnyFunSuite {
     import ops.Streaming.{ClosedSession, TimedEvent}
     implicit val sq = spark.sqlContext
     // transformWithState (timers = extra column families) needs RocksDB
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
     def ts(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000L)
     val ms = MemoryStream[TimedEvent]
     val q = ops.Streaming.inactivitySessions(
@@ -294,9 +287,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got(2L) == ((1L, 3L)), "user 2: single-event session")
     assert(got(99L) == ((1L, 4L)), "sentinel's own session flushes once passed")
     assert(!got.contains(98L), "open key must hold until its timer expires")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -363,34 +353,30 @@ class StreamingSpec extends AnyFunSuite {
 
   test("state-store provider choice is per query: RocksDB is an opt-in, not a session pin") {
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      // baseline: the runners (Verify/Bench) unset the key before every
-      // entry — model that here
-      spark.conf.unset(key)
-      // a single-family entry runs green on the DEFAULT provider and
-      // does not opt into anything (the r14 o23 cost finding)
-      val snap = sources.Sources.o23StateIntrospection(spark, sf0001)
-      assert(snap.count() == 97L)
-      // getOption surfaces the conf DEFAULT (HDFS-backed) — the point is
-      // the entry did not opt into RocksDB behind the session's back
-      assert(spark.conf.get(key).contains("HDFSBackedStateStoreProvider"),
-        "a single-family entry must run on (and leave) the default provider")
-      // a multi-column-family entry opts into RocksDB at build time —
-      // the conf must be set by the time the plan executes
-      ops.Streaming.w14MapStateLeaderboard(spark, sf0001).write
-        .format("noop").mode("overwrite").save()
-      assert(spark.conf.get(key).contains("RocksDBStateStoreProvider"),
-        "MapState requires the RocksDB opt-in at build time")
-      // w17 pins the HDFS-backed store for its own run and RESTORES the
-      // caller's provider afterwards (here: the RocksDB left by w14)
-      sources.Sources.w17DedupWithinWatermark(spark, sf0001).write
-        .format("noop").mode("overwrite").save()
-      assert(spark.conf.get(key).contains("RocksDBStateStoreProvider"),
-        "w17 must restore the provider it found")
-    } finally saved match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
+    val caller = spark.conf.getOption(key)
+    // a single-family entry runs green on the DEFAULT provider and does
+    // not opt into anything (the r14 o23 cost finding); `get` surfaces
+    // the conf default (HDFS-backed)
+    val snap = sources.Sources.o23StateIntrospection(spark, sf0001)
+    assert(snap.count() == 97L)
+    assert(snap.sparkSession.conf.get(key).contains("HDFSBackedStateStoreProvider"),
+      "a single-family entry must run on the default provider")
+    // a multi-column-family entry opts into RocksDB on its own session —
+    // the conf is there when the plan executes
+    val w14 = ops.Streaming.w14MapStateLeaderboard(spark, sf0001)
+    w14.write.format("noop").mode("overwrite").save()
+    assert(w14.sparkSession.conf.get(key).contains("RocksDBStateStoreProvider"),
+      "MapState requires the RocksDB opt-in")
+    // w17 pins the HDFS-backed store for its own run, whatever the
+    // caller's session carries
+    val w17 =
+      withConf(key -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        sources.Sources.w17DedupWithinWatermark(spark, sf0001)
+      }
+    w17.write.format("noop").mode("overwrite").save()
+    assert(w17.sparkSession.conf.get(key).contains("HDFSBackedStateStoreProvider"),
+      "w17 must choose its own store")
+    assert(spark.conf.getOption(key) == caller, "no entry writes the caller's provider")
   }
+
 }
