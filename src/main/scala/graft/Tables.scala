@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
@@ -23,9 +22,15 @@ import scala.jdk.CollectionConverters._
   */
 object Tables {
 
-  /** Files below this size never fan out under `graft.scan.repartition`:
-    * 32 KB is sized to catch exactly the key-cardinality dims. */
-  private val RepartitionMinBytes = 32L * 1024
+  /** The rows-per-partition floor of `graft.scan.repartition`: a table
+    * fans out to at most one partition per this many rows, and a table
+    * under twice it keeps its single scan partition. Rows, not bytes: a
+    * 90-row file of 64-float vectors weighs more than a 1000-row fact
+    * file, and only the fact file has rows enough for several tasks.
+    * At 512 the curation corpus the benchmark generates (180 documents,
+    * 90 vectors) and `region`, `nation` and `supplier` at every scale up
+    * to sf0.1 keep one partition; a table of 1024 rows or more fans out. */
+  private val RepartitionMinRows = 512L
 
   /** One base table as a lazy parquet scan, built without a Spark job.
     *
@@ -41,7 +46,8 @@ object Tables {
     * cached from it — is a single partition and every downstream narrow
     * stage runs on one core. A real 100 TB table is thousands of
     * row-groups and splits naturally; `graft.scan.repartition=N` emulates
-    * that locally by fanning the scan out to N partitions. Applied inside
+    * that locally by fanning the scan out to N partitions, or to one per
+    * [[RepartitionMinRows]] rows when that is fewer. Applied inside
     * `load` so cached plans and query plans stay equal (CacheManager
     * substitutes on plan equality). Default 0 = off. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -50,13 +56,12 @@ object Tables {
     val df = found.map(_._1).fold(spark.read)(spark.read.schema).parquet(path)
     val n = spark.conf.getOption("graft.scan.repartition").map(_.toInt).getOrElse(0)
     // Scale-adaptive, not constant (r20, guide §2): fanning a 5-row
-    // dimension (region/nation/supplier — ≤ tens of KB at every SF) out
-    // to N partitions buys no parallelism and taxes every downstream
-    // stage of every query that touches it with N tasks of scheduling
-    // floor. Tables whose data files total under [[RepartitionMinBytes]]
-    // keep their natural single-row-group scan; real corpus/fact tables
-    // still fan out to all cores.
-    if (n > 0 && found.exists(_._2 >= RepartitionMinBytes)) df.repartition(n) else df
+    // dimension or a 90-row corpus out to N partitions buys no
+    // parallelism and adds a shuffle job to every query that reads it.
+    // The fan-out follows the footer's row count, at most one partition
+    // per [[RepartitionMinRows]]; fact tables still fan out to all cores.
+    val parts = math.min(n.toLong, found.fold(0L)(_._2) / RepartitionMinRows).toInt
+    if (parts > 1) df.repartition(parts) else df
   }
 
   /** The schema `spark.read.parquet(path)` would infer, read from one
@@ -64,10 +69,12 @@ object Tables {
     * inside its inference job: the Spark row metadata a Spark writer
     * leaves in the footer, else the parquet schema converted under the
     * session's SQL confs (so `nanosAsLong` and friends still apply) —
-    * and the byte total of the table's data files. A directory is read
-    * through its first data file by name, as a non-merging inference
-    * reads one file. `None` when there is no footer to read (a missing
-    * path, no data file): Spark's own inference then reports the error. */
+    * and the table's row count from the row-group metadata. A directory
+    * is read through its first data file by name, as a non-merging
+    * inference reads one file; its row count is that file's, scaled by
+    * the directory's data bytes over the file's. `None` when there is no
+    * footer to read (a missing path, no data file): Spark's own inference
+    * then reports the error. */
   private def footer(spark: SparkSession, path: String): Option[(StructType, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
@@ -83,9 +90,10 @@ object Tables {
       } catch { case _: java.io.FileNotFoundException => Nil }
     files.headOption.map { st =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
-        HadoopReadOptions.builder(conf)
-          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+        HadoopReadOptions.builder(conf).build())
+      val (meta, rows) =
+        try (reader.getFooter.getFileMetaData, reader.getRecordCount)
+        finally reader.close()
       // Spark reads an INT64 TIMESTAMP(NANOS) column (the older events
       // layout, see [[events]]) only as a long under nanosAsLong, and it
       // reads the conf again when the scan executes: set it on the
@@ -102,7 +110,7 @@ object Tables {
           .collect { case s: StructType => s }
           .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
             .convert(meta.getSchema))
-      (schema, files.map(_.getLen).sum)
+      (schema, (BigInt(rows) * files.map(_.getLen).sum / st.getLen).toLong)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -124,24 +125,24 @@ object Curation {
     * target / available, capped at [[MaxEpochs]] — the capped domains
     * are the data-constrained ones whose budget share cannot be filled
     * without over-repeating. Normalizer Σ√tokens is the lang-ordered
-    * fold (domain-cardinality collect, broadcast back). Plan shape: one
-    * per-domain agg + a 1-row broadcast — nothing corpus-sized moves. */
+    * fold (domain-cardinality collect). Plan shape: one per-domain agg,
+    * then the totals as window aggregates over the per-domain rows —
+    * nothing corpus-sized moves, and no 1-row side is joined back. */
   def p12TokenBudget(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val c = Tables.documents(spark, dir)
-      .select($"lang", size(TextAnalysis.tokens($"text")).cast("long").as("nt"))
-      .groupBy($"lang")
-      .agg(count(lit(1)).as("n_docs"), sum($"nt").as("n_tokens"))
-    val tot = c.agg(
-      sum($"n_tokens").as("total_tokens"),
-      aggregate(
-        sort_array(collect_list(struct($"lang".as("l"), sqrt($"n_tokens").as("w")))),
-        lit(0.0), (acc, x) => acc + x.getField("w")).as("s"))
+    val all = Window.partitionBy()
     val target = ($"total_tokens" * lit(BudgetMultiple)).cast("double") *
       sqrt($"n_tokens") / $"s"
     val epochsRaw = target / $"n_tokens"
     val epochs = least(epochsRaw, lit(MaxEpochs))
-    c.crossJoin(broadcast(tot))
+    Tables.documents(spark, dir)
+      .select($"lang", size(TextAnalysis.tokens($"text")).cast("long").as("nt"))
+      .groupBy($"lang")
+      .agg(count(lit(1)).as("n_docs"), sum($"nt").as("n_tokens"))
+      .withColumn("total_tokens", sum($"n_tokens").over(all))
+      .withColumn("s", aggregate(
+        sort_array(collect_list(struct($"lang".as("l"), sqrt($"n_tokens").as("w"))).over(all)),
+        lit(0.0), (acc, x) => acc + x.getField("w")))
       .select($"lang", $"n_docs", $"n_tokens",
         (sqrt($"n_tokens") / $"s").as("q_share"),
         target.as("target_tokens"),
@@ -305,20 +306,27 @@ object Curation {
     * the multilingual-corpus resampling step of an LLM data pipeline. The
     * keep decision is the same Knuth multiplicative hash as q40/q51, so it
     * is deterministic on any engine and any partitioning. Plan shape: one
-    * tiny per-lang count agg (broadcast back), then a scan-side filter —
-    * the rebalance never shuffles the corpus itself. */
+    * scan and one map-side-combined count per (lang, hash bucket) — at
+    * most languages × 4096 rows, whatever the corpus size — then window
+    * aggregates over those rows (per-language total, the global minimum)
+    * and a per-language sum of the buckets under the keep ceiling, all in
+    * the one partition those rows are gathered into. The corpus is read
+    * once and never shuffled itself. */
   def p02DomainMix(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
-    val cnt = docs.groupBy($"lang").agg(count(lit(1)).as("n_orig"))
-    val mn = cnt.agg(min($"n_orig").as("min_n"))
-    val rates = cnt.crossJoin(broadcast(mn))
-      .withColumn("keep_ceiling",
-        floor(sqrt($"min_n".cast("double") / $"n_orig") * 4096).cast("long"))
-    docs.join(broadcast(rates), "lang")
-      .filter(pmod($"doc_id" * 2654435761L, lit(4096L)) < $"keep_ceiling")
+    Tables.documents(spark, dir)
+      .groupBy($"lang", pmod($"doc_id" * 2654435761L, lit(4096L)).as("h"))
+      .agg(count(lit(1)).as("c"))
+      // one partition holds these rows, and the windows and the aggregate
+      // above it then need no exchange of their own
+      .repartition(1)
+      .withColumn("n_orig", sum($"c").over(Window.partitionBy($"lang")))
+      .withColumn("keep_ceiling", floor(sqrt(
+        min($"n_orig").over(Window.partitionBy()).cast("double") / $"n_orig") * 4096)
+        .cast("long"))
+      .filter($"h" < $"keep_ceiling")
       .groupBy($"lang", $"n_orig")
-      .agg(count(lit(1)).as("n_kept"))
+      .agg(sum($"c").as("n_kept"))
       .withColumn("kept_frac", $"n_kept".cast("double") / $"n_orig")
       .select($"lang", $"n_orig", $"n_kept", $"kept_frac")
   }

@@ -87,31 +87,41 @@ object Similarity {
 
   // --- queries ----------------------------------------------------------
 
+  /** The query set of s01, s02, s06, s07 and [[knnTopKAggregated]]
+    * (vec_id < 5) scored against every other embedding: one scan, the
+    * queries broadcast, one row per `(qid, nid, cos_sim, same)`, `same`
+    * when the neighbor shares the query's LSH bucket. An entry that never
+    * reads `same` never computes a bucket (column pruning drops it); a
+    * filter on `same` becomes the broadcast join's bucket equi-key. */
+  private def scoredQueries(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, dir)
+      .select($"vec_id", $"embedding", lshBucket($"embedding").as("bucket"))
+    val q = e.filter($"vec_id" < 5)
+      .select($"vec_id".as("qid"), $"embedding".as("qe"), $"bucket".as("qbucket"))
+    e.join(broadcast(q), $"vec_id" =!= $"qid")
+      .select($"qid", $"vec_id".as("nid"), cosine($"qe", $"embedding").as("cos_sim"),
+        ($"bucket" === $"qbucket").as("same"))
+  }
+
+  /** The `k` best rows per query of a [[scoredQueries]] relation, ranked
+    * by (cos_sim desc, nid) in `rank`. */
+  private def topPerQuery(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
   /** Brute-force k-NN: top-10 cosine neighbors for query vecs (vec_id<5). */
   def s01KnnBruteForce(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val q = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val scored = e.join(broadcast(q), $"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("nid"), cosine($"qe", $"embedding").as("cos_sim"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    scored.withColumn("rank", row_number().over(w)).filter($"rank" <= 10)
-      .select($"qid", $"rank", $"nid", $"cos_sim")
+    topPerQuery(scoredQueries(spark, dir), 10).select($"qid", $"rank", $"nid", $"cos_sim")
   }
 
   /** LSH-bucketed ANN: candidates share the 8-bit hyperplane bucket with
     * the query; rank candidates by exact cosine, keep top-5. */
   def s02AnnLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding", lshBucket($"embedding").as("bucket"))
-    val q = e.filter($"vec_id" < 5)
-      .select($"vec_id".as("qid"), $"embedding".as("qe"), $"bucket".as("qbucket"))
-    val cand = e.join(broadcast(q), $"bucket" === $"qbucket" && $"vec_id" =!= $"qid")
-    val scored = cand.select($"qid", $"vec_id".as("nid"),
-      cosine($"qe", $"embedding").as("cos_sim"))
-    val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid")
-    scored.withColumn("rank", row_number().over(w)).filter($"rank" <= 5)
+    topPerQuery(scoredQueries(spark, dir).filter($"same"), 5)
       .select($"qid", $"rank", $"nid", $"cos_sim")
   }
 
@@ -123,10 +133,7 @@ object Similarity {
   def knnTopKAggregated(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     import spark.implicits._
     import graft.functions.{ScoredId, TopKByScore}
-    val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val q = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val scored = e.join(broadcast(q), $"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("nid"), cosine($"qe", $"embedding").as("cos_sim"))
+    val scored = scoredQueries(spark, dir).select($"qid", $"nid", $"cos_sim")
       .as[(Long, Long, Double)]
     val topk = new TopKByScore(k).toColumn
     scored
@@ -301,30 +308,35 @@ object Similarity {
     * output slices a `Window.partitionBy(lang1, lang2)` would shuffle
     * ALL of them onto a handful of partitions and full-sort each (the
     * r8 skew magnet VERDICT flagged) — partial aggregation instead
-    * ships ≤3 candidates per slice per executor to the exchange. */
+    * ships ≤3 candidates per slice per executor to the exchange.
+    *
+    * Plan: `embeddings` is scored against the broadcast centroids and
+    * `documents` joins its language in by broadcast; the IVF assignment
+    * takes one exchange on vec_id. The cell self-join is a sort-merge
+    * join whose two sides read the one exchange on cid (a merge hint:
+    * the adaptive planner would otherwise turn the small cells into a
+    * broadcast, one more job). The aggregator runs as an untyped `udaf`
+    * on the (lang1, lang2) group and its array is exploded into ranks,
+    * so no typed operation adds encoder classes to the plan. */
   def s17CrosslingualMining(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.{ScoredPair, TopKPairByScore}
     val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val lang = Tables.documents(spark, dir).select($"doc_id".as("vec_id"), $"lang")
     val a = ivfAssigned(e).join(lang, "vec_id")
-    val pairs = a.as("x").join(a.as("y"),
+    val topk = udaf(new TopKPairByScore(3),
+      org.apache.spark.sql.Encoders.product[ScoredPair])
+    a.as("x").join(a.as("y").hint("merge"),
         col("x.cid") === col("y.cid") && col("x.vec_id") < col("y.vec_id") &&
           col("x.lang") =!= col("y.lang"))
       .select(col("x.lang").as("lang1"), col("y.lang").as("lang2"),
         col("x.vec_id").as("id1"), col("y.vec_id").as("id2"),
         cosine(col("x.embedding"), col("y.embedding")).as("cos_sim"))
-    val topk = new TopKPairByScore(3).toColumn
-    pairs.as[(String, String, Long, Long, Double)]
-      .groupByKey(t => (t._1, t._2))
-      .mapValues { case (_, _, id1, id2, c) => ScoredPair(id1, id2, c) }
-      .agg(topk.name("top"))
-      .flatMap { case ((l1, l2), arr) =>
-        arr.iterator.zipWithIndex.map { case (s, i) =>
-          (l1, l2, i + 1, s.id1, s.id2, s.score)
-        }
-      }
-      .toDF("lang1", "lang2", "rank", "id1", "id2", "cos_sim")
+      .groupBy($"lang1", $"lang2")
+      .agg(topk($"id1", $"id2", $"cos_sim").as("top"))
+      .select($"lang1", $"lang2", posexplode($"top").as(Seq("pos", "t")))
+      .select($"lang1", $"lang2", ($"pos" + 1).as("rank"),
+        $"t.id1".as("id1"), $"t.id2".as("id2"), $"t.score".as("cos_sim"))
   }
 
   /** s15: per-dimension embedding QA — the drift/collapse report run
@@ -727,26 +739,31 @@ object Similarity {
     * zero shuffles — strictly cheaper than top-k at any scale. */
   def s06RangeSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val q = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qe"))
-    e.join(broadcast(q), $"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("nid"), cosine($"qe", $"embedding").as("cos_sim"))
-      .filter($"cos_sim" >= 0.25)
+    scoredQueries(spark, dir).filter($"cos_sim" >= 0.25).select($"qid", $"nid", $"cos_sim")
   }
 
   /** ANN index evaluation: recall@5 of the LSH index (s02) against the
     * exact top-5 (s01) per query — the measurement loop that decides
     * whether an index's bucket count/probe settings are good enough to
-    * ship. A left semi-join per (query, neighbor) pair and a 5-row agg;
-    * at scale the exact side runs on a sampled query set, which is
-    * exactly this shape. */
+    * ship. At scale the exact side runs on a sampled query set, which is
+    * exactly this shape.
+    *
+    * Plan: one scan of `embeddings`, scored once against the broadcast
+    * query set ([[scoredQueries]], which s01 and s02 rank too), each
+    * scored pair flagged `same` when it shares the query's LSH bucket.
+    * Both top-5s come from that one relation: s02's list is the top-5 of
+    * the `same` rows under the same (cos_sim desc, nid) order, so an
+    * exact top-5 neighbor in the query's bucket ranks at most as deep
+    * among the `same` rows and is an LSH hit, and one outside it never
+    * is — the hits are the `same` rows of the exact top-5. One
+    * row_number window per query (limited to 5 rows per query before its
+    * exchange) and a per-query count; no second scan, no candidate join,
+    * no join of the two lists. */
   def s07AnnRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = s01KnnBruteForce(spark, dir).filter($"rank" <= 5).select($"qid", $"nid")
-    val approx = s02AnnLsh(spark, dir).select($"qid", $"nid")
-    exact.join(approx.withColumn("hit", lit(1)), Seq("qid", "nid"), "left")
+    topPerQuery(scoredQueries(spark, dir), 5)
       .groupBy($"qid")
-      .agg(count(lit(1)).as("n_exact"), count($"hit").as("n_hit"))
+      .agg(count(lit(1)).as("n_exact"), count(when($"same", 1)).as("n_hit"))
       .withColumn("recall", $"n_hit".cast("double") / $"n_exact")
   }
 

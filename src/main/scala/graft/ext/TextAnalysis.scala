@@ -579,26 +579,26 @@ object TextAnalysis {
     * the statistical-quality signal next to t03's surface heuristics.
     * No transcendentals: the score is an exact integer sum divided once,
     * so it is engine-exact where a log-prob LM could never be. Shape:
-    * bigram explode → one (bigram) count agg → count join back → one
-    * (doc) agg; the corpus model is itself a table, so at 100 TB it can
-    * be computed once and reused across scoring runs. */
+    * one scan, a bigram `explode_outer` (a doc with no bigram keeps one
+    * row, its bigram null, counted 0), the corpus count of each bigram as
+    * a window count over the bigram rows (one exchange on bigram, no
+    * aggregate joined back), then one (doc) agg. Every doc reaches that agg, so no
+    * join back to `documents` restores the bigram-less ones. */
   def t16NgramFamiliarity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
     val bigrams = when(size($"toks") >= 2,
       transform(sequence(lit(0), size($"toks") - 2),
         i => concat_ws(" ", element_at($"toks", i + 1), element_at($"toks", i + 2))))
       .otherwise(array())
-    val bi = docs.select($"doc_id", tokens($"text").as("toks"))
-      .select($"doc_id", explode(bigrams).as("bigram"))
-    val corpus = bi.groupBy($"bigram").agg(count(lit(1)).as("cnt"))
-    val perDoc = bi.join(corpus, "bigram")
+    Tables.documents(spark, dir)
+      .select($"doc_id", tokens($"text").as("toks"))
+      .select($"doc_id", explode_outer(bigrams).as("bigram"))
+      .withColumn("cnt", count($"bigram").over(Window.partitionBy($"bigram")))
       .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_bi"), sum($"cnt").as("fam_sum"))
-    docs.select($"doc_id").join(perDoc, Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"n_bi", lit(0L)).as("n_bi"),
-        coalesce($"fam_sum".cast("double") / $"n_bi", lit(0.0)).as("familiarity"))
+      .agg(count($"bigram").as("n_bi"), sum($"cnt").as("fam_sum"))
+      .select($"doc_id", $"n_bi",
+        when($"n_bi" > 0, $"fam_sum".cast("double") / $"n_bi").otherwise(lit(0.0))
+          .as("familiarity"))
   }
 
   /** Overlapping chunk windows (size 512, stride 384): the

@@ -301,10 +301,13 @@ object Streaming {
     val s = Tables.isolated(spark, ("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") +: confs: _*)
     // RocksDB registers with the driver's StateStoreCoordinator RPC
-    // endpoint, which only the StreamingQueryManager creates — in a
+    // endpoint, which only a StreamingQueryManager creates — in a
     // pure-batch session it doesn't exist yet and executors fail with
-    // RpcEndpointNotFoundException. Touching `streams` instantiates it.
-    s.streams
+    // RpcEndpointNotFoundException. The endpoint is one per SparkContext,
+    // so the caller's `streams` serves: touching the isolated session's
+    // would register one more streaming listener bus on the context's
+    // shared bus per call, and nothing ever removes it.
+    spark.streams
     s
   }
 

@@ -10,8 +10,7 @@ class BucketingSpec extends AnyFunSuite {
 
   test("bucketed join on the bucket key plans with no shuffle exchange") {
     // disable auto-broadcast so the join would otherwise shuffle both sides
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(spark, sf0001)
       val ord = Tables.orders(spark, sf0001)
       Bucketing.writeBucketed(li.select($"l_orderkey", $"l_quantity", $"l_extendedprice"),
@@ -33,7 +32,6 @@ class BucketingSpec extends AnyFunSuite {
       val agg = spark.table("li_b").groupBy($"l_orderkey").agg(sum($"l_quantity"))
       assert(!agg.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS li_b")
       spark.sql("DROP TABLE IF EXISTS ord_b")
     }

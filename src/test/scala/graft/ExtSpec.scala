@@ -232,6 +232,23 @@ class ExtSpec extends AnyFunSuite {
     }
   }
 
+  test("t16: a document with fewer than two tokens keeps its row, with no bigram") {
+    val dir = java.nio.file.Files.createTempDirectory("t16_short").toString
+    try {
+      val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text").limit(20)
+        .unionByName(Seq((900001L, ""), (900002L, "solo")).toDF("doc_id", "text"))
+      docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
+      val got = TextAnalysis.t16NgramFamiliarity(spark, dir)
+        .select($"doc_id", $"n_bi", $"familiarity").as[(Long, Long, Double)].collect()
+      assert(got.map(_._1).sorted.toSeq ==
+        Tables.documents(spark, dir).select($"doc_id").as[Long].collect().sorted.toSeq)
+      got.filter(_._1 >= 900001L).foreach { case (id, n, fam) =>
+        assert(n == 0L && fam == 0.0, s"doc $id: n_bi $n, familiarity $fam")
+      }
+      assert(got.count(_._2 > 0) == 20, "every sf0.001 doc has bigrams")
+    } finally Tables.deleteRecursively(dir)
+  }
+
   test("fingerprint: identical text yields identical fingerprint") {
     val fp = TextAnalysis.t05Fingerprint(spark, sf0001)
       .select($"doc_id", $"fp_pos", $"fp_sq").collect()

@@ -90,6 +90,15 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"))
   }
 
+  test("s01/s02/s06 share one scored relation: s01 and s06 prune the LSH bucket, s02 joins on it") {
+    for (p <- Seq(ext.Similarity.s01KnnBruteForce(spark, sf0001),
+        ext.Similarity.s06RangeSearch(spark, sf0001)).map(planOf))
+      assert(!p.contains("bucket"), s"an entry that never reads the bucket never computes it:\n$p")
+    val p2 = planOf(ext.Similarity.s02AnnLsh(spark, sf0001))
+    assert(p2.contains("BroadcastHashJoin") && !p2.contains("NestedLoop"),
+      s"s02's same-bucket filter must become the broadcast join's equi-key:\n$p2")
+  }
+
   test("s04 ivf: centroids broadcast — assignment is map-side over the scan") {
     val p = planOf(ext.Similarity.s04AnnIvf(spark, sf0001))
     assert(p.contains("BroadcastNestedLoopJoin"),

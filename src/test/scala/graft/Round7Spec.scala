@@ -464,9 +464,14 @@ class Round7Spec extends AnyFunSuite {
     // at 100 TB the partition count is an execution detail, never a
     // semantic input: re-running with the scan fanned out to a prime
     // partition count must produce identical rows (catches ordering- and
-    // accumulation-order-sensitive bugs that 1-partition local runs hide)
-    def rows(name: String): Set[String] =
-      SparkEntry.queries(name)(spark, sf0001).collect()
+    // accumulation-order-sensitive bugs that 1-partition local runs hide).
+    // The fixture tables are too small for graft.scan.repartition to fan
+    // them out, so the fan-out is in the files: each table is rewritten
+    // as 7 round-robin files, and a file open cost equal to the split
+    // size gives every file a scan partition of its own, as a multi-file
+    // table splits at scale.
+    def rows(name: String, dir: String): Set[String] =
+      SparkEntry.queries(name)(spark, dir).collect()
       .map(_.toString).toSet
     val picks = Seq("d02_minhash_lsh", "d18_minhash_mapside",
       // d23 demoted to spec-only in r9; its wide twin carries the check
@@ -476,13 +481,20 @@ class Round7Spec extends AnyFunSuite {
       // or windowing step that MUST not see the partitioning
       "d29_winnow_fingerprint", "m09_video_neardup", "s16_kmeans_lloyd",
       "t25_quality_auc")
-    val base = picks.map(n => n -> rows(n)).toMap
-    spark.conf.set("graft.scan.repartition", "7")
+    val base = picks.map(n => n -> rows(n, sf0001)).toMap
+    val dir = java.nio.file.Files.createTempDirectory("fanout7").toString
     try {
-      picks.foreach { n =>
-        assert(rows(n) == base(n), s"$n changed under a 7-way scan fan-out")
+      for (t <- Seq("documents", "embeddings", "orders"))
+        Tables.load(spark, sf0001, t).repartition(7).write.parquet(s"$dir/$t.parquet")
+      withConf("spark.sql.files.maxPartitionBytes" -> "4MB",
+          "spark.sql.files.openCostInBytes" -> "4MB") {
+        for (t <- Seq("documents", "embeddings", "orders"))
+          assert(Tables.load(spark, dir, t).rdd.getNumPartitions == 7, s"$t must scan as 7")
+        picks.foreach { n =>
+          assert(rows(n, dir) == base(n), s"$n changed under a 7-way scan fan-out")
+        }
       }
-    } finally spark.conf.unset("graft.scan.repartition")
+    } finally Tables.deleteRecursively(dir)
   }
 
   // --- minhash_sig hardening --------------------------------------------

@@ -379,4 +379,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.conf.getOption(key) == caller, "no entry writes the caller's provider")
   }
 
+  test("a batch RocksDB entry leaves no streaming listener bus behind") {
+    def busListeners: Int = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("listeners").invoke(bus).asInstanceOf[java.util.List[_]].size
+    }
+    // the caller's own StreamingQueryManager is the one the entry needs
+    spark.streams
+    val before = busListeners
+    (1 to 5).foreach(_ => ops.Streaming.w14MapStateLeaderboard(spark, sf0001).collect())
+    assert(busListeners == before, "each w14 call registered a listener on the shared bus")
+  }
+
 }

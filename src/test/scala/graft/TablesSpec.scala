@@ -85,16 +85,44 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("a Spark-written table directory fans out under graft.scan.repartition") {
-    import org.apache.spark.sql.catalyst.plans.logical.Repartition
     val dir = java.nio.file.Files.createTempDirectory("tables_fanout").toString
     try {
       Tables.lineitem(spark, sf0001).write.parquet(s"$dir/lineitem.parquet")
-      val fanned = withConf("graft.scan.repartition" -> "7") {
-        Tables.load(spark, dir, "lineitem").queryExecution.logical
-          .collectFirst { case r: Repartition => r.numPartitions }
-      }
-      assert(fanned.contains(7), "lineitem's data files total well over the small-table bound")
+      assert(fanOut(dir, "lineitem").contains(7),
+        "lineitem's 6000 rows are well over the small-table bound")
     } finally Tables.deleteRecursively(dir)
+  }
+
+  private def fanOut(dir: String, name: String): Option[Int] = {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    withConf("graft.scan.repartition" -> "7") {
+      Tables.load(spark, dir, name).queryExecution.logical
+        .collectFirst { case r: Repartition => r.numPartitions }
+    }
+  }
+
+  test("fan-out follows the footer's row count, not the file's bytes") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables_rows").toString
+    try {
+      // the shape of a small embeddings corpus: 90 vectors of 64 doubles,
+      // heavier on disk than sf0.001's 1500-row orders file (36.6 KB),
+      // which fans out, and far too few rows to feed a second task
+      spark.range(90).select($"id".as("vec_id"), transform(sequence(lit(1), lit(64)),
+          i => xxhash64($"id", i) / 1e19).as("embedding"))
+        .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+      val bytes = new java.io.File(s"$dir/embeddings.parquet").listFiles
+        .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      assert(bytes > 36647, s"$bytes bytes: must outweigh the orders file")
+      assert(fanOut(dir, "embeddings").isEmpty, "a 90-row table must keep one partition")
+    } finally Tables.deleteRecursively(dir)
+    assert(fanOut(sf0001, "orders").contains(2), "1500 rows make two partitions")
+    assert(fanOut(sf0001, "region").isEmpty)
+    val sf01 = new java.io.File(sf0001).getParent + "/sf0.1"
+    assume(new java.io.File(sf01).isDirectory, s"$sf01 is not there")
+    for (fact <- Seq("lineitem", "orders"))
+      assert(fanOut(sf01, fact).contains(7), s"sf0.1 $fact must fan out to every core")
   }
 
   test("a missing table fails at load, naming its path") {
